@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdata1_spark.functions import hashing, textfns, vectors
+from bigdata1_spark.operators.graph import iterate, symmetrize
 from bigdata1_spark.sources.tables import load_table, spread_if_starved
 
 
@@ -538,51 +539,25 @@ def min_label_components(
     cluster pairs from ANY detector (exact-Jaccard or pure-LSH) over
     any node set. Each round is one neighbor-min step (join + min-agg)
     plus one pointer-doubling self-join, so labels converge in
-    O(log diameter) rounds — not O(diameter); ``localCheckpoint``
-    truncates lineage so plans stay bounded. Labels only decrease, so
-    a round with zero changes is a fixed point — detected via a
-    ``DataFrame.observe`` side output of the round's own checkpoint
-    job (zero extra jobs; r15's every-2nd-round join+count probe is
-    gone). ``nodes``: single-column frame of ids.
+    O(log diameter) rounds — not O(diameter). Labels only decrease,
+    so :func:`~bigdata1_spark.operators.graph.iterate` stops at the
+    first zero-change round. ``nodes``: single-column frame of ids.
     Returns (node, lbl) with lbl = min reachable id."""
-    # Symmetrize in ONE scan of the pair plan: union(pairs, swapped)
-    # reads the (lazy, possibly expensive — dedup_jaccard) pair lineage
-    # twice before the cache is populated; exploding a 2-element struct
-    # array emits both directions from a single pass.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("id1").alias("src"), F.col("id2").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("id2").alias("src"), F.col("id1").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .cache()
-    )
-    from pyspark.sql import Observation
-
+    # symmetrize in ONE scan of the (lazy, possibly expensive —
+    # dedup_jaccard) pair plan before the cache is populated
+    edges = symmetrize(pairs, "id1", "id2").cache()
     id_col = nodes.columns[0]
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("lbl")
     ).localCheckpoint()
-    for it in range(max_iter):
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         msgs = (
             labels.join(edges, F.col("node") == F.col("src"))
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        # carry the pre-round label through as _lbl0 so the fixpoint
-        # probe is a FREE observe() side output of the round's own
-        # checkpoint job (the connected_components pattern) instead of
-        # the old every-2nd-round join+count job — labels only ever
-        # decrease, so a zero-change round is a fixpoint and checking
-        # every round can only break earlier, never change the result
+        # _lbl0 carries the pre-round label for the change flag
         stepped = labels.join(msgs, "node", "left").select(
             "node",
             F.col("lbl").alias("_lbl0"),
@@ -604,22 +579,15 @@ def min_label_components(
         final_lbl = F.least(
             F.col("lbl"), F.coalesce(F.col("jlbl"), F.col("lbl"))
         )
-        obs = Observation(f"mlc_changed_{it}")
-        new_labels = (
-            stepped.join(jump, stepped["lbl"] == jump["jnode"], "left")
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum((final_lbl != F.col("_lbl0")).cast("long")),
-                    F.lit(0),
-                ).alias("changed"),
-            )
-            .select("node", final_lbl.alias("lbl"))
-            .localCheckpoint()
+        return stepped.join(
+            jump, stepped["lbl"] == jump["jnode"], "left"
+        ).select(
+            "node",
+            final_lbl.alias("lbl"),
+            (final_lbl != F.col("_lbl0")).cast("long").alias("_changed"),
         )
-        labels = new_labels
-        if obs.get["changed"] == 0:
-            break
+
+    labels = iterate(labels, step, max_iter, changed="_changed")
     edges.unpersist(blocking=False)
     return labels
 

@@ -18,14 +18,18 @@ Scale notes: every step is a keyed shuffle on node/edge ids; triangle
 counting uses degree-ordered edge orientation (each triangle counted
 from its lowest-degree vertex — the standard arboricity bound that
 keeps wedge generation sub-quadratic on skewed degree distributions);
-PageRank materializes each iteration with ``localCheckpoint`` (cadence
-``_CKPT_EVERY``, re-proven per-round in r16) and sums contributions
-through decimal so partial-agg order cannot drift ranks between runs.
+the iterative kernels run their rounds through :func:`iterate`, which
+owns the per-round ``localCheckpoint`` and fixpoint policy; PageRank
+sums contributions through decimal so partial-agg order cannot drift
+ranks between runs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import time
+from typing import Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata1_spark.sources.tables import load_table, parquet_row_count
@@ -49,38 +53,85 @@ _DENSE_MAX_NODES = 65536
 # ceiling bounds the zero-padding on tiny graphs).
 _DENSE_TILE_BITS_BUDGET = 1 << 28
 
-# Lineage-truncation cadence for pagerank: checkpoint every N rounds.
-# r15 unrolled all rounds into one job (N=8: guide §1.2 "remove
-# passes") on an interleaved A/B that favored it; the r16 re-proof
-# REVERSED that (VERDICT r15 item 1): interleaved cold-JVM A/B at
-# local[32], min over 5 reps — N=1 3.28 s, N=2 3.86 s, N=8 4.30 s,
-# with the per-rep ordering consistent, and the r16 full-bench context
-# was starker still (unrolled pagerank 19-20 s on all three samples
-# mid-sweep vs ~5 s checkpointed in the r14 driver run). The unrolled
-# 20-exchange/14-RDD-scan single job replans and re-sorts every
-# iteration's SMJ subtree under AQE; per-round materialization keeps
-# each round's plan constant-size, which measures faster at every
-# tested load. Rounds whose output is consumed by more than one
-# downstream subtree per round (kcore's pruned edges, bfs/label_prop's
-# self-union) checkpoint each round for the same reason — but the LAST
-# round's output is consumed exactly once by the final action, so its
-# checkpoint is skipped everywhere.
-_CKPT_EVERY = 1
+# Longest wait for one round's observed change count. The count rides
+# on the round's own checkpoint job, so it is normally delivered by the
+# time that job returns; the deadline only turns a lost metrics event
+# into an error instead of a hang.
+_FIXPOINT_WAIT_S = 60.0
 
 
-def _co_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct undirected co-supplier edges (a < b), one row each.
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    changed: str | None = None,
+) -> DataFrame:
+    """Run ``state = step(state, r)`` for r = 1..``rounds`` — the one
+    round loop of the iterative kernels (pagerank, kcore, bfs_hops,
+    label_prop, connected_components, dedup.min_label_components).
 
-    Pairs are emitted array-locally per order (bounded by the 7-line
-    order cap), then deduplicated with one shuffle on the pair key.
+    Each round's output feeds more than one subtree of the next round,
+    so rounds are materialized with eager ``localCheckpoint``: the plan
+    stays round-sized instead of growing per iteration (an interleaved
+    A/B measured per-round checkpoints faster than one unrolled job).
+
+    * Without ``changed``: rounds 1..n-1 are checkpointed and round n
+      is returned lazily, because the caller's action consumes it once.
+    * With ``changed``, the name of a per-row 0/1 column the step
+      emits: every round is checkpointed, the column's sum rides on the
+      round's own checkpoint job as an ``observe()`` side output (zero
+      extra jobs), the column is dropped, and the loop stops after the
+      first round that changed nothing. Labels that only decrease make
+      a zero-change round a fixpoint, so stopping early never changes
+      the result; an empty input stops after round 1.
+
+    Errors name the kernel by the step's enclosing function.
     """
+    kernel = step.__qualname__.split(".")[0]
+    for r in range(1, rounds + 1):
+        state = step(state, r)
+        if changed is None:
+            if r < rounds:
+                state = state.localCheckpoint()
+            continue
+        obs = Observation(f"{kernel}_changed_r{r}")
+        state = (
+            state.observe(obs, F.coalesce(F.sum(changed), F.lit(0)).alias("n"))
+            .drop(changed)
+            .localCheckpoint()
+        )
+        if _observed_count(obs, kernel, r) == 0:
+            break
+    return state
+
+
+def _observed_count(obs: Observation, kernel: str, r: int) -> int:
+    """The single long metric of ``obs``, waiting at most
+    ``_FIXPOINT_WAIT_S``. Polls the JVM ``getRowOrEmpty`` (≤ 100 ms per
+    call) because ``Observation.get`` waits without a bound."""
+    deadline = time.monotonic() + _FIXPOINT_WAIT_S
+    while True:
+        row = obs._jo.getRowOrEmpty()
+        if row.isDefined():
+            return row.get().getLong(0)
+        if time.monotonic() >= deadline:
+            raise RuntimeError(
+                f"{kernel}: round {r} change count not observed within "
+                f"{_FIXPOINT_WAIT_S} s"
+            )
+
+
+def _order_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Co-supplier pairs (a < b), one row per order that contains both,
+    emitted array-locally from each order's sorted supplier set (bounded
+    by the 7-line order cap) — no self-join shuffle."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
     per_order = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_suppkey")).alias("ss")
     )
-    pairs = per_order.select(
+    return per_order.select(
         F.explode(
             F.flatten(
                 F.transform(
@@ -96,27 +147,36 @@ def _co_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         ).alias("e")
-    )
-    return pairs.select("e.a", "e.b").distinct()
+    ).select("e.a", "e.b")
+
+
+def _co_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct undirected co-supplier edges (a < b), one row each:
+    the per-order pairs deduplicated with one shuffle on the pair key.
+    """
+    return _order_pairs(spark, sf_dir).distinct()
 
 
 def _symmetrized_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bidirectional (src, dst) view of the co-supplier edge list,
-    emitted in ONE pass over the edge generation: explode both
-    orientations array-locally instead of union-ing two selects (whose
-    legs would each re-run the generation lineage — scan, shuffle,
-    distinct — before any materialization). Callers checkpoint the
-    result once and reuse it across rounds (bfs_hops, label_prop,
-    connected_components)."""
-    e = _co_supplier_edges(spark, sf_dir)
-    return e.select(
+    """Bidirectional (src, dst) view of the co-supplier edge list, in
+    ONE pass over the edge generation (see :func:`symmetrize`). Callers
+    checkpoint the result once and reuse it across rounds (bfs_hops,
+    label_prop, connected_components)."""
+    return symmetrize(_co_supplier_edges(spark, sf_dir), "a", "b")
+
+
+def symmetrize(df: DataFrame, x: str, y: str) -> DataFrame:
+    """Both orientations (src, dst) of each (x, y) row from ONE scan of
+    ``df``: a 2-element struct array is exploded array-locally, where a
+    union of two selects would run ``df``'s lineage once per leg."""
+    return df.select(
         F.explode(
             F.array(
-                F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+                F.struct(F.col(x).alias("src"), F.col(y).alias("dst")),
+                F.struct(F.col(y).alias("src"), F.col(x).alias("dst")),
             )
-        ).alias("s")
-    ).select("s.src", "s.dst")
+        ).alias("e")
+    ).select("e.src", "e.dst")
 
 
 def graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,10 +481,7 @@ def pagerank(
     across runs, monotone damping bounds) remain as the convergence-
     mode evidence the unrolled oracle cannot give. Each iteration is
     ONE join + ONE aggregate keyed on node id over the checkpointed
-    edge list, materialized with ``localCheckpoint`` every
-    ``_CKPT_EVERY`` rounds (per-round after the r16 A/B — see the
-    constant's comment; the last round is consumed once and skips its
-    checkpoint). Contributions are
+    edge list, run through :func:`iterate`. Contributions are
     summed through decimal(27,15): decimal addition is associative, so
     ranks are bit-stable across shuffle orderings — required for any
     resumable 100 TB run. Columns: node_type, node_id, rank (1e-6
@@ -445,24 +502,11 @@ def pagerank(
         )
         .distinct()
     )
-    # symmetrize in one scan (union's two legs would each run the
-    # join+distinct lineage twice), then materialize ONCE: the edge
-    # list is referenced by every iteration's contribution join plus
-    # the degree pass, so localCheckpoint pins one copy for all of
-    # them (a lazy .cache() would race its population across the
-    # final job's parallel stages).
-    edges = (
-        cs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-                    F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint()
-    )
+    # materialize the edge list ONCE: it is referenced by every
+    # iteration's contribution join plus the degree pass, so
+    # localCheckpoint pins one copy for all of them (a lazy .cache()
+    # would race its population across the final job's parallel stages)
+    edges = symmetrize(cs, "c", "s").localCheckpoint()
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     nodes = outdeg.select(F.col("src").alias("node"), "outdeg")
     ranks = nodes.select("node", "outdeg", F.lit(1.0).alias("rank"))
@@ -474,7 +518,8 @@ def pagerank(
     from decimal import Decimal
 
     base = float(Decimal(1) - Decimal(str(damping)))
-    for i in range(iters):
+
+    def step(ranks: DataFrame, _r: int) -> DataFrame:
         contribs = (
             ranks.join(edges, F.col("node") == F.col("src"))
             .select(
@@ -486,7 +531,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("contrib").cast("double").alias("in_sum"))
         )
-        ranks = nodes.join(contribs, "node", "left").select(
+        return nodes.join(contribs, "node", "left").select(
             "node",
             "outdeg",
             (
@@ -494,12 +539,8 @@ def pagerank(
                 + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
             ).alias("rank"),
         )
-        # per-round materialization (cadence _CKPT_EVERY = 1, measured
-        # faster than the unrolled single job — see the constant's
-        # comment); the last round is consumed once by the final
-        # action, so its checkpoint is skipped
-        if (i + 1) % _CKPT_EVERY == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint()
+
+    ranks = iterate(ranks, step, iters)
     return ranks.select(
         F.when(F.col("node") > 0, F.lit("customer"))
         .otherwise(F.lit("supplier"))
@@ -534,27 +575,24 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs. Columns: node, core_degree (degree within the round-3
     subgraph).
     """
-    edges = _co_supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
-    for r in range(KCORE_ROUNDS):
+
+    def step(edges: DataFrame, _r: int) -> DataFrame:
         deg = (
             edges.select(F.explode(F.array("a", "b")).alias("node"))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= KCORE_K).select("node")
-        edges = (
+        return (
             edges.join(
                 keep.withColumnRenamed("node", "a"), "a", "semi"
             )
             .join(keep.withColumnRenamed("node", "b"), "b", "semi")
             .select("a", "b")
         )
-        # each round's edges fan into THREE subtrees next round (the
-        # degree agg + both semi-joins), so intermediate rounds must
-        # materialize — but the last round's output is consumed once
-        # by the final aggregate, so its checkpoint job is skipped
-        if r + 1 < KCORE_ROUNDS:
-            edges = edges.localCheckpoint(eager=True)
+
+    edges = _co_supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = iterate(edges, step, KCORE_ROUNDS)
     return (
         edges.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
@@ -587,36 +625,27 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end. Columns: node, hop (0 for the source itself; nodes
     farther than BFS_ROUNDS are absent).
     """
-    # symmetrize in ONE pass over the edge generation (explode both
-    # orientations) and checkpoint the bidirectional list directly —
-    # one materialization job instead of edges-then-lazy-union, and
-    # each round scans one RDD instead of two
+    # one materialization of the bidirectional list, scanned by every round
     bidir = _symmetrized_edges(spark, sf_dir).localCheckpoint(eager=True)
     dist = spark.range(1).select(
         F.lit(BFS_SOURCE).cast("long").alias("node"),
         F.lit(0).cast("long").alias("hop"),
     )
-    for r in range(1, BFS_ROUNDS + 1):
-        frontier = dist.filter(F.col("hop") == r - 1).select("node")
+
+    def step(dist: DataFrame, hop: int) -> DataFrame:
+        frontier = dist.filter(F.col("hop") == hop - 1).select("node")
         nbrs = frontier.join(
             bidir, frontier["node"] == bidir["src"]
         ).select(
-            F.col("dst").alias("node"), F.lit(r).cast("long").alias("hop")
+            F.col("dst").alias("node"), F.lit(hop).cast("long").alias("hop")
         )
-        dist = (
+        return (
             dist.unionAll(nbrs)
             .groupBy("node")
             .agg(F.min("hop").alias("hop"))
         )
-        # dist fans into two subtrees per round (frontier + union), so
-        # intermediate rounds materialize; the last round's output is
-        # consumed once by the caller's action — skip its checkpoint.
-        # NB: THIS loop is 1-based (range(1, BFS_ROUNDS+1) — r is the
-        # hop number), so the skip condition is `r < BFS_ROUNDS`, unlike
-        # kcore/label_prop's 0-based `r + 1 < ROUNDS` (ADVICE r15).
-        if r < BFS_ROUNDS:
-            dist = dist.localCheckpoint(eager=True)
-    return dist
+
+    return iterate(dist, step, BFS_ROUNDS)
 
 
 LABEL_PROP_ROUNDS = 3
@@ -639,27 +668,22 @@ def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     their label via the self-union. Exact integers. Columns: node,
     label.
     """
-    # one-pass symmetrize + single checkpoint (see bfs_hops): the old
-    # edges-then-union shape paid two materialization jobs for the
-    # same bidirectional list
     bidir = _symmetrized_edges(spark, sf_dir).localCheckpoint(eager=True)
     labels = bidir.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for r in range(LABEL_PROP_ROUNDS):
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         nbr = labels.join(
             bidir, labels["node"] == bidir["src"]
         ).select(F.col("dst").alias("node"), "label")
-        labels = (
+        return (
             labels.unionAll(nbr)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
-        # labels fans into two subtrees per round (join + self-union);
-        # the last round's output is consumed once — skip its checkpoint
-        if r + 1 < LABEL_PROP_ROUNDS:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+
+    return iterate(labels, step, LABEL_PROP_ROUNDS)
 
 
 def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -738,29 +762,7 @@ def _bounded_co_supplier_edges(
     by k. One count shuffle + one window shuffle on node + one (a, b)
     join; every step is a keyed shuffle that scales out.
     """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    per_order = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_suppkey")).alias("ss")
-    )
-    pairs = per_order.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ss"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ss"), i + 2, F.size(F.col("ss"))
-                        ),
-                        lambda y: F.struct(
-                            x.alias("a"), y.alias("b")
-                        ),
-                    ),
-                )
-            )
-        ).alias("e")
-    ).select("e.a", "e.b")
+    pairs = _order_pairs(spark, sf_dir)
     w = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("w"))
     sym = w.select(
         F.explode(
@@ -964,21 +966,15 @@ def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph. The contract is ``CC_ROUNDS`` rounds (= min node id within
     CC_ROUNDS min-label hops — the true component id whenever that
     covers the component's min-label eccentricity, which diameter-2-4
-    derived graphs clear by 3x); the loop stops EARLY when a round
-    changes zero labels, detected via a ``DataFrame.observe`` side
-    output of the round's own materialization job (zero extra jobs —
-    a fixpoint makes the remaining rounds no-ops, so early-stop and the
-    oracle's full 12-round unroll are bit-identical on every input).
-    ``localCheckpoint`` truncates lineage per round (the ``pagerank``
-    discipline — the plan stays O(1) deep instead of growing per
-    iteration). The component id is the smallest node id in the
+    derived graphs clear by 3x); :func:`iterate` stops EARLY at the
+    first round that changes zero labels (a fixpoint makes the
+    remaining rounds no-ops, so early-stop and the oracle's full
+    12-round unroll are bit-identical on every input) and checkpoints
+    every round. The component id is the smallest node id in the
     component — a total, engine-free order. Isolated suppliers (no
     co-order partner) have no edge and are out of contract, matching
     the other graph keys. Columns: node, component.
     """
-    # one-pass symmetrize + single checkpoint (see _symmetrized_edges):
-    # the old edges-checkpoint-then-union shape paid two
-    # materialization jobs for the same bidirectional list
     sym = (
         _symmetrized_edges(spark, sf_dir)
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -990,50 +986,23 @@ def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.col("node").alias("component"))
         .localCheckpoint()
     )
-    from pyspark.sql import Observation
 
-    for r in range(CC_ROUNDS):
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         nbr_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        # fixpoint probe as a FREE side output (VERDICT r15 item 5):
-        # a round is a no-op iff no node adopts a smaller neighbor
-        # label, and that comparison is available IN the update row
-        # before the final select — observe() accumulates it executor-
-        # side during the checkpoint materialization job itself, so the
-        # old per-round join+count probe job (a full extra shuffle +
-        # action at scale) disappears. coalesce pins the empty-graph
-        # case (SUM over 0 rows is NULL) to 0 so the loop still exits
-        # on round 1 there. Zero-change condition identical to the old
-        # probe: least(component, nbr) != component ⟺ nbr < component.
-        obs = Observation(f"cc_changed_r{r}")
-        new_labels = (
-            labels.join(nbr_min, "node")
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(
-                        (
-                            F.col("nbr_component") < F.col("component")
-                        ).cast("long")
-                    ),
-                    F.lit(0),
-                ).alias("changed"),
-            )
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.col("nbr_component")
-                ).alias("component"),
-            )
-            .localCheckpoint()
+        # a node changes iff it adopts a smaller neighbor label
+        return labels.join(nbr_min, "node").select(
+            "node",
+            F.least(F.col("component"), F.col("nbr_component")).alias(
+                "component"
+            ),
+            (F.col("nbr_component") < F.col("component"))
+            .cast("long")
+            .alias("_changed"),
         )
-        labels = new_labels
-        # round 1 cannot be a fixpoint on any graph with an edge, so
-        # changed == 0 at r == 0 only on the empty graph — where
-        # breaking immediately is equally bit-identical (empty result)
-        if obs.get["changed"] == 0:
-            break
+
+    labels = iterate(labels, step, CC_ROUNDS, changed="_changed")
     return labels.select("node", "component")

@@ -15,6 +15,9 @@ checked.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
@@ -142,6 +145,31 @@ class BillingStreamSource(DataSource):
         return BillingStreamReader(self.options)
 
 
+def committed_pos(ckpt: str) -> int | None:
+    """Source offset of the latest COMMITTED batch of the streaming
+    checkpoint ``ckpt``: the highest batch id in ``ckpt/commits/``
+    (written once the batch's sink output is durable), looked up in the
+    ``ckpt/offsets/`` write-ahead log, whose last line is the source's
+    own offset JSON. The WAL alone is not enough: Spark writes it when
+    a batch is PLANNED, so its newest entry may never have committed.
+    None when no batch has committed; ValueError when the committed
+    batch's offset does not parse."""
+    commits_dir = os.path.join(ckpt, "commits")
+    batches = (
+        [int(f) for f in os.listdir(commits_dir) if f.isdigit()]
+        if os.path.isdir(commits_dir)
+        else []
+    )
+    if not batches:
+        return None
+    path = os.path.join(ckpt, "offsets", str(max(batches)))
+    try:
+        with open(path) as fh:
+            return int(json.loads(fh.read().splitlines()[-1])["pos"])
+    except (OSError, ValueError, LookupError, TypeError) as exc:
+        raise ValueError(f"unreadable committed offset {path}: {exc!r}") from exc
+
+
 def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom PYTHON STREAMING source (SimpleDataSourceStreamReader)
     drained through repeated availableNow runs on ONE checkpoint: each
@@ -149,19 +177,16 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     resumes from the persisted offset — the restart loop proves the
     custom source honors the offset/replay contract, not just that it
     can emit rows. The drain stops when the checkpoint's committed
-    offset shows the source exhausted (``pos >= STREAM_ROWS``) — the
-    offset log the NEXT restart would resume from, read driver-side,
-    so exhaustion costs a file read instead of a third full (empty)
-    query lifecycle.
+    offset (:func:`committed_pos`) shows the source exhausted
+    (``pos >= STREAM_ROWS``) — the offset the NEXT restart would resume
+    from, read driver-side, so exhaustion costs a file read instead of
+    a third full (empty) query lifecycle.
 
     Rows are the same pure md5 function of the row id as
     ``python_datasource``, so the oracle regenerates the full table and
     the monthly rollup is value-hash checked. Columns: month, n,
     bid_sum.
     """
-    import glob
-    import json
-    import os
     import shutil
     import tempfile
 
@@ -175,36 +200,22 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(out, f"batch={bid}")
             )
 
-        def committed_pos() -> int:
-            """Latest committed source offset from the checkpoint's
-            offset log (file ``ckpt/offsets/<batchId>``; last line is
-            the source's own offset JSON — the replay-contract file a
-            restart resumes from)."""
-            files = [
-                f
-                for f in glob.glob(os.path.join(work, "ckpt", "offsets", "*"))
-                if os.path.basename(f).isdigit()
-            ]
-            if not files:
-                return -1
-            latest = max(files, key=lambda p: int(os.path.basename(p)))
-            with open(latest) as fh:
-                return json.loads(fh.read().splitlines()[-1])["pos"]
-
+        ckpt = os.path.join(work, "ckpt")
         for _ in range(STREAM_ROWS // STREAM_STEP + 1):
             q = (
                 spark.readStream.format("pybillstream")
                 .load()
                 .writeStream.foreachBatch(write_batch)
                 .outputMode("append")
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
+                .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
             )
             q.awaitTermination()
-            if committed_pos() >= STREAM_ROWS:
+            pos = committed_pos(ckpt)
+            if pos is None:
+                raise RuntimeError(f"no committed offset in {ckpt}")
+            if pos >= STREAM_ROWS:
                 break
         res = (
             spark.read.parquet(out)

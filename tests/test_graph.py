@@ -307,3 +307,85 @@ def test_connected_components_disjoint_blocks(spark, tmp_path):
         for r in graph.connected_components(spark, d).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
+
+
+def _rdd_scans(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count("LogicalRDD")
+
+
+def test_iterate_fixed_rounds_checkpoints_all_but_last(spark):
+    """Without ``changed``: ``step`` runs exactly ``rounds`` times, each
+    round after the first reads the previous round's checkpoint, and
+    the returned frame is lazy over exactly one checkpointed RDD —
+    round n-1's."""
+    seen = []
+
+    def step(df, r):
+        seen.append((r, df))
+        return df.select((F.col("x") + 1).alias("x"))
+
+    out = graph.iterate(spark.range(5).select(F.col("id").alias("x")), step, 3)
+    assert [r for r, _ in seen] == [1, 2, 3]
+    assert _rdd_scans(seen[0][1]) == 0
+    assert all(_rdd_scans(df) == 1 for _, df in seen[1:])
+    assert _rdd_scans(out) == 1
+    assert "Range" not in out._jdf.queryExecution().optimizedPlan().toString()
+    # the one RDD scanned is the state handed to round 3 (round 2's)
+    assert out.sameSemantics(seen[2][1].select((F.col("x") + 1).alias("x")))
+    assert sorted(r.x for r in out.collect()) == [3, 4, 5, 6, 7]
+
+
+def _count_down(df, _r):
+    """One round towards all-zero: x -> max(x - 1, 0), flagging the
+    rows that moved."""
+    return df.select(
+        F.greatest(F.col("x") - 1, F.lit(0)).alias("x"),
+        (F.col("x") > 0).cast("long").alias("moved"),
+    )
+
+
+def test_iterate_fixpoint_stops_on_first_zero_change_round(spark):
+    calls = []
+
+    def step(df, r):
+        calls.append(r)
+        return _count_down(df, r)
+
+    start = spark.range(5).select(F.col("id").alias("x"))  # 0..4
+    out = graph.iterate(start, step, 20, changed="moved")
+    # rounds 1-4 move some row; round 5 moves none and ends the loop
+    assert calls == [1, 2, 3, 4, 5]
+    assert out.columns == ["x"]
+    assert _rdd_scans(out) == 1
+    assert [r.x for r in out.collect()] == [0] * 5
+
+
+def test_iterate_fixpoint_empty_input_stops_after_round_one(spark):
+    calls = []
+
+    def step(df, r):
+        calls.append(r)
+        return _count_down(df, r)
+
+    start = spark.range(0).select(F.col("id").alias("x"))
+    out = graph.iterate(start, step, 20, changed="moved")
+    assert calls == [1]
+    assert out.count() == 0
+
+
+def test_observed_count_wait_is_bounded(spark, monkeypatch):
+    """An observation whose frame never runs an action never gets its
+    metrics; the reader must raise, naming the kernel and round,
+    instead of blocking the job it watches."""
+    import time
+
+    import pytest
+    from pyspark.sql import Observation
+
+    obs = Observation("never_run")
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n"))
+    monkeypatch.setattr(graph, "_FIXPOINT_WAIT_S", 0.3)
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="some_kernel: round 7"):
+        graph._observed_count(obs, "some_kernel", 7)
+    assert time.monotonic() - t0 < 10

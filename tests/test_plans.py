@@ -1057,12 +1057,12 @@ SCAN_BUDGETS = {
     "join_range": 1,
     "join_self_pairs": 1,
     "join_semi": 2,
-    "bfs_hops": 0,  # final plan reads the round-3 localCheckpoint (the kcore/pagerank lineage discipline)
+    "bfs_hops": 0,  # final plan reads round 2's localCheckpoint; round 3 is lazy (graph.iterate)
     "k_anonymity": 1,
     "kcore": 0,
     "kendall_tau": 1,
     "ks_test": 1,
-    "label_prop": 0,  # all-localCheckpoint rounds (the bfs_hops/kcore lineage discipline)
+    "label_prop": 0,  # reads the edge and round-2 localCheckpoints only (graph.iterate)
     "knn_classify": 2,
     "knn_join": 2,
     "lang_id": 2,

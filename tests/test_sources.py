@@ -229,7 +229,7 @@ def test_all_queries_survive_empty_tables(spark, tmp_path, sf_dir):
 
 def test_stream_reader_offset_shape():
     """python_stream_source's r16 termination reads the committed offset
-    from the checkpoint's offset log instead of running a third (empty)
+    from the checkpoint (``committed_pos``) instead of running a third (empty)
     query lifecycle — pin the reader-side offset contract that read
     depends on: dict offsets of the form {"pos": N} advancing by
     STREAM_STEP up to STREAM_ROWS."""
@@ -246,6 +246,61 @@ def test_stream_reader_offset_shape():
     # exhausted source: offset stops advancing (the loop's exit signal)
     it, off2 = r.read(off)
     assert off2 == off and list(it) == []
+
+
+def _ckpt_batch(ckpt, batch, pos, committed):
+    """Write one batch of a streaming checkpoint the way Spark lays it
+    out: the offsets WAL entry (last line = the source's offset JSON)
+    and, once committed, the commits/ marker."""
+    (ckpt / "offsets").mkdir(parents=True, exist_ok=True)
+    (ckpt / "offsets" / str(batch)).write_text(
+        'v1\n{"batchWatermarkMs":0,"batchTimestampMs":0}\n'
+        + f'{{"pos":{pos}}}'
+    )
+    if committed:
+        (ckpt / "commits").mkdir(exist_ok=True)
+        (ckpt / "commits" / str(batch)).write_text(
+            'v1\n{"nextBatchWatermarkMs":0}'
+        )
+
+
+def test_committed_pos_absent_checkpoint(tmp_path):
+    from bigdata1_spark.sources.pydatasource import committed_pos
+
+    assert committed_pos(str(tmp_path / "never_started")) is None
+    # planned but nothing committed yet: still no committed offset
+    _ckpt_batch(tmp_path / "ckpt", 0, 250, committed=False)
+    assert committed_pos(str(tmp_path / "ckpt")) is None
+
+
+def test_committed_pos_ignores_planned_uncommitted_batch(tmp_path):
+    """The offsets WAL runs one batch ahead of the commit log when a
+    run dies between planning and committing; the committed position
+    is the last COMMITTED batch's offset, not the newest WAL entry."""
+    from bigdata1_spark.sources.pydatasource import committed_pos
+
+    ckpt = tmp_path / "ckpt"
+    _ckpt_batch(ckpt, 0, 250, committed=True)
+    _ckpt_batch(ckpt, 1, 500, committed=True)
+    _ckpt_batch(ckpt, 2, 750, committed=False)
+    (ckpt / "commits" / ".1.crc").write_text("")
+    assert committed_pos(str(ckpt)) == 500
+
+
+def test_committed_pos_corrupt_offset_raises(tmp_path):
+    import pytest
+
+    from bigdata1_spark.sources.pydatasource import committed_pos
+
+    ckpt = tmp_path / "ckpt"
+    _ckpt_batch(ckpt, 0, 250, committed=True)
+    (ckpt / "offsets" / "0").write_text("v1\n{not json")
+    with pytest.raises(ValueError, match="unreadable committed offset"):
+        committed_pos(str(ckpt))
+    # a commit whose offsets entry is missing is just as unreadable
+    (ckpt / "offsets" / "0").unlink()
+    with pytest.raises(ValueError, match="unreadable committed offset"):
+        committed_pos(str(ckpt))
 
 
 def test_bench_ab_registry_loads_head():
