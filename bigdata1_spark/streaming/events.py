@@ -1,14 +1,22 @@
 """Structured Streaming over the ``events`` table (SURVEY.md §7 phase 4).
 
 The reference declares spark-streaming but never uses it (SURVEY.md
-§2.8); this module is the engine's streaming surface: the same windowed
-aggregation runs in batch (oracle-checked via ``events_window`` in the
-registry) and as a stream (watermark + tumbling window), proving the
-logical plan is mode-agnostic.
+§2.8); this module is the engine's streaming surface. Each streamed
+registry key pairs a module-level builder (an unstarted streaming
+DataFrame over a parquet-directory source) with a batch twin, and both
+are held to the same DuckDB oracle, proving the logical plan is
+mode-agnostic.
 
-Stream inputs are parquet-directory sources: at scale this is the
-standard file-drop ingestion pattern (object-store prefix, exactly-once
-per file); tests materialize a temp directory from the testdata file.
+Drain policy, owned by :func:`_drain` alone: a streamed key replays the
+events file as ONE bounded ``availableNow`` run. The file is copied
+into a temp work dir (with far-future sentinel files when watermark-held
+state must flush), the builder starts under a state-partition count
+sized from the source bytes, every micro-batch goes through an
+idempotent ``foreachBatch`` overwrite sink, and the sink is read back,
+stripped of sentinel rows and pinned with an eager ``localCheckpoint``
+before the work dir is removed. At scale the source is an object-store
+prefix (file-drop ingestion, exactly-once per file); only paths change.
+``events_upsert_streamed`` keeps its own versioned MERGE sink.
 """
 
 from __future__ import annotations
@@ -16,6 +24,9 @@ from __future__ import annotations
 import contextlib
 import math
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,6 +35,8 @@ from bigdata1_spark.sources.tables import load_table
 
 WINDOW = "1 hour"
 WATERMARK = "1 day"
+# Microsecond timestamp strings: both engines format UTC this way.
+TS_US = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 # ~64 MB of bounded-source bytes per state-store partition: each stateful
 # partition carries fixed per-batch overhead (store open/commit/snapshot
@@ -136,38 +149,12 @@ def events_window_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark either way. Complete output mode keeps every window in
     the result so the bounded replay matches the batch answer exactly.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_events_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        out = os.path.join(work, "out")
-
-        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out)
-
-        with _state_sized_partitions(spark, src):
-            query = (
-                events_window_stream(spark, src)
-                .writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        # Pin the (hours × event-types)-sized result before the temp
-        # sink dir disappears with the finally-block cleanup.
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: events_window_stream(spark, src),
+        complete=True,
+    )
 
 
 def events_user_counts_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -184,41 +171,17 @@ def events_user_counts_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines format timestamps under UTC.
     Columns: user_id, n_events, last_seen.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_user_counts_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        out = os.path.join(work, "out")
-
-        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out)
-
-        counts = user_running_counts_stream(spark, src).select(
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: user_running_counts_stream(spark, src).select(
             "user_id",
             "n_events",
             F.date_format("last_seen", "yyyy-MM-dd HH:mm:ss")
             .alias("last_seen"),
-        )
-        with _state_sized_partitions(spark, src):
-            query = (
-                counts.writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        complete=True,
+    )
 
 
 def salted_agg_stream(
@@ -255,7 +218,7 @@ def events_salted_agg_streamed(
     forever, and no runtime replan can split it. Salting the streaming
     grouping key to (event_type, salt) spreads a hot key's update
     traffic and state across ``n_salts`` partitions; the FINAL merge
-    down to event_type runs batch-side in the foreachBatch sink, where
+    down to event_type runs batch-side on the drained result, where
     the input is the pre-aggregated (|keys| × n_salts)-row state
     table, never raw events.
 
@@ -266,48 +229,20 @@ def events_salted_agg_streamed(
     associatively, so the sink result equals the plain groupBy — which
     is exactly what the shared ``skew_salted_agg`` oracle pins.
     Complete output mode means the final micro-batch carries the full
-    partial-state table and the overwrite sink is replay-safe.
+    partial-state table, so merging the read-back equals merging in
+    the sink.
     Columns: event_type, n_events, total_value.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_salted_agg_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        out = os.path.join(work, "out")
-
-        partial = salted_agg_stream(spark, src, n_salts)
-
-        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            (
-                batch_df.groupBy("event_type")
-                .agg(
-                    F.sum("pn").cast("long").alias("n_events"),
-                    F.sum("pv").cast("double").alias("total_value"),
-                )
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-
-        with _state_sized_partitions(spark, src):
-            query = (
-                partial.writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    partial = _drain(
+        spark,
+        sf_dir,
+        lambda src: salted_agg_stream(spark, src, n_salts),
+        complete=True,
+    )
+    return partial.groupBy("event_type").agg(
+        F.sum("pn").cast("long").alias("n_events"),
+        F.sum("pv").cast("double").alias("total_value"),
+    )
 
 
 def _read_events_stream(
@@ -384,6 +319,18 @@ def click_purchase_join_stream(
         ),
     ).select(
         "user_id", "click_id", "click_ts", "purchase_ts", "purchase_value"
+    )
+
+
+def _attribution_strings(joined: DataFrame) -> DataFrame:
+    """Attribution-join output with both timestamps as µs strings.
+    Columns: user_id, click_id, click_ts, purchase_ts, purchase_value."""
+    return joined.select(
+        "user_id",
+        "click_id",
+        F.date_format("click_ts", TS_US).alias("click_ts"),
+        F.date_format("purchase_ts", TS_US).alias("purchase_ts"),
+        "purchase_value",
     )
 
 
@@ -466,30 +413,13 @@ def events_salted_join_streamed(
     (salting must not change the result multiset). Columns: user_id,
     click_id, click_ts, purchase_ts, purchase_value.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_salted_join_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        joined = click_purchase_join_stream_salted(spark, src).select(
-            "user_id",
-            "click_id",
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("click_ts"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("purchase_ts"),
-            "purchase_value",
-        )
-        return _run_bounded_append(spark, joined, work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: _attribution_strings(
+            click_purchase_join_stream_salted(spark, src)
+        ),
+    )
 
 
 def dedup_stream(
@@ -510,6 +440,18 @@ def dedup_stream(
     return stream.dropDuplicatesWithinWatermark(["event_id"])
 
 
+def _event_strings(events: DataFrame) -> DataFrame:
+    """Event rows with ``ts`` as a µs string.
+    Columns: event_id, user_id, event_type, ts_s, value."""
+    return events.select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.date_format("ts", TS_US).alias("ts_s"),
+        "value",
+    )
+
+
 def user_running_counts_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """Custom stateful operator demo: per-user running event count via
     update-mode streaming aggregation (state store backed). The
@@ -523,7 +465,6 @@ def user_running_counts_stream(spark: SparkSession, source_dir: str) -> DataFram
 
 
 def _flush_source(
-    spark: SparkSession,
     sf_dir: str,
     work: str,
     event_types: tuple[str, ...] = ("flush",),
@@ -536,33 +477,18 @@ def _flush_source(
     Append-mode streams only emit rows the watermark has finalized, and
     an availableNow drain terminates without a closing no-data batch —
     so the batch AFTER the first sentinel is what flushes every real
-    row out of state. Callers drop ``user_id < 0`` rows from the
-    drained result (an in-stream filter cannot be used: Catalyst pushes
+    row out of state. The drain drops ``user_id < 0`` rows from the
+    result (an in-stream filter cannot be used: Catalyst pushes
     deterministic filters below EventTimeWatermark, which would stop
-    the sentinels from advancing the clock).
+    the sentinels from advancing the clock). An events encoding the
+    arrow writer cannot interpret raises rather than degrading.
     """
-    import shutil
-
     src = os.path.join(work, "src")
     os.makedirs(src)
     data_file = os.path.join(src, "00_events.parquet")
     shutil.copy(os.path.join(sf_dir, "events.parquet"), data_file)
     os.utime(data_file, (1_000_000, 1_000_000))
-    try:
-        _write_sentinels_arrow(data_file, src, event_types)
-    except Exception as exc:
-        # Conservative fallback: the Spark-job form of the same two
-        # sentinel files (a max() probe + two tiny writes) for any
-        # events encoding the footer fast path doesn't recognize.
-        # Surface the exception (ADVICE r15): a silent fall-through
-        # would hide a fast-path regression as a 3-extra-jobs slowdown.
-        import warnings
-
-        warnings.warn(
-            f"arrow sentinel writer fell back to Spark jobs: {exc!r}",
-            stacklevel=2,
-        )
-        _write_sentinels_spark(spark, sf_dir, work, src, event_types)
+    _write_sentinels_arrow(data_file, src, event_types)
     return src
 
 
@@ -571,14 +497,11 @@ def _write_sentinels_arrow(
 ) -> None:
     """Write the two sentinel parquet files driver-side with pyarrow —
     the max-ts probe is a FOOTER-statistics read and each sentinel is a
-    ≤2-row table, so spending three Spark jobs on them (max aggregate +
-    two coalesce(1) writes, the pre-r15-opt shape) was pure scheduling
-    overhead (guide §1.2: remove passes). Sentinels reuse the source
-    file's exact arrow schema, so the drain directory stays
+    ≤2-row table, so no Spark job is spent on them. Sentinels reuse the
+    source file's exact arrow schema, so the drain directory stays
     schema-homogeneous whatever the events encoding (µs/ns timestamps
     or epoch int64 — the sentinel ts is computed in the SOURCE unit).
-    A 0-row events file yields 0-row sentinels, mirroring the old
-    ``limit(1)`` behaviour on the empty axis."""
+    A 0-row events file yields 0-row sentinels."""
     import datetime
 
     import pyarrow as pa
@@ -658,9 +581,9 @@ def _write_sentinels_arrow(
                 list(event_types[:n]), type=pa.string()
             ).cast(schema.field("event_type").type),
         }
-        # value/props parity with the Spark writer (0.0 / ""): sentinel
-        # rows are dropped by the user_id filter, but keep the payload
-        # identical so no downstream null-handling path changes.
+        # value/props are 0.0 / "" rather than NULL: sentinel rows are
+        # dropped by the user_id filter, but a non-null payload keeps
+        # every downstream null-handling path unchanged.
         if "value" in schema.names:
             values["value"] = pa.array(
                 [0.0] * n, type=pa.float64()
@@ -677,41 +600,6 @@ def _write_sentinels_arrow(
             pa.Table.from_arrays(cols, schema=pa.schema(list(schema))),
             dst,
         )
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-
-def _write_sentinels_spark(
-    spark: SparkSession,
-    sf_dir: str,
-    work: str,
-    src: str,
-    event_types: tuple[str, ...],
-) -> None:
-    """Original Spark-job sentinel writer, kept as the fallback for
-    events encodings the arrow fast path can't interpret."""
-    import glob
-    import shutil
-
-    ev = load_table(spark, sf_dir, "events")
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    for i, days in enumerate((7, 14), start=1):
-        rows = None
-        for j, etype in enumerate(event_types):
-            row = ev.limit(1).select(
-                F.lit(-(i * 10 + j)).cast("long").alias("event_id"),
-                (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS"))
-                .alias("ts"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit(etype).alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit("").alias("props"),
-            )
-            rows = row if rows is None else rows.unionByName(row)
-        tmp_dir = os.path.join(work, f"sentinel{i}")
-        rows.coalesce(1).write.parquet(tmp_dir)
-        (part,) = glob.glob(os.path.join(tmp_dir, "part-*.parquet"))
-        dst = os.path.join(src, f"{i:02d}_sentinel.parquet")
-        shutil.move(part, dst)
         os.utime(dst, (1_000_000 + i, 1_000_000 + i))
 
 
@@ -826,6 +714,17 @@ def sessionize_stream(
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def _session_strings(sessions: DataFrame) -> DataFrame:
+    """Sessionizer output with both bounds as µs strings.
+    Columns: user_id, session_start, session_end, n_events."""
+    return sessions.select(
+        "user_id",
+        F.date_format("session_start", TS_US).alias("session_start"),
+        F.date_format("session_end", TS_US).alias("session_end"),
+        "n_events",
     )
 
 
@@ -981,51 +880,74 @@ def _rocksdb_state_store(spark: SparkSession):
             spark.conf.set(key, old)
 
 
-def _run_bounded_append(
+def _drain(
     spark: SparkSession,
-    stream_df: DataFrame,
-    work: str,
+    sf_dir: str,
+    build: Callable[[str], DataFrame],
+    *,
+    complete: bool = False,
+    flush: tuple[str, ...] | None = None,
+    copies: int = 1,
     python_state: bool = False,
 ) -> DataFrame:
-    """Drain a bounded APPEND-mode stream through a foreachBatch sink
-    that writes each micro-batch to its own ``batch=<id>`` directory —
-    idempotent under replay (a re-run micro-batch overwrites ITS OWN
-    directory, never a neighbor's), correct under multiple batches
-    (unlike a whole-output overwrite, which only complete-mode
-    aggregations can afford). This is the production object-store
-    pattern; reading the directory tree back returns the union."""
-    import os
+    """The drain policy every streamed key except the upsert shares:
+    one bounded ``availableNow`` run of ``build(src)``, the unstarted
+    stream over a fresh source directory, returned as a batch frame.
 
-    out = os.path.join(work, "out")
+    * Source: ``copies`` copies of ``events.parquet`` or, when ``flush``
+      names sentinel event types, the :func:`_flush_source` layout.
+    * Run: under :func:`_state_sized_partitions` (``python_state`` for
+      Python-state operators), through a ``foreachBatch`` sink whose
+      writes are idempotent under replay. ``complete`` output
+      overwrites the whole sink (the last micro-batch carries the full
+      result); append output writes each micro-batch to its own
+      ``batch=<id>`` directory, so a replayed batch overwrites only
+      itself and reading the tree back returns the union.
+    * Read-back: a source that yields no micro-batch never creates the
+      sink and reads back as an empty frame with the stream's schema;
+      sentinel rows (``user_id < 0``) are dropped; the result is pinned
+      with an eager ``localCheckpoint`` before the temp work dir is
+      removed, which happens on return and on raise alike.
+    """
+    work = tempfile.mkdtemp(prefix="bigdata1_drain_")
+    try:
+        if flush is None:
+            src = os.path.join(work, "src")
+            os.makedirs(src)
+            for i in range(copies):
+                shutil.copy(
+                    os.path.join(sf_dir, "events.parquet"),
+                    os.path.join(src, f"events_{i}.parquet"),
+                )
+        else:
+            src = _flush_source(sf_dir, work, flush)
+        stream_df = build(src)
+        out = os.path.join(work, "out")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out, f"batch={batch_id}")
-        )
+        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+            path = out if complete else os.path.join(out, f"batch={batch_id}")
+            batch_df.write.mode("overwrite").parquet(path)
 
-    with _state_sized_partitions(
-        spark, os.path.join(work, "src"), python_state=python_state
-    ):
-        query = (
-            stream_df.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    # a bounded stream over an empty source produces zero micro-batches
-    # and never creates the sink directory — surface that as an empty
-    # result with the stream's schema, not an AnalysisException
-    if not os.path.isdir(out):
-        return spark.createDataFrame(
-            [], stream_df.schema
-        ).localCheckpoint(eager=True)
-    # batch=<id> reads back as an inferred partition column — sink
-    # bookkeeping, not part of the result contract.
-    return (
-        spark.read.parquet(out).drop("batch").localCheckpoint(eager=True)
-    )
+        with _state_sized_partitions(spark, src, python_state=python_state):
+            (
+                stream_df.writeStream.foreachBatch(write_batch)
+                .outputMode("complete" if complete else "append")
+                .option("checkpointLocation", os.path.join(work, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        if os.path.isdir(out):
+            # batch=<id> reads back as an inferred partition column —
+            # sink bookkeeping, not part of the result contract
+            result = spark.read.parquet(out).drop("batch")
+        else:
+            result = spark.createDataFrame([], stream_df.schema)
+        if flush is not None:
+            result = result.filter(F.col("user_id") >= 0)
+        return result.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1041,30 +963,11 @@ def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join. Columns: user_id, click_id, click_ts, purchase_ts,
     purchase_value.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_attribution_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        joined = click_purchase_join_stream(spark, src).select(
-            "user_id",
-            "click_id",
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("click_ts"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("purchase_ts"),
-            "purchase_value",
-        )
-        return _run_bounded_append(spark, joined, work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: _attribution_strings(click_purchase_join_stream(spark, src)),
+    )
 
 
 def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,29 +983,12 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     redelivered rows. Columns: event_id, user_id, event_type, ts_s,
     value.
     """
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_dedup_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        for copy_name in ("events_a.parquet", "events_b.parquet"):
-            shutil.copy(
-                os.path.join(sf_dir, "events.parquet"),
-                os.path.join(src, copy_name),
-            )
-        deduped = dedup_stream(spark, src).select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
-            "value",
-        )
-        return _run_bounded_append(spark, deduped, work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: _event_strings(dedup_stream(spark, src)),
+        copies=2,
+    )
 
 
 SLIDE_DURATION = "2 hours"
@@ -1162,36 +1048,12 @@ def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     don't cover. State at scale: windows-per-event is duration/slide
     (2 here) — state size is bounded by watermark horizon × slide
     count, independent of input volume."""
-    import os
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_events_sliding_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        out = os.path.join(work, "out")
-
-        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out)
-
-        with _state_sized_partitions(spark, src):
-            query = (
-                sliding_stream(spark, src)
-                .writeStream.foreachBatch(write_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return spark.read.parquet(out).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: sliding_stream(spark, src),
+        complete=True,
+    )
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -1243,8 +1105,6 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: user_id, event_id, event_type, ts_s, value.
     """
     import glob
-    import shutil
-    import tempfile
 
     work = tempfile.mkdtemp(prefix="bigdata1_upsert_stream_")
     try:
@@ -1294,13 +1154,7 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 f"expected multi-batch upsert, got {len(versions)} versions"
             )
-        final = spark.read.parquet(versions[-1]).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
-            "value",
-        )
+        final = _event_strings(spark.read.parquet(versions[-1]))
         return final.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -1322,10 +1176,8 @@ def session_window_stream(
             F.col("user_id"),
         )
         .agg(
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_start"),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_end"),
+            F.date_format(F.min("ts"), TS_US).alias("session_start"),
+            F.date_format(F.max("ts"), TS_US).alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
         )
         .select("user_id", "session_start", "session_end", "n_events")
@@ -1363,17 +1215,12 @@ def events_session_streamed(
     (``>=`` gap boundary). Columns: user_id, session_start,
     session_end, n_events.
     """
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_session_stream_")
-    try:
-        src = _flush_source(spark, sf_dir, work)
-        sessions = session_window_stream(spark, src, gap_min)
-        drained = _run_bounded_append(spark, sessions, work)
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: session_window_stream(spark, src, gap_min),
+        flush=("flush",),
+    )
 
 
 def events_stateful_sessions_streamed(
@@ -1393,28 +1240,15 @@ def events_stateful_sessions_streamed(
     driver hash row. Columns: user_id, session_start, session_end,
     n_events.
     """
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_stateful_sess_")
-    try:
-        src = _flush_source(spark, sf_dir, work)
-        sessions = sessionize_stream(
-            spark, src, max_files_per_trigger=1
-        ).select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_start"),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_end"),
-            "n_events",
-        )
-        drained = _run_bounded_append(
-            spark, sessions, work, python_state=True
-        )
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: _session_strings(
+            sessionize_stream(spark, src, max_files_per_trigger=1)
+        ),
+        flush=("flush",),
+        python_state=True,
+    )
 
 
 def events_tws_sessions_streamed(
@@ -1440,29 +1274,16 @@ def events_tws_sessions_streamed(
     provider switch and restores the session default afterward.
     Columns: user_id, session_start, session_end, n_events.
     """
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_tws_sess_")
-    try:
-        src = _flush_source(spark, sf_dir, work)
-        sessions = sessionize_stream_tws(
-            spark, src, max_files_per_trigger=1
-        ).select(
-            "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_start"),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .alias("session_end"),
-            "n_events",
+    with _rocksdb_state_store(spark):
+        return _drain(
+            spark,
+            sf_dir,
+            lambda src: _session_strings(
+                sessionize_stream_tws(spark, src, max_files_per_trigger=1)
+            ),
+            flush=("flush",),
+            python_state=True,
         )
-        with _rocksdb_state_store(spark):
-            drained = _run_bounded_append(
-                spark, sessions, work, python_state=True
-            )
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def click_purchase_leftjoin_stream(
@@ -1492,7 +1313,7 @@ def click_purchase_leftjoin_stream(
         )
         .withWatermark("purchase_ts", horizon)
     )
-    return clicks.join(
+    joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
@@ -1501,15 +1322,8 @@ def click_purchase_leftjoin_stream(
             <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
         ),
         "left_outer",
-    ).select(
-        "user_id",
-        "click_id",
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .alias("click_ts"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .alias("purchase_ts"),
-        "purchase_value",
     )
+    return _attribution_strings(joined)
 
 
 def events_leftjoin_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1528,20 +1342,12 @@ def events_leftjoin_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: user_id, click_id, click_ts, purchase_ts, purchase_value
     (last two NULL for unmatched clicks).
     """
-    import shutil
-    import tempfile
-
-    horizon = "1 hour"
-    work = tempfile.mkdtemp(prefix="bigdata1_leftjoin_stream_")
-    try:
-        src = _flush_source(
-            spark, sf_dir, work, event_types=("click", "purchase")
-        )
-        joined = click_purchase_leftjoin_stream(spark, src, horizon)
-        drained = _run_bounded_append(spark, joined, work)
-        return drained.filter(F.col("user_id") >= 0)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        sf_dir,
+        lambda src: click_purchase_leftjoin_stream(spark, src),
+        flush=("click", "purchase"),
+    )
 
 
 def enrich_stream(
@@ -1561,7 +1367,7 @@ def enrich_stream(
         "event_id",
         "user_id",
         "event_type",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_s"),
+        F.date_format("ts", TS_US).alias("ts_s"),
         "cohort",
     )
 
@@ -1580,18 +1386,6 @@ def events_enrich_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     join run fully in batch. Columns: event_id, user_id, event_type,
     ts_s, cohort.
     """
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="bigdata1_enrich_stream_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        enriched = enrich_stream(spark, src, sf_dir)
-        return _run_bounded_append(spark, enriched, work)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, sf_dir, lambda src: enrich_stream(spark, src, sf_dir)
+    )

@@ -223,16 +223,52 @@ def test_sliding_stream_matches_batch(spark, sf_dir):
     assert sum(r[2] for r in batch) == 2 * n
 
 
-def test_bounded_append_empty_source(spark, tmp_path):
+def test_bounded_append_empty_source(spark, sf_dir):
     """A bounded stream over an empty source drains zero micro-batches;
     the sink directory never exists and the drain must hand back an
     empty frame with the stream's schema instead of raising."""
-    src = tmp_path / "empty_src"
-    src.mkdir()
-    sdf = spark.readStream.schema("x BIGINT, y STRING").parquet(str(src))
-    out = se._run_bounded_append(spark, sdf, str(tmp_path / "work"))
+    out = se._drain(
+        spark,
+        sf_dir,
+        lambda src: spark.readStream.schema("x BIGINT, y STRING").parquet(
+            src
+        ),
+        copies=0,
+    )
     assert out.columns == ["x", "y"]
     assert out.count() == 0
+
+
+def test_drain_removes_work_dir_on_return_and_raise(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The drain's temp work dir (source copy, checkpoint, sink) is
+    gone after a normal drain AND after a builder that raises."""
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    seen = []
+
+    def build(src):
+        seen.append(src)
+        return se._read_events_stream(spark, src).select("event_id")
+
+    out = se._drain(spark, sf_dir, build)
+    assert out.count() > 0
+
+    def failing_build(src):
+        seen.append(src)
+        raise RuntimeError("builder failed")
+
+    with pytest.raises(RuntimeError, match="builder failed"):
+        se._drain(spark, sf_dir, failing_build)
+
+    assert len(seen) == 2
+    for src in seen:
+        assert src.startswith(str(tmp_path))
+        assert not os.path.exists(os.path.dirname(src))
+    assert os.listdir(tmp_path) == []
 
 
 def test_checkpoint_resume_exactly_once(spark, sf_dir, tmp_path):
@@ -461,7 +497,7 @@ def test_session_streamed_killed_mid_drain_resumes_to_parity(
 
     work = str(tmp_path / "work")
     os.makedirs(work)
-    src = se._flush_source(spark, sf_dir, work)
+    src = se._flush_source(sf_dir, work)
     # split the events file into two half-files (mod-times before the
     # sentinels') so open sessions live in the state store across a
     # batch boundary before the flush
@@ -676,3 +712,78 @@ def test_watermark_drops_pre_epoch_event_times(spark, tmp_path):
     kept = sorted(r.id for r in spark.read.parquet(out).collect())
     # ids 1-3 (pre-epoch and exactly-epoch) are dropped; 4-5 survive.
     assert kept == [4, 5]
+
+
+def _write_events(path, ts, ts_type, n_rows):
+    """events.parquet with the testdata column set and ``ts`` stored as
+    ``ts_type`` (raw epoch integers, ``n_rows`` of them)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table(
+        {
+            "event_id": pa.array(range(n_rows), pa.int64()),
+            "ts": pa.array(ts[:n_rows], pa.int64()).cast(ts_type),
+            "user_id": pa.array([7] * n_rows, pa.int64()),
+            "event_type": pa.array(["click"] * n_rows, pa.string()),
+            "value": pa.array([1.5] * n_rows, pa.float64()),
+            "props": pa.array(["{}"] * n_rows, pa.string()),
+        }
+    )
+    pq.write_table(table, path)
+
+
+_US_TS = [1_700_000_000_000_000, 1_700_000_360_000_000, 1_699_999_000_000_000]
+
+
+@pytest.mark.parametrize(
+    "encoding", ["us_ntz", "us_utc", "ns", "int_us", "int_ns", "zero_rows", "real"]
+)
+def test_flush_sentinels_match_source_schema(encoding, sf_dir, tmp_path):
+    """The arrow sentinel writer (no Spark) handles every ``events.ts``
+    encoding the testdata has used: each sentinel file carries the data
+    file's exact schema, ``ts`` at max + 7 / 14 days in the source's own
+    unit, and one row per flush event type (none for a 0-row file)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    data_dir = tmp_path / "data"
+    data_dir.mkdir()
+    events = data_dir / "events.parquet"
+    per_day_us = 86_400 * 10**6
+    if encoding == "real":
+        shutil.copy(f"{sf_dir}/events.parquet", events)
+    else:
+        ts_type, scale, n_rows = {
+            "us_ntz": (pa.timestamp("us"), 1, 3),
+            "us_utc": (pa.timestamp("us", tz="UTC"), 1, 3),
+            "ns": (pa.timestamp("ns"), 1_000, 3),
+            "int_us": (pa.int64(), 1, 3),
+            "int_ns": (pa.int64(), 1_000, 3),
+            "zero_rows": (pa.timestamp("us"), 1, 0),
+        }[encoding]
+        _write_events(events, [t * scale for t in _US_TS], ts_type, n_rows)
+
+    data = pq.read_table(events)
+    ts_type = data.schema.field("ts").type
+    if pa.types.is_timestamp(ts_type):
+        per_day = per_day_us * {"us": 1, "ns": 1_000}[ts_type.unit]
+    else:
+        per_day = per_day_us * (1_000 if encoding == "int_ns" else 1)
+    flush = ("click", "purchase")
+    src = se._flush_source(str(data_dir), str(tmp_path / "work"), flush)
+
+    for i, days in enumerate((7, 14), start=1):
+        sentinel = pq.read_table(f"{src}/{i:02d}_sentinel.parquet")
+        assert sentinel.schema.remove_metadata() == (
+            data.schema.remove_metadata()
+        )
+        if data.num_rows == 0:
+            assert sentinel.num_rows == 0
+            continue
+        assert sentinel.num_rows == len(flush)
+        max_ts = pc.max(data["ts"].cast(pa.int64())).as_py()
+        got = sentinel["ts"].cast(pa.int64()).to_pylist()
+        assert got == [max_ts + days * per_day] * len(flush)
+        assert sentinel["user_id"].to_pylist() == [-1] * len(flush)
