@@ -69,8 +69,14 @@ def _load_ab_registry(gitref: str):
     be timed INTERLEAVED in one warm session (per-key noise hits both
     variants alike, which single full runs on this shared host cannot
     guarantee; observed 1.5-5x swings on identical code). Additive
-    only: without BENCH_AB the bench path is byte-identical."""
+    only: without BENCH_AB the bench path is byte-identical.
+
+    Returns ``(registry, restore)``; ``restore()`` undoes the
+    ``sys.path``/``PYTHONPATH`` additions, drops the renamed package
+    from ``sys.modules`` and deletes the temp tree."""
+    import importlib
     import re
+    import shutil
     import subprocess
     import tempfile
 
@@ -96,20 +102,54 @@ def _load_ab_registry(gitref: str):
             src = re.sub(r"\bbigdata1_spark\b", "bigdata1_spark_abref", src)
             with open(p, "w") as fh:
                 fh.write(src)
+    saved_pythonpath = os.environ.get("PYTHONPATH")
+
+    def restore() -> None:
+        if work in sys.path:
+            sys.path.remove(work)
+        if saved_pythonpath is None:
+            os.environ.pop("PYTHONPATH", None)
+        else:
+            os.environ["PYTHONPATH"] = saved_pythonpath
+        for name in [m for m in sys.modules
+                     if m.split(".")[0] == "bigdata1_spark_abref"]:
+            del sys.modules[name]
+        shutil.rmtree(work, ignore_errors=True)
+
     sys.path.insert(0, work)
     # Python workers must also import the renamed package (sources /
     # UDFs pickle by reference): extend PYTHONPATH BEFORE the JVM
     # starts so locally-spawned workers inherit it — which is why
     # callers must load the ref registry before get_spark().
     os.environ["PYTHONPATH"] = (
-        work + os.pathsep + os.environ.get("PYTHONPATH", "")
+        work + os.pathsep + (saved_pythonpath or "")
     ).rstrip(os.pathsep)
-    import importlib
-
-    return importlib.import_module("bigdata1_spark_abref.registry")
+    try:
+        return importlib.import_module("bigdata1_spark_abref.registry"), restore
+    except BaseException:
+        restore()
+        raise
 
 
 def main() -> None:
+    # BENCH_AB=<gitref> — interleaved HEAD-vs-ref comparison (VERDICT
+    # r15 item 7). Loaded BEFORE the session so worker PYTHONPATH can
+    # include the ref package, and unloaded when the run returns or
+    # raises. The ONE-line stdout contract and the headline numbers
+    # stay pure HEAD; ref timings + per-key min ratios ride in the
+    # detail file's "ab" block and a stderr summary.
+    ab_ref = os.environ.get("BENCH_AB")
+    if not ab_ref:
+        _bench(None, None)
+        return
+    ab_registry, restore = _load_ab_registry(ab_ref)
+    try:
+        _bench(ab_ref, ab_registry)
+    finally:
+        restore()
+
+
+def _bench(ab_ref: str | None, ab_registry) -> None:
     # "sf" is stably typed (float or null) so cross-round tooling can
     # compare numerically; the raw directory name rides in "sf_label".
     sf_label = os.path.basename(SF_DIR.rstrip("/"))
@@ -122,13 +162,6 @@ def main() -> None:
         )
     except ValueError:  # unconventional dir name → numeric slot stays null
         sf = None
-    # BENCH_AB=<gitref> — interleaved HEAD-vs-ref comparison (VERDICT
-    # r15 item 7). Loaded BEFORE the session so worker PYTHONPATH can
-    # include the ref package. The ONE-line stdout contract and the
-    # headline numbers stay pure HEAD; ref timings + per-key min ratios
-    # ride in the detail file's "ab" block and a stderr summary.
-    ab_ref = os.environ.get("BENCH_AB")
-    ab_registry = _load_ab_registry(ab_ref) if ab_ref else None
     spark = get_spark(app_name="bigdata1-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -174,14 +207,16 @@ def main() -> None:
         samples = []
         ab_samples = []
         try:
-            for _ in range(RUNS):
-                if ab_fn is not None:  # ref first, HEAD second, each rep
+            for rep in range(RUNS):
+                variants = [(fn, samples)]
+                if ab_fn is not None:
+                    # ref first on even reps, HEAD first on odd reps, so
+                    # the warm-cache slot does not always favour HEAD
+                    variants.insert(rep % 2, (ab_fn, ab_samples))
+                for run, dest in variants:
                     t0 = time.perf_counter()
-                    _materialize(ab_fn(spark, SF_DIR))
-                    ab_samples.append(time.perf_counter() - t0)
-                t0 = time.perf_counter()
-                _materialize(fn(spark, SF_DIR))
-                samples.append(time.perf_counter() - t0)
+                    _materialize(run(spark, SF_DIR))
+                    dest.append(time.perf_counter() - t0)
         except Exception as exc:  # one broken query must not kill the run
             errors[key] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"[bench] {key} FAILED: {errors[key]}", file=sys.stderr)

@@ -4491,7 +4491,7 @@ register(
 
 # Replication-salted join on the canonical hot FK (l_suppkey) — equals
 # the unsalted inner join by construction, which the oracle pins; the
-# Zipf-skewed bench twin (tools/gen_skew.py) gives the hot key ~18% of
+# Zipf-skewed bench twin (`tools/gen_twin.py skew`) gives the hot key ~18% of
 # all rows so the salting is exercised by data that needs it.
 register(
     "skew_salted_join",

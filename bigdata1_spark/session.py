@@ -62,6 +62,16 @@ def streaming_conf(rocksdb: bool = True) -> dict[str, str]:
     }
 
 
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` when set, else half of physical memory
+    capped at 16g — a fixed 16g heap is a latent OOM-kill on a host
+    with less RAM than that."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20 // 2
+    return "16g" if half_mb >= 16 * 1024 else f"{half_mb}m"
+
+
 def get_spark(
     app_name: str = "bigdata1-spark",
     master: str | None = None,
@@ -89,14 +99,11 @@ def get_spark(
         # Local mode packs driver + all executor threads into ONE JVM,
         # and Spark's 1g default Xmx starves 32 threads (~31 MB each):
         # measured at sf1, assoc_rules' hash aggregation OOMed the
-        # whole context. Size the heap for the harness box instead —
-        # env-overridable, and only for local masters (under
+        # whole context. Size the heap for the host instead
+        # (``driver_memory``), and only for local masters (under
         # spark-submit the driver JVM is already running and this conf
         # would be silently ignored).
-        conf.setdefault(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
+        conf.setdefault("spark.driver.memory", driver_memory())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -53,3 +53,14 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def empty_dir(tmp_path_factory, sf_dir) -> str:
+    """Zero-row twin of ``sf_dir`` (schemas intact), built by the same
+    ``tools/gen_twin.py`` axis the oracle sweep uses."""
+    from tools.gen_twin import write_twin
+
+    out = str(tmp_path_factory.mktemp("emptydata"))
+    write_twin("empty", sf_dir, out)
+    return out

@@ -3,8 +3,8 @@ skew / NULL): every table keeps its schema but carries no rows — the
 empty-slice shape a partition-pruned scan or a data hole produces
 constantly at 100 TB.
 
-The full 219-key sweep runs via ``tools/gen_empty.py`` +
-``tools/local_correctness.py`` (banked as CORRECTNESS_local_r13_empty);
+The full-registry sweep runs via ``tools/gen_twin.py empty`` +
+``tools/local_correctness.py`` (banked per axis in CORRECTNESS_local.json);
 this file pins the specific divergences that sweep caught so they
 can't regress:
 
@@ -41,19 +41,6 @@ PINNED_KEYS = (
     "mutual_info",
     "topk_window",
 )
-
-
-@pytest.fixture(scope="module")
-def empty_dir(tmp_path_factory, sf_dir) -> str:
-    import pyarrow.parquet as pq
-
-    from bigdata1_spark.sources.tables import TABLES
-
-    out = tmp_path_factory.mktemp("emptydata")
-    for t in TABLES:
-        schema = pq.read_schema(f"{sf_dir}/{t}.parquet")
-        pq.write_table(schema.empty_table(), str(out / f"{t}.parquet"))
-    return str(out)
 
 
 @pytest.fixture(scope="module")

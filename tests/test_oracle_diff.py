@@ -1,5 +1,7 @@
 """Oracle-differential test over every registered query (the same check
-the driver runs at sf0.01 — SURVEY.md §5 item 1)."""
+the driver runs at sf0.01 — SURVEY.md §5 item 1). The same per-key
+frame also carries the registry-wide plan audit and scan budget
+(``tests.test_plans.audit_registry_plan``)."""
 
 from __future__ import annotations
 
@@ -7,11 +9,13 @@ import pytest
 
 from bigdata1_spark import registry
 from tests.oracle import assert_matches_oracle
+from tests.test_plans import audit_registry_plan
 
 
 @pytest.mark.parametrize("key", sorted(registry.ORACLES))
 def test_query_matches_oracle(key, spark, duck, sf_dir):
     df = registry.QUERIES[key](spark, sf_dir)
+    audit_registry_plan(key, df)
     assert_matches_oracle(df, duck, registry.ORACLES[key], key=key)
     # operators that cache intermediates must not leak storage memory
     # across the ~80-query sweep

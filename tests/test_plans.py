@@ -861,47 +861,6 @@ def test_aqe_skew_join_engages_on_hot_key(spark):
             spark.conf.set(k, v)
 
 
-def test_registry_wide_plan_audit(spark, sf_dir):
-    """EVERY registry key's physical plan, mechanically audited for the
-    two invariants the 100 TB posture claims repo-wide: no
-    CartesianProduct (join_cross is the one deliberate exception;
-    broadcast-1-row scalars plan as BroadcastNestedLoopJoin, which is
-    bounded and allowed) and no BatchEvalPython (row-at-a-time Python
-    UDF — Arrow/Pandas eval nodes are the sanctioned Python path).
-    Targeted tests pin per-key shapes; this pins the floor for keys no
-    one wrote a targeted test for, including future ones."""
-    from bigdata1_spark import registry
-
-    allow_cartesian = {"join_cross"}
-    # The UDTF keys deliberately plan BatchEvalPythonUDTF: the Arrow
-    # UDTF path (useArrow=True -> ArrowEvalPythonUDTF) converts each
-    # per-row eval() yield through pandas and measured 8-10x SLOWER on
-    # these tiny-yield table functions (2.1 s -> 17-23 s at sf0.1,
-    # A/B in-process both orders). Row-at-a-time applies to scalar
-    # UDFs, where the rule stands unconditionally.
-    allow_pickled_udtf = {"udtf_tokens", "udtf_analyze"}
-    violations = []
-    for key in sorted(registry.QUERIES):
-        try:
-            df = registry.QUERIES[key](spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as ex:  # noqa: BLE001 - surface as a violation
-            violations.append(f"{key}: plan build failed: {ex}")
-            continue
-        if "CartesianProduct" in plan and key not in allow_cartesian:
-            violations.append(f"{key}: CartesianProduct in plan")
-        # Check the scalar row-at-a-time case INDEPENDENTLY of the UDTF
-        # case (an `elif` here let a scalar BatchEvalPython hide behind
-        # a sanctioned UDTF node in the same plan — ADVICE r11).
-        n_udtf = plan.count("BatchEvalPythonUDTF")
-        n_scalar = plan.count("BatchEvalPython") - n_udtf
-        if n_udtf and key not in allow_pickled_udtf:
-            violations.append(f"{key}: pickled BatchEvalPythonUDTF")
-        if n_scalar:
-            violations.append(f"{key}: row-at-a-time BatchEvalPython")
-    assert not violations, "\n".join(violations)
-
-
 def _unique_scan_count(df) -> int:
     """Unique '(N) Scan parquet' node-detail headers in the FINAL plan
     (Initial Plan section excluded; cached subtrees plan as
@@ -1218,41 +1177,75 @@ SCAN_BUDGETS = {
 }
 
 
-def test_registry_wide_scan_budget(spark, sf_dir):
-    """EVERY registry key's plan must not read the base parquet more
-    often than its audited budget — the mechanical gate for the
-    repeated-full-corpus-scan class. A violation means a frame fans out
-    into multiple consumers without a cache (or a cache stopped
+def audit_registry_plan(key: str, df) -> None:
+    """The registry-wide plan floor, checked by
+    ``tests/test_oracle_diff.py::test_query_matches_oracle`` on the
+    frame it builds for every key, before collecting it — so one
+    registry sweep carries the oracle diff, this audit and the scan
+    budget.
+
+    Audit: no CartesianProduct (join_cross is the one deliberate
+    exception; broadcast-1-row scalars plan as BroadcastNestedLoopJoin,
+    which is bounded and allowed) and no BatchEvalPython (row-at-a-time
+    Python UDF — Arrow/Pandas eval nodes are the sanctioned Python
+    path). Targeted tests pin per-key shapes; this pins the floor for
+    keys no one wrote a targeted test for, including future ones.
+
+    Scan budget: the plan must not read the base parquet more often
+    than its audited ``SCAN_BUDGETS`` entry — the mechanical gate for
+    the repeated-full-corpus-scan class. A violation means a frame fans
+    out into multiple consumers without a cache (or a cache stopped
     matching, e.g. a union flattened through it — see upsert_apply).
 
-    Streaming drains are exempt (ADVICE r12): calling those registry
-    functions executes full availableNow queries (checkpoint dirs,
-    foreachBatch sinks) only to inspect the post-drain localCheckpoint
-    read, whose budget of 0 is trivially true and gates nothing. Their
-    UNSTARTED source plans are gated instead by
+    Streaming drains are exempt from the budget (ADVICE r12): calling
+    those registry functions executes full availableNow queries
+    (checkpoint dirs, foreachBatch sinks), and the post-drain
+    localCheckpoint read's budget of 0 is trivially true and gates
+    nothing. Their UNSTARTED source plans are gated instead by
     ``test_streaming_source_plan_budgets`` below (VERDICT r13 task 4),
     which enumerates exactly this exempt set — a rename/new drain must
     clear both lists."""
-    from bigdata1_spark import registry
-
+    allow_cartesian = {"join_cross"}
+    # The UDTF keys deliberately plan BatchEvalPythonUDTF: the Arrow
+    # UDTF path (useArrow=True -> ArrowEvalPythonUDTF) converts each
+    # per-row eval() yield through pandas and measured 8-10x SLOWER on
+    # these tiny-yield table functions (2.1 s -> 17-23 s at sf0.1,
+    # A/B in-process both orders). Row-at-a-time applies to scalar
+    # UDFs, where the rule stands unconditionally.
+    allow_pickled_udtf = {"udtf_tokens", "udtf_analyze"}
     violations = []
-    for key in sorted(registry.QUERIES):
-        budget = SCAN_BUDGETS.get(key)
-        if budget is None:
-            violations.append(f"{key}: no scan budget — audit and add one")
-            continue
-        if budget == 0 and (
-            key.endswith("_streamed") or key == "python_stream_source"
-        ):
-            continue  # full drain just to see a trivially-0 plan
-        try:
-            n = _unique_scan_count(registry.QUERIES[key](spark, sf_dir))
-        except Exception as ex:  # noqa: BLE001 - surface as a violation
-            violations.append(f"{key}: plan build failed: {ex}")
-            continue
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "CartesianProduct" in plan and key not in allow_cartesian:
+        violations.append(f"{key}: CartesianProduct in plan")
+    # Check the scalar row-at-a-time case INDEPENDENTLY of the UDTF
+    # case (an `elif` here let a scalar BatchEvalPython hide behind
+    # a sanctioned UDTF node in the same plan — ADVICE r11).
+    n_udtf = plan.count("BatchEvalPythonUDTF")
+    n_scalar = plan.count("BatchEvalPython") - n_udtf
+    if n_udtf and key not in allow_pickled_udtf:
+        violations.append(f"{key}: pickled BatchEvalPythonUDTF")
+    if n_scalar:
+        violations.append(f"{key}: row-at-a-time BatchEvalPython")
+    budget = SCAN_BUDGETS.get(key)
+    if budget is None:
+        violations.append(f"{key}: no scan budget — audit and add one")
+    elif not (budget == 0 and (
+        key.endswith("_streamed") or key == "python_stream_source"
+    )):
+        n = _unique_scan_count(df)
         if n > budget:
             violations.append(f"{key}: {n} parquet scans, budget {budget}")
     assert not violations, "\n".join(violations)
+
+
+def test_every_query_has_a_scan_budget():
+    """A NEW key must be added to SCAN_BUDGETS deliberately."""
+    from bigdata1_spark import registry
+
+    missing = sorted(set(registry.QUERIES) - set(SCAN_BUDGETS))
+    assert not missing, "\n".join(
+        f"{key}: no scan budget — audit and add one" for key in missing
+    )
 
 
 # --------------------------------------------------------------------------

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata1_spark.sources import billing, generator
@@ -189,27 +190,15 @@ def test_normalize_event_ts_all_encodings(spark):
         assert got == want, (label, got)
 
 
-def test_all_queries_survive_empty_tables(spark, tmp_path, sf_dir):
+def test_all_queries_survive_empty_tables(spark, empty_dir):
     """Every registry key must run (usually to an empty result) against
     schema-complete but EMPTY tables — the shape of a fresh ingest
     prefix. Round-5 advisory review caught one such latent crash
     (cooccur_pmi's negative slice length); this sweep pins the whole
     registry. A handful of expensive keys are sampled out to keep the
     test fast; the full sweep runs in the round harness."""
-    import duckdb
-
     from bigdata1_spark import registry
 
-    empty = tmp_path / "sf_empty"
-    empty.mkdir()
-    con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet("
-            f"'{sf_dir}/{t}.parquet') LIMIT 0) "
-            f"TO '{empty}/{t}.parquet' (FORMAT PARQUET)"
-        )
     skip = {  # streaming drains + iterative keys: slow, covered elsewhere
         k for k in registry.QUERIES
         if k.endswith("_streamed") or k in ("pagerank", "dedup_clusters")
@@ -219,7 +208,7 @@ def test_all_queries_survive_empty_tables(spark, tmp_path, sf_dir):
         if key in skip:
             continue
         try:
-            registry.QUERIES[key](spark, str(empty)).count()
+            registry.QUERIES[key](spark, empty_dir).count()
         except Exception as ex:  # noqa: BLE001
             failures[key] = f"{type(ex).__name__}: {ex}"[:120]
     assert not failures, failures
@@ -288,8 +277,6 @@ def test_committed_pos_ignores_planned_uncommitted_batch(tmp_path):
 
 
 def test_committed_pos_corrupt_offset_raises(tmp_path):
-    import pytest
-
     from bigdata1_spark.sources.pydatasource import committed_pos
 
     ckpt = tmp_path / "ckpt"
@@ -303,10 +290,10 @@ def test_committed_pos_corrupt_offset_raises(tmp_path):
         committed_pos(str(ckpt))
 
 
-def test_bench_ab_registry_loads_head():
-    """BENCH_AB's renamed-package loader must materialize a committed
-    ref's registry with the same key set as the live one (the
-    interleaved A/B times ref and HEAD key-by-key)."""
+@pytest.fixture
+def ab_loader():
+    """``bench._load_ab_registry`` with ``os.environ`` and ``sys.path``
+    snapshotted before the test and restored after it."""
     import os
     import subprocess
     import sys as _sys
@@ -315,16 +302,62 @@ def test_bench_ab_registry_loads_head():
     if subprocess.run(
         ["git", "-C", repo, "rev-parse", "HEAD"], capture_output=True
     ).returncode != 0:
-        import pytest
-
         pytest.skip("not a git checkout")
-    _sys.path.insert(0, repo)
+    saved_env, saved_path = dict(os.environ), list(_sys.path)
     import bench
 
-    ref_registry = bench._load_ab_registry("HEAD")
-    from bigdata1_spark import registry as live
+    yield bench._load_ab_registry
+    os.environ.clear()
+    os.environ.update(saved_env)
+    _sys.path[:] = saved_path
 
-    assert set(ref_registry.QUERIES) & set(live.QUERIES), "no shared keys"
-    # the wrapper convention (__wrapped__) must survive the rename
-    k = sorted(ref_registry.QUERIES)[0]
-    assert hasattr(ref_registry.QUERIES[k], "__wrapped__")
+
+def test_bench_ab_registry_loads_head(ab_loader):
+    """BENCH_AB's renamed-package loader must materialize a committed
+    ref's registry with the same key set as the live one (the
+    interleaved A/B times ref and HEAD key-by-key)."""
+    ref_registry, restore = ab_loader("HEAD")
+    try:
+        from bigdata1_spark import registry as live
+
+        assert set(ref_registry.QUERIES) & set(live.QUERIES), "no shared keys"
+        # the wrapper convention (__wrapped__) must survive the rename
+        k = sorted(ref_registry.QUERIES)[0]
+        assert hasattr(ref_registry.QUERIES[k], "__wrapped__")
+    finally:
+        restore()
+
+
+def test_bench_ab_restore_undoes_loader(ab_loader):
+    """The loader's cleanup leaves no trace: PYTHONPATH and sys.path as
+    before, the renamed package unloaded, the bench_ab_ tree deleted —
+    otherwise every later Spark worker inherits the ref package."""
+    import os
+    import sys as _sys
+
+    env, path = dict(os.environ), list(_sys.path)
+    _, restore = ab_loader("HEAD")
+    work = _sys.path[0]
+    assert os.path.isdir(work)
+    assert os.environ["PYTHONPATH"].split(os.pathsep)[0] == work
+    restore()
+    assert dict(os.environ) == env
+    assert _sys.path == path
+    assert not os.path.exists(work)
+    assert not any(m.startswith("bigdata1_spark_abref") for m in _sys.modules)
+
+
+@pytest.mark.parametrize("phys_gib, want", [(8, "4096m"), (64, "16g")])
+def test_driver_memory_follows_host(monkeypatch, phys_gib, want):
+    """The default driver heap is half of physical memory, capped at
+    16g; SPARK_GRAFT_DRIVER_MEM still wins."""
+    import os
+
+    from bigdata1_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib * 2**30 // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session.driver_memory() == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session.driver_memory() == "3g"

@@ -673,8 +673,8 @@ def test_watermark_drops_pre_epoch_event_times(spark, tmp_path):
     watermark — so pre-epoch (and exactly-epoch) event times are
     silently discarded in the FIRST micro-batch. This pins the
     behavior loudly: ingest at 100 TB must clamp or reject pre-epoch
-    event times before any watermarked stage (tools/gen_timewarp.py
-    clamps its events pool for the same reason)."""
+    event times before any watermarked stage (the timewarp axis of
+    tools/gen_twin.py clamps its events pool for the same reason)."""
     import os
 
     from pyspark.sql import functions as F

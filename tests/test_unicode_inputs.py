@@ -5,9 +5,9 @@ full-width forms, astral-plane letters, and non-ASCII whitespace
 (NBSP / U+3000) — the text shapes a real crawl corpus carries that the
 pure-ASCII base generator never exercises.
 
-The full-registry sweep runs via ``tools/gen_unicode.py`` +
-``tools/local_correctness.py`` (banked as
-CORRECTNESS_local_r13_unicode); this file pins the divergence that
+The full-registry sweep runs via ``tools/gen_twin.py unicode`` +
+``tools/local_correctness.py`` (banked per axis in
+CORRECTNESS_local.json); this file pins the divergence that
 sweep caught so it can't regress:
 
 * udtf_analyze: Python ``str.split()`` splits on UNICODE whitespace
@@ -22,7 +22,7 @@ on everything probed; lower() diverges on exactly 4 code points
 (U+0130 İ, U+03A3 Σ context-sensitive final sigma, U+1C89, U+2C2F) and
 upper() on 94 (ß-class expansions) — those stay OUT of the twin's
 pools because the engines disagree BY DESIGN (Java SpecialCasing vs
-utf8proc simple mapping), documented in tools/gen_unicode.py.
+utf8proc simple mapping), documented in tools/gen_twin.py.
 """
 
 from __future__ import annotations
@@ -51,38 +51,11 @@ PINNED_KEYS = (
 
 @pytest.fixture(scope="module")
 def unicode_dir(tmp_path_factory, sf_dir) -> str:
-    import shutil
+    from tools.gen_twin import write_twin
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from bigdata1_spark.sources.tables import TABLES
-    from tools.gen_unicode import decorate
-
-    out = tmp_path_factory.mktemp("unicodedata")
-    for t in TABLES:
-        if t != "documents":
-            shutil.copyfile(
-                f"{sf_dir}/{t}.parquet", str(out / f"{t}.parquet")
-            )
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet")
-    ids = tbl.column("doc_id").to_pylist()
-    texts = [decorate(d, s) for d, s in zip(ids, tbl.column("text").to_pylist())]
-    ti = tbl.schema.get_field_index("text")
-    tbl = tbl.set_column(
-        ti, tbl.schema.field(ti), pa.array(texts, type=pa.string())
-    )
-    ci = tbl.schema.get_field_index("n_chars")
-    tbl = tbl.set_column(
-        ci,
-        tbl.schema.field(ci),
-        pa.array(
-            [len(s) if s is not None else None for s in texts],
-            type=tbl.schema.field(ci).type,
-        ),
-    )
-    pq.write_table(tbl, str(out / "documents.parquet"))
-    return str(out)
+    out = str(tmp_path_factory.mktemp("unicodedata"))
+    write_twin("unicode", sf_dir, out)
+    return out
 
 
 @pytest.fixture(scope="module")

@@ -3,16 +3,20 @@
 The round driver samples ~50 keys per round, so some keys can go rounds
 without a fresh driver row (round-4 VERDICT flagged 7 keys with no row at
 all). This tool runs the full `__spark_entry__.queries()` registry against
-the DuckDB oracles at the driver's gate scale (sf0.01) and writes a JSON
-artifact in the driver's own row format (rows_match / schema_match /
-hash_match / spark_rows / oracle_rows / err) so coverage claims are
-evidence-backed even for keys the driver rotation missed.
+the DuckDB oracles on the driver's gate data (sf0.01) and on any stress
+twins (`tools/gen_twin.py`), and writes ONE JSON artifact keyed by axis
+(each directory's basename) and then by key, each row in the driver's
+own row format (rows_match / schema_match / hash_match / spark_rows /
+oracle_rows / err) so coverage claims are evidence-backed even for keys
+the driver rotation missed.
 
 Usage:
-    python tools/local_correctness.py [OUT.json] [SF_DIR]
+    python tools/local_correctness.py [OUT.json] [DIR ...]
 
-Set ``ONLY_KEYS=a,b,c`` to restrict the run to specific keys (the
-fast loop while iterating on one operator).
+One Spark session and one DuckDB connection sweep every DIR (default:
+the sf0.01 testdata). Set ``ONLY_KEYS=a,b,c`` to restrict the run to
+specific keys (the fast loop while iterating on one operator), and
+``RESUME=1`` to keep the rows an existing OUT.json already adjudicated.
 
 Comparison semantics mirror the driver: columns sorted by name, rows
 sorted, values hashed after a light normalization (floats rounded to 9
@@ -59,9 +63,18 @@ def _value_hash(df) -> str:
     return h.hexdigest()
 
 
+def _error_row(err: str | None) -> dict:
+    return {"rows_match": None, "schema_match": None, "hash_match": None,
+            "spark_rows": None, "oracle_rows": None,
+            "err": err[:300] if err else None}
+
+
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_local.json"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    sf_dirs = sys.argv[2:] or ["/root/testdata/sf0.01"]
+    axes = [os.path.basename(os.path.normpath(d)) for d in sf_dirs]
+    if len(set(axes)) != len(axes):
+        sys.exit(f"directory basenames must be distinct: {axes}")
 
     import duckdb
     from pyspark.sql import SparkSession
@@ -69,6 +82,8 @@ def main() -> None:
     # Runnable from anywhere: the entry module lives at the repo root.
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
+    from bigdata1_spark.session import driver_memory
+    from bigdata1_spark.sources.tables import TABLES
 
     # driver-gate defaults (local[8]/16) mirror the driver harness at
     # sf0.01; a big-sf sweep overrides via env for throughput
@@ -81,10 +96,7 @@ def main() -> None:
                 "spark.sql.shuffle.partitions",
                 os.environ.get("CORR_SHUFFLE_PARTITIONS", "16"),
             )
-            .config(
-                "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-            )
+            .config("spark.driver.memory", driver_memory())
             .config("spark.sql.session.timeZone", "UTC")
             .config("spark.ui.showConsoleProgress", "false")
             .getOrCreate()
@@ -100,12 +112,6 @@ def main() -> None:
     # cap the oracle engine when the caller says so
     if os.environ.get("CORR_DUCK_THREADS"):
         con.execute(f"PRAGMA threads={int(os.environ['CORR_DUCK_THREADS'])}")
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
 
     qs, osql = entry.queries(), entry.oracle_sql()
     only = os.environ.get("ONLY_KEYS")
@@ -116,7 +122,7 @@ def main() -> None:
     # RESUME=1: reload an existing artifact and only re-run keys that are
     # not conclusively adjudicated (big-sf sweeps take hours; the r9 run
     # died mid-way with a dead JVM and 97 keys never got a verdict).
-    report: dict[str, dict] = {}
+    report: dict[str, dict[str, dict]] = {}
     if os.environ.get("RESUME") and os.path.exists(out_path):
         with open(out_path) as f:
             report = json.load(f)
@@ -132,9 +138,8 @@ def main() -> None:
     _GATEWAY_ERRS = ("Connection refused", "Java gateway",
                      "Py4JNetworkError", "Answer from Java side is empty")
 
-    def _run_key(key):
-        row = {"rows_match": None, "schema_match": None, "hash_match": None,
-               "spark_rows": None, "oracle_rows": None, "err": None}
+    def _run_key(key, sf_dir):
+        row = _error_row(None)
         # Cache-lifecycle convention (see operators/ir.py header): an
         # operator may leave session-scoped caches behind when its
         # result frame still depends on them lazily; every harness that
@@ -156,50 +161,58 @@ def main() -> None:
             row["hash_match"] = _value_hash(got) == _value_hash(want)
         return row
 
-    for key in sorted(qs):
-        if _done(report.get(key, {})):
-            continue
+    def _sweep_key(key, sf_dir):
+        nonlocal spark
         try:
-            row = _run_key(key)
+            return _run_key(key, sf_dir)
         except Exception as ex:  # noqa: BLE001 - report, don't crash the sweep
             msg = f"{type(ex).__name__}: {ex}"
-            if any(s in msg for s in _GATEWAY_ERRS):
-                print(f"{key}: gateway died — restarting Spark and "
-                      "retrying once", flush=True)
-                try:
-                    spark.stop()
-                except Exception:  # noqa: BLE001 - JVM already gone
-                    pass
-                spark = _new_spark()
-                try:
-                    row = _run_key(key)
-                except Exception as ex2:  # noqa: BLE001
-                    row = {"rows_match": None, "schema_match": None,
-                           "hash_match": None, "spark_rows": None,
-                           "oracle_rows": None,
-                           "err": f"{type(ex2).__name__}: {ex2}"[:300]}
-            else:
-                row = {"rows_match": None, "schema_match": None,
-                       "hash_match": None, "spark_rows": None,
-                       "oracle_rows": None, "err": msg[:300]}
-        report[key] = row
-        status = (row["err"] or
-                  ("PASS" if row["hash_match"] else "FAIL"))
-        print(f"{key}: {status}", flush=True)
-        # incremental flush: a big-sf sweep killed mid-run (round clock,
-        # OOM) still banks every completed row
-        with open(out_path, "w") as f:
-            json.dump(report, f, indent=2)
+            if not any(s in msg for s in _GATEWAY_ERRS):
+                return _error_row(msg)
+        print(f"{key}: gateway died — restarting Spark and retrying once",
+              flush=True)
+        try:
+            spark.stop()
+        except Exception:  # noqa: BLE001 - JVM already gone
+            pass
+        spark = _new_spark()
+        try:
+            return _run_key(key, sf_dir)
+        except Exception as ex:  # noqa: BLE001
+            return _error_row(f"{type(ex).__name__}: {ex}")
+
+    for sf_dir, axis in zip(sf_dirs, axes):
+        rows = report.setdefault(axis, {})
+        for t in TABLES:
+            con.execute(
+                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/{t}.parquet')"
+            )
+        for key in sorted(qs):
+            if _done(rows.get(key, {})):
+                continue
+            rows[key] = _sweep_key(key, sf_dir)
+            row = rows[key]
+            status = (row["err"] or
+                      ("PASS" if row["hash_match"] else "FAIL"))
+            print(f"{axis} {key}: {status}", flush=True)
+            # incremental flush: a big-sf sweep killed mid-run (round
+            # clock, OOM) still banks every completed row
+            with open(out_path, "w") as f:
+                json.dump(report, f, indent=2)
 
     with open(out_path, "w") as f:
         json.dump(report, f, indent=2)
-    n_pass = sum(1 for r in report.values() if r["hash_match"])
-    n_ro = sum(1 for r in report.values() if r["err"] == "no_oracle")
-    n_bad = sum(1 for r in report.values()
-                if r["err"] not in (None, "no_oracle") or
-                r["hash_match"] is False)
-    print(f"\n{out_path}: {len(report)} keys — {n_pass} hash-pass, "
-          f"{n_ro} rows-only, {n_bad} failing")
+    n_bad = 0
+    for axis, rows in report.items():
+        n_pass = sum(1 for r in rows.values() if r["hash_match"])
+        n_ro = sum(1 for r in rows.values() if r["err"] == "no_oracle")
+        bad = sum(1 for r in rows.values()
+                  if r["err"] not in (None, "no_oracle") or
+                  r["hash_match"] is False)
+        n_bad += bad
+        print(f"{out_path} [{axis}]: {len(rows)} keys — {n_pass} hash-pass, "
+              f"{n_ro} rows-only, {bad} failing")
     sys.exit(1 if n_bad else 0)
 
 
