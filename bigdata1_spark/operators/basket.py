@@ -60,6 +60,16 @@ def exact_sum(col: Column, alias: str) -> Column:
     return F.sum(col.cast("decimal(18,4)")).cast("double").alias(alias)
 
 
+def snap6(col: Column) -> Column:
+    """The repo-wide six-decimal float pin: floor(x*1e6 + 0.5)/1e6,
+    round-half-up on the 1e-6 grid in pure double arithmetic. The
+    oracles spell the same expression (``FLOOR(x * 1e6 + 0.5) / 1e6``),
+    so a float whose last ulp the two engines compute differently
+    still lands on one grid value and hashes equal.
+    """
+    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+
+
 def baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (basket, item) pairs: one row per part per order.
 

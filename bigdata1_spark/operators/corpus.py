@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from bigdata1_spark.functions.hashing import let
 from bigdata1_spark.functions.textfns import tokens
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.operators.text_analysis import split_bucket
 from bigdata1_spark.sources.tables import load_table
 
@@ -699,7 +700,7 @@ def dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda a, t: a + t,
     ) / F.col("n_grams").cast("double")
-    wr = F.floor(w * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    wr = snap6(w)
     return per_doc.select(
         "doc_id",
         "n_grams",
@@ -1021,7 +1022,6 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("ly") * F.col("ly")).alias("syy"),
         F.sum(F.col("lx") * F.col("ly")).alias("sxy"),
     )
-    snap = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     n = F.col("n").cast("double")
     sx = F.col("sx").cast("double")
     sy = F.col("sy").cast("double")
@@ -1032,11 +1032,11 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     denx = n * sxx - sx * sx
     deny = n * syy - sy * sy
     ok = (F.col("n") >= 2) & (denx > 0)
-    slope = snap(num / denx)
-    intercept = snap(
+    slope = snap6(num / denx)
+    intercept = snap6(
         (sy / F.lit(1e6) - slope * (sx / F.lit(1e6))) / n
     )
-    r2 = snap((num * num) / (denx * deny))
+    r2 = snap6((num * num) / (denx * deny))
     return s.select(
         F.col("n").cast("long").alias("n_words"),
         F.when(ok, slope).alias("slope"),
@@ -1116,7 +1116,7 @@ def source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_a",
         "n_b",
         c.alias("n_common"),
-        (F.floor(jac * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
+        snap6(jac).alias(
             "jaccard"
         ),
     )

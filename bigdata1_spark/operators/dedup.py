@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdata1_spark.functions import hashing, textfns, vectors
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.operators.graph import iterate, symmetrize
 from bigdata1_spark.sources.tables import load_table, spread_if_starved
 
@@ -986,12 +987,11 @@ def lsh_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
     b, r = 8, 4
     j = F.col("jaccard")
     p = F.lit(1.0) - F.pow(F.lit(1.0) - F.pow(j, F.lit(float(r))), F.lit(float(b)))
-    snap = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return exact.join(cand, ["id1", "id2"], "left").select(
         "id1",
         "id2",
         j.alias("jaccard"),
-        snap(p).alias("p_catch"),
+        snap6(p).alias("p_catch"),
         (
             (j < F.lit(1.0))
             | F.coalesce(F.col("found"), F.lit(False))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.sources.tables import load_table
 
 # Equal-width PSI buckets over l_extendedprice from FIXED literal bounds
@@ -152,7 +153,7 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         "n_a",
         "n_b",
-        (F.floor(term * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
+        snap6(term).alias(
             "psi_term"
         ),
     )

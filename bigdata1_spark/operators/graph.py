@@ -32,6 +32,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.sources.tables import load_table, parquet_row_count
 
 # Dense-mode cutoff for triangle counting. The kernel is TILED over
@@ -546,7 +547,7 @@ def pagerank(
         .otherwise(F.lit("supplier"))
         .alias("node_type"),
         F.abs("node").alias("node_id"),
-        (F.floor(F.col("rank") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
+        snap6(F.col("rank")).alias(
             "rank"
         ),
     )
@@ -731,7 +732,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.alias("n_triangles"),
         F.when(
             F.col("degree") >= 2,
-            F.floor(cc * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6),
+            snap6(cc),
         ).alias("clustering_coeff"),
     )
 
@@ -821,7 +822,7 @@ def link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph degrees; deg(w) ≥ 2 for any common neighbor so ln > 0.
     Jaccard = common / (deg_a + deg_b − common) uses the endpoints-
     included union (denominator ≥ 2, never zero). Final floats are
-    single mirrored chains: aa = snap(Σwgt_int / 1e6). Edges with no
+    single mirrored chains: aa = snap6(Σwgt_int / 1e6). Edges with no
     common neighbor emit 0 for all three scores.
     Columns: node_a, node_b, deg_a, deg_b, common_neighbors, jaccard,
     adamic_adar.
@@ -872,7 +873,6 @@ def link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(db), "b")
         .join(F.broadcast(agg), ["a", "b"], "left")
     )
-    snap = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     common = F.coalesce(F.col("common"), F.lit(0))
     jac = common.cast("double") / (
         F.col("deg_a").cast("double")
@@ -886,8 +886,8 @@ def link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "deg_a",
         "deg_b",
         common.alias("common_neighbors"),
-        snap(jac).alias("jaccard"),
-        snap(aa).alias("adamic_adar"),
+        snap6(jac).alias("jaccard"),
+        snap6(aa).alias("adamic_adar"),
     )
 
 
@@ -936,7 +936,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("m").cast("long").alias("n_edges"),
         F.when(
             den > 0,
-            F.floor((num / den) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6),
+            snap6(num / den),
         ).alias("assortativity"),
     )
 

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata1_spark.functions.textfns import tokens
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.sources.tables import load_table
 
 # BM25 constants; keep literals (never arithmetic like k1+1 — building
@@ -51,10 +52,6 @@ BM25_K1 = 1.2
 BM25_K1_PLUS_1 = 2.2
 BM25_B = 0.75
 BM25_QUERY = ("spark", "hash", "merge", "window")
-
-
-def _fixed6(col):
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 def tfidf_topterms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -100,7 +97,7 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("doc_id", "term", "tf", _fixed6(F.col("score")).alias("score"))
+        .select("doc_id", "term", "tf", snap6(F.col("score")).alias("score"))
     )
 
 
@@ -168,7 +165,7 @@ def bm25_search(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     wr = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return top.select(
         "doc_id",
-        _fixed6(F.col("score")).alias("score"),
+        snap6(F.col("score")).alias("score"),
         F.row_number().over(wr).cast("long").alias("rnk"),
     )
 
@@ -239,7 +236,7 @@ def cooccur_pmi(spark: SparkSession, sf_dir: str, top_n: int = 50,
         .limit(top_n)
         .select(
             "w1", "w2", F.col("b").alias("pairs"),
-            _fixed6(F.log("ratio")).alias("pmi"),
+            snap6(F.log("ratio")).alias("pmi"),
         )
     )
 
@@ -299,7 +296,7 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lex_rnk",
             "dense_rnk",
-            _fixed6(F.col("s")).alias("rrf"),
+            snap6(F.col("s")).alias("rrf"),
             F.row_number().over(fw).cast("long").alias("rnk"),
         )
         .filter(F.col("rnk") <= RRF_TOP_K)

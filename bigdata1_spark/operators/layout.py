@@ -19,6 +19,8 @@ never broadcast (lineitem ⋈ orders at scale) must have.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -105,11 +107,17 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each call writes into a fresh temp location (parallel sweep
     processes share a cwd — a fixed warehouse path would corrupt);
     the in-memory catalog entries are dropped and re-created per call.
+    This is the one write-then-read key that does not go through
+    ``sources.tables.scratch``: pinning the result would replace the
+    lazy bucketed scans the zero-exchange plan check inspects, so the
+    returned frame keeps reading the tables and their directory is
+    removed at interpreter exit instead.
     Columns: month, n_lines, revenue.
     """
     from bigdata1_spark.operators.basket import exact_sum
 
     work = tempfile.mkdtemp(prefix="bigdata1_bucketed_")
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import exact_sum, month_of
+from bigdata1_spark.operators.basket import exact_sum, month_of, snap6
 from bigdata1_spark.sources.tables import load_table
 
 
@@ -649,7 +649,6 @@ def histogram(spark: SparkSession, sf_dir: str, n_buckets: int = 10) -> DataFram
     bucket = F.least(raw, F.lit(n_buckets - 1)).cast("long")
     width_frac = F.col("bucket").cast("double") / nb
     width_frac_hi = (F.col("bucket") + F.lit(1)).cast("double") / nb
-    fixed6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
         ev.join(F.broadcast(stats), F.col("event_type") == F.col("s_type"))
         .withColumn("bucket", bucket)
@@ -658,9 +657,9 @@ def histogram(spark: SparkSession, sf_dir: str, n_buckets: int = 10) -> DataFram
         .select(
             "event_type",
             "bucket",
-            fixed6(F.col("vmin") + (F.col("vmax") - F.col("vmin")) * width_frac)
+            snap6(F.col("vmin") + (F.col("vmax") - F.col("vmin")) * width_frac)
             .alias("lo"),
-            fixed6(
+            snap6(
                 F.col("vmin") + (F.col("vmax") - F.col("vmin")) * width_frac_hi
             ).alias("hi"),
             "cnt",

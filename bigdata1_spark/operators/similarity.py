@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata1_spark.functions import vectors
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.sources.tables import load_table
 
 QUERY_VEC_ID = 0  # deterministic query: the embedding of vec_id 0
@@ -296,8 +297,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(
         "vec_id",
         "label",
-        (F.floor(vectors.norm(F.col("v")) * F.lit(1e6) + F.lit(0.5))
-         / F.lit(1e6)).alias("norm"),
+        snap6(vectors.norm(F.col("v"))).alias("norm"),
     )
 
 
@@ -438,7 +438,7 @@ def pq_encode(
     return best.select(
         "vec_id",
         *[F.col(f"s{s}.c").alias(f"code_{s + 1}") for s in range(m)],
-        (F.floor(err * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
+        snap6(err).alias(
             "recon_err"
         ),
     )
@@ -548,7 +548,7 @@ def sim_topk_ivf_pq(
     adc = F.col("adc0")
     for s in range(1, m):
         adc = adc + F.col(f"adc{s}")
-    rounded = F.floor(adc * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    rounded = snap6(adc)
     return (
         cand.select("vec_id", "label", rounded.alias("adc_dist"))
         .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
@@ -756,13 +756,10 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_common"), z).alias("n_common"),
             F.when(
                 F.col("n_exact") > 0,
-                F.floor(
+                snap6(
                     F.coalesce(F.col("n_common"), z).cast("double")
                     / F.col("n_exact").cast("double")
-                    * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6),
+                ),
             ).alias("recall_at_k"),
         )
     )

@@ -25,6 +25,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.sources.tables import load_table
 
 # (output name, source column, fixed-point scale). Scale 100 turns the
@@ -35,12 +36,6 @@ CORR_COLS = (
     ("discount", "l_discount", 100),
     ("tax", "l_tax", 100),
 )
-
-
-def _round6(col: F.Column) -> F.Column:
-    """The repo-wide float pin: floor(x*1e6 + 0.5)/1e6 (round-half-up
-    toward +inf, identical in Spark and DuckDB)."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 def corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,7 +102,7 @@ def corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(a).alias("col_x"),
                 F.lit(b).alias("col_y"),
                 F.col("n").alias("n_rows"),
-                F.when(den > 0, _round6(num / den)).alias("corr"),
+                F.when(den > 0, snap6(num / den)).alias("corr"),
             )
         )
     return stats.select(
@@ -167,7 +162,7 @@ def mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_lang",
         "n_source",
         "n_total",
-        _round6(term).alias("mi_term"),
+        snap6(term).alias("mi_term"),
     )
 
 
@@ -193,8 +188,8 @@ def chi_square_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "source",
         "n_xy",
-        _round6(exp).alias("expected"),
-        _round6(diff * diff / exp).alias("chi2_term"),
+        snap6(exp).alias("expected"),
+        snap6(diff * diff / exp).alias("chi2_term"),
     )
 
 
@@ -290,7 +285,7 @@ def spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(a).alias("col_x"),
                 F.lit(b).alias("col_y"),
                 F.col("n").cast("long").alias("n_rows"),
-                F.when(den > 0, _round6(num / den)).alias("rho"),
+                F.when(den > 0, snap6(num / den)).alias("rho"),
             )
         )
     return stats.select(
@@ -395,7 +390,7 @@ def mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_b").cast("long").alias("n_b"),
         u2_a.cast("long").alias("u2_a"),
         u2_b.cast("long").alias("u2_b"),
-        F.when(den > 0, _round6(num / den)).alias("z"),
+        F.when(den > 0, snap6(num / den)).alias("z"),
     )
 
 
@@ -471,12 +466,12 @@ def linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.select(
         "event_type",
         F.col("n").alias("n_days"),
-        F.when(denx > 0, _round6(slope)).alias("slope"),
-        F.when(denx > 0, _round6((sy - slope * sx) / n)).alias(
+        F.when(denx > 0, snap6(slope)).alias("slope"),
+        F.when(denx > 0, snap6((sy - slope * sx) / n)).alias(
             "intercept"
         ),
         F.when(
-            (denx > 0) & (deny > 0), _round6(num * num / (denx * deny))
+            (denx > 0) & (deny > 0), snap6(num * num / (denx * deny))
         ).alias("r2"),
     )
 
@@ -538,9 +533,9 @@ def anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_n").cast("long").alias("n_n"),
         F.col("n_r").cast("long").alias("n_r"),
-        F.when(ok, _round6(ssb)).alias("ssb"),
-        F.when(ok, _round6(ssw)).alias("ssw"),
-        F.when(ok & (ssw > 0), _round6(f_stat)).alias("f_stat"),
+        F.when(ok, snap6(ssb)).alias("ssb"),
+        F.when(ok, snap6(ssw)).alias("ssw"),
+        F.when(ok & (ssw > 0), snap6(f_stat)).alias("f_stat"),
     )
 
 
@@ -627,7 +622,7 @@ def kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n_rows"),
         F.coalesce(F.col("nc"), F.lit(0)).cast("long").alias("nc"),
         F.coalesce(F.col("nd"), F.lit(0)).cast("long").alias("nd"),
-        F.when((d1 > 0) & (d2 > 0), _round6(tau)).alias("tau"),
+        F.when((d1 > 0) & (d2 > 0), snap6(tau)).alias("tau"),
     )
 
 
@@ -688,8 +683,8 @@ def ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(MW_GROUP_B).alias("grp_b"),
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
-        F.when(ok, _round6(d)).alias("d_stat"),
-        F.when(ok, _round6(ks)).alias("ks_stat"),
+        F.when(ok, snap6(d)).alias("d_stat"),
+        F.when(ok, snap6(ks)).alias("ks_stat"),
     )
 
 
@@ -750,7 +745,7 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.select(
         "lag",
         F.col("m").alias("n_pairs"),
-        F.when((F.col("m") > 1) & (den > 0), _round6(num / den)).alias(
+        F.when((F.col("m") > 1) & (den > 0), snap6(num / den)).alias(
             "acf"
         ),
     )
@@ -807,8 +802,8 @@ def benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
         "digit",
         "n_obs",
         "n_total",
-        _round6(exp_n).alias("expected_n"),
-        _round6(diff * diff / exp_n).alias("chi2_term"),
+        snap6(exp_n).alias("expected_n"),
+        snap6(diff * diff / exp_n).alias("chi2_term"),
     )
 
 
@@ -906,8 +901,8 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("et").alias("event_type"),
             "n_days",
             F.col("med_n").alias("n_pairs"),
-            _round6(F.col("med")).alias("slope"),
-            _round6(F.col("imed")).alias("intercept"),
+            snap6(F.col("med")).alias("slope"),
+            snap6(F.col("imed")).alias("intercept"),
         )
     )
 
@@ -982,12 +977,12 @@ def trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "k_trim",
             "n_kept",
-            _round6(
+            snap6(
                 F.col("s_all").cast("double") / F.col("n").cast("double")
             ).alias("mean_all"),
             F.when(
                 F.col("n_kept") > 0,
-                _round6(
+                snap6(
                     F.col("s_kept").cast("double")
                     / F.col("n_kept").cast("double")
                 ),
@@ -1076,7 +1071,7 @@ def robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "day",
             F.col("y").alias("n_events"),
-            F.when(F.col("mad") > 0, _round6(rz)).alias("rz"),
+            F.when(F.col("mad") > 0, snap6(rz)).alias("rz"),
             F.when(F.col("mad") > 0, F.abs(rz) > MODIFIED_Z_CUTOFF).alias(
                 "is_outlier"
             ),
@@ -1143,7 +1138,7 @@ def gini_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grp",
         F.col("n").cast("long").alias("n"),
         F.col("s").cast("long").alias("sum_qty"),
-        F.when((F.col("n") > 0) & (F.col("s") > 0), _round6(gini)).alias(
+        F.when((F.col("n") > 0) & (F.col("s") > 0), snap6(gini)).alias(
             "gini"
         ),
     )
@@ -1184,7 +1179,7 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nationkey",
         "n_suppliers",
         F.col("rev").cast("long").alias("revenue_cents"),
-        F.when(F.col("rev") > 0, _round6(hhi)).alias("hhi"),
+        F.when(F.col("rev") > 0, snap6(hhi)).alias("hhi"),
     )
 
 
@@ -1237,7 +1232,7 @@ def pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k_top",
         F.coalesce(F.col("top"), F.lit(0)).cast("long").alias("top_cents"),
         F.col("tot").cast("long").alias("total_cents"),
-        F.when(F.col("k_top") > 0, _round6(share)).alias("share"),
+        F.when(F.col("k_top") > 0, snap6(share)).alias("share"),
     )
 
 
@@ -1326,10 +1321,10 @@ def welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "type_b",
         "n_a",
         "n_b",
-        _round6(ma / F.lit(100.0)).alias("mean_a"),
-        _round6(mb / F.lit(100.0)).alias("mean_b"),
-        F.when(se2 > 0, _round6(t)).alias("t_stat"),
-        F.when(se2 > 0, _round6(df)).alias("welch_df"),
+        snap6(ma / F.lit(100.0)).alias("mean_a"),
+        snap6(mb / F.lit(100.0)).alias("mean_b"),
+        F.when(se2 > 0, snap6(t)).alias("t_stat"),
+        F.when(se2 > 0, snap6(df)).alias("welch_df"),
     )
 
 
@@ -1362,7 +1357,7 @@ def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = cells.select(
         kl.alias("kl"),
         ks.alias("ks"),
-        _round6(diff * diff / exp).alias("term"),
+        snap6(diff * diff / exp).alias("term"),
         F.col("n_total"),
     )
     agg = pre.agg(
@@ -1385,11 +1380,11 @@ def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_langs",
         "n_sources",
         "n_total",
-        _round6(chi2).alias("chi2"),
+        snap6(chi2).alias("chi2"),
         F.when(
             (F.col("n_total") > 0)
             & (F.least("n_langs", "n_sources") >= 2),
-            _round6(F.sqrt(chi2 / denom)),
+            snap6(F.sqrt(chi2 / denom)),
         ).alias("cramers_v"),
     )
 
@@ -1456,10 +1451,10 @@ def moments_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "event_type",
         F.col("n").alias("n_events"),
-        _round6(m / F.lit(100.0)).alias("mean_value"),
-        F.when(ok, _round6(skew)).alias("skewness"),
-        F.when(ok, _round6(kurt)).alias("kurtosis"),
-        F.when(ok, _round6(jb)).alias("jarque_bera"),
+        snap6(m / F.lit(100.0)).alias("mean_value"),
+        F.when(ok, snap6(skew)).alias("skewness"),
+        F.when(ok, snap6(kurt)).alias("kurtosis"),
+        F.when(ok, snap6(jb)).alias("jarque_bera"),
     )
 
 

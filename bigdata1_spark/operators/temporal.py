@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.sources.tables import load_table
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -251,8 +252,7 @@ def ewma(spark: SparkSession, sf_dir: str, alpha: float = 0.1,
     return ev.select(
         "event_id", "user_id",
         # floor-scale, not F.round: see resample_interpolate on why.
-        (F.floor(folded * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
-        .alias("ewma"),
+        snap6(folded).alias("ewma"),
     )
 
 
@@ -331,18 +331,18 @@ def resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("gap_h") * F.lit(3600)).cast("double")
     )
     filled = F.when(F.col("o") == 0, F.col("v")).otherwise(interp)
-    # NOT F.round: Spark rounds doubles through their decimal string
-    # (HALF_UP on the printed digits) while DuckDB rounds the raw
-    # binary double (HALF_EVEN), so exact .5 ties diverge. floor(x*1e6
-    # + 0.5)/1e6 is pure double arithmetic — identical on both engines.
-    fixed6 = F.floor(filled * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    # value is snap6'd, NOT F.round: Spark rounds doubles through their
+    # decimal string (HALF_UP on the printed digits) while DuckDB rounds
+    # the raw binary double (HALF_EVEN), so exact .5 ties diverge.
+    # floor(x*1e6 + 0.5)/1e6 is pure double arithmetic — identical on
+    # both engines.
     hour = F.timestamp_seconds(
         F.col("h").cast("long") + F.col("o") * F.lit(3600)
     )
     return exploded.select(
         "user_id",
         F.date_format(hour, "yyyy-MM-dd HH:00:00").alias("hour"),
-        fixed6.alias("value"),
+        snap6(filled).alias("value"),
         F.when(F.col("o") > 0, F.lit(1)).otherwise(F.lit(0))
         .cast("long").alias("interpolated"),
     )
@@ -394,13 +394,12 @@ def holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         ),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return per_user.select(
         "user_id",
         F.size("xs").cast("long").alias("n"),
-        r6(folded["l"]).alias("level"),
-        r6(folded["b"]).alias("trend"),
-        r6(folded["l"] + folded["b"]).alias("forecast"),
+        snap6(folded["l"]).alias("level"),
+        snap6(folded["b"]).alias("trend"),
+        snap6(folded["l"] + folded["b"]).alias("forecast"),
     )
 
 
@@ -552,14 +551,13 @@ def locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "h", "v",
         F.explode(F.sequence(F.lit(0), F.col("n_fill"))).alias("o"),
     )
-    fixed6 = F.floor(F.col("v") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     hour = F.timestamp_seconds(
         F.col("h").cast("long") + F.col("o") * F.lit(3600)
     )
     return exploded.select(
         "user_id",
         F.date_format(hour, "yyyy-MM-dd HH:00:00").alias("hour"),
-        fixed6.alias("value"),
+        snap6(F.col("v")).alias("value"),
         F.when(F.col("o") > 0, F.lit(1)).otherwise(F.lit(0))
         .cast("long")
         .alias("filled"),
@@ -649,13 +647,12 @@ def seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("forecast"),
     )
     j = obs.join(prev, ["user_id", "h"])
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return j.select(
         "user_id",
         F.date_format("h", "yyyy-MM-dd HH:00:00").alias("hour"),
-        r6(F.col("v")).alias("value"),
-        r6(F.col("forecast")).alias("forecast"),
-        r6(F.abs(F.col("v") - F.col("forecast"))).alias("abs_err"),
+        snap6(F.col("v")).alias("value"),
+        snap6(F.col("forecast")).alias("forecast"),
+        snap6(F.abs(F.col("v") - F.col("forecast"))).alias("abs_err"),
     )
 
 
@@ -917,16 +914,15 @@ def bollinger_bands(
     ma = (wsd / nd) / F.lit(100.0)
     var = (wqd - wsd * wsd / nd) / nd
     sd = F.sqrt(F.greatest(var, F.lit(0.0))) / F.lit(100.0)
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return win.select(
         "event_type",
         "day",
         "n_obs",
         F.col("wn").cast("long").alias("n_window"),
-        r6(ma).alias("ma"),
-        r6(sd).alias("sd"),
-        r6(ma + F.lit(k) * sd).alias("upper_band"),
-        r6(ma - F.lit(k) * sd).alias("lower_band"),
+        snap6(ma).alias("ma"),
+        snap6(sd).alias("sd"),
+        snap6(ma + F.lit(k) * sd).alias("upper_band"),
+        snap6(ma - F.lit(k) * sd).alias("lower_band"),
     )
 
 
@@ -985,13 +981,12 @@ def rsi(
     )
     tot = F.col("sg").cast("double") + F.col("sl").cast("double")
     rsi_val = F.lit(100.0) * F.col("sg").cast("double") / tot
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return win.select(
         "event_type",
         "day",
         "delta_cents",
         "n_deltas",
-        F.when(tot > 0, r6(rsi_val)).alias("rsi"),
+        F.when(tot > 0, snap6(rsi_val)).alias("rsi"),
     )
 
 
@@ -1034,8 +1029,7 @@ def drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s").cast("long").alias("cents"),
         F.max(F.col("s").cast("long")).over(run).alias("peak_cents"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-    dd = r6(
+    dd = snap6(
         (F.col("peak_cents").cast("double") - F.col("cents").cast("double"))
         / F.col("peak_cents").cast("double")
     )

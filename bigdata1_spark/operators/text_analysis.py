@@ -18,6 +18,7 @@ from pyspark.sql.functions import pandas_udf
 
 from bigdata1_spark.functions.hashing import let
 from bigdata1_spark.functions.textfns import LANG_MARKERS, STOPWORDS, tokens
+from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.sources.tables import load_table
 
 
@@ -504,7 +505,7 @@ def doc_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc.select(
         "doc_id",
         "n_tokens",
-        (F.floor(-h * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias("entropy"),
+        snap6(-h).alias("entropy"),
     )
 
 
@@ -984,7 +985,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc.select(
         "doc_id",
         "n_tokens",
-        (F.floor(lpt * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
+        snap6(lpt).alias(
             "logprob_per_token"
         ),
     )
@@ -1067,12 +1068,6 @@ def vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 NB_NULL_CLASS = "<null>"
 
 
-def _nb_fixed6(col: Column) -> Column:
-    """ln-value grid snap (floor(x*1e6+0.5)/1e6) applied BEFORE the
-    score fold — ranking inputs must never be raw ln outputs."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-
 def naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial naive-Bayes language classifier, trained and applied
     in one declarative plan: fit ``P(lang)`` and Laplace-smoothed
@@ -1137,7 +1132,7 @@ def naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             # by sums of these values, so each ln is snapped to the
             # 1e-6 grid first: the folded scores are then identical
             # doubles in both engines by construction.
-            _nb_fixed6(
+            snap6(
                 F.log(
                     (F.coalesce(F.col("c"), F.lit(0)) + 1).cast("double")
                     / (
@@ -1187,7 +1182,7 @@ def naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .crossJoin(F.broadcast(ndocs))
                 .select(
                     "cand_cls",
-                    _nb_fixed6(
+                    snap6(
                         F.log(
                             F.col("nl").cast("double")
                             / F.col("n").cast("double")
@@ -1266,14 +1261,14 @@ def token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = F.col("cw").cast("double") / F.col("t").cast("double")
     m = (p + q) / F.lit(2.0)
-    kl_term = F.when(p > 0, p * _nb_fixed6(F.log(p / q))).otherwise(
+    kl_term = F.when(p > 0, p * snap6(F.log(p / q))).otherwise(
         F.lit(0.0)
     )
     js_term = (
         F.when(
-            p > 0, F.lit(0.5) * (p * _nb_fixed6(F.log(p / m)))
+            p > 0, F.lit(0.5) * (p * snap6(F.log(p / m)))
         ).otherwise(F.lit(0.0))
-        + F.lit(0.5) * (q * _nb_fixed6(F.log(q / m)))
+        + F.lit(0.5) * (q * snap6(F.log(q / m)))
     )
     terms = grid.select(
         "src",
@@ -1296,8 +1291,8 @@ def token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         F.col("src").alias("source"),
         "n_tokens",
-        _nb_fixed6(fold("klt")).alias("kl_div"),
-        _nb_fixed6(fold("jst")).alias("js_div"),
+        snap6(fold("klt")).alias("kl_div"),
+        snap6(fold("jst")).alias("js_div"),
     )
 
 
@@ -1353,14 +1348,14 @@ def log_odds_words(
     nrw = (
         F.col("n") - F.col("ns") - (F.col("cw") - F.col("csw"))
     ).cast("double") + F.lit(0.5)
-    delta = _nb_fixed6(F.log(csw / nsw)) - _nb_fixed6(F.log(crw / nrw))
+    delta = snap6(F.log(csw / nsw)) - snap6(F.log(crw / nrw))
     var = (
         F.lit(1.0) / csw
         + F.lit(1.0) / nsw
         + F.lit(1.0) / crw
         + F.lit(1.0) / nrw
     )
-    z = _nb_fixed6(delta / F.sqrt(var))
+    z = snap6(delta / F.sqrt(var))
     from pyspark.sql import Window
 
     scored = grid.select(
@@ -1425,7 +1420,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(vocab))
         .select(
             "bg",
-            _nb_fixed6(
+            snap6(
                 F.log(
                     (F.col("cbg") + 1).cast("double")
                     / (F.col("c1") + F.col("v")).cast("double")
@@ -1458,7 +1453,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc.select(
         "doc_id",
         F.col("n_bigrams").cast("long").alias("n_bigrams"),
-        _nb_fixed6(s / F.col("n_bigrams").cast("double")).alias(
+        snap6(s / F.col("n_bigrams").cast("double")).alias(
             "logprob_per_bigram"
         ),
     )
@@ -1511,7 +1506,6 @@ def classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     diag = cells.filter(F.col("lang") == F.col("pred_lang")).select(
         F.col("lang").alias("cls"), F.col("n").alias("tp")
     )
-    snap = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     z = F.lit(0).cast("long")
     base = (
         truth.join(pred, "cls", "full")
@@ -1533,15 +1527,15 @@ def classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         fn,
         F.when(
             F.col("predicted") > 0,
-            snap(F.col("tp").cast("double") / F.col("predicted").cast("double")),
+            snap6(F.col("tp").cast("double") / F.col("predicted").cast("double")),
         ).alias("precision"),
         F.when(
             F.col("support") > 0,
-            snap(F.col("tp").cast("double") / F.col("support").cast("double")),
+            snap6(F.col("tp").cast("double") / F.col("support").cast("double")),
         ).alias("recall"),
         F.when(
             (F.col("support") + F.col("predicted")) > 0,
-            snap(
+            snap6(
                 (F.lit(2.0) * F.col("tp").cast("double"))
                 / (F.col("support") + F.col("predicted")).cast("double")
             ),
@@ -1590,22 +1584,21 @@ def cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(19,0)")
         .alias("D"),
     )
-    snap = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     n = F.col("n")
     nn = (n * n).alias("nn")
     joined = tot.crossJoin(F.broadcast(marg))
     return joined.select(
         n.cast("long").alias("n_docs"),
         F.when(
-            n > 0, snap(F.col("D").cast("double") / n.cast("double"))
+            n > 0, snap6(F.col("D").cast("double") / n.cast("double"))
         ).alias("observed_agreement"),
         F.when(
             n > 0,
-            snap(F.col("S").cast("double") / (n * n).cast("double")),
+            snap6(F.col("S").cast("double") / (n * n).cast("double")),
         ).alias("expected_agreement"),
         F.when(
             (n * n) != F.col("S"),
-            snap(
+            snap6(
                 (n * F.col("D") - F.col("S")).cast("double")
                 / ((n * n) - F.col("S")).cast("double")
             ),

@@ -11,6 +11,10 @@ Determinism rules used throughout so hashes match bit-for-bit:
 * double sums go through DECIMAL(18,4) then cast back (order-independent);
 * ratios divide exact integer counts in double (one IEEE op, identical in
   both engines);
+* a float output that is not an exact sum or a single-op ratio is
+  pinned to the 1e-6 grid with ``basket.snap6`` (floor(x*1e6 + 0.5)/1e6,
+  pure double arithmetic), never ``F.round``, which rounds through the
+  decimal string and so breaks .5 ties differently from DuckDB;
 * every ranking has a total-order tie-break;
 * timestamps are projected to strings/dates (engines agree under UTC).
 """
@@ -18,6 +22,7 @@ Determinism rules used throughout so hashes match bit-for-bit:
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -450,17 +455,17 @@ _TEXT_SOURCE_ORACLE = """
     FROM documents GROUP BY lang
     """
 
-register("scan_jsonl", jsonl.scan_jsonl, _TEXT_SOURCE_ORACLE)
+register("scan_jsonl", partial(jsonl.scan_format, fmt="json"), _TEXT_SOURCE_ORACLE)
 
 # Same rollup through the CSV source/sink pair (header + quoting path).
-register("scan_csv", jsonl.scan_csv, _TEXT_SOURCE_ORACLE)
+register("scan_csv", partial(jsonl.scan_format, fmt="csv"), _TEXT_SOURCE_ORACLE)
 
 # Same rollup through the bundled columnar ORC source/sink pair.
-register("scan_orc", jsonl.scan_orc, _TEXT_SOURCE_ORACLE)
+register("scan_orc", partial(jsonl.scan_format, fmt="orc"), _TEXT_SOURCE_ORACLE)
 
 # Same rollup through the Spark-4 native XML source/sink pair (the
 # escape path: &/</newlines in text must round-trip through markup).
-register("scan_xml", jsonl.scan_xml, _TEXT_SOURCE_ORACLE)
+register("scan_xml", partial(jsonl.scan_format, fmt="xml"), _TEXT_SOURCE_ORACLE)
 
 # Custom Python DataSource (Spark 4 V2 API): every row is a pure md5
 # function of its row id, so DuckDB regenerates the identical table.

@@ -1,197 +1,121 @@
-"""Self-describing text sources/sinks (JSONL + CSV) — JSONL is the
-interchange format of LLM data pipelines (every public pretraining
-corpus ships as JSONL shards); CSV is the lowest-common-denominator
-export format a switching user brings along.
+"""Keys that write a table through a sink and read it back: the four
+self-describing formats (JSONL, CSV, XML, ORC), a Hive-partitioned
+pruned read, schema evolution and dynamic partition pruning.
 
 The reference reads only line-text and parquet (SURVEY.md §2.1 S1);
-a complete engine also round-trips JSONL. The key proves the whole
-path: write the documents table as JSONL (escaping newlines/unicode in
-the payload), read it back with an explicit schema (never inference —
-at 100 TB an inference pass is a full extra scan), and aggregate. The
-distinct-md5 count pins content equality through the escape/unescape
-round-trip, not just row counts.
+a complete engine also round-trips the formats pipelines exchange.
+JSONL is the interchange format of LLM data pipelines, CSV the
+lowest-common-denominator export a switching user brings along, XML
+the format enterprise feeds still arrive in, ORC the remaining bundled
+columnar format. Every read uses an explicit schema, never inference:
+at 100 TB an inference pass is a full extra scan.
+
+Every key here writes into :func:`~bigdata1_spark.sources.tables.scratch`'s
+temp directory, which pins the result and removes the directory, and a
+sink that may get no rows is judged by
+:func:`~bigdata1_spark.sources.tables.has_data` alone, so a real read
+error raises instead of reading back empty.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata1_spark.sources.tables import load_table
+from bigdata1_spark.sources.tables import has_data, load_table, scratch
+
+# format → (writer options, reader options)
+_FORMATS: dict[str, tuple[dict[str, str], dict[str, str]]] = {
+    "json": ({}, {}),
+    # multiLine: quoted fields may legally contain newlines; a
+    # line-splitting read would silently mis-parse them if the
+    # generator ever emits one (today's documents have none, but the
+    # round-trip must not depend on that invariant)
+    "csv": ({"header": "true"}, {"header": "true", "multiLine": "true"}),
+    # Spark 4's native XML source: one <doc> element per row; the
+    # writer escapes text content (&amp;/&lt;/newlines all round-trip)
+    "xml": ({"rowTag": "doc"}, {"rowTag": "doc"}),
+    # the predicate-pushdown-capable binary path next to the text
+    # formats (avro ships as a separate package: out of scope)
+    "orc": ({}, {}),
+}
 
 
-def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents → CSV sink → CSV source → per-language rollup.
+def scan_format(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
+    """Documents → ``fmt`` sink → ``fmt`` source → per-language rollup.
 
-    The built-in CSV source/sink pair (with header and quoting), as
-    opposed to the reference's hand-split line format
-    (``sources/billing.py`` / BD_hw1 ``src/spark/*.java`` textFile +
-    split(",")): free-text payloads exercise the quote/escape path, the
-    explicit read schema avoids the inference scan, and the distinct-md5
-    count pins payload equality through quoting. Same shuffle shape as
-    ``scan_jsonl``. Columns: lang, n_docs, total_chars, n_texts.
+    ``fmt`` is one of ``json``, ``csv``, ``xml`` or ``orc``. The write
+    and the read are both parallel over shards; the rollup shuffles
+    once on ``lang``. The distinct-md5 count pins payload equality
+    through each format's quote/escape path, not just row counts.
+    Columns: lang, n_docs, total_chars, n_texts.
     """
     docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="bigdata1_csv_")
-    try:
-        path = os.path.join(work, "docs_csv")
-        docs.write.mode("overwrite").option("header", "true").csv(path)
-        back = (
-            spark.read.schema(docs.schema)
-            .option("header", "true")
-            # multiLine: quoted fields may legally contain newlines; a
-            # line-splitting read would silently mis-parse them if the
-            # generator ever emits one (today's documents have none,
-            # but the round-trip must not depend on that invariant)
-            .option("multiLine", "true")
-            .csv(path)
-        )
-        res = back.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-            F.countDistinct(F.md5("text")).alias("n_texts"),
-        )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    write_opts, read_opts = _FORMATS[fmt]
 
-
-def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents → JSONL sink → JSONL source → per-language rollup.
-
-    Scale notes: the write and read are both parallel over shards (one
-    JSONL object per task); the explicit read schema keeps it a single
-    pass. The rollup shuffles once on ``lang``. Columns: lang, n_docs,
-    total_chars, n_texts.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="bigdata1_jsonl_")
-    try:
-        path = os.path.join(work, "docs_jsonl")
-        docs.write.mode("overwrite").json(path)
-        back = spark.read.schema(docs.schema).json(path)
-        res = back.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-            F.countDistinct(F.md5("text")).alias("n_texts"),
-        )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents → XML sink → XML source → per-language rollup.
-
-    Spark 4 bundles the (formerly spark-xml) native XML source, the
-    format enterprise feeds still arrive in. One ``<doc>`` element per
-    row under the default root; the writer escapes text content
-    (&amp;/&lt;/newlines all round-trip — pinned by the distinct-md5
-    count, exactly like the CSV quote/escape path), and the explicit
-    read schema skips the inference pass. Read parallelism at scale:
-    one row element per record split, same sharding story as JSONL.
-    Same rollup as ``scan_jsonl``. Columns: lang, n_docs, total_chars,
-    n_texts.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="bigdata1_xml_")
-    try:
-        path = os.path.join(work, "docs_xml")
-        (
-            docs.write.mode("overwrite")
-            .format("xml")
-            .option("rowTag", "doc")
-            .save(path)
+    def build(work: str) -> DataFrame:
+        path = os.path.join(work, f"docs_{fmt}")
+        docs.write.mode("overwrite").format(fmt).options(**write_opts).save(
+            path
         )
         back = (
             spark.read.schema(docs.schema)
-            .format("xml")
-            .option("rowTag", "doc")
+            .format(fmt)
+            .options(**read_opts)
             .load(path)
         )
-        res = back.groupBy("lang").agg(
+        return back.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").cast("long").alias("total_chars"),
             F.countDistinct(F.md5("text")).alias("n_texts"),
         )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
-
-def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents → ORC sink → ORC source → per-language rollup.
-
-    ORC is the remaining bundled columnar format (avro ships as a
-    separate package and is deliberately out of scope); the round-trip
-    proves the full predicate-pushdown-capable binary path next to the
-    text formats. Same rollup and content-pinning (distinct-md5) as
-    ``scan_jsonl``. Columns: lang, n_docs, total_chars, n_texts.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="bigdata1_orc_")
-    try:
-        path = os.path.join(work, "docs_orc")
-        docs.write.mode("overwrite").orc(path)
-        back = spark.read.schema(docs.schema).orc(path)
-        res = back.groupBy("lang").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-            F.countDistinct(F.md5("text")).alias("n_texts"),
-        )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return scratch(f"bigdata1_{fmt}_", build)
 
 
 def scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned write + partition-PRUNED read: documents
     written ``partitionBy(lang)``, then one partition read back through
-    a partition-column filter.
-
-    The assert is structural, not just value-level: the read's file
-    index must report exactly one selected partition (partition
-    pruning happened at planning time — at 100 TB this is the
-    difference between listing one prefix and scanning the corpus).
-    The rollup aggregates source/doc stats for the pruned language.
+    a partition-column filter (:func:`_pruned_rollup`).
     Columns: source, n_docs, total_chars.
     """
     docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="bigdata1_part_")
-    try:
+
+    def build(work: str) -> DataFrame:
         path = os.path.join(work, "docs_part")
         docs.write.mode("overwrite").partitionBy("lang").parquet(path)
-        # An empty source writes no partition directories at all, so the
-        # read-back cannot infer a schema — surface that as an empty
-        # result with the output contract's schema (the same fallback
-        # the streaming bounded drains use for empty sources).
-        try:
-            back = spark.read.parquet(path).filter(F.col("lang") == "fr")
-        except Exception:
-            return spark.createDataFrame(
-                [], "source string, n_docs bigint, total_chars bigint"
-            )
-        # Structural pruning check: the scan node must carry the lang
-        # predicate as a PARTITION filter (planning-time pruning), not
-        # a post-scan data filter.
-        plan = back._jdf.queryExecution().executedPlan().toString()
-        # explicit raise (not bare assert): survives python -O, so the
-        # structural scale guard cannot be silently stripped
-        if not ("PartitionFilters" in plan and "fr" in plan):
-            raise AssertionError(
-                f"partition pruning missing from scan:\n{plan}"
-            )
-        res = back.groupBy("source").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
+        return _pruned_rollup(spark, path)
+
+    return scratch("bigdata1_part_", build)
+
+
+def _pruned_rollup(spark: SparkSession, path: str) -> DataFrame:
+    """Per-source rollup of the ``lang=fr`` partition of the tree at
+    ``path``.
+
+    The assert is structural, not just value-level: the scan node must
+    carry the lang predicate as a PARTITION filter (pruning happened at
+    planning time — at 100 TB this is the difference between listing
+    one prefix and scanning the corpus), not a post-scan data filter.
+    An empty source writes no partition directories, so the tree fails
+    :func:`has_data` and reads back empty with the output schema.
+    """
+    if not has_data(path):
+        return spark.createDataFrame(
+            [], "source string, n_docs bigint, total_chars bigint"
         )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    back = spark.read.parquet(path).filter(F.col("lang") == "fr")
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    # explicit raise (not bare assert): survives python -O, so the
+    # structural scale guard cannot be silently stripped
+    if not ("PartitionFilters" in plan and "fr" in plan):
+        raise AssertionError(f"partition pruning missing from scan:\n{plan}")
+    return back.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").cast("long").alias("total_chars"),
+    )
 
 
 def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,8 +132,8 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: lang, n_docs, n_with_chars, evolved_chars.
     """
     docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="bigdata1_evolve_")
-    try:
+
+    def build(work: str) -> DataFrame:
         path = os.path.join(work, "docs")
         docs.filter(F.col("doc_id") % 2 == 0).select(
             "doc_id", "lang", "source", "text"
@@ -218,14 +142,13 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(path, "gen=2")
         )
         back = spark.read.option("mergeSchema", "true").parquet(path)
-        res = back.groupBy("lang").agg(
+        return back.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.count("n_chars").alias("n_with_chars"),
             F.sum("n_chars").cast("long").alias("evolved_chars"),
         )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return scratch("bigdata1_evolve_", build)
 
 
 # two live campaign months + a decoy the dim filter removes: DPP only
@@ -251,7 +174,9 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery filter inside the fact scan's PartitionFilters — the
     function asserts the ``dynamicpruning`` expression structurally,
     so a regression to a full scan fails the oracle run, not just a
-    benchmark. Columns: month, campaign, n_orders, total_price.
+    benchmark. An empty source writes no partition directories and
+    reads back empty (:func:`has_data`).
+    Columns: month, campaign, n_orders, total_price.
     """
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -261,8 +186,8 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = spark.createDataFrame(
         list(DPP_MONTHS), ["month", "campaign"]
     ).filter(F.col("campaign").startswith("spring"))
-    work = tempfile.mkdtemp(prefix="bigdata1_dpp_")
-    try:
+
+    def build(work: str) -> DataFrame:
         path = os.path.join(work, "orders_part")
         # cluster by the partition column before the partitioned write:
         # without it every one of the shuffle's map tasks opens a file
@@ -274,25 +199,22 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.repartition("month").write.mode("overwrite").partitionBy(
             "month"
         ).parquet(path)
-        try:
-            fact = spark.read.parquet(path)
-        except Exception:  # empty source wrote no partition dirs
+        if not has_data(path):
             return spark.createDataFrame(
                 [],
                 "month string, campaign string, n_orders bigint, "
                 "total_price double",
             )
-        joined = fact.join(F.broadcast(dim), "month")
+        joined = spark.read.parquet(path).join(F.broadcast(dim), "month")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         # explicit raise (not bare assert): survives python -O
         if "dynamicpruning" not in plan:
             raise AssertionError(
                 f"dynamic partition pruning missing from fact scan:\n{plan}"
             )
-        res = joined.groupBy("month", "campaign").agg(
+        return joined.groupBy("month", "campaign").agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("price"), 2).cast("double").alias("total_price"),
         )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return scratch("bigdata1_dpp_", build)

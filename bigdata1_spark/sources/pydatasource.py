@@ -187,12 +187,11 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     the monthly rollup is value-hash checked. Columns: month, n,
     bid_sum.
     """
-    import shutil
-    import tempfile
+    from bigdata1_spark.sources.tables import scratch
 
     spark.dataSource.register(BillingStreamSource)
-    work = tempfile.mkdtemp(prefix="bigdata1_pyds_stream_")
-    try:
+
+    def build(work: str) -> DataFrame:
         out = os.path.join(work, "out")
 
         def write_batch(bdf, bid):
@@ -217,7 +216,7 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError(f"no committed offset in {ckpt}")
             if pos >= STREAM_ROWS:
                 break
-        res = (
+        return (
             spark.read.parquet(out)
             .drop("batch")
             .groupBy("month")
@@ -226,9 +225,8 @@ def python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("bid").alias("bid_sum"),
             )
         )
-        return res.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return scratch("bigdata1_pyds_stream_", build)
 
 
 # ---------------------------------------------------------------------------
@@ -301,43 +299,38 @@ def python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes it directly from ``documents``.
     Columns: lang, source, n_docs, total_chars.
     """
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from bigdata1_spark.sources.tables import load_table
+    from bigdata1_spark.sources.tables import load_table, scratch
 
     spark.dataSource.register(JsonSinkSource)
-    work = tempfile.mkdtemp(prefix="bigdata1_pyds_sink_")
-    try:
-        rollup = (
-            load_table(spark, sf_dir, "documents")
-            .groupBy("lang", "source")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").cast("long").alias("total_chars"),
-            )
+    rollup = (
+        load_table(spark, sf_dir, "documents")
+        .groupBy("lang", "source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("total_chars"),
         )
+    )
+    schema = StructType(
+        [
+            StructField("lang", StringType()),
+            StructField("source", StringType()),
+            StructField("n_docs", LongType()),
+            StructField("total_chars", LongType()),
+        ]
+    )
+
+    def build(work: str) -> DataFrame:
         (
             rollup.write.format("pyjsonsink")
             .option("path", work)
             .mode("append")
             .save()
         )
-        assert os.path.exists(os.path.join(work, "_SUCCESS"))
-        schema = StructType(
-            [
-                StructField("lang", StringType()),
-                StructField("source", StringType()),
-                StructField("n_docs", LongType()),
-                StructField("total_chars", LongType()),
-            ]
-        )
-        back = spark.read.schema(schema).json(
-            os.path.join(work, "*.jsonl")
-        )
-        return back.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        # explicit raise (not bare assert): survives python -O
+        if not os.path.exists(os.path.join(work, "_SUCCESS")):
+            raise AssertionError(f"pyjsonsink did not commit into {work}")
+        return spark.read.schema(schema).json(os.path.join(work, "*.jsonl"))
+
+    return scratch("bigdata1_pyds_sink_", build)

@@ -10,6 +10,9 @@ for free. The billing text format is still supported via
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -172,3 +175,30 @@ def load_table(
     if spread:
         df = spread_if_starved(spark, df, path)
     return df
+
+
+def scratch(prefix: str, build: Callable[[str], DataFrame]) -> DataFrame:
+    """Run ``build(work)`` in a fresh temp directory ``work`` and return
+    its frame pinned with an eager ``localCheckpoint``. The directory is
+    removed on return and on raise alike; the pin runs before removal,
+    so no returned frame ever reads a removed path. Every key that
+    writes data and reads it back goes through here, except
+    ``layout.bucketed_join`` (its plan test needs the lazy scan)."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        return build(work).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def has_data(path: str) -> bool:
+    """The one empty-sink rule: ``path`` holds at least one file whose
+    name does not start with ``_`` or ``.`` (bookkeeping such as
+    ``_SUCCESS`` and ``.crc``), at any depth. A sink that got no rows
+    fails it and reads back as an empty frame; a sink that passes is
+    read normally, so a real read error raises."""
+    return any(
+        not f.startswith(("_", "."))
+        for _root, _dirs, files in os.walk(path)
+        for f in files
+    )

@@ -25,13 +25,12 @@ import contextlib
 import math
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata1_spark.sources.tables import load_table
+from bigdata1_spark.sources.tables import has_data, load_table, scratch
 
 WINDOW = "1 hour"
 WATERMARK = "1 day"
@@ -903,14 +902,14 @@ def _drain(
       result); append output writes each micro-batch to its own
       ``batch=<id>`` directory, so a replayed batch overwrites only
       itself and reading the tree back returns the union.
-    * Read-back: a source that yields no micro-batch never creates the
-      sink and reads back as an empty frame with the stream's schema;
-      sentinel rows (``user_id < 0``) are dropped; the result is pinned
-      with an eager ``localCheckpoint`` before the temp work dir is
-      removed, which happens on return and on raise alike.
+    * Read-back: a sink without data files (:func:`has_data` — e.g. a
+      source that yields no micro-batch never creates it) reads back
+      as an empty frame with the stream's schema; sentinel rows
+      (``user_id < 0``) are dropped; :func:`scratch` pins the result
+      and removes the temp work dir, on return and on raise alike.
     """
-    work = tempfile.mkdtemp(prefix="bigdata1_drain_")
-    try:
+
+    def run(work: str) -> DataFrame:
         if flush is None:
             src = os.path.join(work, "src")
             os.makedirs(src)
@@ -937,7 +936,7 @@ def _drain(
                 .start()
                 .awaitTermination()
             )
-        if os.path.isdir(out):
+        if has_data(out):
             # batch=<id> reads back as an inferred partition column —
             # sink bookkeeping, not part of the result contract
             result = spark.read.parquet(out).drop("batch")
@@ -945,9 +944,9 @@ def _drain(
             result = spark.createDataFrame([], stream_df.schema)
         if flush is not None:
             result = result.filter(F.col("user_id") >= 0)
-        return result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return result
+
+    return scratch("bigdata1_drain_", run)
 
 
 def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1106,8 +1105,7 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
 
-    work = tempfile.mkdtemp(prefix="bigdata1_upsert_stream_")
-    try:
+    def run(work: str) -> DataFrame:
         src = os.path.join(work, "src")
         os.makedirs(src)
         # Split the source deterministically into two half-files so the
@@ -1154,10 +1152,9 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(
                 f"expected multi-batch upsert, got {len(versions)} versions"
             )
-        final = _event_strings(spark.read.parquet(versions[-1]))
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _event_strings(spark.read.parquet(versions[-1]))
+
+    return scratch("bigdata1_upsert_stream_", run)
 
 
 def session_window_stream(

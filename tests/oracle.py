@@ -11,6 +11,7 @@ that the driver's hash would catch.
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import pandas as pd
 
@@ -76,8 +77,26 @@ def assert_matches_oracle(spark_df, duck_con, sql: str, key: str = "?"):
     )
     g, w = _normalize(got), _normalize(want)
     if g != w:
-        diffs = [(a, b) for a, b in zip(g, w) if a != b]
+        only_g, only_w = _only_in(g, w), _only_in(w, g)
         raise AssertionError(
-            f"[{key}] value mismatch: {len(diffs)}/{len(g)} rows differ; "
-            f"first diff: spark={diffs[0][0]} duckdb={diffs[0][1]}"
+            f"[{key}] value mismatch: {len(only_g)} rows only in spark, "
+            f"{len(only_w)} only in duckdb (of {len(g)}); "
+            f"spark-only (first 5): {only_g[:5]}; "
+            f"duckdb-only (first 5): {only_w[:5]}"
         )
+
+
+def _only_in(rows: list[tuple], other: list[tuple]) -> list[tuple]:
+    """Multiset difference ``rows - other``, matched by ``repr`` like
+    the sort in :func:`_normalize` (array cells are unhashable), so one
+    missing row is reported as itself instead of misaligning every
+    sorted pair after it."""
+    left = Counter(map(repr, other))
+    out = []
+    for row in rows:
+        r = repr(row)
+        if left[r]:
+            left[r] -= 1
+        else:
+            out.append(row)
+    return out

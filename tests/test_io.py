@@ -76,6 +76,38 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
         spark.sql("DROP DATABASE IF EXISTS buckdemo CASCADE")
 
 
+def test_bucketed_join_dir_removed_at_exit(sf_dir, tmp_path):
+    """``layout.bucketed_join`` keeps its bucketed tables readable for
+    the life of the process and removes their directory at
+    interpreter exit."""
+    import glob
+    import os
+    import subprocess
+    import sys
+
+    script = f"""
+import glob, tempfile
+from bigdata1_spark.operators import layout
+from bigdata1_spark.session import get_spark
+spark = get_spark(app_name="bucketed-exit", shuffle_partitions=4)
+assert layout.bucketed_join(spark, {sf_dir!r}).count() > 0
+print(glob.glob(tempfile.gettempdir() + "/bigdata1_bucketed_*"))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ, TMPDIR=str(tmp_path), PYTHONPATH=root,
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert str(tmp_path) in run.stdout.strip().splitlines()[-1]
+    assert glob.glob(str(tmp_path / "bigdata1_bucketed_*")) == []
+
+
 def test_small_files_compaction(spark, sf_dir, tmp_path):
     """Small-files compaction: a directory fragmented into many tiny
     parquet files (the classic streaming-sink pathology) rewritten via

@@ -38,6 +38,30 @@ def test_dtype_parity_catches_hugeint_float():
     _assert_dtype_parity(duck_side, duck_side.copy(), "ok")
 
 
+def test_value_mismatch_names_the_differing_rows():
+    """One row missing on each side must be reported as exactly that
+    row, not as every sorted pair after it misaligned."""
+    from types import SimpleNamespace
+
+    import duckdb
+    import pandas as pd
+
+    spark_side = SimpleNamespace(
+        toPandas=lambda: pd.DataFrame({"x": [1, 2, 3, 4]})
+    )
+    with pytest.raises(AssertionError) as err:
+        assert_matches_oracle(
+            spark_side,
+            duckdb.connect(),
+            "SELECT * FROM (VALUES (0), (1), (2), (3)) t(x)",
+            key="shifted",
+        )
+    msg = str(err.value)
+    assert "1 rows only in spark, 1 only in duckdb" in msg, msg
+    assert "spark-only (first 5): [(4,)]" in msg, msg
+    assert "duckdb-only (first 5): [(0,)]" in msg, msg
+
+
 def test_every_query_has_an_oracle():
     """The rows-only set went empty in round 7 and must STAY empty —
     a key registered without a DuckDB oracle regresses the correctness

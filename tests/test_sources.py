@@ -290,6 +290,33 @@ def test_committed_pos_corrupt_offset_raises(tmp_path):
         committed_pos(str(ckpt))
 
 
+def test_has_data_empty_sink_rule(tmp_path):
+    """Bookkeeping files (``_SUCCESS``, ``.crc``) do not make a sink
+    non-empty; one data file at any depth does."""
+    from bigdata1_spark.sources.tables import has_data
+
+    assert not has_data(str(tmp_path / "absent"))
+    (tmp_path / "_SUCCESS").write_text("")
+    (tmp_path / ".part-0.parquet.crc").write_text("")
+    assert not has_data(str(tmp_path))
+    tree = tmp_path / "tree"
+    (tree / "lang=fr").mkdir(parents=True)
+    (tree / "lang=fr" / "part-0.parquet").write_bytes(b"")
+    assert has_data(str(tree))
+
+
+def test_partitioned_read_back_raises_on_corrupt_file(spark, tmp_path):
+    """A sink holding a data file is read, never guessed empty: a
+    corrupt part file in ``scan_partitioned``'s read path raises."""
+    from bigdata1_spark.sources.jsonl import _pruned_rollup
+
+    part = tmp_path / "docs_part" / "lang=fr"
+    part.mkdir(parents=True)
+    (part / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _pruned_rollup(spark, str(tmp_path / "docs_part")).collect()
+
+
 @pytest.fixture
 def ab_loader():
     """``bench._load_ab_registry`` with ``os.environ`` and ``sys.path``

@@ -242,32 +242,47 @@ def test_bounded_append_empty_source(spark, sf_dir):
 def test_drain_removes_work_dir_on_return_and_raise(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The drain's temp work dir (source copy, checkpoint, sink) is
-    gone after a normal drain AND after a builder that raises."""
+    """``tables.scratch``'s temp work dir is gone after a normal build
+    AND after a build that raises, and the returned frame still
+    collects once its directory is gone. Exercised directly and through
+    the drain (source copy, checkpoint, sink)."""
     import os
     import tempfile
 
+    from bigdata1_spark.sources.tables import scratch
+
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     seen = []
+
+    def write_back(work):
+        seen.append(os.path.join(work, "t"))
+        spark.range(5).write.parquet(seen[-1])
+        return spark.read.parquet(seen[-1])
 
     def build(src):
         seen.append(src)
         return se._read_events_stream(spark, src).select("event_id")
 
-    out = se._drain(spark, sf_dir, build)
-    assert out.count() > 0
+    pinned = scratch("bigdata1_probe_", write_back)
+    drained = se._drain(spark, sf_dir, build)
+    for path in seen:
+        assert not os.path.exists(os.path.dirname(path))
+    assert sorted(r.id for r in pinned.collect()) == list(range(5))
+    assert drained.count() > 0
 
-    def failing_build(src):
-        seen.append(src)
-        raise RuntimeError("builder failed")
+    def failing(path):
+        seen.append(path)
+        raise RuntimeError("build failed")
 
-    with pytest.raises(RuntimeError, match="builder failed"):
-        se._drain(spark, sf_dir, failing_build)
+    with pytest.raises(RuntimeError, match="build failed"):
+        scratch("bigdata1_probe_", lambda work: failing(os.path.join(work, "t")))
+    with pytest.raises(RuntimeError, match="build failed"):
+        se._drain(spark, sf_dir, failing)
 
-    assert len(seen) == 2
-    for src in seen:
-        assert src.startswith(str(tmp_path))
-        assert not os.path.exists(os.path.dirname(src))
+    assert len(seen) == 4
+    for path in seen:
+        assert path.startswith(str(tmp_path))
+        assert not os.path.exists(os.path.dirname(path))
     assert os.listdir(tmp_path) == []
 
 
