@@ -24,6 +24,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+# Python workers inherit this environment when the session starts:
+# pyspark's pandas FutureWarnings (serializers.py) would otherwise fill
+# the stdout tail. perfbench/run.py sets the same filter.
+os.environ.setdefault("PYTHONWARNINGS", "ignore::FutureWarning")
 
 from bigdata1_spark import registry  # noqa: E402
 from bigdata1_spark.operators import dedup, text_analysis  # noqa: E402

@@ -19,7 +19,11 @@ from pyspark.sql.window import Window
 
 from bigdata1_spark.functions import hashing, textfns, vectors
 from bigdata1_spark.operators.basket import snap6
-from bigdata1_spark.operators.graph import iterate, symmetrize
+from bigdata1_spark.operators.graph import (
+    iterate,
+    min_label_round,
+    symmetrize,
+)
 from bigdata1_spark.sources.tables import load_table, spread_if_starved
 
 
@@ -531,19 +535,27 @@ def dedup_embedding(
     )
 
 
+# Round cap for dedup_clusters' components — a safety net: pointer
+# doubling converges in O(log diameter) rounds and iterate stops at the
+# first zero-change round.
+CLUSTER_ROUNDS = 20
+
+
 def min_label_components(
-    nodes: DataFrame, pairs: DataFrame, max_iter: int = 20
+    nodes: DataFrame, pairs: DataFrame, max_iter: int = CLUSTER_ROUNDS
 ) -> DataFrame:
     """Connected components by iterative hash-to-min label propagation
     over an (id1, id2) pair frame — the reusable group-resolution core
     of :func:`dedup_clusters`, parameterized so pipeline stages can
     cluster pairs from ANY detector (exact-Jaccard or pure-LSH) over
-    any node set. Each round is one neighbor-min step (join + min-agg)
-    plus one pointer-doubling self-join, so labels converge in
-    O(log diameter) rounds — not O(diameter). Labels only decrease,
-    so :func:`~bigdata1_spark.operators.graph.iterate` stops at the
-    first zero-change round. ``nodes``: single-column frame of ids.
-    Returns (node, lbl) with lbl = min reachable id."""
+    any node set. Each round is one
+    :func:`~bigdata1_spark.operators.graph.min_label_round` plus one
+    pointer-doubling self-join, so labels converge in O(log diameter)
+    rounds — not O(diameter). Labels only decrease, so
+    :func:`~bigdata1_spark.operators.graph.iterate` stops at the first
+    zero-change round. ``nodes``: single-column frame of ids; a node
+    without a pair keeps its own id. Returns (node, lbl) with lbl =
+    min reachable id."""
     # symmetrize in ONE scan of the (lazy, possibly expensive —
     # dedup_jaccard) pair plan before the cache is populated
     edges = symmetrize(pairs, "id1", "id2").cache()
@@ -553,23 +565,11 @@ def min_label_components(
     ).localCheckpoint()
 
     def step(labels: DataFrame, _r: int) -> DataFrame:
-        msgs = (
-            labels.join(edges, F.col("node") == F.col("src"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        # _lbl0 carries the pre-round label for the change flag
-        stepped = labels.join(msgs, "node", "left").select(
-            "node",
-            F.col("lbl").alias("_lbl0"),
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
-            ).alias("lbl"),
-        )
+        stepped = min_label_round(labels, edges)
         # Pointer doubling: lbl(v) <- min(lbl(v), lbl(lbl(v))). Every
         # label IS a node id (labels start as own ids and only adopt
         # other node ids), so the self-lookup is total; combined with
-        # the one-hop neighbor step above, the reach distance doubles
+        # the one-hop neighbor round above, the reach distance doubles
         # per round and a diameter-d chain resolves in O(log d) rounds
         # instead of O(d) — measured at sf1, where regenerated near-dup
         # chains are long enough for the difference to dominate the
@@ -577,15 +577,16 @@ def min_label_components(
         jump = stepped.select(
             F.col("node").alias("jnode"), F.col("lbl").alias("jlbl")
         )
-        final_lbl = F.least(
-            F.col("lbl"), F.coalesce(F.col("jlbl"), F.col("lbl"))
-        )
+        lbl = F.least("lbl", "jlbl")
         return stepped.join(
             jump, stepped["lbl"] == jump["jnode"], "left"
         ).select(
             "node",
-            final_lbl.alias("lbl"),
-            (final_lbl != F.col("_lbl0")).cast("long").alias("_changed"),
+            lbl.alias("lbl"),
+            # changed in the round, or by the jump
+            F.greatest(
+                "_changed", (lbl < F.col("lbl")).cast("long")
+            ).alias("_changed"),
         )
 
     labels = iterate(labels, step, max_iter, changed="_changed")
@@ -593,9 +594,7 @@ def min_label_components(
     return labels
 
 
-def dedup_clusters(
-    spark: SparkSession, sf_dir: str, max_iter: int = 20
-) -> DataFrame:
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup pair graph → canonical
     cluster id (min doc_id reachable) per document.
 
@@ -604,7 +603,7 @@ def dedup_clusters(
     hash-to-min label propagation with pointer doubling — each round is
     one distributed join+min-aggregate plus a label self-join that jumps
     lbl(lbl(v)), so even long near-dup chains converge in O(log diameter)
-    rounds (the cap is a safety net, convergence is checked).
+    rounds (``CLUSTER_ROUNDS`` is a safety net, convergence is checked).
     ``localCheckpoint`` truncates lineage so plans stay bounded across
     iterations. Labels only ever decrease, so a round with zero changes
     is a fixed point — detected for free via ``DataFrame.observe`` on
@@ -617,7 +616,7 @@ def dedup_clusters(
         "id1", "id2"
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    labels = min_label_components(docs, pairs, max_iter=max_iter)
+    labels = min_label_components(docs, pairs)
     # the result depends only on the checkpointed labels — release the
     # cache this function owns (the shingle table passed to dedup_jaccard)
     sh.unpersist(blocking=False)

@@ -1,7 +1,8 @@
-"""Graph analytics over the order network — the missing family between
-relational analytics and the dedup clustering that already exists
-(``dedup.dedup_clusters`` is connected components; this module adds
-degree stats, triangle counting, and PageRank).
+"""Graph analytics over the order network: degree stats, triangle
+counting, PageRank, k-core, BFS, and min-label propagation
+(``label_prop``, ``connected_components``). Every min-label kernel,
+``dedup.min_label_components`` included, runs the one neighbor-min
+round :func:`min_label_round`.
 
 The graph is DERIVED from the star schema, the way production graph
 pipelines derive edges from fact tables:
@@ -68,8 +69,9 @@ def iterate(
     changed: str | None = None,
 ) -> DataFrame:
     """Run ``state = step(state, r)`` for r = 1..``rounds`` — the one
-    round loop of the iterative kernels (pagerank, kcore, bfs_hops,
-    label_prop, connected_components, dedup.min_label_components).
+    round loop of the iterative kernels (pagerank, kcore, bfs_hops, and
+    the three :func:`min_label_round` users: label_prop,
+    connected_components, dedup.min_label_components).
 
     Each round's output feeds more than one subtree of the next round,
     so rounds are materialized with eager ``localCheckpoint``: the plan
@@ -161,8 +163,8 @@ def _co_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _symmetrized_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bidirectional (src, dst) view of the co-supplier edge list, in
     ONE pass over the edge generation (see :func:`symmetrize`). Callers
-    checkpoint the result once and reuse it across rounds (bfs_hops,
-    label_prop, connected_components)."""
+    checkpoint the result once and reuse it across rounds (bfs_hops, and
+    label_prop and connected_components through :func:`_hash_min`)."""
     return symmetrize(_co_supplier_edges(spark, sf_dir), "a", "b")
 
 
@@ -445,7 +447,7 @@ def triangle_count(
     uses plain id-ordering. Columns: node, n_triangles (bigint; nodes
     in ≥1 triangle).
     """
-    n_sup = parquet_row_count(spark, sf_dir, "supplier")
+    n_sup = parquet_row_count(sf_dir, "supplier")
     if n_sup <= dense_max_nodes:
         return _triangle_count_dense(spark, sf_dir, n_sup)
     return _triangle_count_sparse(spark, sf_dir)
@@ -649,6 +651,51 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return iterate(dist, step, BFS_ROUNDS)
 
 
+def min_label_round(labels: DataFrame, edges: DataFrame) -> DataFrame:
+    """One synchronous min-label round — the shared body of
+    :func:`label_prop`, :func:`connected_components` and
+    ``dedup.min_label_components``. ``labels`` is (node, lbl) and
+    ``edges`` is symmetric (src, dst). Each node takes the least of its
+    own label and its neighbors' labels: ONE join of the labels against
+    the edges, ONE min-aggregate keyed on the receiving node, then a
+    LEFT join back, so a node with no edge keeps its own label.
+    Returns (node, lbl, _changed), ``_changed`` 1 where the label
+    dropped — the column :func:`iterate` stops on."""
+    nbr = (
+        labels.join(edges, F.col("node") == F.col("src"))
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.min("lbl").alias("_nbr"))
+    )
+    lbl = F.least("lbl", "_nbr")  # least() skips the NULL of no edge
+    return labels.join(nbr, "node", "left").select(
+        "node",
+        lbl.alias("lbl"),
+        (lbl < F.col("lbl")).cast("long").alias("_changed"),
+    )
+
+
+def _hash_min(
+    spark: SparkSession, sf_dir: str, rounds: int, out: str
+) -> DataFrame:
+    """``rounds`` hash-min rounds over the co-supplier graph, labels
+    starting at each node's own id, column ``out`` holding the label.
+    The symmetric edge list is pinned once with an eager
+    ``localCheckpoint`` and scanned by every round; :func:`iterate`
+    checkpoints each round and stops at the first one that changes no
+    label. Labels only decrease, so a zero-change round is a fixpoint
+    and stopping there equals the full ``rounds``-round unroll."""
+    sym = _symmetrized_edges(spark, sf_dir).localCheckpoint(eager=True)
+    labels = sym.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("lbl")
+    )
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        return min_label_round(labels, sym)
+
+    labels = iterate(labels, step, rounds, changed="_changed")
+    return labels.select("node", F.col("lbl").alias(out))
+
+
 LABEL_PROP_ROUNDS = 3
 
 
@@ -659,32 +706,12 @@ def label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors' current labels — the deterministic LPA variant
     (classic LPA's random tie-breaks can't be oracle-pinned; min-label
     converges to connected components, so intermediate rounds expose
-    r-hop community structure while the fixpoint is checkable against
-    ``dedup_clusters``-style components).
-
-    Per round: ONE join of the current labels against the
-    bidirectional edge list + ONE min aggregation — the same keyed
-    round shape as bfs_hops, localCheckpoint-bounded. Degree-0 nodes
-    don't exist in an edge-derived graph; isolated-in-round nodes keep
-    their label via the self-union. Exact integers. Columns: node,
-    label.
+    r-hop community structure). The same kernel as
+    :func:`connected_components` with a 3-round budget: a node farther
+    than 3 hops from its component minimum keeps a larger label.
+    Exact integers. Columns: node, label.
     """
-    bidir = _symmetrized_edges(spark, sf_dir).localCheckpoint(eager=True)
-    labels = bidir.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-
-    def step(labels: DataFrame, _r: int) -> DataFrame:
-        nbr = labels.join(
-            bidir, labels["node"] == bidir["src"]
-        ).select(F.col("dst").alias("node"), "label")
-        return (
-            labels.unionAll(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-
-    return iterate(labels, step, LABEL_PROP_ROUNDS)
+    return _hash_min(spark, sf_dir, LABEL_PROP_ROUNDS, "label")
 
 
 def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -714,7 +741,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _co_supplier_edges(spark, sf_dir).localCheckpoint()
     deg = _node_degrees(e)
-    n_sup = parquet_row_count(spark, sf_dir, "supplier")
+    n_sup = parquet_row_count(sf_dir, "supplier")
     if n_sup <= _DENSE_MAX_NODES:
         tris = _triangle_count_dense(spark, sf_dir, max(n_sup, 1), edges=e)
     else:
@@ -949,6 +976,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # accumulate-all-reachable-pairs recursive CTE is Θ(Σ|C_i|²·deg) and
 # never finished on the 2M-edge skew twin), while the Spark side may
 # still stop early at the fixpoint, which cannot change the result.
+# Pointer doubling (dedup.min_label_components) is NOT used here: it
+# reaches farther than one hop per round, so it would differ from the
+# 12-round hash-min unroll on any component whose min-label
+# eccentricity exceeds the budget.
 CC_ROUNDS = 12
 
 
@@ -975,34 +1006,4 @@ def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-order partner) have no edge and are out of contract, matching
     the other graph keys. Columns: node, component.
     """
-    sym = (
-        _symmetrized_edges(spark, sf_dir)
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint()
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint()
-    )
-
-    def step(labels: DataFrame, _r: int) -> DataFrame:
-        nbr_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        # a node changes iff it adopts a smaller neighbor label
-        return labels.join(nbr_min, "node").select(
-            "node",
-            F.least(F.col("component"), F.col("nbr_component")).alias(
-                "component"
-            ),
-            (F.col("nbr_component") < F.col("component"))
-            .cast("long")
-            .alias("_changed"),
-        )
-
-    labels = iterate(labels, step, CC_ROUNDS, changed="_changed")
-    return labels.select("node", "component")
+    return _hash_min(spark, sf_dir, CC_ROUNDS, "component")

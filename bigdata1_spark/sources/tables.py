@@ -72,61 +72,41 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def parquet_row_count(
-    spark: SparkSession, sf_dir: str, name: str
-) -> int:
+def _footers(path: str) -> list:
+    """Parquet footer metadata of ``path``: the file itself, or every
+    ``*.parquet`` file under the directory at any depth, skipping
+    bookkeeping names that start with ``_`` or ``.``. No Spark job. A
+    footer that cannot be read raises — an input size is never
+    guessed."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(path):
+        return [pq.read_metadata(path)]
+    return [
+        pq.read_metadata(os.path.join(root, f))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
+def parquet_row_count(sf_dir: str, name: str) -> int:
     """Exact row count of one testdata table from parquet FOOTER
     metadata — no Spark job at all (``df.count()`` on parquet is
     metadata-optimized but still schedules a job per file; planner-side
     cardinality probes like triangle_count's dense/sparse dispatch only
-    need the number). Handles both a single ``<name>.parquet`` file and
-    a directory of part files; falls back to a Spark count if pyarrow
-    cannot read a footer."""
+    need the number)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet") and not f.startswith(
-                        ("_", ".")
-                    ):
-                        total += pq.read_metadata(
-                            os.path.join(root, f)
-                        ).num_rows
-            return total
-        return pq.read_metadata(path).num_rows
-    except Exception:
-        return load_table(spark, sf_dir, name).count()
+    return sum(m.num_rows for m in _footers(path))
 
 
 def _parquet_row_groups(path: str) -> int:
     """Total parquet row groups under ``path`` (file or directory) from
     footer metadata only — the scan's effective max parallelism, since
-    a row group is unsplittable (one scan task decodes it end to end).
-    Returns a large sentinel when footers can't be read so callers
-    treat unknown layouts as already-parallel."""
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet") and not f.startswith(
-                        ("_", ".")
-                    ):
-                        total += pq.read_metadata(
-                            os.path.join(root, f)
-                        ).num_row_groups
-            return total
-        return pq.read_metadata(path).num_row_groups
-    except Exception:
-        return 1 << 30
+    a row group is unsplittable (one scan task decodes it end to end)."""
+    return sum(m.num_row_groups for m in _footers(path))
 
 
 def spread_if_starved(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:

@@ -67,14 +67,11 @@ def _state_sized_partitions(
     local[32]: floor 2 → 13.6 s, 8 → 7.7 s, 16 → 7.5 s, 32 → 9.3 s
     (interleaved mins) — the byte term still dominates at volume
     (a 100 TB replay sizes to ~1.6 M partitions either way)."""
-    try:
-        size = sum(
-            os.path.getsize(os.path.join(source_dir, f))
-            for f in os.listdir(source_dir)
-            if not f.startswith(("_", "."))
-        )
-    except OSError:  # missing/unreadable source (e.g. empty-stream path)
-        size = 0
+    size = sum(
+        os.path.getsize(os.path.join(source_dir, f))
+        for f in os.listdir(source_dir)
+        if not f.startswith(("_", "."))
+    )
     floor = 2
     if python_state:
         floor = min(

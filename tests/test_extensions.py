@@ -254,11 +254,13 @@ def test_min_label_components_chain_converges_logarithmically(spark):
     max_iter=8 and require FULL convergence to the chain minimum.
     This is the O(log diameter) guarantee the 100 TB story relies on —
     long near-dup chains (boilerplate drift) must not cost one Spark
-    job per hop."""
+    job per hop. Node 1000 has no pair: the shared round's left join
+    must keep its own label."""
     from bigdata1_spark.operators.dedup import min_label_components
 
     n = 64
-    nodes = spark.range(n).withColumnRenamed("id", "doc_id")
+    nodes = spark.range(n).unionAll(spark.range(1000, 1001))
+    nodes = nodes.withColumnRenamed("id", "doc_id")
     pairs = (
         spark.range(n - 1)
         .select(
@@ -267,7 +269,7 @@ def test_min_label_components_chain_converges_logarithmically(spark):
     )
     labels = min_label_components(nodes, pairs, max_iter=8)
     got = {r["node"]: r["lbl"] for r in labels.collect()}
-    assert got == {i: 0 for i in range(n)}
+    assert got == {**{i: 0 for i in range(n)}, 1000: 1000}
 
 
 def test_ivf_multiprobe_recall_dominates_single(spark, sf_dir):

@@ -294,19 +294,38 @@ def test_connected_components_matches_union_find(spark, duck, sf_dir):
 def test_connected_components_disjoint_blocks(spark, tmp_path):
     """Two hand-built disjoint chains must come out as two components
     labeled by their min node — exercises >1 hash-min round (chain
-    diameter 3) and the convergence stop."""
-    rows = []
-    for i, (a, b) in enumerate([(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)]):
-        rows += [(i, a), (i, b)]
-    d = str(tmp_path / "chains")
-    spark.createDataFrame(
-        rows, "l_orderkey long, l_suppkey long"
-    ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+    diameter 3) and the convergence stop. A 1-2-…-8 path pins the
+    shared round's one-hop reach: connected_components labels it all 1,
+    and label_prop returns exactly its 3-round truncation (pointer
+    doubling would label every node 1)."""
+
+    def lineitem_dir(name, edges):
+        rows = []
+        for i, (a, b) in enumerate(edges):
+            rows += [(i, a), (i, b)]
+        d = str(tmp_path / name)
+        spark.createDataFrame(
+            rows, "l_orderkey long, l_suppkey long"
+        ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+        return d
+
+    d = lineitem_dir(
+        "chains", [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)]
+    )
     got = {
         r.node: r.component
         for r in graph.connected_components(spark, d).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
+
+    path = lineitem_dir("path", [(i, i + 1) for i in range(1, 8)])
+    got = {
+        r.node: r.component
+        for r in graph.connected_components(spark, path).collect()
+    }
+    assert got == {i: 1 for i in range(1, 9)}
+    got = {r.node: r.label for r in graph.label_prop(spark, path).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 2, 6: 3, 7: 4, 8: 5}
 
 
 def _rdd_scans(df) -> int:

@@ -1021,7 +1021,7 @@ SCAN_BUDGETS = {
     "kcore": 0,
     "kendall_tau": 1,
     "ks_test": 1,
-    "label_prop": 0,  # reads the edge and round-2 localCheckpoints only (graph.iterate)
+    "label_prop": 0,  # reads the last round's localCheckpoint only (graph.iterate fixpoint mode)
     "knn_classify": 2,
     "knn_join": 2,
     "lang_id": 2,

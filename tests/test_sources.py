@@ -317,6 +317,26 @@ def test_partitioned_read_back_raises_on_corrupt_file(spark, tmp_path):
         _pruned_rollup(spark, str(tmp_path / "docs_part")).collect()
 
 
+def test_footer_row_count_matches_duckdb(duck, sf_dir):
+    """The footer walk counts exactly the rows a scan returns, on every
+    table."""
+    from bigdata1_spark.sources.tables import TABLES, parquet_row_count
+
+    for t in TABLES:
+        (want,) = duck.execute(f"SELECT COUNT(*) FROM {t}").fetchone()
+        assert parquet_row_count(sf_dir, t) == want, t
+
+
+def test_row_groups_raise_on_corrupt_footer(tmp_path):
+    """An unreadable footer raises instead of sizing the input as
+    already-parallel (no ``spread_if_starved`` decision on a guess)."""
+    from bigdata1_spark.sources.tables import _parquet_row_groups
+
+    (tmp_path / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _parquet_row_groups(str(tmp_path))
+
+
 @pytest.fixture
 def ab_loader():
     """``bench._load_ab_registry`` with ``os.environ`` and ``sys.path``
