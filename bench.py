@@ -34,11 +34,12 @@ from bigdata1_spark.operators import dedup, text_analysis  # noqa: E402
 from bigdata1_spark.session import get_spark  # noqa: E402
 
 # Bench-only timings (VERDICT r07 item 3): the registry key `dedup_near`
-# binds dedup_near_checked, whose exact-Jaccard verify leg is a
-# deliberate oracle cost — so the pure-LSH SCALE path gets its own
-# timing here, keeping a regression in the path users run at 100 TB
-# visible instead of hidden inside the checked composite. These keys
-# have no oracle entry; they exist only for the per-key timing record.
+# binds dedup_near_checked — the exact PPJoin pair set left-joined to
+# the raw MinHash candidates, so it never verifies its LSH leg — so the
+# pure-LSH SCALE path (candidates + Jaccard verify) gets its own timing
+# here, keeping a regression in the path users run at 100 TB visible
+# instead of hidden inside the checked composite. These keys have no
+# oracle entry; they exist only for the per-key timing record.
 EXTRA_BENCH = {
     "dedup_near_lsh_only": dedup.dedup_near,
     # the full curation plan with the production (pure-LSH) near-dedup
@@ -135,6 +136,27 @@ def _load_ab_registry(gitref: str):
         raise
 
 
+def _ab_function(ab_registry, key: str):
+    """The ref's unwrapped callable for ``key``, or None when the ref
+    lacks it. Registry keys come from the ref registry; an EXTRA_BENCH
+    key resolves its HEAD function's module and name under the renamed
+    ref package, so the bench-only scale paths are compared too."""
+    import importlib
+
+    if key in ab_registry.QUERIES:
+        q = ab_registry.QUERIES[key]
+        return getattr(q, "__wrapped__", q)
+    if key not in EXTRA_BENCH:
+        return None
+    fn = EXTRA_BENCH[key]
+    ref_pkg = ab_registry.__name__.split(".")[0]
+    module = ref_pkg + fn.__module__.removeprefix("bigdata1_spark")
+    try:
+        return getattr(importlib.import_module(module), fn.__name__, None)
+    except ImportError:
+        return None
+
+
 def main() -> None:
     # BENCH_AB=<gitref> — interleaved HEAD-vs-ref comparison (VERDICT
     # r15 item 7). Loaded BEFORE the session so worker PYTHONPATH can
@@ -205,9 +227,8 @@ def _bench(ab_ref: str | None, ab_registry) -> None:
         # subsequent timing
         spark.catalog.clearCache()
         ab_fn = None
-        if ab_registry is not None and key in ab_registry.QUERIES:
-            q = ab_registry.QUERIES[key]
-            ab_fn = getattr(q, "__wrapped__", q)
+        if ab_registry is not None:
+            ab_fn = _ab_function(ab_registry, key)
         samples = []
         ab_samples = []
         try:

@@ -10,6 +10,8 @@ on bounded keys; embedding near-dup blocks on the label column.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 
@@ -26,24 +28,10 @@ from bigdata1_spark.operators.graph import (
 )
 from bigdata1_spark.sources.tables import load_table, spread_if_starved
 
-
-def _spread_verify(spark: SparkSession, sf_dir: str, cand: DataFrame) -> DataFrame:
-    """Spread a candidate-pair set across the cluster before the
-    array_intersect verify join (guide §2.2's CPU/byte mismatch): the
-    pair rows are 2 longs each, so AQE's byte-based coalescing shrinks
-    the post-``distinct`` stage to ONE partition at toy scale — and the
-    verify projection (an array_intersect over ~100-element hash sets
-    per pair, the dominant dedup cost at sf3 per SCALE.md) then runs
-    single-task (measured: 1.45 s of a 4.5 s dedup_near wall in one
-    task, 31 cores idle). Gated by the same parquet-footer probe as the
-    scan spread: at 100 TB the input has thousands of row groups, the
-    gate is an identity, and AQE's byte sizing is correct because
-    candidate volume is genuinely large."""
-    import os
-
-    return spread_if_starved(
-        spark, cand, os.path.join(sf_dir, "documents.parquet")
-    )
+# Production MinHash banding: 32 hashes in 8 bands of 4 rows, so a pair
+# of Jaccard J becomes a candidate with probability 1 − (1 − J^4)^8.
+MINHASH_K = 32
+MINHASH_BANDS = 8
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,6 +100,83 @@ def _doc_shingle_hashes(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFra
     )
 
 
+def _rarest_first(ordered: DataFrame) -> DataFrame:
+    """Every posting of a shingle-hash table ranked in All-Pairs'
+    canonical rarest-first order: ascending corpus document frequency,
+    hash as tie-break. Columns: doc_id, n (set size), h, pos (1-based
+    rank of h within the doc).
+
+    df is one map-side-combinable agg over the exploded corpus; one
+    row_number window over the postings then ranks each doc — flat
+    rows, no per-doc collect_list/array_sort/re-explode. Shingle hashes
+    are distinct within a doc, so (df, h) totally orders each window
+    partition and the rank is engine-deterministic. Every prefix
+    filter in this module slices this ONE order, which is what makes
+    the positional bounds valid across the two join sides."""
+    ex = ordered.select(
+        "doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h")
+    )
+    df_tbl = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+    w_rk = Window.partitionBy("doc_id").orderBy("df", "h")
+    return ex.join(df_tbl, "h").select(
+        "doc_id", "n", "h", F.row_number().over(w_rk).alias("pos")
+    )
+
+
+def _verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """Join candidate pairs (id1, id2) to both docs' shingle-hash sets
+    and count the overlap with one array_intersect per pair — the
+    verify step every exact shingle-set key shares. Columns: id1, id2,
+    n1, n2, n_common; the counts are exact integers, so every ratio
+    built from them is one double division."""
+    a = sh.select(F.col("doc_id").alias("id1"), F.col("hs").alias("hs1"))
+    b = sh.select(F.col("doc_id").alias("id2"), F.col("hs").alias("hs2"))
+    return cand.join(a, "id1").join(b, "id2").select(
+        "id1",
+        "id2",
+        F.size("hs1").alias("n1"),
+        F.size("hs2").alias("n2"),
+        F.size(F.array_intersect("hs1", "hs2")).alias("n_common"),
+    )
+
+
+def _jaccard_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    cand: DataFrame,
+    sh: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Candidate pairs whose exact shingle-set Jaccard reaches
+    ``threshold``. Columns: id1, id2, jaccard.
+
+    The candidates are spread across the cluster before the verify
+    join (guide §2.2's CPU/byte mismatch): pair rows are 2 longs each,
+    so AQE's byte-based coalescing shrinks the post-``distinct`` stage
+    to ONE partition at toy scale — and the verify (an array_intersect
+    over ~100-element hash sets per pair, the dominant dedup cost at
+    sf3 per SCALE.md) then runs single-task (measured: 1.45 s of a
+    4.5 s dedup_near wall in one task, 31 cores idle). Gated by the
+    same parquet-footer probe as the scan spread: at 100 TB the input
+    has thousands of row groups, the gate is an identity, and AQE's
+    byte sizing is correct because candidate volume is genuinely
+    large."""
+    cand = spread_if_starved(
+        spark, cand, os.path.join(sf_dir, "documents.parquet")
+    )
+    n_union = F.col("n1") + F.col("n2") - F.col("n_common")
+    return (
+        _verify(cand, sh)
+        .select(
+            "id1",
+            "id2",
+            (F.col("n_common").cast("double") / n_union.cast("double"))
+            .alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def dedup_jaccard(
     spark: SparkSession,
     sf_dir: str,
@@ -127,10 +192,9 @@ def dedup_jaccard(
     the first ⌊(1-t)·n⌋+1 — any pair with J ≥ t provably shares a
     prefix element (valid for ANY total order) — then verify candidates
     with one array_intersect of the hashed sets per pair. The order
-    used is All-Pairs' canonical rarest-first: ascending corpus
-    document frequency, hash as tie-break. That choice is the whole
-    ballgame at scale — prefixes then hold each doc's RAREST shingles,
-    so inverted-index buckets stay small even when the corpus shares a
+    used is :func:`_rarest_first`. That choice is the whole ballgame at
+    scale — prefixes then hold each doc's RAREST shingles, so
+    inverted-index buckets stay small even when the corpus shares a
     vocabulary (a hash order scatters hot shingles into prefixes and
     the r9 sf1 measurement showed the resulting candidate blowup:
     39-64× time at 10× docs; df-ordering restored ~linear scaling).
@@ -147,39 +211,15 @@ def dedup_jaccard(
     ordered = hashed_shingles if hashed_shingles is not None else (
         _doc_shingle_hashes(spark, sf_dir).cache()
     )
-    # rarest-first canonical order: df per shingle hash (one map-side-
-    # combinable agg over the exploded corpus), then per-doc sort by
-    # (df, h) and keep the ⌊(1-t)·n⌋+1-element prefix. struct ordering
-    # is field-lexicographic, so array_sort(struct(df, h)) IS the
-    # global order restricted to the doc.
-    ex = ordered.select(
-        "doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h")
-    )
-    df_tbl = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     prefix_len = F.floor(F.col("n") * (1.0 - threshold)).cast("int") + 1
     prefixes = (
-        ex.join(df_tbl, "h")
-        .groupBy("doc_id", "n")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "h"))).alias("rk"))
-        .select(
-            "doc_id",
-            "n",
-            F.explode(
-                F.transform(
-                    F.slice(F.col("rk"), 1, prefix_len),
-                    lambda s, i: F.struct(
-                        s["h"].alias("h"), (i + 1).alias("pos")
-                    ),
-                )
-            ).alias("hp"),
-        )
-        .select("doc_id", "n", F.col("hp.h").alias("h"),
-                F.col("hp.pos").alias("pos"))
+        _rarest_first(ordered)
+        .filter(F.col("pos") <= prefix_len)
         # the self-join below aliases this subtree twice with distinct
         # expr-ids, so neither static nor AQE exchange reuse dedupes it
         # (verified: no ReusedExchange in the executed plan) — without
-        # the cache the whole explode→df-join→collect_list pipeline,
-        # df aggregation included, runs TWICE per call. Prefix rows are
+        # the cache the whole explode→df-join→rank pipeline, df
+        # aggregation included, runs TWICE per call. Prefix rows are
         # ⌊(1-t)n⌋+1 per doc (a fraction of the corpus), so the cache is
         # strictly smaller than the recompute; same session-cache
         # lifecycle as the shingle table above.
@@ -217,20 +257,7 @@ def dedup_jaccard(
         )
         .distinct()
     )
-    cand = _spread_verify(spark, sf_dir, cand)
-    a = ordered.select(F.col("doc_id").alias("id1"), F.col("hs").alias("hs1"))
-    b = ordered.select(F.col("doc_id").alias("id2"), F.col("hs").alias("hs2"))
-    inter = F.size(F.array_intersect("hs1", "hs2"))
-    union = F.size("hs1") + F.size("hs2") - inter
-    return (
-        cand.join(a, "id1")
-        .join(b, "id2")
-        .select(
-            "id1", "id2",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(spark, sf_dir, cand, ordered, threshold)
 
 
 def _combinations(ids: Column) -> Column:
@@ -247,19 +274,13 @@ def _combinations(ids: Column) -> Column:
     )
 
 
-def minhash_candidates(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 32,
-    bands: int = 8,
-    hashed_shingles: DataFrame | None = None,
-    max_bucket_chunk: int = 64,
-) -> DataFrame:
-    """MinHash+LSH candidate pairs (doc ids sharing ≥1 band bucket).
+def minhash_candidates(sh: DataFrame, max_bucket_chunk: int = 64) -> DataFrame:
+    """MinHash+LSH candidate pairs (doc ids sharing ≥1 band bucket) of
+    a (doc_id, hs) shingle-hash table.
 
-    shingle → k-minhash signature → band keys → explode → bucket
-    groupBy → pair generation. Candidates are distinct (id1 < id2).
-    Columns: id1, id2.
+    shingle hashes → ``MINHASH_K``-minhash signature → ``MINHASH_BANDS``
+    band keys → explode → bucket groupBy → pair generation. Candidates
+    are distinct (id1 < id2). Columns: id1, id2.
 
     Skew guard: a bucket's sorted id array is sliced into chunks of at
     most ``max_bucket_chunk`` ids; pairs within a chunk are generated
@@ -272,18 +293,16 @@ def minhash_candidates(
     cross-chunk join matches nothing — the common case stays one
     array-local pass. The guard is exact: no candidate is dropped.
     """
-    rows = k // bands
-    sh = hashed_shingles if hashed_shingles is not None else (
-        _doc_shingle_hashes(spark, sf_dir)
-    )
     # the sorted per-doc shingle hashes ARE the minhash base hashes
     # (h_i = rehash of xxhash64(shingle)), so the same table feeds both
-    # candidate generation here and the exact verify in dedup_near —
-    # one tokenize/shingle/hash pass total when the caller shares it.
+    # candidate generation here and the exact verify — one
+    # tokenize/shingle/hash pass total when the caller shares it.
     sig = sh.select(
         "doc_id",
         hashing.band_keys(
-            hashing.minhash_from_hashes(F.col("hs"), k=k), bands, rows
+            hashing.minhash_from_hashes(F.col("hs"), k=MINHASH_K),
+            MINHASH_BANDS,
+            MINHASH_K // MINHASH_BANDS,
         ).alias("bks"),
     )
     cap = F.lit(max_bucket_chunk)
@@ -346,26 +365,33 @@ def dedup_near(
     back to shingle sets and keeps true near-dups (no false positives;
     recall governed by the band S-curve — asserted against the exact
     query in tests). The registry binds :func:`dedup_near_checked`,
-    which wraps this result in a hash-checkable contract; this pure-LSH
-    form is the scale path. Columns: id1, id2, jaccard.
+    which puts this key's contract in-band; this pure-LSH form is the
+    scale path. Columns: id1, id2, jaccard.
     """
     sh = hashed_shingles if hashed_shingles is not None else (
         _doc_shingle_hashes(spark, sf_dir).cache()
     )
-    cand = _spread_verify(
-        spark, sf_dir, minhash_candidates(spark, sf_dir, hashed_shingles=sh)
+    return _jaccard_pairs(spark, sf_dir, minhash_candidates(sh), sh, 0.5)
+
+
+def _exact_vs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact Jaccard ≥ 0.5 pair set (:func:`dedup_jaccard`, the
+    SQL-reproducible PPJoin) left-joined to the raw MinHash candidate
+    set, both over ONE cached shingle-hash table — the shared body of
+    the two checked-LSH keys. Every exact pair already has J ≥ 0.5 by
+    the same expression on the same arrays, so "is a candidate" is the
+    same test as "survives dedup_near's verify": the LSH leg needs no
+    second verify join. Columns: id1, id2, jaccard, found."""
+    sh = _doc_shingle_hashes(spark, sf_dir).cache()
+    exact = dedup_jaccard(spark, sf_dir, hashed_shingles=sh)
+    cand = minhash_candidates(sh).select(
+        "id1", "id2", F.lit(True).alias("found")
     )
-    a = sh.select(F.col("doc_id").alias("id1"), F.col("hs").alias("hs1"))
-    b = sh.select(F.col("doc_id").alias("id2"), F.col("hs").alias("hs2"))
-    joined = cand.join(a, "id1").join(b, "id2")
-    inter = F.size(F.array_intersect("hs1", "hs2"))
-    union = F.size("hs1") + F.size("hs2") - inter
-    return (
-        joined.select(
-            "id1", "id2",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
+    return exact.join(cand, ["id1", "id2"], "left").select(
+        "id1",
+        "id2",
+        "jaccard",
+        F.coalesce(F.col("found"), F.lit(False)).alias("found"),
     )
 
 
@@ -378,32 +404,20 @@ def dedup_near_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``lsh_ok`` = the one *deterministic* guarantee MinHash-LSH makes:
     a pair with Jaccard exactly 1 has identical signatures, hence
     identical band keys, hence MUST be an LSH candidate — so
-    ``jaccard < 1 OR found_by_lsh`` is provably true and the oracle
-    pins it. Probabilistic recall below J=1 (the band S-curve) stays a
+    ``jaccard < 1 OR found`` is provably true and the oracle pins it.
+    Probabilistic recall below J=1 (the band S-curve) stays a
     local-test assertion (`tests/test_extensions.py`), where a
-    tolerance belongs. Both legs share ONE cached shingle-hash table;
-    the pure-LSH scale path remains ``dedup_near``/``dedup_near_apply``
-    for callers that want candidates without the exact-join cost.
+    tolerance belongs. The body is :func:`_exact_vs_lsh`, shared with
+    :func:`lsh_probability`; the pure-LSH scale path remains
+    ``dedup_near``/``dedup_near_apply`` for callers that want
+    candidates without the exact-join cost.
     Columns: id1, id2, jaccard, lsh_ok.
     """
-    sh = _doc_shingle_hashes(spark, sf_dir).cache()
-    exact = dedup_jaccard(spark, sf_dir, hashed_shingles=sh)
-    lsh = dedup_near(spark, sf_dir, hashed_shingles=sh).select(
-        "id1", "id2", F.lit(True).alias("found_by_lsh")
-    )
-    # LSH survivors verify with the same exact-Jaccard expression over
-    # the same hashed sets, so they are ALWAYS a subset of `exact` —
-    # a left join loses nothing (an outer-join extra row would mean the
-    # two legs disagreed on Jaccard itself, which one shared shingle
-    # table makes impossible).
-    return exact.join(lsh, ["id1", "id2"], "left").select(
+    return _exact_vs_lsh(spark, sf_dir).select(
         "id1",
         "id2",
         "jaccard",
-        (
-            (F.col("jaccard") < 1.0)
-            | F.coalesce(F.col("found_by_lsh"), F.lit(False))
-        ).alias("lsh_ok"),
+        ((F.col("jaccard") < 1.0) | F.col("found")).alias("lsh_ok"),
     )
 
 
@@ -852,45 +866,28 @@ def dedup_containment(
     ⌊(1−t)·|A|⌋ of its own shingles in B, so under ANY global order
     A's first ⌊(1−t)·|A|⌋+1 shingles must hit A∩B — only the PROBE
     side is prefix-sliced; the index side posts all its shingles.
-    Rarest-first ordering (the dedup_jaccard lesson) keeps probe
-    prefixes on LOW-df shingles, so each inverted bucket is
-    (prefix-holders × df) with df small by construction — never the
-    hot-shingle d² blowup. The size filter |B| ≥ t·|A| prunes the
-    rest. t = 0.75 is deliberately dyadic: (1−t)·n and t·n are then
+    Rarest-first ordering (:func:`_rarest_first`, the dedup_jaccard
+    lesson) keeps probe prefixes on LOW-df shingles, so each inverted
+    bucket is (prefix-holders × df) with df small by construction —
+    never the hot-shingle d² blowup. The size filter |B| ≥ t·|A| prunes
+    the rest. t = 0.75 is deliberately dyadic: (1−t)·n and t·n are then
     EXACT in IEEE doubles for any integer n, so the prefix length
     never rounds a pair away (0.8 would: 5·(1−0.8) = 0.9999…98).
 
-    Verification is one array_intersect per candidate on the shared
-    cached shingle-hash table (session-cache lifecycle, the
-    dedup_jaccard convention — the executed plan reads documents
-    once into the cache). NULL text contributes no shingles and pairs
-    with nothing. Columns: id1 (contained doc), id2 (container),
-    n1, n_common, containment.
+    Verification is the shared :func:`_verify` join on the cached
+    shingle-hash table (session-cache lifecycle, the dedup_jaccard
+    convention — the executed plan reads documents once into the
+    cache). NULL text contributes no shingles and pairs with nothing.
+    Columns: id1 (contained doc), id2 (container), n1, n_common,
+    containment.
     """
     t = float(threshold)
     ordered = _doc_shingle_hashes(spark, sf_dir).cache()
-    ex = ordered.select(
-        "doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h")
-    )
-    df_tbl = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     # probe AND index need per-doc ranks in the SAME global (df, h)
-    # order (the positional filter below). One row_number window over
-    # the exploded postings replaces the df-join + collect_list +
-    # array_sort + re-explode pipeline — stays flat (no fat array
-    # rows), and the cached result feeds both join sides (session-
-    # cache lifecycle, the dedup_jaccard convention). Shingle hashes
-    # are distinct within a doc, so (df, h) totally orders each
-    # partition and the rank is engine-deterministic.
-    from pyspark.sql import Window
-
-    w_rk = Window.partitionBy("doc_id").orderBy("df", "h")
-    rk_ex = (
-        ex.join(df_tbl, "h")
-        .select(
-            "doc_id", "n", "h", F.row_number().over(w_rk).alias("pos")
-        )
-        .cache()
-    )
+    # order (the positional filter below): the cached ranking feeds
+    # both join sides (session-cache lifecycle, the dedup_jaccard
+    # convention).
+    rk_ex = _rarest_first(ordered).cache()
     prefix_len = F.floor(F.col("n") * (1.0 - t)).cast("int") + 1
     probe = rk_ex.filter(F.col("pos") <= prefix_len).select(
         F.col("doc_id").alias("id1"),
@@ -931,25 +928,20 @@ def dedup_containment(
         .select("id1", "id2")
         .distinct()
     )
-    # NO _spread_verify here (unlike dedup_jaccard/dedup_near):
+    # NO spread here (unlike the Jaccard keys' _jaccard_pairs):
     # t = 0.75 prunes candidates so hard that the verify stage is
     # cheap, and the interleaved 5-rep A/B measured the extra exchange
     # a 0.63x LOSS on this key — spread only where the verify work
     # amortizes it (the dedup_jaccard/lsh_probability wins, 1.8-2.1x).
-    a = ordered.select(F.col("doc_id").alias("id1"), F.col("hs").alias("hs1"))
-    b = ordered.select(F.col("doc_id").alias("id2"), F.col("hs").alias("hs2"))
-    inter = F.size(F.array_intersect("hs1", "hs2"))
     return (
-        cand.join(a, "id1")
-        .join(b, "id2")
+        _verify(cand, ordered)
         .select(
             "id1",
             "id2",
-            F.size("hs1").cast("long").alias("n1"),
-            inter.cast("long").alias("n_common"),
-            (inter.cast("double") / F.size("hs1").cast("double")).alias(
-                "containment"
-            ),
+            F.col("n1").cast("long").alias("n1"),
+            F.col("n_common").cast("long").alias("n_common"),
+            (F.col("n_common").cast("double") / F.col("n1").cast("double"))
+            .alias("containment"),
         )
         .filter(F.col("containment") >= t)
     )
@@ -958,41 +950,34 @@ def dedup_containment(
 def lsh_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band S-curve audit of MinHash-LSH against the exact near-dup
     ground truth: for every exact Jaccard ≥ 0.5 pair, the analytic
-    catch probability p = 1 − (1 − J^r)^b of the production (b=8,
-    r=4) banding, alongside whether LSH actually produced the pair as
-    a candidate — the dedup twin of ``ann_recall`` (an approximate
-    pipeline without a measured catch rate is a silent-quality bug).
+    catch probability p = 1 − (1 − J^r)^b of the production banding
+    (b = ``MINHASH_BANDS``, r = ``MINHASH_K`` / b), alongside whether
+    LSH actually produced the pair as a candidate — the dedup twin of
+    ``ann_recall`` (an approximate pipeline without a measured catch
+    rate is a silent-quality bug).
 
-    The exact side is the PPJoin pair set (`dedup_jaccard`), bounded
-    and already oracle-anchored; the LSH side is
-    ``minhash_candidates`` over the SAME shared shingle-hash cache,
-    so both legs cost one tokenize/shingle pass. J is recomputed as
-    ONE division of exact intersect/union integers, p is a snapped
-    double chain off that division (mirrored in SQL), and ``found``
-    comes from a left join against the candidate set. A J = 1 pair
-    has p = 1 and is deterministically found (identical signatures —
-    the ``dedup_near_checked`` guarantee), so ``catch_ok`` =
-    (jaccard < 1) OR actually-found is PROVABLY true on every row —
-    the checkable contract that keeps the real LSH leg in-band while
-    the sub-1 catch rate stays statistical (pinned by the S-curve
-    test in tests/test_extensions.py, where a tolerance belongs).
+    The pairs and ``found`` come from :func:`_exact_vs_lsh`, the body
+    shared with ``dedup_near_checked``: the PPJoin pair set, bounded
+    and oracle-anchored, left-joined to ``minhash_candidates`` over the
+    SAME shared shingle-hash cache, so both legs cost one
+    tokenize/shingle pass. J is ONE division of exact intersect/union
+    integers and p is a snapped double chain off that division
+    (mirrored in SQL). A J = 1 pair has p = 1 and is deterministically
+    found (identical signatures), so ``catch_ok`` = (jaccard < 1) OR
+    found is PROVABLY true on every row — the checkable contract that
+    keeps the real LSH leg in-band while the sub-1 catch rate stays
+    statistical (pinned by the S-curve test in
+    tests/test_extensions.py, where a tolerance belongs).
     Columns: id1, id2, jaccard, p_catch, catch_ok.
     """
-    sh = _doc_shingle_hashes(spark, sf_dir).cache()
-    exact = dedup_jaccard(spark, sf_dir, hashed_shingles=sh)
-    cand = minhash_candidates(spark, sf_dir, hashed_shingles=sh).select(
-        "id1", "id2", F.lit(True).alias("found")
-    )
-    b, r = 8, 4
+    b = float(MINHASH_BANDS)
+    r = float(MINHASH_K // MINHASH_BANDS)
     j = F.col("jaccard")
-    p = F.lit(1.0) - F.pow(F.lit(1.0) - F.pow(j, F.lit(float(r))), F.lit(float(b)))
-    return exact.join(cand, ["id1", "id2"], "left").select(
+    p = F.lit(1.0) - F.pow(F.lit(1.0) - F.pow(j, F.lit(r)), F.lit(b))
+    return _exact_vs_lsh(spark, sf_dir).select(
         "id1",
         "id2",
-        j.alias("jaccard"),
+        "jaccard",
         snap6(p).alias("p_catch"),
-        (
-            (j < F.lit(1.0))
-            | F.coalesce(F.col("found"), F.lit(False))
-        ).alias("catch_ok"),
+        ((j < 1.0) | F.col("found")).alias("catch_ok"),
     )

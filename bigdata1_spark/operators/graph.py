@@ -189,14 +189,7 @@ def graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     two keyed shuffles total. Exact integers end-to-end.
     Columns: node, degree.
     """
-    e = _co_supplier_edges(spark, sf_dir)
-    # explode both endpoints in ONE scan — union(e.a, e.b) would run
-    # the (lazy) edge generation, distinct shuffle included, twice
-    return (
-        e.select(F.explode(F.array("a", "b")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    return _node_degrees(_co_supplier_edges(spark, sf_dir))
 
 
 def _triangle_count_dense(
@@ -357,10 +350,11 @@ def _triangle_count_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _node_degrees(e: DataFrame) -> DataFrame:
-    """(node, degree) from an undirected (a < b) edge frame."""
+    """(node, degree) from an undirected (a < b) edge frame. Both
+    endpoints explode in ONE scan — union(e.a, e.b) would run a lazy
+    edge generation, distinct shuffle included, twice."""
     return (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
+        e.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
@@ -580,12 +574,11 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     def step(edges: DataFrame, _r: int) -> DataFrame:
-        deg = (
-            edges.select(F.explode(F.array("a", "b")).alias("node"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
+        keep = (
+            _node_degrees(edges)
+            .filter(F.col("degree") >= KCORE_K)
+            .select("node")
         )
-        keep = deg.filter(F.col("deg") >= KCORE_K).select("node")
         return (
             edges.join(
                 keep.withColumnRenamed("node", "a"), "a", "semi"
@@ -596,11 +589,7 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = _co_supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
     edges = iterate(edges, step, KCORE_ROUNDS)
-    return (
-        edges.select(F.explode(F.array("a", "b")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-    )
+    return _node_degrees(edges).withColumnRenamed("degree", "core_degree")
 
 
 # BFS: fixed frontier-expansion rounds from a literal source supplier.

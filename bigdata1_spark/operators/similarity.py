@@ -48,13 +48,6 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hyperplane_sign_key(v: Column, n_planes: int, dim: int, seed: int) -> Column:
-    """LSH bucket key — shared implementation in
-    :func:`bigdata1_spark.functions.vectors.hyperplane_sign_key` (also
-    used by ``dedup_embedding`` blocking and its generated oracle)."""
-    return vectors.hyperplane_sign_key(v, n_planes, dim, seed)
-
-
 def sim_topk_lsh(
     spark: SparkSession,
     sf_dir: str,
@@ -68,7 +61,7 @@ def sim_topk_lsh(
     in tests. Rows-only driver check. Columns: vec_id, label, cos_sim.
     """
     emb = _emb(spark, sf_dir).withColumn(
-        "bucket", _hyperplane_sign_key(F.col("v"), n_planes, dim, seed=7)
+        "bucket", vectors.hyperplane_sign_key(F.col("v"), n_planes, dim, seed=7)
     )
     q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("v").alias("qv"), F.col("bucket").alias("qb")
@@ -700,7 +693,7 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = _emb(spark, sf_dir).withColumn(
-        "bucket", _hyperplane_sign_key(F.col("v"), 4, 64, seed=7)
+        "bucket", vectors.hyperplane_sign_key(F.col("v"), 4, 64, seed=7)
     ).cache()
     q = emb.filter(F.col("vec_id") < ANN_QUERIES).select(
         F.col("vec_id").alias("qid"),

@@ -324,19 +324,18 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pipeline_pretraining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end pretraining-data pipeline as ONE declarative plan:
-    quality gate → exact dedup (keep min doc_id per text) → stable
-    content-hash train/val/test split → per-split corpus stats. This is
-    the composition a 100 TB ingest actually runs. The gated corpus is
-    the fan-out point (the dedup groupBy and the representative
-    semi-join both consume it), so it is cached — without the cache
+def _gated_deduped(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The curation prefix both pretraining pipelines share: quality
+    gate → exact dedup (keep min doc_id per text). Returns ``(gated,
+    deduped)``; ``gated`` is CACHED and the caller releases it. The
+    gated corpus is the fan-out point (the dedup groupBy and the
+    representative semi-join both consume it) — without the cache
     Catalyst re-derives the whole quality subtree per consumer (6 scans
     of documents, measured); with it the corpus is computed once (at
     ingest scale this materialization is the natural stage boundary —
-    a checkpoint/intermediate table). Columns: split, n_docs,
-    total_tokens.
-    """
+    a checkpoint/intermediate table)."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
     kept = quality_filters(spark, sf_dir).filter(
         F.col("keep") == 1
@@ -347,9 +346,18 @@ def pipeline_pretraining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     reps = gated.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    deduped = gated.join(reps.select("doc_id"), "doc_id", "left_semi")
+    return gated, gated.join(reps.select("doc_id"), "doc_id", "left_semi")
+
+
+def _split_stats(corpus: DataFrame, *release: DataFrame) -> DataFrame:
+    """Per-split stats (split, n_docs, total_tokens) of a (doc_id, text)
+    corpus, materialized eagerly so the ``release`` caches can be
+    unpersisted, in the order given, before returning — otherwise every
+    caller leaks a session-lifetime storage entry the size of the kept
+    corpus. The (≤3-row) checkpoint blocks are tiny and freed by the
+    ContextCleaner when the returned DataFrame is garbage-collected."""
     result = (
-        deduped.select(
+        corpus.select(
             split_of(split_bucket(F.col("text"))).alias("split"),
             F.size(_toks()).cast("long").alias("nt"),
         )
@@ -358,15 +366,22 @@ def pipeline_pretraining(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("nt").cast("long").alias("total_tokens"),
         )
+        .localCheckpoint(eager=True)
     )
-    # Materialize the (≤3-row) summary eagerly so the gated-corpus cache
-    # can be released before returning — otherwise every caller leaks a
-    # session-lifetime storage entry the size of the kept corpus. The
-    # checkpoint blocks are tiny and freed by the ContextCleaner when
-    # the returned DataFrame is garbage-collected.
-    result = result.localCheckpoint(eager=True)
-    gated.unpersist()
+    for cached in release:
+        cached.unpersist(blocking=False)
     return result
+
+
+def pipeline_pretraining(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end pretraining-data pipeline as ONE declarative plan:
+    quality gate → exact dedup (keep min doc_id per text) → stable
+    content-hash train/val/test split → per-split corpus stats. This is
+    the composition a 100 TB ingest actually runs. Columns: split,
+    n_docs, total_tokens.
+    """
+    gated, deduped = _gated_deduped(spark, sf_dir)
+    return _split_stats(deduped, gated)
 
 
 def pipeline_pretraining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,17 +407,7 @@ def pipeline_pretraining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from bigdata1_spark.operators import dedup
 
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    kept = quality_filters(spark, sf_dir).filter(
-        F.col("keep") == 1
-    ).select("doc_id")
-    gated = (
-        docs.select("doc_id", "text")
-        .join(kept, "doc_id", "left_semi")
-        .cache()
-    )
-    reps = gated.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    deduped = gated.join(reps.select("doc_id"), "doc_id", "left_semi")
+    gated, deduped = _gated_deduped(spark, sf_dir)
     sh = dedup.shingle_hashes_of(deduped).cache()
     near = dedup.dedup_near(spark, sf_dir, hashed_shingles=sh).select(
         "id1", "id2"
@@ -415,23 +420,7 @@ def pipeline_pretraining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "left_semi",
     )
-    result = (
-        survivors.select(
-            split_of(split_bucket(F.col("text"))).alias("split"),
-            F.size(_toks()).cast("long").alias("nt"),
-        )
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("nt").cast("long").alias("total_tokens"),
-        )
-    )
-    # eager ≤3-row materialization lets both corpus-sized caches release
-    # before returning (same lifecycle rule as pipeline_pretraining)
-    result = result.localCheckpoint(eager=True)
-    sh.unpersist(blocking=False)
-    gated.unpersist(blocking=False)
-    return result
+    return _split_stats(survivors, sh, gated)
 
 
 def ngram_freq(spark: SparkSession, sf_dir: str, top_n: int = 50) -> DataFrame:

@@ -647,8 +647,10 @@ register(
 # dedup_near → dedup_near_checked: rows are the exact Jaccard ≥ 0.5
 # pair set (the dedup_jaccard relation, quadratic-join oracle below)
 # plus lsh_ok, the deterministic MinHash guarantee (J=1 ⇒ identical
-# signatures ⇒ candidate) the oracle pins TRUE. Probabilistic S-curve
-# recall below J=1 stays a local tolerance test, where it belongs.
+# signatures ⇒ candidate) the oracle pins TRUE. The body is shared
+# with lsh_probability: exact pairs left-joined to the raw MinHash
+# candidates, no second verify. Probabilistic S-curve recall below
+# J=1 stays a local tolerance test, where it belongs.
 register(
     "dedup_near",
     dedup.dedup_near_checked,

@@ -70,10 +70,11 @@ def test_every_registered_key_is_cache_scoped():
 
 
 def test_localcheckpoint_keys_release_eagerly(spark, sf_dir):
-    """dedup_near localCheckpoints its result and unpersists its own
-    caches before returning — storage (net of the checkpoint RDD
-    blocks, which are reclaimed by GC, not the catalog) carries no
-    catalog-cached relations afterward."""
+    """dedup_near's result does not depend on the catalog cache: its
+    shingle-hash and prefix caches are lazy session-cache entries (it
+    does not localCheckpoint), so clearing them between two actions
+    recomputes the same rows through lineage, and the returned frame
+    itself is never persisted."""
     spark.catalog.clearCache()
     out = registry.QUERIES["dedup_near"](spark, sf_dir)
     out.count()

@@ -25,7 +25,7 @@ def test_minhash_recall_vs_exact(spark, sf_dir):
         assert recall >= 0.8, f"minhash recall too low: {recall}"
 
 
-def test_minhash_hot_bucket_chunked_but_exact(spark, sf_dir):
+def test_minhash_hot_bucket_chunked_but_exact(spark):
     """A pathological hot bucket (hundreds of docs with identical shingle
     sets → identical band keys) must be chunked so no task materializes
     |bucket|² pairs — without dropping a single candidate pair."""
@@ -37,9 +37,7 @@ def test_minhash_hot_bucket_chunked_but_exact(spark, sf_dir):
         (1001, [99, 98]),
     ]
     df = spark.createDataFrame(rows, "doc_id long, hs array<long>")
-    cand = dedup.minhash_candidates(
-        spark, sf_dir, hashed_shingles=df, max_bucket_chunk=16
-    )
+    cand = dedup.minhash_candidates(df, max_bucket_chunk=16)
     got = {(r["id1"], r["id2"]) for r in cand.collect()}
     expect = set(combinations(hot, 2)) | {(1000, 1001)}
     assert got == expect

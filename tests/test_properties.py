@@ -8,6 +8,7 @@ One shared session; data round-trips via createDataFrame.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -168,3 +169,46 @@ def test_simhash_identical_docs_zero_hamming(spark, texts):
         by_text.setdefault(r["text"], set()).add(r["fp"])
     for fps in by_text.values():
         assert len(fps) == 1
+
+
+# Shingle-hash sets with a skewed document frequency: half the draws
+# come from three hot hashes, the rest from a wider cold range, so the
+# rarest-first order differs from plain hash order and ties in df are
+# common. Empty sets are allowed.
+HASH = st.one_of(st.sampled_from([-7, 3, 5]), st.integers(-40, 40))
+HASH_SET = st.lists(HASH, min_size=0, max_size=9).map(
+    lambda xs: sorted(set(xs))
+)
+
+
+@pytest.mark.parametrize("t", [0.5, 0.75])
+@given(sets=st.lists(HASH_SET, min_size=2, max_size=8))
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_dedup_jaccard_matches_brute_force(spark, sf_dir, t, sets):
+    """The prefix-filtered PPJoin in ``dedup_jaccard`` must return
+    exactly the all-pairs Jaccard ≥ t set, with the same double, under
+    any df order — the fixed testdata only exercises one."""
+    from itertools import combinations
+
+    from bigdata1_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        list(enumerate(sets)), "doc_id long, hs array<long>"
+    )
+    got = {
+        (r["id1"], r["id2"], r["jaccard"])
+        for r in dedup.dedup_jaccard(
+            spark, sf_dir, threshold=t, hashed_shingles=df
+        ).collect()
+    }
+    want = set()
+    for (i, a), (j, b) in combinations(enumerate(sets), 2):
+        common = len(set(a) & set(b))
+        union = len(a) + len(b) - common
+        if union and common / union >= t:
+            want.add((i, j, common / union))
+    assert got == want

@@ -362,7 +362,10 @@ def ab_loader():
 def test_bench_ab_registry_loads_head(ab_loader):
     """BENCH_AB's renamed-package loader must materialize a committed
     ref's registry with the same key set as the live one (the
-    interleaved A/B times ref and HEAD key-by-key)."""
+    interleaved A/B times ref and HEAD key-by-key), and every bench-only
+    EXTRA_BENCH function must resolve in the ref package too."""
+    import bench
+
     ref_registry, restore = ab_loader("HEAD")
     try:
         from bigdata1_spark import registry as live
@@ -371,6 +374,11 @@ def test_bench_ab_registry_loads_head(ab_loader):
         # the wrapper convention (__wrapped__) must survive the rename
         k = sorted(ref_registry.QUERIES)[0]
         assert hasattr(ref_registry.QUERIES[k], "__wrapped__")
+        for key, fn in bench.EXTRA_BENCH.items():
+            ref_fn = bench._ab_function(ref_registry, key)
+            assert ref_fn is not None, key
+            assert ref_fn.__name__ == fn.__name__
+            assert ref_fn.__module__.startswith("bigdata1_spark_abref."), key
     finally:
         restore()
 
