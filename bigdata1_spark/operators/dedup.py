@@ -5,15 +5,15 @@ Scale design: every variant is inverted-index- or bucket-join-shaped —
 no O(n²) cartesian anywhere. The exact-Jaccard query joins docs through
 shared shingles (pairs that share nothing never meet); MinHash-LSH and
 SimHash bucket by sketch keys so candidate generation is a hash shuffle
-on bounded keys; embedding near-dup blocks on the label column.
+on bounded keys; embedding near-dup blocks on a hyperplane-LSH key or
+a k-means cluster and scores each block in the shared grouped map
+``similarity.block_pairs``.
 """
 
 from __future__ import annotations
 
+import functools
 import os
-
-import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +25,11 @@ from bigdata1_spark.operators.graph import (
     iterate,
     min_label_round,
     symmetrize,
+)
+from bigdata1_spark.operators.similarity import (
+    EMB_DIM,
+    block_pairs,
+    load_vectors,
 )
 from bigdata1_spark.sources.tables import load_table, spread_if_starved
 
@@ -125,10 +130,18 @@ def _rarest_first(ordered: DataFrame) -> DataFrame:
 
 def _verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
     """Join candidate pairs (id1, id2) to both docs' shingle-hash sets
-    and count the overlap with one array_intersect per pair — the
-    verify step every exact shingle-set key shares. Columns: id1, id2,
-    n1, n2, n_common; the counts are exact integers, so every ratio
-    built from them is one double division."""
+    and count the overlap with one array_intersect — the verify step
+    every exact shingle-set key shares. Columns: id1, id2, n1, n2,
+    n_common; the counts are exact integers, so every ratio built from
+    them is one double division.
+
+    Catalyst pushes a caller's ratio filter into this join's condition
+    and inlines ``n_common`` there, so the overlap is evaluated once per
+    reference in the ratio for every candidate pair (twice for Jaccard,
+    once for containment), and once more per surviving pair in the
+    output projection. Let-binding it (``hashing.let``) cuts the
+    Jaccard condition to one evaluation but measured no faster in an
+    interleaved A/B at sf0.1, so the plain form stays."""
     a = sh.select(F.col("doc_id").alias("id1"), F.col("hs").alias("hs1"))
     b = sh.select(F.col("doc_id").alias("id2"), F.col("hs").alias("hs2"))
     return cand.join(a, "id1").join(b, "id2").select(
@@ -465,53 +478,37 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.filter(F.col("hamming") <= 3)
 
 
-def _block_pairs_fn(threshold: float):
-    """Per-block pairwise cosine as a grouped-map function.
-
-    Row-wise ``cumsum`` is the sequential left fold, so every dot and
-    norm is bit-identical to the ``F.aggregate`` formulation and to
-    DuckDB's list-fold semantics (verified with exceptAll == 0 against
-    the column-expression version)."""
-
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        V = np.stack(pdf["v"].to_numpy())
-        nrm = np.sqrt((V * V).cumsum(axis=1)[:, -1])
-        keep = nrm > 0  # zero vectors have no direction: NaN sims would
-        ids, V, nrm = ids[keep], V[keep], nrm[keep]  # diverge from SQL
-        Vn = V / nrm[:, None]
-        o1, o2, oc = [], [], []
-        for i in range(len(ids) - 1):
-            sims = (Vn[i] * Vn[i + 1:]).cumsum(axis=1)[:, -1]
-            m = sims >= threshold
-            if m.any():
-                o1.append(np.full(int(m.sum()), ids[i]))
-                o2.append(ids[i + 1:][m])
-                oc.append(sims[m])
-        if not o1:
-            return pd.DataFrame(
-                {"id1": [], "id2": [], "cos_sim": []}
-            ).astype({"id1": "int64", "id2": "int64", "cos_sim": "float64"})
-        return pd.DataFrame(
-            {
-                "id1": np.concatenate(o1),
-                "id2": np.concatenate(o2),
-                "cos_sim": np.concatenate(oc),
-            }
-        )
-
-    return block_pairs
-
-
 EMB_LSH_PLANES = 4  # 2^4 buckets; at 100 TB raise planes + add probes
-EMB_LSH_DIM = 64
 EMB_LSH_SEED = 11
+# dedup_embedding_multiprobe's plane seeds: dedup_embedding's table first
+EMB_LSH_SEEDS = (EMB_LSH_SEED, 13, 17)
+EMB_DUP_COS = 0.3  # cosine near-dup threshold of the embedding dedup keys
 
 
-def dedup_embedding(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.3
+def _lsh_pairs(
+    spark: SparkSession, sf_dir: str, seeds: tuple[int, ...]
 ) -> DataFrame:
+    """Union of the :func:`~bigdata1_spark.operators.similarity.block_pairs`
+    sets (cos ≥ ``EMB_DUP_COS``) over one random-hyperplane LSH table
+    per seed in ``seeds``. Columns: id1, id2, cos_sim."""
+    emb = load_vectors(spark, sf_dir)
+    tables = [
+        block_pairs(
+            emb.withColumn(
+                "bucket",
+                vectors.hyperplane_sign_key(
+                    F.col("v"), EMB_LSH_PLANES, EMB_DIM, seed
+                ),
+            ),
+            "bucket",
+            EMB_DUP_COS,
+        )
+        for seed in seeds
+    ]
+    return functools.reduce(DataFrame.unionAll, tables)
+
+
+def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, blocked by a random-hyperplane
     LSH bucket key.
 
@@ -525,28 +522,16 @@ def dedup_embedding(
     no blocking key, including the previous ``label`` stand-in at 111
     pairs, preserves that set; the honest scale posture is to pick the
     bucket fn and state it). More recall at scale = more planes with
-    multi-probe, or a union over several seeds.
+    multi-probe, or a union over several seeds
+    (``dedup_embedding_multiprobe``).
 
-    Pairs are generated INSIDE an ``applyInPandas`` grouped map per
-    bucket: one shuffle of n vectors, |bucket|²-bounded work per group,
-    and the Arrow transfer carries the n input vectors — not the n²
-    joined pairs (6× faster than the pair-join + per-pair-UDF
-    formulation). Zero-norm vectors are dropped on both sides (they
-    have no direction; NaN cosine orders differently in DuckDB).
-    Columns: id1, id2, cos_sim.
+    Pairs are generated INSIDE the shared per-bucket grouped map
+    (:func:`~bigdata1_spark.operators.similarity.block_pairs`): one
+    shuffle of n vectors, |bucket|²-bounded work per group. This is the
+    one-table case of :func:`_lsh_pairs`, with no ``distinct``, so it
+    stays one shuffle. Columns: id1, id2, cos_sim.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    bucketed = emb.withColumn(
-        "bucket",
-        vectors.hyperplane_sign_key(
-            F.col("v"), EMB_LSH_PLANES, EMB_LSH_DIM, EMB_LSH_SEED
-        ),
-    )
-    return bucketed.groupBy("bucket").applyInPandas(
-        _block_pairs_fn(threshold), "id1 long, id2 long, cos_sim double"
-    )
+    return _lsh_pairs(spark, sf_dir, (EMB_LSH_SEED,))
 
 
 # Round cap for dedup_clusters' components — a safety net: pointer
@@ -645,41 +630,16 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_embedding_multiprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.3,
-    seeds: tuple[int, ...] = (11, 13, 17),
-) -> DataFrame:
+def dedup_embedding_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OR-amplified embedding near-dup: union the LSH-blocked pair sets
-    over several plane seeds — a pair is found if ANY table buckets it
-    together, so per-pair recall is 1-(1-p)^L for single-table
-    probability p. This is the documented recall dial for
+    over the ``EMB_LSH_SEEDS`` plane seeds — a pair is found if ANY
+    table buckets it together, so per-pair recall is 1-(1-p)^L for
+    single-table probability p. This is the documented recall dial for
     ``dedup_embedding`` at scale (L linear scans, no quadratic term);
     the recall floor vs brute-force ground truth is pinned in tests.
     Columns: id1, id2, cos_sim (bit-identical across tables for the
     same pair, so the union dedupes exactly)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    per_seed = []
-    for seed in seeds:
-        bucketed = emb.withColumn(
-            "bucket",
-            vectors.hyperplane_sign_key(
-                F.col("v"), EMB_LSH_PLANES, EMB_LSH_DIM, seed
-            ),
-        )
-        per_seed.append(
-            bucketed.groupBy("bucket").applyInPandas(
-                _block_pairs_fn(threshold),
-                "id1 long, id2 long, cos_sim double",
-            )
-        )
-    out = per_seed[0]
-    for df in per_seed[1:]:
-        out = out.unionAll(df)
-    return out.distinct()
+    return _lsh_pairs(spark, sf_dir, EMB_LSH_SEEDS).distinct()
 
 
 def dedup_near_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -776,16 +736,10 @@ def _semdedup_update(assigned: DataFrame) -> DataFrame:
     )
 
 
-def semdedup(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = SEMDEDUP_K,
-    iters: int = SEMDEDUP_ITERS,
-    threshold: float = 0.3,
-) -> DataFrame:
+def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup pairs via k-means blocking (SemDeDup): cluster
     the corpus embeddings with a fixed-iteration seeded Lloyd loop,
-    then emit within-cluster pairs with cosine >= threshold. The
+    then emit within-cluster pairs with cosine >= ``EMB_DUP_COS``. The
     cluster partition — not an LSH bucket — bounds the quadratic term,
     which is the published SemDeDup recipe for web-scale corpora.
 
@@ -797,7 +751,8 @@ def semdedup(
     Init is the k lowest vec_ids' vectors (deterministic, no RNG);
     argmin ties break to the lowest cid on both sides. Final cosines
     are computed from the RAW vectors inside the same per-block
-    grouped map as dedup_embedding (bit-identical left-fold sums).
+    grouped map as dedup_embedding (:func:`~bigdata1_spark.operators.
+    similarity.block_pairs`, bit-identical left-fold sums).
 
     Scale posture (100 TB): assignment is a broadcast compare + one
     map-side-combinable argmin (no data shuffle); the update shuffles
@@ -805,23 +760,21 @@ def semdedup(
     |cluster|^2-bounded work per group. At scale, k grows with N to
     cap cluster size (SemDeDup uses ~50k clusters for LAION-scale),
     and oversized clusters re-split by a second-level k-means or the
-    hot-bucket chunking dedup_embedding already uses. iters is fixed
+    hot-bucket chunking dedup_embedding already uses. The iteration
+    count ``SEMDEDUP_ITERS`` is fixed
     and small by design — SemDeDup's dedup quality saturates early and
     a fixed count keeps the lineage/plan bounded.
 
     Columns: id1, id2, cos_sim.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    q = emb.select(
+    q = load_vectors(spark, sf_dir).select(
         "vec_id",
         "v",
         F.transform("v", lambda x: _semdedup_quantize(x)).alias("vq"),
     ).cache()  # scanned by every assign round + the final pair join
     cent = (
         q.orderBy("vec_id")
-        .limit(k)  # TakeOrderedAndProject: no global sort
+        .limit(SEMDEDUP_K)  # TakeOrderedAndProject: no global sort
         .select("vec_id", "vq")
         .withColumn(
             "cid",
@@ -830,13 +783,11 @@ def semdedup(
         )
         .select(F.col("cid").cast("int").alias("cid"), F.col("vq").alias("c"))
     )
-    for _ in range(iters):
+    for _ in range(SEMDEDUP_ITERS):
         cent = _semdedup_update(_semdedup_assign(q, cent))
     final = _semdedup_assign(q, cent).select("vec_id", "cluster")
     blocked = q.select("vec_id", "v").join(final, "vec_id")
-    return blocked.groupBy("cluster").applyInPandas(
-        _block_pairs_fn(threshold), "id1 long, id2 long, cos_sim double"
-    )
+    return block_pairs(blocked, "cluster", EMB_DUP_COS)
 
 
 def semdedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata1_spark.operators.basket import exact_sum, month_of, snap6
+from bigdata1_spark.session import scoped_conf
 from bigdata1_spark.sources.tables import load_table
 
 
@@ -391,15 +392,8 @@ def runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_plans.py`` asserts the injected might_contain /
     bloom_filter_agg pair. Columns: month, n_lines, revenue.
     """
-    confs = RUNTIME_FILTER_CONFS
-    old = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, RUNTIME_FILTER_CONFS):
         return _runtime_filter_plan(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 # Conf keys runtime_filter_join toggles — shared with the plan test so

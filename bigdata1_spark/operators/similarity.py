@@ -1,14 +1,33 @@
-"""Similarity search over the ``embeddings`` table (north-star X3/X5).
+"""Vector search over the ``embeddings`` table (north-star X3/X5).
 
-Brute-force cosine top-k is the exact baseline (one scan, one top-k —
-``TakeOrderedAndProject``, no shuffle of the data itself). The scale
-path is LSH bucketing: random-hyperplane signs → bucket key → search
-only the query's bucket (probed against brute force in tests).
+Every embedding key is built from a few shared pieces:
+
+- :func:`load_vectors` — the one scan: (vec_id, label, v) with the
+  float array widened to doubles;
+- :func:`_top_k` — the one single-query ranking tail: cosine against
+  the broadcast query vector, one global ordered limit
+  (``TakeOrderedAndProject``, no shuffle of the data itself);
+- :func:`_ivf_scored` — every vector scored against every
+  hash-sampled centroid, the base frame of the IVF assignment
+  (:func:`_ivf_assign`), the query's probe list (:func:`_ivf_probes`)
+  and, with the PQ codebook, the PQ codes (:func:`_pq_codes`);
+- :func:`_knn` — the per-query neighbour frame of the kNN keys;
+- :func:`block_pairs` — the one per-block pairwise-cosine grouped map,
+  shared with the embedding dedup keys in ``dedup.py``.
+
+Brute-force cosine top-k (``sim_topk``) is the exact baseline; LSH
+bucketing (``sim_topk_lsh``), the IVF coarse quantizer
+(``sim_topk_ivf``, ``sim_topk_ivf_multiprobe``) and IVF-PQ
+(``sim_topk_ivf_pq``) are the scale paths, probed against it in tests
+and audited in-band by ``ann_recall``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata1_spark.functions import vectors
@@ -17,11 +36,49 @@ from bigdata1_spark.sources.tables import load_table
 
 QUERY_VEC_ID = 0  # deterministic query: the embedding of vec_id 0
 TOP_K = 20
+EMB_DIM = 64  # width of the testdata embeddings (hyperplane and PQ layout)
+# sim_topk_lsh's bucket key, which ann_recall audits: 2^4 buckets.
+LSH_PLANES = 4
+LSH_SEED = 7
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table as (vec_id, label, v), ``v`` the embedding
+    widened to ARRAY<DOUBLE> — the scan every vector key starts from
+    (column pruning drops ``label`` where it is unused)."""
     return load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", vectors.as_double(F.col("embedding")).alias("v")
+    )
+
+
+def _query(emb: DataFrame, *extra: Column) -> DataFrame:
+    """The one-row query side: vec_id 0's vector as ``qv`` (plus
+    ``extra`` columns of the same row)."""
+    return emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("v").alias("qv"), *extra
+    )
+
+
+def _top_k(pairs: DataFrame) -> DataFrame:
+    """The ``TOP_K`` candidates nearest the query by cosine, the query
+    itself excluded. ``pairs`` holds vec_id, label, v and the query's
+    ``qv``; the global ordered limit plans TakeOrderedAndProject (top-k
+    without a full sort). Columns: vec_id, label, cos_sim."""
+    return (
+        pairs.filter(F.col("vec_id") != QUERY_VEC_ID)
+        .select(
+            "vec_id", "label",
+            vectors.cosine(F.col("v"), F.col("qv")).alias("cos_sim"),
+        )
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+        .limit(TOP_K)
+    )
+
+
+def _lsh_bucket() -> Column:
+    """sim_topk_lsh's random-hyperplane bucket key of ``v``."""
+    return vectors.hyperplane_sign_key(
+        F.col("v"), LSH_PLANES, EMB_DIM, seed=LSH_SEED
     )
 
 
@@ -32,76 +89,31 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered limit → TakeOrderedAndProject (top-k without a full sort).
     Columns: vec_id, label, cos_sim.
     """
-    emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qv")
-    )
-    return (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", "label",
-            vectors.cosine(F.col("v"), F.col("qv")).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
+    emb = load_vectors(spark, sf_dir)
+    return _top_k(emb.crossJoin(F.broadcast(_query(emb))))
 
 
-def sim_topk_lsh(
-    spark: SparkSession,
-    sf_dir: str,
-    n_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
+def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: search only vectors in the query's LSH bucket.
 
     At 100 TB the bucket key is a partition/cluster column and this scan
     prunes to ~1/2^planes of the data; recall vs exact top-k is probed
     in tests. Rows-only driver check. Columns: vec_id, label, cos_sim.
     """
-    emb = _emb(spark, sf_dir).withColumn(
-        "bucket", vectors.hyperplane_sign_key(F.col("v"), n_planes, dim, seed=7)
-    )
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qv"), F.col("bucket").alias("qb")
-    )
-    return (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("bucket") == F.col("qb"))
-        .select(
-            "vec_id", "label",
-            vectors.cosine(F.col("v"), F.col("qv")).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
+    emb = load_vectors(spark, sf_dir).withColumn("bucket", _lsh_bucket())
+    q = _query(emb, F.col("bucket").alias("qb"))
+    return _top_k(emb.join(F.broadcast(q), F.col("bucket") == F.col("qb")))
 
 
 IVF_CELLS = 8  # coarse quantizer size; at 100 TB: O(sqrt(n)) cells
-
-
-def _ivf_scored(
-    spark: SparkSession, sf_dir: str, n_cells: int
-) -> DataFrame:
-    """Every vector scored against every hash-sampled centroid
-    (columns: vec_id, label, v, cid, cscore). Centroids are the
-    ``n_cells`` vectors with the smallest ``md5(vec_id)`` — a
-    deterministic, engine-reproducible sample (a k-means refinement
-    would drift between engines; hash-sampling keeps the oracle exact
-    while exercising the identical plan shape)."""
-    emb = _emb(spark, sf_dir)
-    return emb.crossJoin(
-        F.broadcast(_hash_sampled_centroids(emb, n_cells))
-    ).select(
-        "vec_id", "label", "v", "cid",
-        vectors.cosine(F.col("v"), F.col("cv")).alias("cscore"),
-    )
+IVF_PROBES = 3
 
 
 def _hash_sampled_centroids(emb: DataFrame, n: int) -> DataFrame:
-    """The ``n`` vectors with smallest ``md5(vec_id)`` as (cid, cv).
+    """The ``n`` vectors with smallest ``md5(vec_id)`` as (cid, cv) —
+    a deterministic, engine-reproducible sample (a k-means refinement
+    would drift between engines; hash-sampling keeps the oracle exact
+    while exercising the identical plan shape).
 
     Cached: every IVF/PQ key references its centroid/codebook table
     from several plan branches (assignment, query scoring, probe
@@ -125,10 +137,20 @@ def _hash_sampled_centroids(emb: DataFrame, n: int) -> DataFrame:
     )
 
 
+def _ivf_scored(emb: DataFrame) -> DataFrame:
+    """Every vector scored against every one of the ``IVF_CELLS``
+    hash-sampled centroids (columns: vec_id, label, v, cid, cscore) —
+    the base frame the assignment, the probe list and the PQ codes all
+    derive from."""
+    cents = _hash_sampled_centroids(emb, IVF_CELLS)
+    return emb.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "label", "v", "cid",
+        vectors.cosine(F.col("v"), F.col("cv")).alias("cscore"),
+    )
+
+
 def _ivf_assign(scored: DataFrame) -> DataFrame:
     """Argmax cell per vector (columns: vec_id, label, v, cell)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("cid"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -137,87 +159,57 @@ def _ivf_assign(scored: DataFrame) -> DataFrame:
     )
 
 
-def sim_topk_ivf(
-    spark: SparkSession, sf_dir: str, n_cells: int = IVF_CELLS
-) -> DataFrame:
-    """Approximate top-k via an IVF (inverted-file) coarse quantizer:
-    assign every vector to its nearest centroid cell, then search only
-    the query's cell.
-
-    Assignment is a broadcast of the tiny centroid table against the
-    scan with an argmax window per vector — at 100 TB the assignment is
-    precomputed at ingest and ``cell`` is a partition column, so the
-    probe prunes partitions instead of filtering a scan. Single-probe
-    recall is the stated contract; ``sim_topk_ivf_multiprobe`` is the
-    recall dial. Columns: vec_id, label, cos_sim.
-    """
-    asg = _ivf_assign(_ivf_scored(spark, sf_dir, n_cells))
-    q = asg.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qv"), F.col("cell").alias("qcell")
-    )
+def _ivf_probes(scored: DataFrame, n_probes: int) -> DataFrame:
+    """The ``n_probes`` cells whose centroids are nearest the query,
+    each row carrying the query vector (columns: pcell, qv). The ranking
+    is the assignment's (cscore DESC, cid ASC) order, so one probe is
+    exactly the query's own argmax cell. n_cells rows, ordered limit →
+    TakeOrderedAndProject, driver-free, broadcast onward."""
     return (
-        asg.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("cell") == F.col("qcell"))
-        .select(
-            "vec_id", "label",
-            vectors.cosine(F.col("v"), F.col("qv")).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
-
-
-IVF_PROBES = 3
-
-
-def sim_topk_ivf_multiprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    n_cells: int = IVF_CELLS,
-    n_probes: int = IVF_PROBES,
-) -> DataFrame:
-    """IVF with multi-probe: search the ``n_probes`` cells whose
-    centroids are nearest the QUERY, not just the argmax cell — the
-    standard recall dial for inverted-file ANN (a near-boundary query
-    vector's true neighbors often live in the runner-up cells).
-
-    Cost shape vs single-probe: identical assignment plan, plus a
-    broadcast of the n_probes probe-cell ids semi-joined against the
-    cell column — at 100 TB that is n_probes partition prunes instead
-    of one, still never a corpus shuffle. Recall vs the exact
-    ``sim_topk`` is pinned in tests to be ≥ the single-probe run.
-    Columns: vec_id, label, cos_sim.
-    """
-    scored = _ivf_scored(spark, sf_dir, n_cells)
-    asg = _ivf_assign(scored)
-    # the probe list ranks the QUERY's centroid scores — n_cells rows,
-    # ordered limit plans TakeOrderedAndProject, driver-free, broadcast
-    # onward
-    probe_cells = (
         scored.filter(F.col("vec_id") == QUERY_VEC_ID)
         .orderBy(F.desc("cscore"), F.asc("cid"))
         .limit(n_probes)
-        .select(F.col("cid").alias("pcell"))
+        .select(F.col("cid").alias("pcell"), F.col("v").alias("qv"))
     )
-    q = _emb(spark, sf_dir).filter(
-        F.col("vec_id") == QUERY_VEC_ID
-    ).select(F.col("v").alias("qv"))
-    return (
-        asg.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .join(
-            F.broadcast(probe_cells),
-            F.col("cell") == F.col("pcell"),
-            "left_semi",
-        )
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", "label",
-            vectors.cosine(F.col("v"), F.col("qv")).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
+
+
+def _ivf_topk(spark: SparkSession, sf_dir: str, n_probes: int) -> DataFrame:
+    """Approximate top-k via an IVF (inverted-file) coarse quantizer:
+    assign every vector to its nearest centroid cell, then search only
+    the ``n_probes`` cells nearest the query.
+
+    Assignment is a broadcast of the tiny centroid table against the
+    scan with an argmax window per vector; the probe list is broadcast
+    and equi-joined on the cell column. At 100 TB the assignment is
+    precomputed at ingest and ``cell`` is a partition column, so a
+    probe is a partition prune, never a corpus shuffle. Probing all
+    ``IVF_CELLS`` cells is brute force. Columns: vec_id, label, cos_sim.
+    """
+    scored = _ivf_scored(load_vectors(spark, sf_dir))
+    probes = F.broadcast(_ivf_probes(scored, n_probes))
+    return _top_k(
+        _ivf_assign(scored).join(probes, F.col("cell") == F.col("pcell"))
     )
+
+
+def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Single-probe IVF top-k: search only the query's own cell (see
+    :func:`_ivf_topk`). Single-probe recall is the stated contract;
+    ``sim_topk_ivf_multiprobe`` is the recall dial.
+    Columns: vec_id, label, cos_sim."""
+    return _ivf_topk(spark, sf_dir, 1)
+
+
+def sim_topk_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF with multi-probe: search the ``IVF_PROBES`` cells whose
+    centroids are nearest the QUERY, not just the argmax cell — the
+    standard recall dial for inverted-file ANN (a near-boundary query
+    vector's true neighbors often live in the runner-up cells). Same
+    plan as single-probe with a longer probe list; recall vs the exact
+    ``sim_topk`` is pinned in tests to be ≥ the single-probe run.
+    Columns: vec_id, label, cos_sim.
+    """
+    return _ivf_topk(spark, sf_dir, IVF_PROBES)
 
 
 def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,41 +231,45 @@ N_KNN_QUERIES = 8
 KNN_K = 5
 
 
-def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch k-NN join: for each of a small query set (vec_id <
-    ``N_KNN_QUERIES``), the top-``KNN_K`` cosine neighbors from the
-    rest of the corpus — the shape that labels a dataset against a
-    pool of probes (retrieval eval, cluster seeding, kNN classify).
+def _knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For each query vec_id < ``N_KNN_QUERIES``, its ``KNN_K`` cosine
+    neighbours from the rest of the corpus.
 
-    Scale shape: the query side broadcasts (Q rows), so the corpus
-    never shuffles for the join; per-query ranking is a window with a
-    rank predicate Spark rewrites to WindowGroupLimit — each task keeps
-    a k-heap per query instead of sorting Q×n rows. Wall-clock is one
-    corpus scan regardless of Q, vs Q separate sim_topk runs.
-    Columns: q_id, vec_id, cos_sim, rnk.
+    The query side broadcasts (Q rows), so the corpus never shuffles
+    for the join; per-query ranking is a window with a rank predicate
+    Spark rewrites to WindowGroupLimit — each task keeps a k-heap per
+    query instead of sorting Q×n rows. Columns: q_id, vec_id, label,
+    cos_sim, rnk.
     """
-    from pyspark.sql import Window
-
-    emb = _emb(spark, sf_dir)
+    emb = load_vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_KNN_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    scored = (
-        emb.filter(F.col("vec_id") >= N_KNN_QUERIES)
-        .crossJoin(F.broadcast(queries))
-        .select(
-            "q_id",
-            "vec_id",
-            vectors.cosine(F.col("v"), F.col("qv")).alias("cos_sim"),
-        )
     )
     w = Window.partitionBy("q_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
     return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        emb.filter(F.col("vec_id") >= N_KNN_QUERIES)
+        .crossJoin(F.broadcast(queries))
+        .select(
+            "q_id", "vec_id", "label",
+            vectors.cosine(F.col("v"), F.col("qv")).alias("cos_sim"),
+        )
+        .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= KNN_K)
     )
+
+
+def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch k-NN join: for each of a small query set (vec_id <
+    ``N_KNN_QUERIES``), the top-``KNN_K`` cosine neighbors from the
+    rest of the corpus — the shape that labels a dataset against a
+    pool of probes (retrieval eval, cluster seeding, kNN classify).
+    Wall-clock is one corpus scan regardless of Q, vs Q separate
+    sim_topk runs (scale shape: :func:`_knn`).
+    Columns: q_id, vec_id, cos_sim, rnk.
+    """
+    return _knn(spark, sf_dir).drop("label")
 
 
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,7 +282,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding per the cross-engine double discipline.
     Columns: vec_id, label, norm.
     """
-    emb = _emb(spark, sf_dir)
+    emb = load_vectors(spark, sf_dir)
     return emb.select(
         "vec_id",
         "label",
@@ -307,7 +303,7 @@ def centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     (label, dim) aggregate with map-side combine.
     Columns: label, dim, n, centroid.
     """
-    emb = _emb(spark, sf_dir)
+    emb = load_vectors(spark, sf_dir)
     exploded = emb.select(
         "label", F.posexplode(F.col("v")).alias("pos", "e")
     ).select(
@@ -333,33 +329,10 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query's predicted label is the most common label among its
     ``KNN_K`` cosine neighbors (ties break to the smaller label).
 
-    Same scale shape as knn_join — broadcast query set, one corpus
-    scan, WindowGroupLimit per-query heap — plus a tiny (Q × ≤k)-row
-    vote count and an argmax window. Columns: q_id, pred_label, votes.
+    The :func:`_knn` neighbour frame plus a tiny (Q × ≤k)-row vote
+    count and an argmax window. Columns: q_id, pred_label, votes.
     """
-    from pyspark.sql import Window
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < N_KNN_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    scored = (
-        emb.filter(F.col("vec_id") >= N_KNN_QUERIES)
-        .crossJoin(F.broadcast(queries))
-        .select(
-            "q_id",
-            "vec_id",
-            "label",
-            vectors.cosine(F.col("v"), F.col("qv")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    neighbors = scored.withColumn(
-        "rnk", F.row_number().over(w)
-    ).filter(F.col("rnk") <= KNN_K)
-    votes = neighbors.groupBy("q_id", "label").agg(
+    votes = _knn(spark, sf_dir).groupBy("q_id", "label").agg(
         F.count(F.lit(1)).alias("votes")
     )
     wv = Window.partitionBy("q_id").orderBy(
@@ -374,81 +347,73 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PQ_SUBSPACES = 4   # M: subvectors per embedding
 PQ_CODEWORDS = 8   # K: codebook size per subspace
-PQ_SUBDIM = 16     # dim / M for the 64-d testdata embeddings
+PQ_SUBDIM = EMB_DIM // PQ_SUBSPACES
 
 
-def pq_encode(
-    spark: SparkSession,
-    sf_dir: str,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODEWORDS,
-    dsub: int = PQ_SUBDIM,
-) -> DataFrame:
-    """Product quantization — the memory side of large-scale ANN
-    (IVF-PQ): each vector is encoded as ``m`` small codes, one per
-    subspace, compressing a 64-d float vector to ``m`` bytes while
-    supporting asymmetric distance scans over the codes.
+def _pq_subdist(s: int, vcol: str) -> Column:
+    """Squared L2 between subvector ``s`` of ``vcol`` and of the
+    codeword ``cv`` (dims ``[s*PQ_SUBDIM, (s+1)*PQ_SUBDIM)``), as an
+    index-ordered fold — bit-reproducible vs DuckDB's ``list_reduce``."""
+    lo = s * PQ_SUBDIM + 1  # 1-based slice start
+    return F.expr(
+        f"aggregate(zip_with(slice({vcol}, {lo}, {PQ_SUBDIM}),"
+        f" slice(cv, {lo}, {PQ_SUBDIM}),"
+        " (a, b) -> (a - b) * (a - b)),"
+        " 0D, (acc, x) -> acc + x)"
+    )
 
-    Codebooks are hash-sampled like ``_ivf_scored``'s centroids (the
-    ``k`` vectors with smallest ``md5(vec_id)``; codeword ``j`` of
-    subspace ``s`` is dims ``[s*dsub, (s+1)*dsub)`` of seed ``j``) — a
-    k-means refinement would drift between engines, hash-sampling keeps
-    the oracle exact while the plan shape is identical. Encoding is one
-    broadcast of the k-row codebook against the scan: per-subspace
-    squared-L2 via an index-ordered fold (bit-reproducible vs DuckDB's
-    ``list_reduce``), argmin per (vector, subspace) via a lexicographic
-    struct-min — ties break to the smaller codeword id in both engines.
-    No shuffle of the corpus at all: broadcast + per-row argmin, then a
-    single groupBy on vec_id whose partial aggregation is the struct-min
-    itself. Columns: vec_id, code_1..code_m, recon_err (sum of the m
-    subspace distances, 1e-6 floor-rounded).
-    """
-    emb = _emb(spark, sf_dir)
-    cents = _hash_sampled_centroids(emb, k)
-    pairs = emb.crossJoin(F.broadcast(cents))
-    for s in range(m):
-        lo = s * dsub + 1  # 1-based slice start
-        pairs = pairs.withColumn(
-            f"d{s}",
-            F.expr(
-                f"aggregate(zip_with(slice(v, {lo}, {dsub}),"
-                f" slice(cv, {lo}, {dsub}),"
-                " (a, b) -> (a - b) * (a - b)),"
-                " 0D, (acc, x) -> acc + x)"
-            ),
-        )
-    best = pairs.groupBy("vec_id").agg(
+
+def _pq_codes(rows: DataFrame, cents: DataFrame, keys: list[str]) -> DataFrame:
+    """PQ-encode ``rows`` (``keys`` + v) against the codebook ``cents``:
+    per subspace ``s`` the nearest codeword as struct ``s{s}`` = (d, c),
+    a lexicographic struct-min, so ties break to the smaller codeword
+    id in both engines. One broadcast of the codebook against the rows,
+    then one groupBy on ``keys`` whose partial aggregation is the
+    struct-min itself — no shuffle of the vectors."""
+    return rows.crossJoin(F.broadcast(cents)).groupBy(*keys).agg(
         *[
             F.min(
                 F.struct(
-                    F.col(f"d{s}").alias("d"), F.col("cid").alias("c")
+                    _pq_subdist(s, "v").alias("d"), F.col("cid").alias("c")
                 )
             ).alias(f"s{s}")
-            for s in range(m)
+            for s in range(PQ_SUBSPACES)
         ]
     )
-    err = sum(F.col(f"s{s}.d") for s in range(m))
+
+
+def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product quantization — the memory side of large-scale ANN
+    (IVF-PQ): each vector is encoded as ``PQ_SUBSPACES`` small codes,
+    one per subspace, compressing a 64-d float vector to that many
+    bytes while supporting asymmetric distance scans over the codes.
+
+    Codebooks are hash-sampled like ``_ivf_scored``'s centroids (the
+    ``PQ_CODEWORDS`` vectors with smallest ``md5(vec_id)``; codeword
+    ``j`` of subspace ``s`` is that subvector of seed ``j``) — a
+    k-means refinement would drift between engines, hash-sampling keeps
+    the oracle exact while the plan shape is identical. Encoding is
+    :func:`_pq_codes`. Columns: vec_id, code_1..code_m, recon_err (sum
+    of the m subspace distances, 1e-6 floor-rounded).
+    """
+    emb = load_vectors(spark, sf_dir)
+    cents = _hash_sampled_centroids(emb, PQ_CODEWORDS)
+    best = _pq_codes(emb, cents, ["vec_id"])
+    err = sum(F.col(f"s{s}.d") for s in range(PQ_SUBSPACES))
     return best.select(
         "vec_id",
-        *[F.col(f"s{s}.c").alias(f"code_{s + 1}") for s in range(m)],
-        snap6(err).alias(
-            "recon_err"
-        ),
+        *[
+            F.col(f"s{s}.c").alias(f"code_{s + 1}")
+            for s in range(PQ_SUBSPACES)
+        ],
+        snap6(err).alias("recon_err"),
     )
 
 
-def sim_topk_ivf_pq(
-    spark: SparkSession,
-    sf_dir: str,
-    n_cells: int = IVF_CELLS,
-    n_probes: int = IVF_PROBES,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODEWORDS,
-    dsub: int = PQ_SUBDIM,
-) -> DataFrame:
+def sim_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full IVF-PQ ANN query — the production composition of the coarse
     quantizer (``sim_topk_ivf``) and product quantization
-    (``pq_encode``): probe the ``n_probes`` nearest cells, then rank
+    (``pq_encode``): probe the ``IVF_PROBES`` nearest cells, then rank
     candidates by ASYMMETRIC distance computed from their m-byte PQ
     codes against a per-query distance table, never touching the full
     vectors of the candidates.
@@ -468,70 +433,26 @@ def sim_topk_ivf_pq(
     1e-6 with ordering on the ROUNDED value + vec_id in both engines.
     Columns: vec_id, label, adc_dist (ascending = nearest).
     """
-    asg = _ivf_assign(_ivf_scored(spark, sf_dir, n_cells))
-    emb = _emb(spark, sf_dir)
-    cents = _hash_sampled_centroids(emb, k)
+    emb = load_vectors(spark, sf_dir)
+    scored = _ivf_scored(emb)
+    cents = _hash_sampled_centroids(emb, PQ_CODEWORDS)
+    codes = _pq_codes(_ivf_assign(scored), cents, ["vec_id", "label", "cell"])
 
-    def subdist(s: int, vcol: str) -> Column:
-        lo = s * dsub + 1
-        return F.expr(
-            f"aggregate(zip_with(slice({vcol}, {lo}, {dsub}),"
-            f" slice(cv, {lo}, {dsub}),"
-            " (a, b) -> (a - b) * (a - b)),"
-            " 0D, (acc, x) -> acc + x)"
-        )
-
-    # PQ codes per corpus vector (keep label + cell through the agg).
-    pairs = asg.crossJoin(F.broadcast(cents))
-    for s in range(m):
-        pairs = pairs.withColumn(f"d{s}", subdist(s, "v"))
-    codes = pairs.groupBy("vec_id", "label", "cell").agg(
-        *[
-            F.min(
-                F.struct(F.col(f"d{s}").alias("d"), F.col("cid").alias("c"))
-            ).alias(f"s{s}")
-            for s in range(m)
-        ]
-    )
-
-    # Per-query distance table: k rows of (cid, qd_0..qd_{m-1}).
-    q = emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("v").alias("qv")
-    )
-    qtab = q.crossJoin(F.broadcast(cents))
-    for s in range(m):
-        lo = s * dsub + 1
-        qtab = qtab.withColumn(
-            f"qd{s}",
-            F.expr(
-                f"aggregate(zip_with(slice(qv, {lo}, {dsub}),"
-                f" slice(cv, {lo}, {dsub}),"
-                " (a, b) -> (a - b) * (a - b)),"
-                " 0D, (acc, x) -> acc + x)"
-            ),
-        )
-    # k rows, referenced once per subspace by the m ADC joins below —
-    # cached so the query-side branch (pruned vec_id=0 scan + codebook)
+    # Per-query distance table: k rows of (cid, qd_0..qd_{m-1}),
+    # referenced once per subspace by the m ADC joins below — cached so
+    # the query-side branch (pruned vec_id=0 scan + codebook)
     # materializes once instead of m times.
-    qtab = qtab.select("cid", *[f"qd{s}" for s in range(m)]).cache()
+    qtab = _query(emb).crossJoin(F.broadcast(cents)).select(
+        "cid",
+        *[_pq_subdist(s, "qv").alias(f"qd{s}") for s in range(PQ_SUBSPACES)],
+    ).cache()
 
-    # Probe cells: the n_probes centroids nearest the query.
-    probes = (
-        _ivf_scored(spark, sf_dir, n_cells)
-        .filter(F.col("vec_id") == QUERY_VEC_ID)
-        .orderBy(F.desc("cscore"), F.asc("cid"))
-        .limit(n_probes)
-        .select(F.col("cid").alias("pcell"))
-    )
-
-    cand = (
-        codes.join(
-            F.broadcast(probes), F.col("cell") == F.col("pcell")
-        )
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-    )
+    probes = _ivf_probes(scored, IVF_PROBES).select("pcell")
+    cand = codes.join(
+        F.broadcast(probes), F.col("cell") == F.col("pcell")
+    ).filter(F.col("vec_id") != QUERY_VEC_ID)
     # ADC: m broadcast lookups (code_s → query table row s).
-    for s in range(m):
+    for s in range(PQ_SUBSPACES):
         qs = qtab.select(
             F.col("cid").alias(f"qc{s}"), F.col(f"qd{s}").alias(f"adc{s}")
         )
@@ -539,13 +460,60 @@ def sim_topk_ivf_pq(
             F.broadcast(qs), F.col(f"s{s}.c") == F.col(f"qc{s}")
         )
     adc = F.col("adc0")
-    for s in range(1, m):
+    for s in range(1, PQ_SUBSPACES):
         adc = adc + F.col(f"adc{s}")
-    rounded = snap6(adc)
     return (
-        cand.select("vec_id", "label", rounded.alias("adc_dist"))
+        cand.select("vec_id", "label", snap6(adc).alias("adc_dist"))
         .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
         .limit(TOP_K)
+    )
+
+
+def block_pairs(blocked: DataFrame, key: str, threshold: float) -> DataFrame:
+    """Pairwise cosine inside every ``key`` block of ``blocked`` (vec_id,
+    v, key): the (id1 < id2) pairs with cos ≥ ``threshold``, computed
+    in one ``applyInPandas`` grouped map per block. Columns: id1, id2,
+    cos_sim.
+
+    One shuffle of n vectors, |block|²-bounded work per group, and the
+    Arrow transfer carries the n input vectors — not the n² joined
+    pairs (6× faster than the pair-join + per-pair-UDF formulation).
+    Row-wise ``cumsum`` is the sequential left fold, so every dot and
+    norm is bit-identical to the ``F.aggregate`` formulation and to
+    DuckDB's list-fold semantics (verified with exceptAll == 0 against
+    the column-expression version). Zero-norm vectors are dropped (they
+    have no direction; NaN cosine orders differently in DuckDB)."""
+
+    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy()
+        V = np.stack(pdf["v"].to_numpy())
+        nrm = np.sqrt((V * V).cumsum(axis=1)[:, -1])
+        keep = nrm > 0
+        ids, V, nrm = ids[keep], V[keep], nrm[keep]
+        Vn = V / nrm[:, None]
+        o1, o2, oc = [], [], []
+        for i in range(len(ids) - 1):
+            sims = (Vn[i] * Vn[i + 1:]).cumsum(axis=1)[:, -1]
+            m = sims >= threshold
+            if m.any():
+                o1.append(np.full(int(m.sum()), ids[i]))
+                o2.append(ids[i + 1:][m])
+                oc.append(sims[m])
+        if not o1:
+            return pd.DataFrame(
+                {"id1": [], "id2": [], "cos_sim": []}
+            ).astype({"id1": "int64", "id2": "int64", "cos_sim": "float64"})
+        return pd.DataFrame(
+            {
+                "id1": np.concatenate(o1),
+                "id2": np.concatenate(o2),
+                "cos_sim": np.concatenate(oc),
+            }
+        )
+
+    return blocked.select(key, "vec_id", "v").groupBy(key).applyInPandas(
+        pairs, "id1 long, id2 long, cos_sim double"
     )
 
 
@@ -563,13 +531,7 @@ MUTUAL_KNN_BLOCK_CAP = 512
 MUTUAL_KNN_SPLIT_PLANES = 7
 
 
-def mutual_knn(
-    spark: SparkSession,
-    sf_dir: str,
-    n_planes: int = MUTUAL_KNN_PLANES,
-    dim: int = 64,
-    seed: int = MUTUAL_KNN_SEED,
-) -> DataFrame:
+def mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual nearest-neighbor pairs within LSH blocks: (a, b) where b
     is a's cosine top-1 AND a is b's top-1 — the reciprocal-best-match
     primitive (duplicate canonicalization, bitext mining, entity
@@ -580,12 +542,12 @@ def mutual_knn(
     the bucket is a pure seeded-hyperplane function of the vector, so
     the same blocking runs on any corpus and the oracle rebuilds it
     from the same plane literals. Pair scores come from the shared
-    per-block grouped-map kernel (``dedup._block_pairs_fn`` with the
-    threshold disabled — row-wise cumsum = the sequential fold, so
-    every cosine is bit-identical to the SQL fold); symmetrize, take
-    per-vector top-1 with a (cos DESC, id ASC) total-order window, and
-    self-join the two directions. Zero-norm vectors are dropped by the
-    kernel; singleton buckets emit nothing (no neighbor in scope).
+    per-block grouped map (:func:`block_pairs` with the threshold
+    disabled — every cosine is bit-identical to the SQL fold);
+    symmetrize, take per-vector top-1 with a (cos DESC, id ASC)
+    total-order window, and self-join the two directions. Zero-norm
+    vectors are dropped by the kernel; singleton buckets emit nothing
+    (no neighbor in scope).
     At 100 TB: one shuffle on the bucket key, block work bounded by
     ``MUTUAL_KNN_BLOCK_CAP``² per task via the occupancy-driven
     quad-tree split (hot coarse buckets re-block on the 7-plane
@@ -593,39 +555,33 @@ def mutual_knn(
     SQL), top-1 is a WindowGroupLimit heap — nothing quadratic in the
     corpus. Columns: vec_a, vec_b, cos_sim.
     """
-    from bigdata1_spark.operators.dedup import _block_pairs_fn
-
-    from pyspark.sql import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    bucketed = emb.withColumn(
+    v = F.col("v")
+    bucketed = load_vectors(spark, sf_dir).withColumn(
         "b_coarse",
-        vectors.hyperplane_sign_key(F.col("v"), n_planes, dim, seed),
+        vectors.hyperplane_sign_key(
+            v, MUTUAL_KNN_PLANES, EMB_DIM, MUTUAL_KNN_SEED
+        ),
     ).withColumn(
         "b_fine",
         vectors.hyperplane_sign_key(
-            F.col("v"), MUTUAL_KNN_SPLIT_PLANES, dim, seed
+            v, MUTUAL_KNN_SPLIT_PLANES, EMB_DIM, MUTUAL_KNN_SEED
         ),
     )
-    # hot coarse buckets split to the fine key (+2^n_planes keeps the
+    # hot coarse buckets split to the fine key (+2^planes keeps the
     # two namespaces disjoint); occupancy drives the choice, so block
     # size is bounded at any corpus size and the oracle mirrors the
     # same CASE over a COUNT() window
-    occ = F.count(F.lit(1)).over(W.partitionBy("b_coarse"))
+    occ = F.count(F.lit(1)).over(Window.partitionBy("b_coarse"))
     blocked = bucketed.withColumn(
         "bucket",
         F.when(
             occ > MUTUAL_KNN_BLOCK_CAP,
-            F.col("b_fine") + F.lit(2 ** n_planes),
+            F.col("b_fine") + F.lit(2 ** MUTUAL_KNN_PLANES),
         ).otherwise(F.col("b_coarse")),
     )
     # cached: the symmetrize union's two branches would otherwise each
     # run the grouped-map kernel (the dsir multi-consumer-lineage class)
-    pairs = blocked.groupBy("bucket").applyInPandas(
-        _block_pairs_fn(-2.0), "id1 long, id2 long, cos_sim double"
-    ).cache()
+    pairs = block_pairs(blocked, "bucket", -2.0).cache()
     sym = pairs.select(
         F.col("id1").alias("src"), F.col("id2").alias("nbr"), "cos_sim"
     ).unionAll(
@@ -633,8 +589,6 @@ def mutual_knn(
             F.col("id2").alias("src"), F.col("id1").alias("nbr"), "cos_sim"
         )
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("src").orderBy(
         F.desc("cos_sim"), F.asc("nbr")
     )
@@ -682,18 +636,16 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is lossless — and stage 2 ranks the ≤ SALT·k survivors. The big
     N·NQ score set therefore shuffles into NQ·SALT partitions instead
     of NQ hot ones (the plain window would funnel the whole corpus
-    through 8 tasks at 100 TB). The approximate side mirrors
-    ``sim_topk_lsh`` exactly (same hyperplane key: n_planes=4, dim=64,
-    seed=7). Both top-k orders are total — (cos_sim DESC, vec_id ASC)
-    — so the set intersection is engine-free; recall = |approx ∩
-    exact| / |exact| is ONE snapped division of exact counts, NULL
-    only when a query has no candidates at all. Columns: qid, n_exact,
-    n_approx, n_common, recall_at_k.
+    through 8 tasks at 100 TB). The approximate side is
+    ``sim_topk_lsh``'s bucket key (:func:`_lsh_bucket`). Both top-k
+    orders are total — (cos_sim DESC, vec_id ASC) — so the set
+    intersection is engine-free; recall = |approx ∩ exact| / |exact| is
+    ONE snapped division of exact counts, NULL only when a query has no
+    candidates at all. Columns: qid, n_exact, n_approx, n_common,
+    recall_at_k.
     """
-    from pyspark.sql import Window
-
-    emb = _emb(spark, sf_dir).withColumn(
-        "bucket", vectors.hyperplane_sign_key(F.col("v"), 4, 64, seed=7)
+    emb = load_vectors(spark, sf_dir).withColumn(
+        "bucket", _lsh_bucket()
     ).cache()
     q = emb.filter(F.col("vec_id") < ANN_QUERIES).select(
         F.col("vec_id").alias("qid"),

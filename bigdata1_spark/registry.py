@@ -44,8 +44,8 @@ def _cache_scoped(key: str, fn: QueryFn) -> QueryFn:
     intermediate (ir.py tf/dl tables, stats.py cells, similarity.py
     centroids) cannot unpersist before returning — the caller hasn't
     acted yet. Clearing at the START of the next key instead bounds a
-    sweep's storage to the single in-flight key, no matter how many of
-    the 241 keys run in one session (the r13 finding: a 241-key sf3
+    sweep's storage to the single in-flight key, no matter how many
+    keys run in one session (the r13 finding: a 241-key sf3
     sweep otherwise accumulates never-released entries). Clearing the
     cache never changes results — lineage recomputes — and operators
     that localCheckpoint (dedup.py, text_analysis.py) already released
@@ -586,15 +586,11 @@ def _duck_hyperplane_bucket(
     of the vector, so bucket-dependent results hash-match. Defaults to
     dedup_embedding's parameters."""
     from bigdata1_spark.functions.vectors import hyperplane_planes
-    from bigdata1_spark.operators.dedup import (
-        EMB_LSH_DIM,
-        EMB_LSH_PLANES,
-        EMB_LSH_SEED,
-    )
+    from bigdata1_spark.operators.dedup import EMB_LSH_PLANES, EMB_LSH_SEED
 
     seed = EMB_LSH_SEED if seed is None else seed
     n_planes = EMB_LSH_PLANES if n_planes is None else n_planes
-    dim = EMB_LSH_DIM if dim is None else dim
+    dim = similarity.EMB_DIM if dim is None else dim
     key = "CAST(0 AS BIGINT)"
     for p in hyperplane_planes(n_planes, dim, seed):
         arr = "[" + ", ".join(repr(c) for c in p) + "]"

@@ -9,7 +9,9 @@ sized for the local test harness but overridable for a real cluster.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -60,6 +62,24 @@ def streaming_conf(rocksdb: bool = True) -> dict[str, str]:
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
         ".enabled": "true",
     }
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set the runtime ``conf`` entries for the ``with`` body, then put
+    each key back as it was — its prior value, or unset when it had
+    none — on return and on raise."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def driver_memory() -> str:

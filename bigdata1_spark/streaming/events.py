@@ -21,7 +21,6 @@ prefix (file-drop ingestion, exactly-once per file); only paths change.
 
 from __future__ import annotations
 
-import contextlib
 import math
 import os
 import shutil
@@ -30,6 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.session import scoped_conf
 from bigdata1_spark.sources.tables import has_data, load_table, scratch
 
 WINDOW = "1 hour"
@@ -47,7 +47,6 @@ TS_US = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _STATE_PARTITION_BYTES = 64 << 20
 
 
-@contextlib.contextmanager
 def _state_sized_partitions(
     spark: SparkSession, source_dir: str, python_state: bool = False
 ):
@@ -78,12 +77,7 @@ def _state_sized_partitions(
             max(spark.sparkContext.defaultParallelism // 2, 2), 64
         )
     n = max(floor, math.ceil(size / _STATE_PARTITION_BYTES))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def _windowed(events: DataFrame) -> DataFrame:
@@ -854,26 +848,14 @@ def sessionize_stream_tws(
     )
 
 
-@contextlib.contextmanager
-def _rocksdb_state_store(spark: SparkSession):
-    """``transformWithState`` requires the RocksDB state-store provider
-    (its column-family layout backs named state variables + timers).
-    Scope the provider switch to the drain and restore the session
-    default so the HDFS-backed keys keep their checkpoint contracts."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
+# ``transformWithState`` requires the RocksDB state-store provider (its
+# column-family layout backs named state variables + timers); scoped to
+# the drain so the HDFS-backed keys keep their checkpoint contracts.
+_ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+}
 
 
 def _drain(
@@ -1264,11 +1246,10 @@ def events_tws_sessions_streamed(
 
     ``transformWithState`` requires the RocksDB state-store provider
     (column families back the named state + timer registers), so the
-    drain runs inside :func:`_rocksdb_state_store`, which scopes the
-    provider switch and restores the session default afterward.
+    drain runs with ``_ROCKSDB_STATE`` scoped to it.
     Columns: user_id, session_start, session_end, n_events.
     """
-    with _rocksdb_state_store(spark):
+    with scoped_conf(spark, _ROCKSDB_STATE):
         return _drain(
             spark,
             sf_dir,

@@ -289,6 +289,28 @@ def test_ivf_multiprobe_recall_dominates_single(spark, sf_dir):
         if r["vec_id"] in exact:
             assert abs(exact[r["vec_id"]] - r["cos_sim"]) < 1e-12
 
+    # The probe-count endpoints, row for row: one probe is the search
+    # of the query's own argmax cell, and probing every cell is the
+    # brute-force scan.
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    asg = similarity._ivf_assign(
+        similarity._ivf_scored(similarity.load_vectors(spark, sf_dir))
+    )
+    qcell = asg.filter(F.col("vec_id") == similarity.QUERY_VEC_ID).select(
+        F.col("v").alias("qv"), F.col("cell").alias("qcell")
+    )
+    own_cell = similarity._top_k(
+        asg.crossJoin(qcell).filter(F.col("cell") == F.col("qcell"))
+    )
+    single = rows(similarity._ivf_topk(spark, sf_dir, 1))
+    assert single == rows(own_cell)
+    assert single == rows(similarity.sim_topk_ivf(spark, sf_dir))
+    assert rows(
+        similarity._ivf_topk(spark, sf_dir, similarity.IVF_CELLS)
+    ) == rows(similarity.sim_topk(spark, sf_dir))
+
 
 def test_survey_key_count_matches_registry():
     """SURVEY.md §2.10 is the judge's coverage checklist — its stated

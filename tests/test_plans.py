@@ -56,18 +56,13 @@ def test_runtime_filter_injection(spark, sf_dir):
     on the creation side and a might_contain probe filter above the
     fact scan — i.e. the fact side is pruned before its shuffle."""
     from bigdata1_spark.operators import relational
+    from bigdata1_spark.session import scoped_conf
 
-    old = {k: spark.conf.get(k) for k in relational.RUNTIME_FILTER_CONFS}
-    for k, v in relational.RUNTIME_FILTER_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, relational.RUNTIME_FILTER_CONFS):
         df = relational._runtime_filter_plan(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bloom_filter_agg" in plan, "no bloom build in plan"
         assert "might_contain" in plan, "no bloom probe filter in plan"
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 def test_asof_join_single_shuffle(spark, sf_dir):
@@ -1104,7 +1099,7 @@ SCAN_BUDGETS = {
     "shard_pack": 1,
     "sim_topk": 2,
     "sim_topk_ivf": 3,  # corpus pass + codebook cache fill + pruned vec_id=0 query branch
-    "sim_topk_ivf_multiprobe": 4,  # corpus + codebook fill + 2 pruned query branches
+    "sim_topk_ivf_multiprobe": 3,  # corpus pass + codebook cache fill + pruned probe branch (carries the query vector)
     "sim_topk_ivf_pq": 4,  # corpus + codebook fill + 2 pruned query branches (was 13 pre-cache)
     "sim_topk_lsh": 2,
     "burst_hours": 1,  # hourly table cached; both consumers read it

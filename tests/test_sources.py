@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -416,3 +418,28 @@ def test_driver_memory_follows_host(monkeypatch, phys_gib, want):
     assert session.driver_memory() == want
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert session.driver_memory() == "3g"
+
+
+@pytest.mark.parametrize("body_raises", [False, True])
+def test_scoped_conf_restores_prior_and_unset_keys(spark, body_raises):
+    """``session.scoped_conf`` puts a set key back to its prior value
+    and unsets a key that had none, whether the body returns or
+    raises."""
+    from bigdata1_spark.session import scoped_conf
+
+    set_key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.sql.bigdata1.scopedConfProbe"
+    prior = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+
+    class Body(Exception):
+        pass
+
+    with pytest.raises(Body) if body_raises else contextlib.nullcontext():
+        with scoped_conf(spark, {set_key: "3", unset_key: "on"}):
+            assert spark.conf.get(set_key) == "3"
+            assert spark.conf.get(unset_key) == "on"
+            if body_raises:
+                raise Body
+    assert spark.conf.get(set_key) == prior
+    assert spark.conf.get(unset_key, None) is None
