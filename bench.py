@@ -219,7 +219,9 @@ def _bench(ab_ref: str | None, ab_registry) -> None:
         if unknown:
             raise RuntimeError(f"BENCH_ONLY names unknown keys: {sorted(unknown)}")
         bench_items = [(k, f) for k, f in bench_items if k in wanted]
-    ab_timings: dict[str, float] = {}
+    # every ref run per key, beside the head's samples, so the ref's
+    # spread can be read from the artifact too
+    ref_samples: dict[str, list[float]] = {}
     for key, fn in bench_items:
         # operators that cache intermediates (dedup_*, assoc_rules) leave
         # entries behind; clear BEFORE each key (not after a successful
@@ -247,7 +249,7 @@ def _bench(ab_ref: str | None, ab_registry) -> None:
             print(f"[bench] {key} FAILED: {errors[key]}", file=sys.stderr)
             continue
         if ab_samples:
-            ab_timings[key] = round(min(ab_samples), 4)
+            ref_samples[key] = [round(s, 4) for s in ab_samples]
             print(
                 f"[bench-ab] {key}: head {min(samples):.3f}s "
                 f"ref {min(ab_samples):.3f}s "
@@ -304,14 +306,16 @@ def _bench(ab_ref: str | None, ab_registry) -> None:
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "extra_bench_only": extra_timings,
     }
-    if ab_timings:
+    if ref_samples:
+        ref_min = {k: min(v) for k, v in ref_samples.items()}
+        head_min = {**timings, **extra_timings}
         detail["ab"] = {
             "ref": ab_ref,
-            "ref_queries": ab_timings,
+            "ref_queries": ref_min,
+            "ref_samples": ref_samples,
             "speedup_vs_ref": {
-                k: round(ab_timings[k] / max(timings[k], 1e-9), 4)
-                for k in ab_timings
-                if k in timings
+                k: round(ref_min[k] / max(head_min[k], 1e-9), 4)
+                for k in ref_min
             },
         }
     if errors:

@@ -70,6 +70,26 @@ def snap6(col: Column) -> Column:
     return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
+def fixed_point(col: Column, scale: int = 1) -> Column:
+    """The repo-wide fixed-point scaler: a measure as the exact BIGINT
+    round(x·scale) — scale 100 for the 2-decimal prices, discounts,
+    taxes and event values, 1 for the integral quantities. Inputs sit
+    within 1e-9 of the grid, so the one round never meets a tie and
+    the oracles' ``CAST(ROUND(x * scale) AS BIGINT)`` lands on the
+    same integer; every later sum or product of it is exact.
+    """
+    return F.round(col if scale == 1 else col * F.lit(scale)).cast("long")
+
+
+def day_num(ts: Column | str) -> Column:
+    """The exact integer day index (days since 1970-01-01) — DuckDB's
+    ``CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)``; NULL ts
+    gives a NULL day."""
+    return F.datediff(F.to_date(ts), F.to_date(F.lit("1970-01-01"))).cast(
+        "long"
+    )
+
+
 def baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (basket, item) pairs: one row per part per order.
 

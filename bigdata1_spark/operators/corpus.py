@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from bigdata1_spark.functions.hashing import let
 from bigdata1_spark.functions.textfns import tokens
 from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.operators.stats import pearson_terms
 from bigdata1_spark.operators.text_analysis import split_bucket
 from bigdata1_spark.sources.tables import load_table
 
@@ -1022,15 +1023,8 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("ly") * F.col("ly")).alias("syy"),
         F.sum(F.col("lx") * F.col("ly")).alias("sxy"),
     )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    syy = F.col("syy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    num = n * sxy - sx * sy
-    denx = n * sxx - sx * sx
-    deny = n * syy - sy * sy
+    num, denx, deny = pearson_terms("n", "sx", "sy", "sxy", "sxx", "syy")
+    n, sx, sy = (F.col(c).cast("double") for c in ("n", "sx", "sy"))
     ok = (F.col("n") >= 2) & (denx > 0)
     slope = snap6(num / denx)
     intercept = snap6(

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.operators.basket import day_num, fixed_point
 from bigdata1_spark.sources.tables import load_table
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -505,10 +506,8 @@ def user_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.to_date("ts"), F.to_date(F.lit("1970-01-01"))
-    ).cast("long")
-    cents = F.round(F.col("value") * F.lit(100)).cast("long")
+    day = day_num("ts")
+    cents = fixed_point(F.col("value"), 100)
     daily = (
         ev.select("user_id", day.alias("day"), cents.alias("c"))
         .filter(F.col("day").isNotNull())
@@ -569,10 +568,8 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.to_date("ts"), F.to_date(F.lit("1970-01-01"))
-    ).cast("long")
-    cents = F.round(F.col("value") * F.lit(100)).cast("long")
+    day = day_num("ts")
+    cents = fixed_point(F.col("value"), 100)
     per_user = (
         ev.select("user_id", day.alias("day"), cents.alias("c"))
         .filter(F.col("day").isNotNull())

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.operators.stats import pearson_terms
 from bigdata1_spark.sources.tables import load_table, parquet_row_count
 
 # Dense-mode cutoff for triangle counting. The kernel is TILED over
@@ -941,12 +942,11 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(xd * yd).alias("sxy_half"),
     )
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
-    n = (F.col("m") * F.lit(2)).cast("double")
-    sx = F.col("sx").cast("double")
-    sxx = F.col("sxx").cast("double")
-    sxy = (F.col("sxy_half") * F.lit(2)).cast("double")
-    num = n * sxy - sx * sx
-    den = n * sxx - sx * sx
+    # both orientations of every edge: Sy = Sx and Syy = Sxx
+    num, den, _ = pearson_terms(
+        F.col("m") * F.lit(2), "sx", "sx", F.col("sxy_half") * F.lit(2),
+        "sxx", "sxx",
+    )
     return s.crossJoin(F.broadcast(n_nodes)).select(
         F.col("n_nodes").cast("long").alias("n_nodes"),
         F.col("m").cast("long").alias("n_edges"),

@@ -1,6 +1,6 @@
-"""Statistical-profiling operators: Pearson correlation matrix over the
-fact table's measures, and mutual-information / chi-square association
-between two categorical document columns.
+"""Statistical-profiling operators: correlation, rank, regression,
+two-sample, concentration and moment statistics over the lineitem,
+events, orders and documents tables.
 
 No reference analog; this is the feature-statistics layer a training-data
 pipeline runs to pick mixture weights and spot leaky/redundant columns
@@ -15,18 +15,182 @@ row is a single fixed-order IEEE chain on those exact integers, then
 floor-rounded at 1e-6 — so the DuckDB oracles pin values bit-for-bit.
 Pearson r is invariant under the affine scaling, so the scaled-integer
 computation yields exactly the correlation of the original columns.
+
+Every key is built on one shared exact-statistics core and writes none
+of it again:
+
+* ``basket.fixed_point`` (the scaler) and ``basket.day_num`` (the
+  epoch-day index) turn measures and timestamps into exact integers;
+* :func:`pearson_terms` is the one Pearson/OLS double chain over
+  (n, Σx, Σy, Σxy, Σx², Σy²), shared with ``corpus.zipf_fit`` and
+  ``graph.graph_assortativity``; :func:`_pairwise_pearson` stacks the
+  pair rows of :func:`corr_matrix` and :func:`spearman_corr`;
+* :func:`middle_median` is the middle-rank median and
+  :func:`doubled_rank` the integer tie-averaged rank over a marginal;
+* :func:`_flag_qty` and :func:`_flag_qty_cells` are the return-flag ×
+  quantity rows and their (group, value) cell table;
+* :func:`_chi2_cell` is the per-cell χ² expectation and term.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 from itertools import combinations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.operators.basket import day_num, fixed_point, snap6
 from bigdata1_spark.sources.tables import load_table
+
+
+def pearson_terms(
+    n: Column | str,
+    sx: Column | str,
+    sy: Column | str,
+    sxy: Column | str,
+    sxx: Column | str,
+    syy: Column | str,
+) -> tuple[Column, Column, Column]:
+    """The one Pearson/OLS double chain over the six exact sums: each is
+    cast to double once, then
+
+        num = n·Σxy − Σx·Σy,  denx = n·Σx² − (Σx)²,  deny = n·Σy² − (Σy)²
+
+    in exactly this op order, which the oracles copy token for token.
+    r = num/√(denx·deny), the OLS slope is num/denx and
+    r² = num²/(denx·deny). Returns ``(num, denx, deny)``.
+    """
+    n, sx, sy, sxy, sxx, syy = (
+        (F.col(c) if isinstance(c, str) else c).cast("double")
+        for c in (n, sx, sy, sxy, sxx, syy)
+    )
+    return n * sxy - sx * sy, n * sxx - sx * sx, n * syy - sy * sy
+
+
+def _pairwise_pearson(
+    rows: DataFrame, names: list[str], out: str, weight: Column | None = None
+) -> DataFrame:
+    """Pearson r of every pair of the integer columns ``names`` in ONE
+    aggregate pass: n, per-name Σx and Σx², per-pair Σxy — each an
+    exact DECIMAL sum (of weight·x… when each row stands for ``weight``
+    rows) — then the upper-triangle pairs stacked from that ONE 1-row
+    frame, so the plan is one shuffle of a few numbers regardless of
+    table size. n is COUNT(*) unweighted (0 on no rows) and Σweight
+    weighted (NULL on no rows), as the oracles have it. Each r is
+    :func:`pearson_terms`, floor-rounded 1e-6; a zero-variance column
+    yields NULL rather than an engine-dependent inf/NaN.
+    Columns: col_x, col_y, n_rows, ``out``.
+    """
+    def sum_of(*cols: str) -> Column:
+        terms = ([] if weight is None else [weight]) + [F.col(c) for c in cols]
+        return F.sum(reduce(
+            lambda p, t: p * t, [t.cast("decimal(19,0)") for t in terms]
+        ))
+
+    pairs = list(combinations(names, 2))
+    n = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    stats = rows.agg(
+        n.alias("n"),
+        *[sum_of(a).alias(f"s_{a}") for a in names],
+        *[sum_of(a, a).alias(f"s_{a}_{a}") for a in names],
+        *[sum_of(a, b).alias(f"s_{a}_{b}") for a, b in pairs],
+    )
+    pair_rows = []
+    for a, b in pairs:
+        num, denx, deny = pearson_terms(
+            "n", f"s_{a}", f"s_{b}", f"s_{a}_{b}", f"s_{a}_{a}", f"s_{b}_{b}"
+        )
+        den = F.sqrt(denx * deny)
+        pair_rows.append(
+            F.struct(
+                F.lit(a).alias("col_x"),
+                F.lit(b).alias("col_y"),
+                F.col("n").cast("long").alias("n_rows"),
+                F.when(den > 0, snap6(num / den)).alias(out),
+            )
+        )
+    return stats.select(
+        F.explode(F.array(*pair_rows)).alias("p")
+    ).select("p.col_x", "p.col_y", "p.n_rows", f"p.{out}")
+
+
+def _complete_measures(
+    spark: SparkSession, sf_dir: str, cols: tuple[tuple[str, str, int], ...]
+) -> DataFrame:
+    """The lineitem measures ``cols`` — (output name, source column,
+    fixed-point scale) — as exact integers, listwise-complete (rows
+    with any NULL measure dropped, so every pair shares one n)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    return li.select(
+        *[fixed_point(F.col(s), scale).alias(name) for name, s, scale in cols]
+    ).na.drop("any")
+
+
+def doubled_rank(value: str) -> Column:
+    """The DOUBLED tie-averaged rank of each row of a marginal frame
+    (one row per distinct ``value``, its row count in ``mf``):
+    ``dr(v) = 2·cum(v) − mf(v) + 1``, twice the average rank
+    ``cum_before(v) + (mf(v)+1)/2`` — an exact integer, and an affine
+    map of the rank, so Pearson r over it is Spearman's rho. The window
+    is single-partition: a marginal is bounded by its value domain,
+    never by the row count."""
+    w = Window.orderBy(value).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return F.lit(2) * F.sum("mf").over(w) - F.col("mf") + F.lit(1)
+
+
+def middle_median(df: DataFrame, part: str, val: str, out: str) -> DataFrame:
+    """Per-``part`` median of ``val`` from the two middle ranks — never an
+    engine quantile builtin (implementations differ in interpolation):
+    row_number over the partition picks ranks ⌊(m+1)/2⌋ and ⌊m/2⌋+1 of
+    its m rows (the same rank twice for odd m), median = (lo + hi)/2 —
+    identical arithmetic in both engines. A NULL ``part`` is a real
+    group. Columns: ``part``, ``{out}_n`` (m), ``out``.
+    """
+    w = Window.partitionBy(part).orderBy(val)
+    wp = Window.partitionBy(part)
+    ranked = df.select(
+        part,
+        F.col(val),
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(wp).alias("m"),
+    )
+    lo = F.floor((F.col("m") + 1) / F.lit(2.0)).cast("long")
+    hi = F.floor(F.col("m") / F.lit(2.0)).cast("long") + 1
+    return ranked.groupBy(part).agg(
+        F.max("m").alias(f"{out}_n"),
+        (
+            (
+                F.sum(F.when(F.col("rn") == lo, F.col(val)))
+                + F.sum(F.when(F.col("rn") == hi, F.col(val)))
+            )
+            / F.lit(2.0)
+        ).alias(out),
+    )
+
+
+def _flag_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem as (grp = l_returnflag, qv = exact integer quantity)
+    rows with non-NULL quantity; a NULL flag is kept (callers that
+    compare literal flags filter it out, the rest treat it as a real
+    group)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    return li.select(
+        F.col("l_returnflag").alias("grp"),
+        fixed_point(F.col("l_quantity")).alias("qv"),
+    ).filter(F.col("qv").isNotNull())
+
+
+def _flag_qty_cells(rows: DataFrame) -> DataFrame:
+    """The (grp, qv) contingency cells of :func:`_flag_qty` rows with
+    their row count f — ≤ |flags|·|quantity domain| rows at ANY table
+    size, so every rank, quantile and pair statistic over them is
+    constant-bounded work."""
+    return rows.groupBy("grp", "qv").agg(F.count(F.lit(1)).alias("f"))
+
 
 # (output name, source column, fixed-point scale). Scale 100 turns the
 # 2-decimal TPC-H measures into exact integers; quantity is integral.
@@ -59,55 +223,11 @@ def corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-rounded at 1e-6. Zero-variance columns yield NULL rather than
     an engine-dependent inf/NaN. Columns: col_x, col_y, n_rows, corr.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    cols = [
-        F.round(F.col(src) * F.lit(scale)).cast("long").alias(name)
-        for name, src, scale in CORR_COLS
-    ]
-    complete = li.select(*cols).na.drop("any")
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    names = [name for name, _, _ in CORR_COLS]
-    for name in names:
-        aggs.append(
-            F.sum(F.col(name).cast("decimal(38,0)")).alias(f"s_{name}")
-        )
-    for a, b in combinations(names, 2):
-        aggs.append(
-            F.sum(
-                F.col(a).cast("decimal(19,0)") * F.col(b).cast("decimal(19,0)")
-            ).alias(f"s_{a}_{b}")
-        )
-    for name in names:
-        aggs.append(
-            F.sum(
-                F.col(name).cast("decimal(19,0)")
-                * F.col(name).cast("decimal(19,0)")
-            ).alias(f"s_{name}_{name}")
-        )
-    stats = complete.agg(*aggs)
-
-    pair_rows = []
-    for a, b in combinations(names, 2):
-        n = F.col("n").cast("double")
-        sx = F.col(f"s_{a}").cast("double")
-        sy = F.col(f"s_{b}").cast("double")
-        sxy = F.col(f"s_{a}_{b}").cast("double")
-        sxx = F.col(f"s_{a}_{a}").cast("double")
-        syy = F.col(f"s_{b}_{b}").cast("double")
-        num = n * sxy - sx * sy
-        den = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-        pair_rows.append(
-            F.struct(
-                F.lit(a).alias("col_x"),
-                F.lit(b).alias("col_y"),
-                F.col("n").alias("n_rows"),
-                F.when(den > 0, snap6(num / den)).alias("corr"),
-            )
-        )
-    return stats.select(
-        F.explode(F.array(*pair_rows)).alias("p")
-    ).select("p.col_x", "p.col_y", "p.n_rows", "p.corr")
+    return _pairwise_pearson(
+        _complete_measures(spark, sf_dir, CORR_COLS),
+        [name for name, _, _ in CORR_COLS],
+        "corr",
+    )
 
 
 def _contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,6 +256,19 @@ def _contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_xy").over(Window.partitionBy()),
         )
     )
+
+
+def _chi2_cell() -> tuple[Column, Column]:
+    """The expected count ``exp = n_lang·n_source/n_total`` of a
+    :func:`_contingency` cell and its χ² term ``(n_xy − exp)²/exp`` —
+    one fixed-order double chain each, mirrored in the oracles."""
+    exp = (
+        F.col("n_lang").cast("double")
+        * F.col("n_source").cast("double")
+        / F.col("n_total").cast("double")
+    )
+    diff = F.col("n_xy").cast("double") - exp
+    return exp, diff * diff / exp
 
 
 def mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,20 +309,13 @@ def chi_square_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp > 0 whenever a cell exists, so the division is always defined.
     Columns: lang, source, n_xy, expected, chi2_term.
     """
-    cells = _contingency(spark, sf_dir)
-    n_xy = F.col("n_xy").cast("double")
-    exp = (
-        F.col("n_lang").cast("double")
-        * F.col("n_source").cast("double")
-        / F.col("n_total").cast("double")
-    )
-    diff = n_xy - exp
-    return cells.select(
+    exp, term = _chi2_cell()
+    return _contingency(spark, sf_dir).select(
         "lang",
         "source",
         "n_xy",
         snap6(exp).alias("expected"),
-        snap6(diff * diff / exp).alias("chi2_term"),
+        snap6(term).alias("chi2_term"),
     )
 
 
@@ -227,19 +353,13 @@ def spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6; zero-variance marginals yield NULL. Columns: col_x, col_y,
     n_rows, rho.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    cols = [
-        F.round(F.col(src) * F.lit(scale)).cast("long").alias(name)
-        for name, src, scale in SPEARMAN_COLS
-    ]
     names = [name for name, _, _ in SPEARMAN_COLS]
     # cells fans out into 3 marginal derivations + the rank join —
     # without a cache the scan+groupBy would re-run per consumer (the
     # dsir_sample multi-consumer-lineage lesson). Constant-bounded
     # rows, so the cache is always tiny.
     cells = (
-        li.select(*cols)
-        .na.drop("any")
+        _complete_measures(spark, sf_dir, SPEARMAN_COLS)
         .groupBy(*names)
         .agg(F.count(F.lit(1)).alias("f"))
         .cache()
@@ -247,50 +367,14 @@ def spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = cells
     for name in names:
         marg = cells.groupBy(name).agg(F.sum("f").alias("mf"))
-        w = Window.orderBy(name).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        dr_map = marg.select(
-            name,
-            (
-                F.lit(2) * F.sum("mf").over(w) - F.col("mf") + F.lit(1)
-            ).alias(f"dr_{name}"),
-        )
+        dr_map = marg.select(name, doubled_rank(name).alias(f"dr_{name}"))
         ranked = ranked.join(F.broadcast(dr_map), name)
-
-    fd = F.col("f").cast("decimal(19,0)")
-    aggs = [F.sum(F.col("f")).alias("n")]
-    for name in names:
-        d = F.col(f"dr_{name}").cast("decimal(12,0)")
-        aggs.append(F.sum(fd * d).alias(f"s_{name}"))
-        aggs.append(F.sum(fd * d * d).alias(f"s_{name}_{name}"))
-    for a, b in combinations(names, 2):
-        da = F.col(f"dr_{a}").cast("decimal(12,0)")
-        db = F.col(f"dr_{b}").cast("decimal(12,0)")
-        aggs.append(F.sum(fd * da * db).alias(f"s_{a}_{b}"))
-    stats = ranked.agg(*aggs)
-
-    pair_rows = []
-    for a, b in combinations(names, 2):
-        n = F.col("n").cast("double")
-        sx = F.col(f"s_{a}").cast("double")
-        sy = F.col(f"s_{b}").cast("double")
-        sxy = F.col(f"s_{a}_{b}").cast("double")
-        sxx = F.col(f"s_{a}_{a}").cast("double")
-        syy = F.col(f"s_{b}_{b}").cast("double")
-        num = n * sxy - sx * sy
-        den = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-        pair_rows.append(
-            F.struct(
-                F.lit(a).alias("col_x"),
-                F.lit(b).alias("col_y"),
-                F.col("n").cast("long").alias("n_rows"),
-                F.when(den > 0, snap6(num / den)).alias("rho"),
-            )
-        )
-    return stats.select(
-        F.explode(F.array(*pair_rows)).alias("p")
-    ).select("p.col_x", "p.col_y", "p.n_rows", "p.rho")
+    return _pairwise_pearson(
+        ranked.select("f", *[F.col(f"dr_{n}").alias(n) for n in names]),
+        names,
+        "rho",
+        weight=F.col("f"),
+    )
 
 
 # Two-sample comparison: lineitem quantities of returned ('R') vs
@@ -318,31 +402,17 @@ def mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     value tied) yields NULL. Columns: grp_a, grp_b, n_a, n_b, u2_a,
     u2_b (doubled U statistics — exact integers), z.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    rows = li.select(
-        F.col("l_returnflag").alias("grp"),
-        F.round(F.col("l_quantity")).cast("long").alias("qv"),
-    ).filter(
+    rows = _flag_qty(spark, sf_dir).filter(
         F.col("grp").isin(MW_GROUP_A, MW_GROUP_B)
-        & F.col("qv").isNotNull()
     )
     # cells fans out into the marginal and the rank join (the
     # spearman_corr multi-consumer shape); ≤ 2·|quantity domain| rows.
-    cells = (
-        rows.groupBy("grp", "qv")
-        .agg(F.count(F.lit(1)).alias("f"))
-        .cache()
-    )
+    cells = _flag_qty_cells(rows).cache()
     marg = cells.groupBy("qv").agg(F.sum("f").alias("mf"))
-    w = Window.orderBy("qv").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     md = F.col("mf").cast("decimal(12,0)")
     dr = marg.select(
         "qv",
-        (F.lit(2) * F.sum("mf").over(w) - F.col("mf") + F.lit(1)).alias(
-            "dr"
-        ),
+        doubled_rank("qv").alias("dr"),
         (md * md * md - md).alias("t3t"),
     )
     j = cells.join(F.broadcast(dr), "qv")
@@ -400,17 +470,19 @@ def mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # constant-bounded sufficient statistics or contingency cells in ONE scan,
 # every accumulation is exact DECIMAL/HUGEINT integer arithmetic, and the
 # only float math is one fixed-order IEEE chain per output row, pinned at
-# 1e-6 by _round6 so the DuckDB oracles match bit-for-bit.
+# 1e-6 by snap6 so the DuckDB oracles match bit-for-bit.
 # --------------------------------------------------------------------------
 
-_EPOCH = "1970-01-01"
 
-
-def _day_num(ts_col: str) -> F.Column:
-    """Exact integer day index (days since 1970-01-01) — matches
-    DuckDB's ``CAST(ts AS DATE) - DATE '1970-01-01'`` (BIGINT)."""
-    return F.datediff(F.to_date(ts_col), F.to_date(F.lit(_EPOCH))).cast(
-        "long"
+def _type_day_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily event counts per event_type: (event_type, x = epoch day,
+    y = count). NULL timestamps carry no day coordinate and are
+    excluded; NULL event_type is a real series."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.filter(F.col("ts").isNotNull())
+        .groupBy("event_type", day_num("ts").alias("x"))
+        .agg(F.count(F.lit(1)).alias("y"))
     )
 
 
@@ -437,12 +509,7 @@ def linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-dependent inf/NaN.
     Columns: event_type, n_days, slope, intercept, r2.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.filter(F.col("ts").isNotNull())
-        .groupBy("event_type", _day_num("ts").alias("x"))
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
+    daily = _type_day_counts(spark, sf_dir)
     xd = F.col("x").cast("decimal(19,0)")
     yd = F.col("y").cast("decimal(19,0)")
     stats = daily.groupBy("event_type").agg(
@@ -453,15 +520,8 @@ def linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(xd * xd).alias("sxx"),
         F.sum(yd * yd).alias("syy"),
     )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    syy = F.col("syy").cast("double")
-    num = n * sxy - sx * sy
-    denx = n * sxx - sx * sx
-    deny = n * syy - sy * sy
+    num, denx, deny = pearson_terms("n", "sx", "sy", "sxy", "sxx", "syy")
+    n, sx, sy = (F.col(c).cast("double") for c in ("n", "sx", "sy"))
     slope = num / denx
     return stats.select(
         "event_type",
@@ -496,15 +556,11 @@ def anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-rounded 1e-6; any empty group or zero within-variance
     yields NULL F. Columns: n_a, n_n, n_r, ssb, ssw, f_stat.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    rows = li.select(
-        F.col("l_returnflag").alias("g"),
-        F.round(F.col("l_quantity")).cast("long").alias("qv"),
-    ).filter(F.col("g").isin(*ANOVA_FLAGS) & F.col("qv").isNotNull())
+    rows = _flag_qty(spark, sf_dir).filter(F.col("grp").isin(*ANOVA_FLAGS))
     qd = F.col("qv").cast("decimal(19,0)")
     aggs = []
     for flag in ANOVA_FLAGS:
-        m = F.col("g") == flag
+        m = F.col("grp") == flag
         tag = flag.lower()
         aggs.append(F.sum(F.when(m, F.lit(1))).alias(f"n_{tag}"))
         aggs.append(F.sum(F.when(m, qd)).alias(f"s_{tag}"))
@@ -558,13 +614,10 @@ def kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     n ≈ 6·10⁹ rows per the u2 precedent; accumulation itself never
     overflows). Columns: col_x, col_y, n_rows, nc, nd, tau.
     """
-    li = load_table(spark, sf_dir, "lineitem")
     cells = (
-        li.select(
-            F.round(F.col("l_quantity")).cast("long").alias("x"),
-            F.round(F.col("l_discount") * 100).cast("long").alias("y"),
+        _complete_measures(
+            spark, sf_dir, (("x", "l_quantity", 1), ("y", "l_discount", 100))
         )
-        .na.drop("any")
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("f"))
         .cache()
@@ -641,18 +694,13 @@ def ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     one double chain, floor-rounded 1e-6; an empty side yields NULL
     stats. Columns: grp_a, grp_b, n_a, n_b, d_stat, ks_stat.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    rows = li.select(
-        F.col("l_returnflag").alias("grp"),
-        F.round(F.col("l_quantity")).cast("long").alias("qv"),
-    ).filter(
+    rows = _flag_qty(spark, sf_dir).filter(
         F.col("grp").isin(MW_GROUP_A, MW_GROUP_B)
-        & F.col("qv").isNotNull()
     )
-    piv = rows.groupBy("qv").agg(
-        F.sum(F.when(F.col("grp") == MW_GROUP_A, F.lit(1)).otherwise(0))
+    piv = _flag_qty_cells(rows).groupBy("qv").agg(
+        F.sum(F.when(F.col("grp") == MW_GROUP_A, F.col("f")).otherwise(0))
         .alias("fa"),
-        F.sum(F.when(F.col("grp") == MW_GROUP_B, F.lit(1)).otherwise(0))
+        F.sum(F.when(F.col("grp") == MW_GROUP_B, F.col("f")).otherwise(0))
         .alias("fb"),
     )
     w = Window.orderBy("qv").rowsBetween(
@@ -710,7 +758,7 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     series = (
         ev.filter(F.col("ts").isNotNull())
-        .groupBy(_day_num("ts").alias("day"))
+        .groupBy(day_num("ts").alias("day"))
         .agg(F.count(F.lit(1)).alias("y"))
         .cache()
     )
@@ -734,14 +782,8 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(y0 * y0).alias("sxx"),
         F.sum(y1 * y1).alias("syy"),
     )
-    m = F.col("m").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    syy = F.col("syy").cast("double")
-    num = m * sxy - sx * sy
-    den = F.sqrt((m * sxx - sx * sx) * (m * syy - sy * sy))
+    num, denx, deny = pearson_terms("m", "sx", "sy", "sxy", "sxx", "syy")
+    den = F.sqrt(denx * deny)
     return stats.select(
         "lag",
         F.col("m").alias("n_pairs"),
@@ -778,7 +820,7 @@ def benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: digit, n_obs, n_total, expected_n, chi2_term.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    cents = fixed_point(F.col("l_extendedprice"), 100)
     digits = (
         li.select(cents.alias("cents"))
         .filter(F.col("cents") > 0)
@@ -817,23 +859,15 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     of row count, so the self-join and the per-type rank windows never
     grow with data volume (30 days → 435 pairs; 10 years → ~6.7M,
     still constant w.r.t. rows). The daily series is cached across
-    its three consumers (pair join ×2 sides, residual join). Medians
-    avoid any engine quantile builtin (implementations differ):
-    row_number over the per-type partition picks the two middle
-    ranks, median = (s_lo + s_hi)/2 — identical arithmetic in both
-    engines; each pair slope is a single IEEE division, identical op
-    order. NULL event_type is a real series (null-safe join keys);
-    types with a single day have no pairs and are absent. Outputs
+    its three consumers (pair join ×2 sides, residual join). Both
+    medians are :func:`middle_median` over the per-type partition;
+    each pair slope is a single IEEE division, identical op order.
+    NULL event_type is a real series (null-safe join keys); types
+    with a single day have no pairs and are absent. Outputs
     floor-rounded 1e-6.
     Columns: event_type, n_days, n_pairs, slope, intercept.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.filter(F.col("ts").isNotNull())
-        .groupBy("event_type", _day_num("ts").alias("x"))
-        .agg(F.count(F.lit(1)).alias("y"))
-        .cache()
-    )
+    daily = _type_day_counts(spark, sf_dir).cache()
     a = daily.select(
         F.col("event_type").alias("et"),
         F.col("x").alias("x1"),
@@ -855,29 +889,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sl"),
     )
 
-    def _median(df: DataFrame, part: str, val: str, out: str) -> DataFrame:
-        w = Window.partitionBy(part).orderBy(val)
-        wp = Window.partitionBy(part)
-        ranked = df.select(
-            part,
-            F.col(val),
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1)).over(wp).alias("m"),
-        )
-        lo = F.floor((F.col("m") + 1) / F.lit(2.0)).cast("long")
-        hi = F.floor(F.col("m") / F.lit(2.0)).cast("long") + 1
-        return ranked.groupBy(part).agg(
-            F.max("m").alias(f"{out}_n"),
-            (
-                (
-                    F.sum(F.when(F.col("rn") == lo, F.col(val)))
-                    + F.sum(F.when(F.col("rn") == hi, F.col(val)))
-                )
-                / F.lit(2.0)
-            ).alias(out),
-        )
-
-    med = _median(pairs, "et", "sl", "med")
+    med = middle_median(pairs, "et", "sl", "med")
     res = (
         daily.join(
             F.broadcast(med), F.col("event_type").eqNullSafe(F.col("et"))
@@ -890,7 +902,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("r"),
         )
     )
-    interc = _median(res, "ret", "r", "imed")
+    interc = middle_median(res, "ret", "r", "imed")
     n_days = daily.groupBy(
         F.col("event_type").alias("det")
     ).agg(F.count(F.lit(1)).alias("n_days"))
@@ -931,16 +943,7 @@ def trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(n·frac) never rounds across an integer boundary.
     Columns: grp, n, k_trim, n_kept, mean_all, mean_trimmed.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    cells = (
-        li.select(
-            F.col("l_returnflag").alias("grp"),
-            F.round(F.col("l_quantity")).cast("long").alias("qv"),
-        )
-        .filter(F.col("qv").isNotNull())
-        .groupBy("grp", "qv")
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
+    cells = _flag_qty_cells(_flag_qty(spark, sf_dir))
     wg = Window.partitionBy("grp")
     wcum = wg.orderBy("qv").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1003,9 +1006,9 @@ def robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean+stddev z; the median and MAD ignore it).
 
     Modified z = 0.6745·(y − median)/MAD (Iglewicz–Hoaglin), flagged
-    at |z| > 3.5. Both medians use the explicit middle-rank
-    arithmetic of :func:`theil_sen_trend` (never an engine quantile
-    builtin) over the CALENDAR-bounded daily table; the daily series
+    at |z| > 3.5. Both medians are :func:`middle_median` (explicit
+    middle ranks, never an engine quantile builtin) over the
+    CALENDAR-bounded daily table; the daily series
     and the deviation frame are cached across their two consumers
     each. A type with MAD = 0 (more than half its days at the median)
     yields NULL z — never an engine-dependent inf. NULL event_type is
@@ -1018,29 +1021,9 @@ def robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.date_trunc("day", "ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("y")).cache()
 
-    def _median_of(df: DataFrame, val: str, out: str) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(val)
-        wp = Window.partitionBy("event_type")
-        ranked = df.select(
-            "event_type",
-            F.col(val),
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1)).over(wp).alias("m"),
-        )
-        lo = F.floor((F.col("m") + 1) / F.lit(2.0)).cast("long")
-        hi = F.floor(F.col("m") / F.lit(2.0)).cast("long") + 1
-        return ranked.groupBy("event_type").agg(
-            (
-                (
-                    F.sum(F.when(F.col("rn") == lo, F.col(val)))
-                    + F.sum(F.when(F.col("rn") == hi, F.col(val)))
-                )
-                / F.lit(2.0)
-            ).alias(out)
-        )
-
-    med = _median_of(
+    med = middle_median(
         daily.select("event_type", F.col("y").cast("double").alias("yv")),
+        "event_type",
         "yv",
         "med",
     ).withColumnRenamed("event_type", "met")
@@ -1057,7 +1040,7 @@ def robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    mad = _median_of(dev, "ad", "mad").withColumnRenamed(
+    mad = middle_median(dev, "event_type", "ad", "mad").withColumnRenamed(
         "event_type", "mt"
     )
     rz = (
@@ -1091,23 +1074,13 @@ def gini_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL. NULL quantities are excluded; NULL flags form a real group.
     Columns: grp, n, sum_qty, gini.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    cells = (
-        li.select(
-            F.col("l_returnflag").alias("grp"),
-            F.round(F.col("l_quantity")).cast("long").alias("v"),
-        )
-        .filter(F.col("v").isNotNull())
-        .groupBy("grp", "v")
-        .agg(F.count(F.lit(1)).alias("f"))
-        .cache()
-    )
+    cells = _flag_qty_cells(_flag_qty(spark, sf_dir)).cache()
     a = cells.select(
-        F.col("grp").alias("g1"), F.col("v").alias("v1"),
+        F.col("grp").alias("g1"), F.col("qv").alias("v1"),
         F.col("f").cast("decimal(19,0)").alias("f1"),
     )
     b = cells.select(
-        F.col("grp").alias("g2"), F.col("v").alias("v2"),
+        F.col("grp").alias("g2"), F.col("qv").alias("v2"),
         F.col("f").cast("decimal(19,0)").alias("f2"),
     )
     num = (
@@ -1124,7 +1097,7 @@ def gini_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cells.groupBy("grp").agg(
         F.sum("f").alias("n"),
         F.sum(
-            F.col("f").cast("decimal(19,0)") * F.col("v").cast("decimal(19,0)")
+            F.col("f").cast("decimal(19,0)") * F.col("qv").cast("decimal(19,0)")
         ).alias("s"),
     )
     j = tot.join(
@@ -1158,7 +1131,7 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey"), F.col("s_nationkey").alias("nationkey")
     )
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
+    cents = fixed_point(F.col("l_extendedprice"), 100)
     per_sup = (
         li.select(F.col("l_suppkey").alias("s_suppkey"), cents.alias("c"))
         .filter(F.col("c").isNotNull())
@@ -1200,7 +1173,7 @@ def pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment").alias("mktsegment")
     )
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    cents = fixed_point(F.col("o_totalprice"), 100)
     spend = (
         orders.select(F.col("o_custkey").alias("c_custkey"), cents.alias("c"))
         .filter(F.col("c").isNotNull())
@@ -1270,7 +1243,7 @@ def welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: type_a, type_b, n_a, n_b, mean_a, mean_b, t_stat, welch_df.
     """
     ev = load_table(spark, sf_dir, "events")
-    x = F.round(F.col("value") * F.lit(100)).cast("long")
+    x = fixed_point(F.col("value"), 100)
     d = F.col("x").cast("decimal(19,0)")
     g = (
         ev.select(
@@ -1344,20 +1317,13 @@ def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(r,c) < 2 — zero denominator). Always exactly ONE output row.
     Columns: n_langs, n_sources, n_total, chi2, cramers_v.
     """
-    cells = _contingency(spark, sf_dir)
-    n_xy = F.col("n_xy").cast("double")
-    exp = (
-        F.col("n_lang").cast("double")
-        * F.col("n_source").cast("double")
-        / F.col("n_total").cast("double")
-    )
-    diff = n_xy - exp
+    _, term = _chi2_cell()
     kl = F.coalesce(F.col("lang"), F.lit("<null>"))
     ks = F.coalesce(F.col("source"), F.lit("<null>"))
-    pre = cells.select(
+    pre = _contingency(spark, sf_dir).select(
         kl.alias("kl"),
         ks.alias("ks"),
-        snap6(diff * diff / exp).alias("term"),
+        snap6(term).alias("term"),
         F.col("n_total"),
     )
     agg = pre.agg(
@@ -1410,7 +1376,7 @@ def moments_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     skewness, kurtosis, jarque_bera.
     """
     ev = load_table(spark, sf_dir, "events")
-    x = F.round(F.col("value") * F.lit(100)).cast("long")
+    x = fixed_point(F.col("value"), 100)
     base = ev.select(F.col("event_type"), x.alias("x")).filter(
         F.col("x").isNotNull()
     )
@@ -1476,22 +1442,12 @@ def iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded; NULL flags form a real group; a 1-row group has q1 = q3
     and zero outliers. Columns: grp, n, q1, q3, iqr, n_low, n_high.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    cells = (
-        li.select(
-            F.col("l_returnflag").alias("grp"),
-            F.round(F.col("l_quantity")).cast("long").alias("v"),
-        )
-        .filter(F.col("v").isNotNull())
-        .groupBy("grp", "v")
-        .agg(F.count(F.lit(1)).alias("f"))
-        .cache()
-    )
+    cells = _flag_qty_cells(_flag_qty(spark, sf_dir)).cache()
     wg = Window.partitionBy("grp")
-    wcum = wg.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    wcum = wg.orderBy("qv").rowsBetween(Window.unboundedPreceding, -1)
     c2 = cells.select(
         "grp",
-        "v",
+        "qv",
         "f",
         F.coalesce(F.sum("f").over(wcum), F.lit(0)).alias("cb"),
         F.sum("f").over(wg).alias("n"),
@@ -1502,7 +1458,7 @@ def iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     r3 = (3 * (F.col("n") - 1)) % 4
 
     def vat(k: F.Column, name: str) -> F.Column:
-        return F.max(F.when(F.col("cb") <= k, F.col("v"))).alias(name)
+        return F.max(F.when(F.col("cb") <= k, F.col("qv"))).alias(name)
 
     qs = c2.groupBy("grp").agg(
         F.max("n").alias("n"),
@@ -1532,7 +1488,7 @@ def iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo = F.lit(2) * F.col("q1_4") - F.lit(3) * F.col("iqr_4")
     hi = F.lit(2) * F.col("q3_4") + F.lit(3) * F.col("iqr_4")
-    v8 = F.lit(8) * F.col("v")
+    v8 = F.lit(8) * F.col("qv")
     out = j.groupBy("grp").agg(
         F.max("n").cast("long").alias("n"),
         F.max(F.col("q1_4").cast("double") / F.lit(4.0)).alias("q1"),

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.operators.basket import day_num, fixed_point, snap6
 from bigdata1_spark.sources.tables import load_table
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -882,10 +882,8 @@ def bollinger_bands(
     lower_band.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.to_date("ts"), F.to_date(F.lit("1970-01-01"))
-    ).cast("long")
-    x = F.round(F.col("value") * F.lit(100)).cast("long")
+    day = day_num("ts")
+    x = fixed_point(F.col("value"), 100)
     base = ev.select(
         "event_type", day.alias("day"), x.alias("x")
     ).filter(F.col("day").isNotNull() & F.col("x").isNotNull())
@@ -947,10 +945,8 @@ def rsi(
     Columns: event_type, day, delta_cents, n_deltas, rsi.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.to_date("ts"), F.to_date(F.lit("1970-01-01"))
-    ).cast("long")
-    x = F.round(F.col("value") * F.lit(100)).cast("long")
+    day = day_num("ts")
+    x = fixed_point(F.col("value"), 100)
     daily = (
         ev.select("event_type", day.alias("day"), x.alias("x"))
         .filter(F.col("day").isNotNull() & F.col("x").isNotNull())
@@ -1008,10 +1004,8 @@ def drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_drawdown.
     """
     ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.to_date("ts"), F.to_date(F.lit("1970-01-01"))
-    ).cast("long")
-    x = F.round(F.col("value") * F.lit(100)).cast("long")
+    day = day_num("ts")
+    x = fixed_point(F.col("value"), 100)
     daily = (
         ev.select("event_type", day.alias("day"), x.alias("x"))
         .filter(F.col("day").isNotNull() & F.col("x").isNotNull())

@@ -9,7 +9,7 @@ One shared session; data round-trips via createDataFrame.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 import pyspark.sql.functions as F
@@ -212,3 +212,63 @@ def test_dedup_jaccard_matches_brute_force(spark, sf_dir, t, sets):
         if union and common / union >= t:
             want.add((i, j, common / union))
     assert got == want
+
+
+# (group, value) rows for the shared rank helpers in operators/stats.py:
+# few distinct values (ties are common), groups of every small size and
+# a NULL group key. Values are small integers held as doubles, so every
+# median (lo + hi)/2 is exact in both the helper and the reference.
+GROUP_ROWS = st.lists(
+    st.tuples(st.sampled_from(["a", "b", None]), st.integers(-3, 3)),
+    min_size=1,
+    max_size=20,
+)
+RANK_SETTINGS = settings(SETTINGS, max_examples=12)
+
+
+@given(rows=GROUP_ROWS)
+@example(rows=[("a", 1), ("b", 2), ("b", 2), ("b", 5), (None, 3), (None, 4)])
+@example(rows=[(None, 0)])
+@RANK_SETTINGS
+def test_middle_median_matches_statistics_median(spark, rows):
+    """``middle_median`` equals ``statistics.median`` per group, with the
+    group size as ``{out}_n`` — one-row, odd and even groups, ties, and
+    the NULL group as a group of its own."""
+    from statistics import median
+
+    from bigdata1_spark.operators.stats import middle_median
+
+    df = spark.createDataFrame(
+        [(g, float(v)) for g, v in rows], "g string, v double"
+    )
+    got = {
+        r["g"]: (r["med_n"], r["med"])
+        for r in middle_median(df, "g", "v", "med").collect()
+    }
+    groups: dict = {}
+    for g, v in rows:
+        groups.setdefault(g, []).append(v)
+    assert got == {g: (len(vs), median(vs)) for g, vs in groups.items()}
+
+
+@given(vals=st.lists(st.integers(-3, 3), min_size=1, max_size=20))
+@example(vals=[7])
+@example(vals=[1, 1, 2, 3, 3, 3])
+@RANK_SETTINGS
+def test_doubled_rank_is_twice_the_average_rank(spark, vals):
+    """``doubled_rank`` over a (value, frequency) marginal equals twice
+    the tie-averaged rank of each value, ranked row by row in Python."""
+    from bigdata1_spark.operators.stats import doubled_rank
+
+    marg = (
+        spark.createDataFrame([(v,) for v in vals], "v long")
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("mf"))
+    )
+    ranked = marg.select("v", doubled_rank("v").alias("dr"))
+    got = {r["v"]: r["dr"] for r in ranked.collect()}
+    ranks: dict = {}
+    for i, v in enumerate(sorted(vals), 1):
+        ranks.setdefault(v, []).append(i)
+    assert got == {v: 2 * sum(r) // len(r) for v, r in ranks.items()}
+    assert all(2 * sum(r) % len(r) == 0 for r in ranks.values())

@@ -404,6 +404,54 @@ def test_bench_ab_restore_undoes_loader(ab_loader):
     assert not any(m.startswith("bigdata1_spark_abref") for m in _sys.modules)
 
 
+def test_bench_ab_detail_banks_ref_runs_and_extra_keys(
+    monkeypatch, tmp_path, capsys
+):
+    """A BENCH_AB run banks every ref run per key beside the head's
+    samples, and ``speedup_vs_ref`` covers the EXTRA_BENCH keys as well
+    as registry keys; the stdout line keeps its fields. Runs ``_bench``
+    on a stand-in session, so no Spark job starts."""
+    import json
+    import types
+
+    import bench
+
+    class _Stub:  # the session, its reader, catalog and every frame
+        def __getattr__(self, name):
+            return self
+
+        def __call__(self, *args, **kwargs):
+            return self
+
+    def op(spark, sf_dir):
+        return _Stub()
+
+    monkeypatch.setattr(bench, "get_spark", lambda **kw: _Stub())
+    monkeypatch.setattr(bench, "_materialize", lambda df: None)
+    monkeypatch.setattr(bench, "registry", types.SimpleNamespace(
+        QUERIES={"reg_key": op}))
+    monkeypatch.setattr(bench, "EXTRA_BENCH", {"extra_key": op})
+    monkeypatch.setattr(bench, "_ab_function", lambda reg, key: op)
+    monkeypatch.setattr(bench, "RUNS", 3)
+    monkeypatch.delenv("BENCH_ONLY", raising=False)
+    detail_path = tmp_path / "detail.json"
+    monkeypatch.setenv("BENCH_DETAIL_PATH", str(detail_path))
+
+    bench._bench("REF", object())
+
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(out) == {"metric", "value", "unit", "queries", "n_queries",
+                        "queries_full", "sf", "extra"}
+    detail = json.loads(detail_path.read_text())
+    ab = detail["ab"]
+    assert ab["ref"] == "REF"
+    for key in ("reg_key", "extra_key"):
+        assert len(ab["ref_samples"][key]) == 3
+        assert len(detail["samples"][key]) == 3
+        assert ab["ref_queries"][key] == min(ab["ref_samples"][key])
+    assert set(ab["speedup_vs_ref"]) == {"reg_key", "extra_key"}
+
+
 @pytest.mark.parametrize("phys_gib, want", [(8, "4096m"), (64, "16g")])
 def test_driver_memory_follows_host(monkeypatch, phys_gib, want):
     """The default driver heap is half of physical memory, capped at
