@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.functions.textfns import py_tokens
 from bigdata1_spark.sources.tables import load_table
 
 
@@ -432,17 +433,10 @@ def udtf_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def eval(self, text, n):
-            import re
-
-            # ASCII \s+ ONLY (re.ASCII), matching the engines' repo-wide
-            # tokens() contract: bare str.split() breaks on UNICODE
-            # whitespace (NBSP, U+3000) that Java/RE2 \s does not —
-            # found by the .unicodedata sweep
-            words = [
-                w
-                for w in re.split(r"\s+", text or "", flags=re.ASCII)
-                if w
-            ]
+            # the engines' tokens() contract: bare str.split() breaks on
+            # UNICODE whitespace (NBSP, U+3000) that neither engine
+            # splits on — found by the .unicodedata sweep
+            words = py_tokens(text)
             head = [
                 words[i] if i < len(words) else None for i in range(n)
             ]

@@ -34,6 +34,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -68,6 +70,31 @@ def snap6(col: Column) -> Column:
     still lands on one grid value and hashes equal.
     """
     return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+
+
+def fold_sum(arr: Column, term: Callable[[Column], Column]) -> Column:
+    """The repo-wide ordered float fold: Σ term(x) over ``arr``, added
+    left to right from an explicit 0.0. A double sum's bits depend on
+    its order, so every per-row float sum an oracle must reproduce is
+    this fold over an ``array_sort``-ed array — DuckDB's
+    ``list_reduce(list_prepend(0.0, …), (a, t) -> a + t)`` then adds the
+    same doubles in the same order.
+    """
+    return F.aggregate(
+        F.transform(arr, term), F.lit(0.0), lambda acc, t: acc + t
+    )
+
+
+# The repo-wide NULL-class sentinel: a NULL group label (lang, source,
+# event_type) becomes a real class under this name, so joins and ``<``
+# pair filters on the label never meet a SQL NULL (NULL = NULL is false
+# in both engines; the row would silently drop out).
+NULL_CLASS = "<null>"
+
+
+def or_null_class(col: Column) -> Column:
+    """``col``, with NULL replaced by :data:`NULL_CLASS`."""
+    return F.coalesce(col, F.lit(NULL_CLASS))
 
 
 def fixed_point(col: Column, scale: int = 1) -> Column:

@@ -15,14 +15,19 @@ document CONTENT (never random()), so both engines agree bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata1_spark.functions.hashing import let
-from bigdata1_spark.functions.textfns import tokens
-from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.functions.textfns import (
+    ngrams,
+    shingles_or_null,
+    tokens,
+    word_shingles,
+)
+from bigdata1_spark.operators.basket import fold_sum, or_null_class, snap6
 from bigdata1_spark.operators.stats import pearson_terms
-from bigdata1_spark.operators.text_analysis import split_bucket
+from bigdata1_spark.operators.text_analysis import split_bucket, token_counts
 from bigdata1_spark.sources.tables import load_table
 
 # Gopher-style repetition gates (Rae et al. 2021 use 0.3 / 0.2 families
@@ -48,32 +53,6 @@ MIXTURE_LIMITS: dict[str, int] = {
 }
 
 
-def _seq_bigrams(toks: Column) -> Column:
-    """Sequential (non-distinct) word bigrams — repetition needs every
-    occurrence, unlike the deduped shingles minhash uses. Follows the
-    word_shingles convention: a doc shorter than 2 tokens yields one
-    whole-doc gram (greatest(…,1) also avoids sequence(1,0), which
-    Spark would iterate DOWNWARD).
-
-    ``toks`` is let-bound (the word_shingles discipline): the lambda
-    references it 2×/element outside codegen CSE, so a computed
-    argument like ``tokens(text)`` would otherwise re-run its regex
-    split per reference — O(words²) splits/doc (measured 61 s → 2 s on
-    dsir_sample's sf1 explode)."""
-    from bigdata1_spark.functions.hashing import let
-
-    def body(tk: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.size(tk) - 1, F.lit(1)))
-        return F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", F.get(tk, i - 1), F.get(tk, i)
-            ),
-        )
-
-    return let(toks, body)
-
-
 def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc repetition signals: duplicate-word fraction, top-word
     fraction, duplicate-bigram fraction, and the boolean gate.
@@ -95,9 +74,7 @@ def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", tokens(F.col("text")).alias("toks")
     )
     word_stats = (
-        docs.select("doc_id", F.explode("toks").alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        token_counts(docs, "doc_id", toks=F.col("toks"))
         .groupBy("doc_id")
         .agg(
             F.sum("cnt").cast("long").alias("n_tokens"),
@@ -108,7 +85,7 @@ def repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One let-bound evaluation of the bigram array feeds both sizes
     # (unbound, the HOF expression tree is duplicated per reference).
     bg_stats = let(
-        _seq_bigrams(F.col("toks")),
+        ngrams(F.col("toks"), 2),
         lambda bg: F.struct(
             F.size(bg).cast("long").alias("n_bigrams"),
             F.size(F.array_distinct(bg)).cast("long")
@@ -165,26 +142,14 @@ def contamination_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # no spread: the key's 4-exchange plan budget is a pinned contract
     docs = load_table(spark, sf_dir, "documents")
-    # let-bind the token array: _ngrams_n references it CONTAM_N times
-    # per gram position inside a transform lambda, and HOF lambdas sit
-    # outside codegen CSE — unbound, every F.get would re-split the
-    # text (measured 8× on this key at sf0.1).
-    grams_of = lambda c: let(  # noqa: E731
-        tokens(c),
-        lambda tk: F.array_distinct(_ngrams_n(tk, CONTAM_N)),
-    )
-    # NULL text → ONE NULL gram (the oracle's own degenerate form:
-    # array_to_string over a NULL slice). A NULL gram joins with
-    # nothing on either side, so a NULL doc is counted (n_grams 1) but
-    # can never be contaminated — unpinned, concat_ws flattened it to
-    # the EMPTY-string gram, which matched the empty grams of NULL
-    # bench docs and quarantined every NULL doc (.nulldata sweep).
-    grams_or_null = lambda c: F.when(  # noqa: E731
-        c.isNotNull(), grams_of(c)
-    ).otherwise(F.array(F.lit(None).cast("string")))
+    # NULL text → ONE NULL gram (shingles_or_null). A NULL gram joins
+    # with nothing on either side, so a NULL doc is counted (n_grams 1)
+    # but can never be contaminated — the empty-string gram matched the
+    # empty grams of NULL bench docs and quarantined every NULL doc.
+    grams = shingles_or_null(F.col("text"), CONTAM_N)
     bench_grams = (
         docs.filter(F.col("source") == "src0")
-        .select(F.explode(grams_or_null(F.col("text"))).alias("gram"))
+        .select(F.explode(grams).alias("gram"))
         .distinct()
         .withColumn("hit", F.lit(1).cast("long"))
     )
@@ -192,7 +157,7 @@ def contamination_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("source") != "src0")
         .select(
             "doc_id",
-            F.explode(grams_or_null(F.col("text"))).alias("gram"),
+            F.explode(grams).alias("gram"),
         )
     )
     per_doc = (
@@ -211,27 +176,6 @@ def contamination_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         frac.alias("overlap_frac"),
         (frac >= CONTAM_MIN_OVERLAP).cast("long").alias("contaminated"),
     )
-
-
-def _ngrams_n(toks: Column, n: int) -> Column:
-    """Sequential word n-grams; docs shorter than n yield one whole-doc
-    gram (the word_shingles convention — F.get is NULL-safe past the
-    end and concat_ws drops NULLs, so the gram just comes out short).
-    ``toks`` is let-bound (see _seq_bigrams) — n references/element."""
-    from bigdata1_spark.functions.hashing import let
-
-    def body(tk: Column) -> Column:
-        idx = F.sequence(
-            F.lit(1), F.greatest(F.size(tk) - (n - 1), F.lit(1))
-        )
-        return F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.get(tk, i + j - 1) for j in range(n)]
-            ),
-        )
-
-    return let(toks, body)
 
 
 def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -614,16 +558,16 @@ def dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "lang", "text"
     ).filter(F.col("text").isNotNull())
-    # materialize the token array in its own projection before the
-    # bigram transform (the winnow_fingerprint lesson): inlined,
-    # _seq_bigrams' F.get calls sit outside codegen CSE and re-run the
-    # regex split per element — O(words²) splits per doc, measured 61 s
-    # for the sf1 explode vs ~2 s materialized.
+    # the token array gets its own projection before the bigram
+    # transform (the winnow_fingerprint lesson, on top of ngrams' own
+    # let-binding): ngrams' F.get calls sit outside codegen CSE, and an
+    # inlined split re-ran per element — O(words²) splits per doc,
+    # measured 61 s for the sf1 explode vs ~2 s materialized.
     tk = docs.select("doc_id", "lang", tokens(F.col("text")).alias("w"))
     bg = tk.select(
         "doc_id",
         "lang",
-        F.explode(_seq_bigrams(F.col("w"))).alias("gram"),
+        F.explode(ngrams(F.col("w"), 2)).alias("gram"),
     ).select(
         "doc_id",
         "lang",
@@ -696,11 +640,9 @@ def dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ts"),
         )
     )
-    w = F.aggregate(
-        F.transform(F.col("ts"), lambda x: x["term"]),
-        F.lit(0.0),
-        lambda a, t: a + t,
-    ) / F.col("n_grams").cast("double")
+    w = fold_sum(F.col("ts"), lambda x: x["term"]) / F.col("n_grams").cast(
+        "double"
+    )
     wr = snap6(w)
     return per_doc.select(
         "doc_id",
@@ -742,7 +684,7 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = tk.select(
         "doc_id",
         "n_toks",
-        F.posexplode(_ngrams_n(F.col("w"), SPAN_N)).alias("p0", "gram"),
+        F.posexplode(ngrams(F.col("w"), SPAN_N)).alias("p0", "gram"),
     ).select(
         "doc_id",
         "n_toks",
@@ -861,14 +803,14 @@ def winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").isNotNull()
     )
     # materialize the token array in its own projection before the
-    # gram transform: _ngrams_n reads it WINNOW_K+1 times per position
+    # gram transform: ngrams reads it WINNOW_K+1 times per position
     # inside HOF lambdas, which sit outside codegen CSE — inlined, the
     # regex split re-runs per F.get (measured ~7x on this key at sf0.1)
     g = docs.select(
         "doc_id", tokens(F.col("text")).alias("w")
     ).select(
         "doc_id",
-        F.posexplode(_ngrams_n(F.col("w"), WINNOW_K)).alias("p0", "gram"),
+        F.posexplode(ngrams(F.col("w"), WINNOW_K)).alias("p0", "gram"),
     ).select(
         "doc_id",
         (F.col("p0") + 1).alias("pos"),
@@ -927,8 +869,6 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny docs present). novelty = n_novel/n_grams is the single
     IEEE division. Columns: doc_id, n_grams, n_novel, novelty.
     """
-    from bigdata1_spark.functions.textfns import word_shingles
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     grams = (
         docs.filter(F.col("text").isNotNull())
@@ -996,21 +936,16 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents")
-    wc = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    top = wc.orderBy(F.desc("c"), F.asc("word")).limit(ZIPF_TOP)
+    wc = token_counts(load_table(spark, sf_dir, "documents"))
+    top = wc.orderBy(F.desc("cnt"), F.asc("word")).limit(ZIPF_TOP)
     ranked = top.select(
-        "c",
+        "cnt",
         F.row_number()
-        .over(Window.orderBy(F.desc("c"), F.asc("word")))
+        .over(Window.orderBy(F.desc("cnt"), F.asc("word")))
         .alias("rnk"),
     )
     lx = F.floor(F.log(F.col("rnk").cast("double")) * F.lit(1e6) + F.lit(0.5))
-    ly = F.floor(F.log(F.col("c").cast("double")) * F.lit(1e6) + F.lit(0.5))
+    ly = F.floor(F.log(F.col("cnt").cast("double")) * F.lit(1e6) + F.lit(0.5))
     snapped = ranked.select(
         lx.cast("decimal(19,0)").alias("lx"),
         ly.cast("decimal(19,0)").alias("ly"),
@@ -1062,7 +997,7 @@ def source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     st = (
         docs.select(
-            F.coalesce(F.col("source"), F.lit("<null>")).alias("src"),
+            or_null_class(F.col("source")).alias("src"),
             F.explode(tokens(F.col("text"))).alias("word"),
         )
         .distinct()

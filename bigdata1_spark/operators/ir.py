@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from bigdata1_spark.functions.textfns import tokens
 from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.operators.text_analysis import token_counts
 from bigdata1_spark.sources.tables import load_table
 
 # BM25 constants; keep literals (never arithmetic like k1+1 — building
@@ -69,16 +70,13 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     Columns: doc_id, term, tf, score.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
-    )
     # tf fans out into the df model and the score join (the
     # unigram_logprob lineage class) — cache the per-(doc, term) counts
     # so the corpus is tokenized once, not three times. n_docs stays a
     # separate count-only scan: deriving it from tf would drop docs
     # that tokenize to zero terms.
-    tf = words.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).alias("tf")
+    tf = token_counts(docs, "doc_id").select(
+        "doc_id", F.col("word").alias("term"), F.col("cnt").alias("tf")
     ).cache()
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -209,14 +207,9 @@ def cooccur_pmi(spark: SparkSession, sf_dir: str, top_n: int = 50,
     bigrams = (
         pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("b")).cache()
     )
-    uni = (
-        docs.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("u"))
-        .cache()
-    )
+    uni = token_counts(docs, toks=F.col("toks")).cache()
     totals = bigrams.agg(F.sum("b").alias("tb")).crossJoin(
-        uni.agg(F.sum("u").alias("t"))
+        uni.agg(F.sum("cnt").alias("t"))
     )
     rb = F.col("b").cast("double") / F.col("tb").cast("double")
     r1 = F.col("u1").cast("double") / F.col("t").cast("double")
@@ -224,10 +217,10 @@ def cooccur_pmi(spark: SparkSession, sf_dir: str, top_n: int = 50,
     ratio = rb / (r1 * r2)
     scored = (
         bigrams.filter(F.col("b") >= min_pairs)
-        .join(uni.select(F.col("w").alias("w1"), F.col("u").alias("u1")),
-              "w1")
-        .join(uni.select(F.col("w").alias("w2"), F.col("u").alias("u2")),
-              "w2")
+        .join(uni.select(F.col("word").alias("w1"),
+                         F.col("cnt").alias("u1")), "w1")
+        .join(uni.select(F.col("word").alias("w2"),
+                         F.col("cnt").alias("u2")), "w2")
         .crossJoin(F.broadcast(totals))
         .withColumn("ratio", ratio)
     )

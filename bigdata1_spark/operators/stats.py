@@ -41,7 +41,13 @@ from itertools import combinations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import day_num, fixed_point, snap6
+from bigdata1_spark.operators.basket import (
+    day_num,
+    fixed_point,
+    fold_sum,
+    or_null_class,
+    snap6,
+)
 from bigdata1_spark.sources.tables import load_table
 
 
@@ -1216,12 +1222,6 @@ def pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # output row (mirrored verbatim in the oracle), floor-rounded 1e-6.
 # ---------------------------------------------------------------------------
 
-# Sentinel group label for NULL event_type (the naive_bayes NB_NULL_CLASS
-# convention): the pairwise self-join below compares group labels with <,
-# and a SQL-NULL key would silently drop its row from every pair.
-TTEST_NULL_GROUP = "<null>"
-
-
 def welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Welch two-sample t-test of ``events.value`` between every
     pair of event types — the unequal-variance A/B primitive (metric
@@ -1247,9 +1247,9 @@ def welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("x").cast("decimal(19,0)")
     g = (
         ev.select(
-            F.coalesce(F.col("event_type"), F.lit(TTEST_NULL_GROUP)).alias(
-                "grp"
-            ),
+            # NULL event_type is a real group (NULL_CLASS): the pair
+            # self-join compares labels with <, which drops a NULL key
+            or_null_class(F.col("event_type")).alias("grp"),
             x.alias("x"),
         )
         .filter(F.col("x").isNotNull())
@@ -1318,8 +1318,8 @@ def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: n_langs, n_sources, n_total, chi2, cramers_v.
     """
     _, term = _chi2_cell()
-    kl = F.coalesce(F.col("lang"), F.lit("<null>"))
-    ks = F.coalesce(F.col("source"), F.lit("<null>"))
+    kl = or_null_class(F.col("lang"))
+    ks = or_null_class(F.col("source"))
     pre = _contingency(spark, sf_dir).select(
         kl.alias("kl"),
         ks.alias("ks"),
@@ -1334,11 +1334,7 @@ def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list(F.struct("kl", "ks", "term"))
         ).alias("ts"),
     )
-    chi2 = F.aggregate(
-        F.transform(F.col("ts"), lambda x: x["term"]),
-        F.lit(0.0),
-        lambda a, t: a + t,
-    )
+    chi2 = fold_sum(F.col("ts"), lambda x: x["term"])
     denom = F.col("n_total").cast("double") * (
         F.least("n_langs", "n_sources").cast("double") - F.lit(1.0)
     )

@@ -17,13 +17,37 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from bigdata1_spark.functions.hashing import let
-from bigdata1_spark.functions.textfns import LANG_MARKERS, STOPWORDS, tokens
-from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.functions.textfns import (
+    LANG_MARKERS,
+    STOPWORDS,
+    ngrams,
+    shingles_or_null,
+    tokens,
+)
+from bigdata1_spark.operators.basket import fold_sum, or_null_class, snap6
 from bigdata1_spark.sources.tables import load_table
 
 
 def _toks(col: str = "text") -> Column:
     return tokens(F.col(col))
+
+
+def token_counts(
+    docs: DataFrame, *keys: str, toks: Column | None = None
+) -> DataFrame:
+    """(keys…, word, cnt): how often each token occurs per key tuple —
+    the one explode → groupBy → count under the token statistics of the
+    documents keys. ``toks`` defaults to the tokens of ``text`` (pass a
+    gram array to count grams). The count partial-aggregates map-side,
+    so its shuffle carries one row per DISTINCT (keys…, word), never one
+    per occurrence: per-doc keys give per-doc vocabularies, no keys the
+    corpus vocabulary."""
+    return (
+        docs.select(*keys, F.explode(_toks() if toks is None else toks)
+                    .alias("word"))
+        .groupBy(*keys, "word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
 
 
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,21 +202,10 @@ def quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # non-distinct word bigrams (word_shingles dedupes — repetition
     # counting must NOT); short docs yield one whole-doc bigram so the
     # ratio denominator is never 0
-    def bigrams(t: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.size(t) - 1, F.lit(1)))
-        return F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", F.get(t, i - 1), F.get(t, i)
-            ),
-        )
-
     top = (
-        docs.select("doc_id", F.explode(let(_toks(), bigrams)).alias("bg"))
-        .groupBy("doc_id", "bg")
-        .agg(F.count(F.lit(1)).alias("c"))
+        token_counts(docs, "doc_id", toks=ngrams(_toks(), 2))
         .groupBy("doc_id")
-        .agg(F.max("c").alias("top_c"))
+        .agg(F.max("cnt").alias("top_c"))
     )
     joined = stats.join(top, "doc_id")
     rep = F.col("top_c").cast("double") / F.col("n_bigrams").cast("double")
@@ -428,28 +441,14 @@ def ngram_freq(spark: SparkSession, sf_dir: str, top_n: int = 50) -> DataFrame:
     tie-break — vocabulary/phrase statistics over the documents table
     (explode → count → ordered limit; the count shuffle carries one row
     per distinct bigram thanks to map-side partial aggregation)."""
-    from bigdata1_spark.functions.textfns import tokens, word_shingles
-
     docs = load_table(spark, sf_dir, "documents")
-    # NULL text → ONE NULL bigram (the oracle's degenerate form): the
-    # whole-doc-shingle convention otherwise flattens it to the
-    # empty-string bigram via concat_ws, splitting one group into two
-    # across the engines (caught by the 30%-rate null stress twin).
-    # NULLS LAST pinned on the tie-break for the same reason as
-    # user_paths.
-    grams = docs.select(
-        F.explode(
-            F.when(
-                F.col("text").isNotNull(),
-                word_shingles(tokens(F.col("text")), 2),
-            ).otherwise(F.array(F.lit(None).cast("string")))
-        ).alias("bigram")
-    )
+    # NULL text → ONE NULL bigram (shingles_or_null); NULLS LAST pinned
+    # on the tie-break for the same reason as user_paths.
     return (
-        grams.groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.desc("freq"), F.asc_nulls_last("bigram"))
+        token_counts(docs, toks=shingles_or_null(F.col("text"), 2))
+        .orderBy(F.desc("cnt"), F.asc_nulls_last("word"))
         .limit(top_n)
+        .select(F.col("word").alias("bigram"), F.col("cnt").alias("freq"))
     )
 
 
@@ -471,25 +470,16 @@ def doc_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream); the per-doc array is bounded by doc vocabulary size.
     Columns: doc_id, n_tokens, entropy.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    wc = (
-        docs.select("doc_id", F.explode(_toks()).alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    wc = token_counts(load_table(spark, sf_dir, "documents"), "doc_id")
     per_doc = wc.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_tokens"),
         F.array_sort(F.collect_list(F.struct("word", "cnt"))).alias("wcs"),
     )
     ld = F.col("n_tokens").cast("double")
-    h = F.aggregate(
-        F.transform(
-            F.col("wcs"),
-            lambda x: (x["cnt"].cast("double") / ld)
-            * F.log(x["cnt"].cast("double") / ld),
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
+    h = fold_sum(
+        F.col("wcs"),
+        lambda x: (x["cnt"].cast("double") / ld)
+        * F.log(x["cnt"].cast("double") / ld),
     )
     return per_doc.select(
         "doc_id",
@@ -574,20 +564,13 @@ def heavy_hitters(
     vocabulary doesn't fit, and ``approx_sketch`` covers that posture.
     Columns: token, cnt, frac.
     """
-    from bigdata1_spark.functions.textfns import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    counts = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    counts = token_counts(load_table(spark, sf_dir, "documents"))
     total = counts.agg(F.sum("cnt").alias("total"))
     return (
         counts.crossJoin(F.broadcast(total))
         .filter(F.col("cnt") * k >= F.col("total"))
         .select(
-            "token",
+            F.col("word").alias("token"),
             "cnt",
             (F.col("cnt").cast("double") / F.col("total").cast("double"))
             .alias("frac"),
@@ -612,30 +595,16 @@ def bpe_pair_counts(
     training is feasible on web-scale corpora at all. Deterministic
     top-N tie-break on the pair string. Columns: pair, freq.
     """
-    from bigdata1_spark.functions.textfns import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-        .filter(F.length("word") >= 2)
-    )
-    pairs = words.select(
+    pairs = _bpe_words(spark, sf_dir).select(
         F.explode(
             F.transform(
                 F.sequence(F.lit(1), F.length("word") - 1),
                 lambda i: F.substring(F.col("word"), i, F.lit(2)),
             )
         ).alias("pair"),
-        "wcnt",
+        "cnt",
     )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.sum("wcnt").alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("pair"))
-        .limit(top_n)
-    )
+    return _top_pairs(pairs, top_n)
 
 
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,6 +650,61 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(word, cnt): the word table every BPE key trains on — each corpus
+    word of ≥ 2 characters (a 1-char word has no pair) with its count.
+    The corpus is touched once; everything after is vocabulary-scale."""
+    return token_counts(load_table(spark, sf_dir, "documents")).filter(
+        F.length("word") >= 2
+    )
+
+
+def _bpe_spaced(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(w, cnt): each BPE word as the space-separated string of its
+    characters — the symbol string a merge rewrites. Checkpointed
+    (lazily): a merge round's argmax and its rewrite both read it."""
+    return _bpe_words(spark, sf_dir).select(
+        F.array_join(
+            F.transform(
+                F.sequence(F.lit(1), F.length("word")),
+                lambda i: F.substring(F.col("word"), i, F.lit(1)),
+            ),
+            " ",
+        ).alias("w"),
+        "cnt",
+    ).localCheckpoint(eager=False)
+
+
+def _top_pairs(pairs: DataFrame, n: int, *keys: str) -> DataFrame:
+    """(keys…, pair, freq): the ``n`` most frequent pairs of a (keys…,
+    pair, cnt) frame, frequency weighted by word count, pair ASC on
+    ties — a total order, so the top-N (and a merge's argmax) is
+    deterministic."""
+    return (
+        pairs.groupBy(*keys, "pair")
+        .agg(F.sum("cnt").alias("freq"))
+        .orderBy(F.desc("freq"), F.asc("pair"))
+        .limit(n)
+    )
+
+
+def _sym_pair_freq(words: DataFrame, n: int, *keys: str) -> DataFrame:
+    """``_top_pairs`` over the adjacent symbol pairs of a (keys…, w,
+    cnt) spaced-word frame."""
+    return _top_pairs(
+        words.select(*keys, _sym_pairs(F.col("w")).alias("pair"), "cnt"),
+        n,
+        *keys,
+    )
+
+
+def _argmax_pair(words: DataFrame, alias: str) -> DataFrame:
+    """The 1-row frame (alias): the pair a merge step picks — the most
+    frequent adjacent symbol pair of ``words``. Callers broadcast-join
+    it; it is never collected to the driver."""
+    return _sym_pair_freq(words, 1).select(F.col("pair").alias(alias))
+
+
 def _sym_pairs(col):
     """Adjacent symbol pairs of a space-separated symbol string, as an
     exploded column. A word can collapse to ONE symbol post-merge (e.g.
@@ -704,8 +728,11 @@ def _sym_pairs(col):
     )
 
 
-# U+001F (unit separator): guaranteed absent from whitespace-split
-# corpus tokens, unlike any printable character (ADVICE r8).
+# U+001F (unit separator). It is NOT whitespace in either engine, so
+# it can survive tokenization ('c\x1fd' is one token); the merge
+# encoding stays unambiguous only while no corpus word carries it. The
+# generators emit no C0 control, whereas printable punctuation such as
+# '|' is common in tokens (ADVICE r8).
 _BPE_DELIM = "\x1f"
 
 
@@ -722,8 +749,8 @@ def _apply_merge(w, pair):
     symbol boundaries, and adjacent matches do not fight over a shared
     delimiter ('.a..a..a.' with merge (a,a) → '.aa..a.', the greedy
     non-overlapping BPE scan). The delimiter is the C0 control char
-    U+001F (unit separator), which cannot survive tokenization into a
-    corpus word — a printable delimiter like '|' CAN (tokens are
+    U+001F (unit separator), which no generated corpus word contains —
+    a printable delimiter like '|' is common (tokens are
     whitespace-split, punctuation survives), and a symbol containing
     the delimiter makes the encoding ambiguous in a way BOTH engines
     mirror, so the parity gate could never catch it (ADVICE r8).
@@ -767,51 +794,19 @@ def bpe_merge_round(
     1-row argmax is a broadcast cross join, never a driver collect.
     Columns: merged_pair, pair, freq (top-N post-merge statistics).
     """
-    from bigdata1_spark.functions.textfns import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-        .filter(F.length("word") >= 2)
-    )
-    spaced = words.select(
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.substring(F.col("word"), i, F.lit(1)),
-            ),
-            " ",
-        ).alias("w"),
-        "wcnt",
-    )
-    # cache: both the argmax and the post-merge recount read it
-    spaced = spaced.localCheckpoint(eager=False)
-    sym_pairs = _sym_pairs
-    best = (
-        spaced.select(sym_pairs(F.col("w")).alias("pair"), "wcnt")
-        .groupBy("pair")
-        .agg(F.sum("wcnt").alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("pair"))
-        .limit(1)
-        .select(
-            F.col("pair").alias("mpair"),
-            F.replace(F.col("pair"), F.lit(" "), F.lit("")).alias("mtok"),
-        )
-    )
-    merged = spaced.crossJoin(F.broadcast(best)).select(
-        F.replace(F.col("w"), F.col("mpair"), F.col("mtok")).alias("w"),
-        "wcnt",
+    spaced = _bpe_spaced(spark, sf_dir)
+    mpair = F.col("mpair")
+    merged = spaced.crossJoin(
+        F.broadcast(_argmax_pair(spaced, "mpair"))
+    ).select(
         "mpair",
+        F.replace(
+            F.col("w"), mpair, F.replace(mpair, F.lit(" "), F.lit(""))
+        ).alias("w"),
+        "cnt",
     )
-    return (
-        merged.select("mpair", sym_pairs(F.col("w")).alias("pair"), "wcnt")
-        .groupBy("mpair", "pair")
-        .agg(F.sum("wcnt").alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("pair"))
-        .limit(top_n)
-        .select(F.col("mpair").alias("merged_pair"), "pair", "freq")
+    return _sym_pair_freq(merged, top_n, "mpair").select(
+        F.col("mpair").alias("merged_pair"), "pair", "freq"
     )
 
 
@@ -837,67 +832,28 @@ def bpe_merge_round2(
     Columns: merged_pair1, merged_pair2, pair, freq (top-N statistics
     after both merges).
     """
-    from bigdata1_spark.functions.textfns import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-        .filter(F.length("word") >= 2)
+    spaced = _bpe_spaced(spark, sf_dir)
+    merged1 = spaced.crossJoin(
+        F.broadcast(_argmax_pair(spaced, "mpair1"))
+    ).select(
+        "mpair1", _apply_merge(F.col("w"), F.col("mpair1")).alias("w"), "cnt"
     )
-    spaced = words.select(
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.substring(F.col("word"), i, F.lit(1)),
-            ),
-            " ",
-        ).alias("w"),
-        "wcnt",
-    ).localCheckpoint(eager=False)
-
-    def argmax_pair(df, alias):
-        return (
-            df.select(_sym_pairs(F.col("w")).alias("pair"), "wcnt")
-            .groupBy("pair")
-            .agg(F.sum("wcnt").alias("freq"))
-            .orderBy(F.desc("freq"), F.asc("pair"))
-            .limit(1)
-            .select(F.col("pair").alias(alias))
-        )
-
-    best1 = argmax_pair(spaced, "mpair1")
-    merged1 = spaced.crossJoin(F.broadcast(best1)).select(
-        _apply_merge(F.col("w"), F.col("mpair1")).alias("w"),
-        "wcnt",
-        "mpair1",
-    )
-    # round 2 recounts read merged1 twice (argmax + final stats):
-    # checkpoint so the chain is evaluated once, same discipline as
-    # round 1's `spaced`
+    # round 2 reads merged1 twice (argmax + rewrite): checkpoint so the
+    # chain is evaluated once, the discipline of _bpe_spaced
     merged1 = merged1.localCheckpoint(eager=False)
-    best2 = argmax_pair(merged1, "mpair2")
-    merged2 = merged1.crossJoin(F.broadcast(best2)).select(
+    merged2 = merged1.crossJoin(
+        F.broadcast(_argmax_pair(merged1, "mpair2"))
+    ).select(
         "mpair1",
         "mpair2",
         _apply_merge(F.col("w"), F.col("mpair2")).alias("w"),
-        "wcnt",
+        "cnt",
     )
-    return (
-        merged2.select(
-            "mpair1", "mpair2", _sym_pairs(F.col("w")).alias("pair"), "wcnt"
-        )
-        .groupBy("mpair1", "mpair2", "pair")
-        .agg(F.sum("wcnt").alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("pair"))
-        .limit(top_n)
-        .select(
-            F.col("mpair1").alias("merged_pair1"),
-            F.col("mpair2").alias("merged_pair2"),
-            "pair",
-            "freq",
-        )
+    return _sym_pair_freq(merged2, top_n, "mpair1", "mpair2").select(
+        F.col("mpair1").alias("merged_pair1"),
+        F.col("mpair2").alias("merged_pair2"),
+        "pair",
+        "freq",
     )
 
 
@@ -928,12 +884,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in dedup_jaccard. corpus_model itself fans out twice (tot, lp),
     # so it is cached too: vocabulary-sized, saves a second wc-wide
     # shuffle.
-    wc = (
-        docs.select("doc_id", F.explode(_toks()).alias("word"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .cache()
-    )
+    wc = token_counts(docs, "doc_id").cache()
     corpus_model = (
         wc.groupBy("word").agg(F.sum("cnt").alias("ccnt")).cache()
     )
@@ -965,18 +916,11 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ts"),
         )
     )
-    s = F.aggregate(
-        F.transform(F.col("ts"), lambda x: x["term"]),
-        F.lit(0.0),
-        lambda a, t: a + t,
-    )
-    lpt = s / F.col("n_tokens").cast("double")
+    lpt = fold_sum(F.col("ts"), lambda x: x["term"]) / F.col(
+        "n_tokens"
+    ).cast("double")
     return per_doc.select(
-        "doc_id",
-        "n_tokens",
-        snap6(lpt).alias(
-            "logprob_per_token"
-        ),
+        "doc_id", "n_tokens", snap6(lpt).alias("logprob_per_token")
     )
 
 
@@ -1051,12 +995,6 @@ def vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Sentinel class label for NULL lang: joins on the class column must
-# never carry SQL-NULL keys (NULL = NULL is false in both engines, so a
-# NULL class would silently lose its word counts in the model join).
-NB_NULL_CLASS = "<null>"
-
-
 def naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multinomial naive-Bayes language classifier, trained and applied
     in one declarative plan: fit ``P(lang)`` and Laplace-smoothed
@@ -1085,16 +1023,13 @@ def naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: actual_cls, predicted_cls, n_docs.
     """
     docs = load_table(spark, sf_dir, "documents")
-    cls = F.coalesce(F.col("lang"), F.lit(NB_NULL_CLASS))
-    base = (
-        docs.select("doc_id", cls.alias("actual_cls")).cache()
-    )
-    dwc = (
-        docs.select("doc_id", cls.alias("cls"), F.explode(_toks()).alias("word"))
-        .groupBy("doc_id", "cls", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .cache()
-    )
+    # NULL lang is a real class (NULL_CLASS): a NULL class key would
+    # silently lose its word counts in the model join
+    cls = or_null_class(F.col("lang"))
+    base = docs.select("doc_id", cls.alias("actual_cls")).cache()
+    dwc = token_counts(
+        docs.select("doc_id", cls.alias("cls"), "text"), "doc_id", "cls"
+    ).cache()
     cw = dwc.groupBy("cls", "word").agg(F.sum("cnt").alias("c"))
     ntok = dwc.groupBy("cls").agg(F.sum("cnt").alias("ntok"))
     vocab = dwc.select("word").distinct()
@@ -1151,11 +1086,7 @@ def naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "cand_cls",
-            F.aggregate(
-                F.transform(F.col("ts"), lambda x: x["term"]),
-                F.lit(0.0),
-                lambda a, t: a + t,
-            ).alias("s"),
+            fold_sum(F.col("ts"), lambda x: x["term"]).alias("s"),
         )
     )
     scored = (
@@ -1203,6 +1134,41 @@ def naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("n_docs"))
 
 
+def _source_vocab_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, word, csw, ns, cw, n): the source × vocabulary grid under
+    the per-source token statistics — every (source, word) pair with
+    its count csw (0 where the source never uses the word), the
+    source's token total ns, the word's corpus count cw and the corpus
+    total n. NULL source is a real slice (NULL_CLASS).
+
+    ONE scan builds the (source, word) count table; it is cached
+    because it fans into the per-source totals, the global word counts
+    AND the grid (the dsir_sample multi-consumer-lineage lesson). The
+    grid is sources × vocabulary — vocabulary-scale, never corpus-scale
+    (the naive_bayes posture). Sources with zero tokens never appear.
+    """
+    docs = load_table(spark, sf_dir, "documents").select(
+        or_null_class(F.col("source")).alias("src"), "text"
+    )
+    sw = token_counts(docs, "src").cache()
+    tot_s = sw.groupBy("src").agg(F.sum("cnt").alias("ns"))
+    wglob = sw.groupBy("word").agg(F.sum("cnt").alias("cw"))
+    tot = wglob.agg(F.sum("cw").alias("n"))
+    return (
+        tot_s.crossJoin(wglob)
+        .join(sw, ["src", "word"], "left")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "src",
+            "word",
+            F.coalesce(F.col("cnt"), F.lit(0)).alias("csw"),
+            "ns",
+            "cw",
+            "n",
+        )
+    )
+
+
 def token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL and Jensen–Shannon divergence of each source's unigram token
     distribution against the whole-corpus distribution — the mixture
@@ -1210,12 +1176,9 @@ def token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary drifts from the blend it feeds (the lexical sibling of
     ``psi_drift``'s numeric-feature drift).
 
-    ONE scan builds the (source, word) count table; it is cached
-    because it fans into the per-source totals, the global word
-    distribution, AND the divergence grid (the dsir_sample
-    multi-consumer-lineage lesson). The grid is sources × vocabulary —
-    vocabulary-scale, never corpus-scale (the naive_bayes posture).
-    Per cell: p = c_sw/t_s, q = c_w/t (q > 0 for every vocab word by
+    Built on :func:`_source_vocab_grid` (one scan, sources ×
+    vocabulary). Per cell: p = c_sw/n_s, q = c_w/n (q > 0 for every
+    vocab word by
     construction, so KL(source ‖ corpus) needs no smoothing);
     KL term p·ln(p/q) for p > 0; JS terms ½·p·ln(p/m) + ½·q·ln(q/m)
     with m = (p+q)/2 over the FULL vocabulary (p = 0 cells still carry
@@ -1227,28 +1190,9 @@ def token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL source is a real slice via the ``<null>`` sentinel.
     Columns: source, n_tokens, kl_div, js_div (1e-6 floor-rounded).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    sw = (
-        docs.select(
-            F.coalesce(F.col("source"), F.lit("<null>")).alias("src"),
-            F.explode(_toks()).alias("word"),
-        )
-        .groupBy("src", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .cache()
-    )
-    tot_s = sw.groupBy("src").agg(F.sum("c").alias("ts"))
-    wglob = sw.groupBy("word").agg(F.sum("c").alias("cw"))
-    tot = wglob.agg(F.sum("cw").alias("t"))
-    grid = (
-        tot_s.crossJoin(wglob)
-        .join(sw, ["src", "word"], "left")
-        .crossJoin(F.broadcast(tot))
-    )
-    p = F.coalesce(F.col("c"), F.lit(0)).cast("double") / F.col("ts").cast(
-        "double"
-    )
-    q = F.col("cw").cast("double") / F.col("t").cast("double")
+    grid = _source_vocab_grid(spark, sf_dir)
+    p = F.col("csw").cast("double") / F.col("ns").cast("double")
+    q = F.col("cw").cast("double") / F.col("n").cast("double")
     m = (p + q) / F.lit(2.0)
     kl_term = F.when(p > 0, p * snap6(F.log(p / q))).otherwise(
         F.lit(0.0)
@@ -1262,26 +1206,21 @@ def token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = grid.select(
         "src",
         "word",
-        F.col("ts"),
+        "ns",
         kl_term.alias("klt"),
         js_term.alias("jst"),
     )
     agg = terms.groupBy("src").agg(
-        F.max("ts").cast("long").alias("n_tokens"),
+        F.max("ns").cast("long").alias("n_tokens"),
         F.array_sort(
             F.collect_list(F.struct("word", "klt", "jst"))
         ).alias("ts_arr"),
     )
-    fold = lambda field: F.aggregate(  # noqa: E731 — paired fold exprs
-        F.transform(F.col("ts_arr"), lambda x: x[field]),
-        F.lit(0.0),
-        lambda a, t: a + t,
-    )
     return agg.select(
         F.col("src").alias("source"),
         "n_tokens",
-        snap6(fold("klt")).alias("kl_div"),
-        snap6(fold("jst")).alias("js_div"),
+        snap6(fold_sum(F.col("ts_arr"), lambda x: x["klt"])).alias("kl_div"),
+        snap6(fold_sum(F.col("ts_arr"), lambda x: x["jst"])).alias("js_div"),
     )
 
 
@@ -1295,42 +1234,17 @@ def log_odds_words(
     boilerplate and topical drift before mixture weighting (the
     word-level companion of ``token_divergence``'s scalar distance).
 
-    ONE scan builds the cached (source, word) count table (fans into
-    totals and the grid); the scored grid is sources × vocabulary. All
-    counts are exact integers; each of the four ln/χ inputs is an
-    exact-integer-ratio double, each ln is snapped to the 1e-6 grid
+    Built on :func:`_source_vocab_grid` (one scan, sources ×
+    vocabulary). All counts are exact integers; each of the four ln/χ
+    inputs is an exact-integer-ratio double, each ln is snapped to the
+    1e-6 grid
     (the z RANKS rows — the ir.py ranking rule), and delta/var/z is
     one mirrored chain. Per source the top ``top_k`` by (z DESC, word
     ASC — total order) are kept. NULL source is a real slice; words
     seen only outside the slice never rank (their z is negative).
     Columns: source, word, n_sw, z_score, rnk.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    sw = (
-        docs.select(
-            F.coalesce(F.col("source"), F.lit("<null>")).alias("src"),
-            F.explode(_toks()).alias("word"),
-        )
-        .groupBy("src", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .cache()
-    )
-    tot_s = sw.groupBy("src").agg(F.sum("c").alias("ns"))
-    wglob = sw.groupBy("word").agg(F.sum("c").alias("cw"))
-    tot = wglob.agg(F.sum("cw").alias("n"))
-    grid = (
-        tot_s.crossJoin(wglob)
-        .join(sw, ["src", "word"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "src",
-            "word",
-            F.coalesce(F.col("c"), F.lit(0)).alias("csw"),
-            "ns",
-            "cw",
-            "n",
-        )
-    )
+    grid = _source_vocab_grid(spark, sf_dir)
     csw = F.col("csw").cast("double") + F.lit(0.5)
     nsw = (F.col("ns") - F.col("csw")).cast("double") + F.lit(0.5)
     crw = (F.col("cw") - F.col("csw")).cast("double") + F.lit(0.5)
@@ -1387,15 +1301,11 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
         lambda a, b: F.concat_ws(" ", a, b),
     )
-    dbc = (
-        docs.select("doc_id", F.explode(bigrams).alias("bg"))
-        .groupBy("doc_id", "bg")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .cache()
-    )
-    model = dbc.groupBy("bg").agg(F.sum("cnt").alias("cbg")).cache()
+    # (doc_id, word = bigram, cnt)
+    dbc = token_counts(docs, "doc_id", toks=bigrams).cache()
+    model = dbc.groupBy("word").agg(F.sum("cnt").alias("cbg")).cache()
     heads = model.groupBy(
-        F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1")
+        F.split_part(F.col("word"), F.lit(" "), F.lit(1)).alias("w1")
     ).agg(F.sum("cbg").alias("c1"))
     vocab = (
         docs.select(F.explode(_toks()).alias("w"))
@@ -1403,12 +1313,12 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lp = (
         model.withColumn(
-            "w1", F.split_part(F.col("bg"), F.lit(" "), F.lit(1))
+            "w1", F.split_part(F.col("word"), F.lit(" "), F.lit(1))
         )
         .join(F.broadcast(heads), "w1")
         .crossJoin(F.broadcast(vocab))
         .select(
-            "bg",
+            "word",
             snap6(
                 F.log(
                     (F.col("cbg") + 1).cast("double")
@@ -1418,14 +1328,14 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     per_doc = (
-        dbc.join(lp, "bg")
+        dbc.join(lp, "word")
         .groupBy("doc_id")
         .agg(
             F.sum("cnt").alias("n_bigrams"),
             F.array_sort(
                 F.collect_list(
                     F.struct(
-                        "bg",
+                        "word",
                         (F.col("cnt").cast("double") * F.col("lnp")).alias(
                             "term"
                         ),
@@ -1434,11 +1344,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ts"),
         )
     )
-    s = F.aggregate(
-        F.transform(F.col("ts"), lambda x: x["term"]),
-        F.lit(0.0),
-        lambda a, t: a + t,
-    )
+    s = fold_sum(F.col("ts"), lambda x: x["term"])
     return per_doc.select(
         "doc_id",
         F.col("n_bigrams").cast("long").alias("n_bigrams"),
@@ -1458,7 +1364,7 @@ def _lang_confusion_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps every downstream join NULL-free, where Spark and SQL equality
     semantics would otherwise quietly diverge."""
     truth = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.coalesce(F.col("lang"), F.lit("<null>")).alias("lang")
+        "doc_id", or_null_class(F.col("lang")).alias("lang")
     )
     pred = lang_id(spark, sf_dir).select("doc_id", "pred_lang")
     return (

@@ -15,6 +15,7 @@ from hypothesis import strategies as st
 import pyspark.sql.functions as F
 
 from bigdata1_spark.functions import hashing, textfns
+from bigdata1_spark.operators.basket import fold_sum
 
 WORD = st.text(
     alphabet=st.characters(whitelist_categories=("Ll", "Lu", "Nd")),
@@ -34,34 +35,57 @@ def _py_tokens(text: str) -> list[str]:
     return [t for t in __import__("re").split(r"\s+", text) if t]
 
 
+def _py_ngrams(toks: list[str], n: int) -> list[str]:
+    """Every n-gram in order; a doc shorter than n is one whole-doc
+    gram ('' for no tokens)."""
+    return [
+        " ".join(toks[i:i + n]) for i in range(max(len(toks) - (n - 1), 1))
+    ]
+
+
 def _py_shingles(toks: list[str], n: int = 3) -> list[str]:
-    if not toks:
-        return [""]
-    upper = max(len(toks) - (n - 1), 1)
-    out = []
-    for i in range(upper):
-        out.append(" ".join(toks[i:i + n]))
-    seen, uniq = set(), []
-    for s in out:
-        if s not in seen:
-            seen.add(s)
-            uniq.append(s)
-    return uniq
+    return list(dict.fromkeys(_py_ngrams(toks, n)))
+
+
+NGRAM_NS = (2, 3, 5)
 
 
 @given(docs=st.lists(DOC, min_size=1, max_size=8))
+# 0, 1, n-1 (for every n in NGRAM_NS) and many tokens, with repeats
+@example(docs=[[], ["a"], ["a", "b"], ["a", "b", "a", "b"],
+               ["x", "y", "x", "y", "x", "y", "z", "x", "y", "x", "y", "z"]])
 @SETTINGS
 def test_tokens_and_shingles_match_reference(spark, docs):
     texts = [" ".join(d) for d in docs]
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
+    toks = textfns.tokens(F.col("text"))
     rows = df.select(
-        textfns.tokens(F.col("text")).alias("toks"),
-        textfns.word_shingles(textfns.tokens(F.col("text")), 3).alias("sh"),
+        toks.alias("toks"),
+        textfns.word_shingles(toks, 3).alias("sh"),
+        *[textfns.ngrams(toks, n).alias(f"g{n}") for n in NGRAM_NS],
     ).collect()
     for text, row in zip(texts, rows):
         toks = _py_tokens(text)
         assert row["toks"] == toks
         assert row["sh"] == _py_shingles(toks)
+        for n in NGRAM_NS:
+            assert row[f"g{n}"] == _py_ngrams(toks, n), (n, toks)
+
+
+@given(xs=st.lists(st.floats(allow_nan=False, width=64), max_size=30))
+# order-sensitive: left to right from 0.0 these give 0.0 and 1.0, where
+# an exact sum gives 1.0 twice and a right-to-left fold 0.0 twice
+@example(xs=[1e16, 1.0, -1e16])
+@example(xs=[-1e16, 1e16, 1.0])
+@SETTINGS
+def test_fold_sum_is_the_left_fold(spark, xs):
+    """basket.fold_sum is bit-equal to Python's left fold from 0.0."""
+    df = spark.createDataFrame([(xs,)], "xs array<double>")
+    got = df.select(fold_sum(F.col("xs"), lambda x: x).alias("s")).first()["s"]
+    want = 0.0
+    for x in xs:
+        want += x
+    assert got.hex() == want.hex(), (xs, got, want)
 
 
 @given(docs=st.lists(st.lists(WORD, min_size=1, max_size=25), min_size=2,

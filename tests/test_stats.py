@@ -155,10 +155,8 @@ def test_naive_bayes_matches_pure_python(spark, duck, sf_dir):
     import math
     import re as _re
 
-    from bigdata1_spark.operators.text_analysis import (
-        NB_NULL_CLASS,
-        naive_bayes_lang,
-    )
+    from bigdata1_spark.operators.basket import NULL_CLASS
+    from bigdata1_spark.operators.text_analysis import naive_bayes_lang
 
     docs = duck.execute(
         "SELECT doc_id, lang, text FROM documents"
@@ -166,7 +164,7 @@ def test_naive_bayes_matches_pure_python(spark, duck, sf_dir):
     snap = lambda x: math.floor(x * 1e6 + 0.5) / 1e6
     base, dwc = {}, {}
     for doc_id, lang, text in docs:
-        cls = NB_NULL_CLASS if lang is None else lang
+        cls = NULL_CLASS if lang is None else lang
         base[doc_id] = cls
         words = [w for w in _re.split(r"\s+", text) if w] if text else []
         for w in words:

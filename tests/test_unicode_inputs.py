@@ -11,13 +11,18 @@ CORRECTNESS_local.json); this file pins the divergence that
 sweep caught so it can't regress:
 
 * udtf_analyze: Python ``str.split()`` splits on UNICODE whitespace
-  (NBSP, U+3000) while both engines' ``\\s+`` is ASCII-only — every
-  Python-side tokenizer must use ``re.split(r"\\s+", s, flags=re.ASCII)``
-  to honor the repo-wide tokens() contract.
+  (NBSP, U+3000) that neither engine splits on — every Python-side
+  tokenizer goes through ``textfns.py_tokens`` to honor the repo-wide
+  tokens() contract.
+* the whitespace class itself: Java's ``\\s`` (and Python's under
+  re.ASCII) also matches U+000B, RE2's does not, so the oracles'
+  ``string_split_regex(text, '\\s+')`` keeps ``"a\\vb"`` whole. Both
+  Spark-side tokenizers split on ``textfns.WS_RE`` (RE2's ``\\s``
+  spelled out), pinned per code point below.
 
 Cross-engine semantics were MEASURED this round (per-code-point sweep,
 each char probed in initial/medial/final/isolated position):
-length / \\s+ / ASCII-class regexes / substring / binary ordering agree
+length / ASCII-class regexes / substring / binary ordering agree
 on everything probed; lower() diverges on exactly 4 code points
 (U+0130 İ, U+03A3 Σ context-sensitive final sigma, U+1C89, U+2C2F) and
 upper() on 94 (ß-class expansions) — those stay OUT of the twin's
@@ -102,3 +107,42 @@ def test_udtf_analyze_ascii_whitespace_contract(spark, unicode_dir):
     # tokens() of NULL text is -1 via size(); the UDTF emits 0 words —
     # compare only non-null-text docs (none exist in the base fixture)
     assert got == {k: max(v, 0) for k, v in want.items()}
+
+
+# U+0001–U+007F plus every non-ASCII code point Python calls whitespace
+# and the format/space characters other tokenizers treat as breaks
+WS_PROBES = [chr(c) for c in range(1, 0x80)] + [
+    chr(c) for c in range(0x80, 0x10000) if chr(c).isspace()
+] + ["\u180e", "\u200b", "\ufeff"]
+
+
+def test_tokenizers_split_like_the_oracle(spark):
+    """``tokens()`` and the Python-side ``py_tokens`` split ``a<c>b``
+    exactly where the oracles' ``_DUCK_TOKENS`` does, for every probe
+    character c — U+000B is the one Java's ``\\s`` gets wrong."""
+    from pyspark.sql import functions as F
+
+    from bigdata1_spark.functions.textfns import py_tokens, tokens
+
+    texts = [(i, f"a{c}b") for i, c in enumerate(WS_PROBES)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", texts)
+    want = dict(
+        con.execute(
+            f"SELECT i, {registry._DUCK_TOKENS} FROM t"
+        ).fetchall()
+    )
+    con.close()
+    got = {
+        r["i"]: r["w"]
+        for r in spark.createDataFrame(texts, "i int, text string")
+        .select("i", tokens(F.col("text")).alias("w"))
+        .collect()
+    }
+    bad = [
+        (hex(ord(WS_PROBES[i])), want[i], got[i], py_tokens(text))
+        for i, text in texts
+        if not (want[i] == got[i] == py_tokens(text))
+    ]
+    assert not bad, bad

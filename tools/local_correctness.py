@@ -8,7 +8,10 @@ twins (`tools/gen_twin.py`), and writes ONE JSON artifact keyed by axis
 (each directory's basename) and then by key, each row in the driver's
 own row format (rows_match / schema_match / hash_match / spark_rows /
 oracle_rows / err) so coverage claims are evidence-backed even for keys
-the driver rotation missed.
+the driver rotation missed. Every row that ran also banks ``spark_hash``,
+the value hash of Spark's output (rows-only keys included), so two
+artifacts of the same data show whether a change left a key's output
+byte-identical.
 
 Usage:
     python tools/local_correctness.py [OUT.json] [DIR ...]
@@ -65,7 +68,7 @@ def _value_hash(df) -> str:
 
 def _error_row(err: str | None) -> dict:
     return {"rows_match": None, "schema_match": None, "hash_match": None,
-            "spark_rows": None, "oracle_rows": None,
+            "spark_hash": None, "spark_rows": None, "oracle_rows": None,
             "err": err[:300] if err else None}
 
 
@@ -128,6 +131,8 @@ def main() -> None:
             report = json.load(f)
 
     def _done(row: dict) -> bool:
+        if row.get("spark_hash") is None:
+            return False  # errored, or banked before spark_hash existed
         if row.get("hash_match") is not None:
             return True  # adjudicated pass OR fail — both are verdicts
         return row.get("err") == "no_oracle" and row.get("spark_rows") is not None
@@ -150,6 +155,7 @@ def main() -> None:
         got = qs[key](spark, sf_dir).toPandas()
         got = got[sorted(got.columns)]
         row["spark_rows"] = len(got)
+        row["spark_hash"] = _value_hash(got)
         if key not in osql:
             row["err"] = "no_oracle"
         else:
@@ -158,7 +164,7 @@ def main() -> None:
             row["oracle_rows"] = len(want)
             row["rows_match"] = len(got) == len(want)
             row["schema_match"] = list(got.columns) == list(want.columns)
-            row["hash_match"] = _value_hash(got) == _value_hash(want)
+            row["hash_match"] = row["spark_hash"] == _value_hash(want)
         return row
 
     def _sweep_key(key, sf_dir):
