@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata1_spark.functions.textfns import py_tokens
+from bigdata1_spark.operators.basket import exact_sum
 from bigdata1_spark.sources.tables import load_table
 
 
@@ -213,9 +214,7 @@ def observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("l_quantity") < 0).cast("long")).alias("n_neg_qty"),
         F.min("l_extendedprice").alias("min_price"),
         F.max("l_extendedprice").alias("max_price"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,4)"))
-        .cast("double")
-        .alias("total_price"),
+        exact_sum(F.col("l_extendedprice"), "total_price"),
     )
     observed.count()  # the action the metrics piggyback on
     # Emit the 1-row result as a pure-JVM plan: createDataFrame([tuple])
@@ -380,12 +379,8 @@ def transpose_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_flag = flags.join(
         li.groupBy("l_returnflag").agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("revenue"),
-            F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("qty"),
+            exact_sum(F.col("l_extendedprice"), "revenue"),
+            exact_sum(F.col("l_quantity"), "qty"),
         ),
         "l_returnflag",
         "left",

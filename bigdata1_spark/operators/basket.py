@@ -108,6 +108,11 @@ def fixed_point(col: Column, scale: int = 1) -> Column:
     return F.round(col if scale == 1 else col * F.lit(scale)).cast("long")
 
 
+# The repo-wide microsecond timestamp string: both engines render UTC
+# timestamps this way, so a formatted ts hashes equal.
+TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
+
 def day_num(ts: Column | str) -> Column:
     """The exact integer day index (days since 1970-01-01) — DuckDB's
     ``CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)``; NULL ts
@@ -138,8 +143,12 @@ def orders_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def top5_per_month(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """Top-k best-selling items per month (reference TopFive, intended).
+TOP_ITEMS = 5  # items kept per month (the reference's "five")
+
+
+def top5_per_month(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``TOP_ITEMS`` best-selling items per month (reference TopFive,
+    intended).
 
     Columns: month, item, cnt, rn — deterministic tie-break on item id.
     """
@@ -153,7 +162,7 @@ def top5_per_month(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     w = Window.partitionBy("month").orderBy(F.desc("cnt"), F.asc("item"))
     return (
         counts.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TOP_ITEMS)
         .select("month", "item", "cnt", "rn")
     )
 

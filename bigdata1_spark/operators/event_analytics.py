@@ -22,10 +22,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import day_num, fixed_point
+from bigdata1_spark.operators.basket import (
+    TS_FMT,
+    day_num,
+    exact_sum,
+    fixed_point,
+)
+from bigdata1_spark.operators.temporal import session_windows, user_order
 from bigdata1_spark.sources.tables import load_table
 
-TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 NO_TS = ""  # sentinel for "stage not reached" (NULL breaks hash parity)
 
 FUNNEL_STAGES = ("signup", "click", "purchase")
@@ -93,8 +98,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def concurrency(spark: SparkSession, sf_dir: str,
-                gap_min: int = 30) -> DataFrame:
+def concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Active sessions per hour: how many (user) sessions — as defined
     by the registry's ``sessionize`` (30-minute gap) — overlap each
     hour bucket.
@@ -107,7 +111,7 @@ def concurrency(spark: SparkSession, sf_dir: str,
     """
     from bigdata1_spark.operators.relational import sessionize
 
-    sessions = sessionize(spark, sf_dir, gap_min=gap_min).select(
+    sessions = sessionize(spark, sf_dir).select(
         F.to_timestamp("session_start").alias("s"),
         F.to_timestamp("session_end").alias("e"),
     )
@@ -184,9 +188,7 @@ def cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def session_window_native(
-    spark: SparkSession, sf_dir: str, gap_min: int = 30
-) -> DataFrame:
+def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via Spark's NATIVE ``session_window`` aggregation —
     the API-surface twin of the gaps-and-islands ``sessionize``
     (relational.py): same logical result, but expressed as a single
@@ -199,23 +201,12 @@ def session_window_native(
     two APIs differ.
 
     Scale shape: one shuffle on user_id; session merging happens inside
-    the aggregation operator (no windowed sort over the whole corpus),
-    and this exact plan is the one Structured Streaming reuses for the
-    streaming twin ``events_session_streamed``.
+    the aggregation operator (no windowed sort over the whole corpus).
+    The body is ``temporal.session_windows``, which the streaming twin
+    ``events_session_streamed`` runs too.
     Columns: user_id, session_start, session_end, n_events.
     """
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    return (
-        ev.groupBy(
-            F.session_window("ts", f"{gap_min} minutes"), F.col("user_id")
-        )
-        .agg(
-            F.date_format(F.min("ts"), TS_FMT).alias("session_start"),
-            F.date_format(F.max("ts"), TS_FMT).alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
-    )
+    return session_windows(load_table(spark, sf_dir, "events"))
 
 
 def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,7 +227,7 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = user_order()
     pairs = ev.select(
         F.col("event_type").alias("from_type"),
         F.lead("event_type").over(w).alias("to_type"),
@@ -285,9 +276,7 @@ def rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.rollup("d", "h", "m")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_value"),
+            exact_sum(F.col("value"), "total_value"),
             gid.alias("_gid"),
         )
         .filter(F.col("_gid") != 7)  # drop the grand-total grouping set
@@ -319,12 +308,10 @@ def user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates map-side to ≤ |types|³ rows before its shuffle.
     Columns: path, cnt.
     """
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w = user_order()
     triples = ev.select(
         F.col("event_type").alias("a"),
         F.lead("event_type", 1).over(w).alias("b"),
@@ -678,14 +665,13 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def conversion_lag(
-    spark: SparkSession,
-    sf_dir: str,
-    from_type: str = "view",
-    to_type: str = "purchase",
-) -> DataFrame:
+CONVERSION_FROM = "view"
+CONVERSION_TO = "purchase"
+
+
+def conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch conversion lag per user: time from the user's FIRST
-    ``from_type`` event to their FIRST ``to_type`` event — the
+    ``CONVERSION_FROM`` event to their FIRST ``CONVERSION_TO`` event — the
     time-to-convert distribution behind funnel latency dashboards
     (funnel_conversion counts WHO converts; this measures HOW LONG).
 
@@ -703,14 +689,14 @@ def conversion_lag(
     """
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
-        & F.col("event_type").isin(from_type, to_type)
+        & F.col("event_type").isin(CONVERSION_FROM, CONVERSION_TO)
     )
     us = F.unix_micros("ts")
     per_user = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == from_type, us)).alias(
+        F.min(F.when(F.col("event_type") == CONVERSION_FROM, us)).alias(
             "first_view_us"
         ),
-        F.min(F.when(F.col("event_type") == to_type, us)).alias(
+        F.min(F.when(F.col("event_type") == CONVERSION_TO, us)).alias(
             "first_purchase_us"
         ),
     )

@@ -371,8 +371,7 @@ def map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded entry view; construction/access is what's exercised)."""
     li = load_table(spark, sf_dir, "lineitem")
     per_item = li.groupBy("l_orderkey", "l_partkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-        .cast("double").alias("qty")
+        exact_sum(F.col("l_quantity"), "qty")
     )
     as_map = per_item.groupBy("l_orderkey").agg(
         F.map_from_entries(

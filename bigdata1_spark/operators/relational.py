@@ -13,6 +13,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata1_spark.operators.basket import exact_sum, month_of, snap6
+from bigdata1_spark.operators.temporal import (
+    SESSION_GAP_US,
+    island_id,
+    session_agg,
+    user_order,
+)
 from bigdata1_spark.session import scoped_conf
 from bigdata1_spark.sources.tables import load_table
 
@@ -186,35 +192,25 @@ def groupby_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize(spark: SparkSession, sf_dir: str, gap_min: int = 30) -> DataFrame:
+def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via gaps-and-islands: a new session starts when a
-    user's inter-event gap exceeds ``gap_min`` minutes. lag → flag →
-    running sum → group. One shuffle on user_id; every window and the
-    final groupBy share that partitioning, so Catalyst plans a single
-    exchange. Columns: user_id, session_start, session_end, n_events."""
+    user's inter-event gap exceeds ``temporal.SESSION_GAP_MIN`` minutes.
+    lag → flag → ``temporal.island_id`` → ``temporal.session_agg``. One
+    shuffle on user_id; every window and the final groupBy share that
+    partitioning, so Catalyst plans a single exchange.
+    Columns: user_id, session_start, session_end, n_events."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", F.unix_micros(F.col("ts")).alias("us")
     )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    gap_us = gap_min * 60 * 1_000_000
+    prev = F.lag("us").over(user_order())
     new_sess = F.when(
-        F.lag("us").over(w).isNull()
-        | ((F.col("us") - F.lag("us").over(w)) > gap_us),
-        1,
+        prev.isNull() | ((F.col("us") - prev) > SESSION_GAP_US), 1
     ).otherwise(0)
-    sess = ev.withColumn(
-        "sess_id",
-        F.sum(new_sess).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
+    return session_agg(
+        ev.withColumn("sess_id", island_id(new_sess)).groupBy(
+            "user_id", "sess_id"
+        )
     )
-    return sess.groupBy("user_id", "sess_id").agg(
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .alias("session_start"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-    ).select("user_id", "session_start", "session_end", "n_events")
 
 
 def groupby_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -619,9 +615,13 @@ def groupby_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def histogram(spark: SparkSession, sf_dir: str, n_buckets: int = 10) -> DataFrame:
-    """Equal-width histogram of ``events.value`` per event_type — the
-    data-profiling primitive behind distribution drift checks.
+HIST_BUCKETS = 10
+
+
+def histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equal-width ``HIST_BUCKETS``-bucket histogram of ``events.value``
+    per event_type — the data-profiling primitive behind distribution
+    drift checks.
 
     Per-type min/max is a 5-row aggregate broadcast back onto the fact
     (the fact never re-shuffles for the stats); the bucket index and
@@ -635,12 +635,12 @@ def histogram(spark: SparkSession, sf_dir: str, n_buckets: int = 10) -> DataFram
     stats = ev.groupBy(F.col("event_type").alias("s_type")).agg(
         F.min("value").alias("vmin"), F.max("value").alias("vmax")
     )
-    nb = F.lit(float(n_buckets))
+    nb = F.lit(float(HIST_BUCKETS))
     raw = F.floor(
         (F.col("value") - F.col("vmin"))
         / (F.col("vmax") - F.col("vmin")) * nb
     )
-    bucket = F.least(raw, F.lit(n_buckets - 1)).cast("long")
+    bucket = F.least(raw, F.lit(HIST_BUCKETS - 1)).cast("long")
     width_frac = F.col("bucket").cast("double") / nb
     width_frac_hi = (F.col("bucket") + F.lit(1)).cast("double") / nb
     return (

@@ -3,50 +3,114 @@
 
 The reference has no temporal operators (its dates are string surgery,
 SURVEY.md §1.2); these are engine-completeness additions a time-series
-user expects. Scale posture: the as-of join is the union-merge + window
+user expects. Scale posture: the as-of join is the merged-timeline + window
 formulation (ONE shuffle on the entity key, no range self-join — the
 standard way to make as-of joins survive 100 TB); the band join
 broadcasts a literal dimension.
+
+The events-table keys (here, ``event_analytics``, ``relational.
+sessionize`` and the streaming twins) share one time-series core,
+each piece computed once and derived from: one as-of body
+(:func:`_asof`), one gaps-and-islands kernel (:func:`island_id`) and
+session row (:func:`session_agg`, :func:`session_windows`), one hourly
+mean (:func:`_hourly_mean`) with one gap-fill tail (:func:`_fill`), and
+one daily exact-cents table (:func:`_daily_cents`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.group import GroupedData
+from pyspark.sql.window import WindowSpec
 
-from bigdata1_spark.operators.basket import day_num, fixed_point, snap6
+from bigdata1_spark.operators.basket import (
+    TS_FMT,
+    day_num,
+    exact_sum,
+    fixed_point,
+    snap6,
+)
 from bigdata1_spark.sources.tables import load_table
 
-TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+# One session gap for every sessionizer: the gaps-and-islands
+# ``sessionize``, the native ``session_window`` (batch and stream) and
+# the two stateful stream operators.
+SESSION_GAP_MIN = 30
+SESSION_GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 
 
-def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For each click event, the latest purchase of the same user at or
-    before the click (ASOF LEFT JOIN).
+def user_order() -> WindowSpec:
+    """Each user's events in (ts, event_id) order."""
+    return Window.partitionBy("user_id").orderBy("ts", "event_id")
 
-    Union-merge formulation: tag purchases 0 / clicks 1, sort each user
-    by (ts, tag, value), and carry the last non-null purchase forward
-    with ``last(ignorenulls)``. ONE hash shuffle on user_id; the sort
+
+def island_id(start: Column) -> Column:
+    """The gaps-and-islands kernel: the running sum of a 0/1
+    island-start flag over :func:`user_order`, so the rows of one
+    island share one id. The caller's flag says what opens an island (a
+    time gap for ``sessionize``, a changed event_type for
+    ``scd2_intervals``) and how a NULL lag counts."""
+    return F.sum(start).over(
+        user_order().rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def session_agg(grouped: GroupedData) -> DataFrame:
+    """The session row of every sessionizer, from events grouped per
+    (user, session): first and last ts as µs strings and the event
+    count. Columns: user_id, session_start, session_end, n_events."""
+    return grouped.agg(
+        F.date_format(F.min("ts"), TS_FMT).alias("session_start"),
+        F.date_format(F.max("ts"), TS_FMT).alias("session_end"),
+        F.count(F.lit(1)).alias("n_events"),
+    ).select("user_id", "session_start", "session_end", "n_events")
+
+
+def session_windows(events: DataFrame) -> DataFrame:
+    """Native ``session_window`` sessions, one body for the batch key
+    ``session_window_fn`` and the stream ``events_session_streamed``
+    (as ``streaming.events._windowed`` is for the tumbling and sliding
+    windows). Session merging happens inside the aggregation on one
+    user_id shuffle. Columns: user_id, session_start, session_end,
+    n_events."""
+    return session_agg(
+        events.groupBy(
+            F.session_window("ts", f"{SESSION_GAP_MIN} minutes"), "user_id"
+        )
+    )
+
+
+def _asof(spark: SparkSession, sf_dir: str, ts_order: Column) -> DataFrame:
+    """The as-of body of both directions: each click paired with the
+    purchase of the same user that a traversal of the user's timeline in
+    ``ts_order`` saw last — at or before the click for ``asc``, at or
+    after it for ``desc``.
+
+    Merged-timeline formulation: one scan keeps purchases (tag 0) and
+    clicks (tag 1), sorts each user by (ts, tag, value NULLS FIRST) and
+    carries the last purchase forward with ``last(ignorenulls)``. ONE
+    hash shuffle on user_id; the sort
     and the carry-forward stay inside that partition — no range
-    self-join, no per-row probe, skew bounded by events-per-user.
-    Equal-timestamp purchase ties resolve to the max value: value is the
-    sort tie-breaker, so the last purchase row at a timestamp is the
-    max-value one (matches the oracle's per-(user, ts) MAX collapse).
-    Columns: event_id, user_id, click_ts, purchase_ts, purchase_value.
+    self-join, no per-row probe, skew bounded by events-per-user. At an
+    equal ts the purchase precedes the click (so "at or before/after"
+    includes same-ts), and value is the tie-breaker, so the last
+    purchase row at a tied ts is the max non-NULL value one in either
+    direction — the oracle's per-(user, ts) MAX collapse, with no
+    pre-aggregate. Columns: event_id, user_id, click_ts, purchase_ts,
+    purchase_value.
     """
     ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.lit(0).alias("tag"),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col("value").alias("pvalue"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.lit(1).alias("tag"), "event_id",
-        F.lit(None).cast("double").alias("pvalue"),
+    is_purchase = F.col("event_type") == "purchase"
+    is_click = F.col("event_type") == "click"
+    timeline = ev.filter(is_purchase | is_click).select(
+        "user_id", "ts", "event_id",
+        F.when(is_purchase, 0).otherwise(1).alias("tag"),
+        F.when(is_purchase, F.col("value")).alias("pvalue"),
     )
     w = (
         Window.partitionBy("user_id")
-        .orderBy("ts", "tag", F.asc_nulls_first("pvalue"))
+        .orderBy(ts_order, "tag", F.asc_nulls_first("pvalue"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # ts and value ride ONE struct: two separate last(ignorenulls)
@@ -54,20 +118,17 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL — the value carry skips it and pairs the newest purchase_ts
     # with an OLDER purchase's value (found by the .nulldata sweep).
     # The struct is non-null for every purchase row, so the carry
-    # always moves both fields together; NULLS FIRST on the value
-    # tie-break keeps "last row at equal ts" = MAX non-null value,
-    # matching the oracle's per-(user, ts) MAX collapse even when some
-    # of the tied values are NULL.
-    pstruct = F.last(
+    # always moves both fields together.
+    carried = F.last(
         F.when(F.col("tag") == 0, F.struct("ts", "pvalue")),
         ignorenulls=True,
     ).over(w)
-    merged = purchases.unionByName(clicks).select(
+    merged = timeline.select(
         "user_id", "ts", "tag", "event_id",
-        pstruct["ts"].alias("purchase_ts"),
-        pstruct["pvalue"].alias("purchase_value"),
+        carried["ts"].alias("purchase_ts"),
+        carried["pvalue"].alias("purchase_value"),
     )
-    # no-prior-purchase clicks keep LEFT-join semantics via explicit
+    # no-matching-purchase clicks keep LEFT-join semantics via explicit
     # sentinels ('' / -1.0) — NULL-free output hashes identically under
     # any NaN treatment in the driver's comparator.
     return merged.filter(F.col("tag") == 1).select(
@@ -78,6 +139,23 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("purchase_value"), F.lit(-1.0))
         .alias("purchase_value"),
     )
+
+
+def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For each click event, the latest purchase of the same user at or
+    before the click (ASOF LEFT JOIN): :func:`_asof` in ascending ts
+    order."""
+    return _asof(spark, sf_dir, F.asc("ts"))
+
+
+def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forward as-of: for each click, the EARLIEST purchase of the same
+    user at or after it — the other direction of ``asof_join`` (lead
+    attribution / next-event lookup): :func:`_asof` in descending ts
+    order, where the last purchase seen at any click row is exactly the
+    earliest purchase ≥ it. The oracle's quadratic LEFT JOIN stays
+    oracle-side."""
+    return _asof(spark, sf_dir, F.desc("ts"))
 
 
 def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,8 +180,7 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double").alias("total_value"),
+            exact_sum(F.col("value"), "total_value"),
         )
     )
 
@@ -120,8 +197,8 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands; ``sessionize`` is the time-gap flavor).
 
     Plan: one shuffle on user_id feeds ALL THREE window passes (change
-    flag via lag, island id via running sum, valid_to via lead over
-    islands' aggregate) — Spark reuses the exchange because every
+    flag via lag, island id via :func:`island_id`, valid_to via lead
+    over islands' aggregate) — Spark reuses the exchange because every
     window partitions by the same key; the island aggregation groups
     on (user_id, island) which the same partitioning co-locates. The
     open interval carries a far-future sentinel rather than NULL (NULL
@@ -131,21 +208,13 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
-    worder = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "chg",
-        F.when(
-            F.lag("event_type").over(worder).isNull()
-            | (F.lag("event_type").over(worder) != F.col("event_type")),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "island",
-        F.sum("chg").over(
-            worder.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    runs = flagged.groupBy("user_id", "island").agg(
+    prev = F.lag("event_type").over(user_order())
+    chg = F.when(
+        prev.isNull() | (prev != F.col("event_type")), 1
+    ).otherwise(0)
+    runs = ev.withColumn("island", island_id(chg)).groupBy(
+        "user_id", "island"
+    ).agg(
         F.min("event_type").alias("event_type"),  # constant within a run
         F.min("ts").alias("from_ts"),
         F.count(F.lit(1)).alias("n_events"),
@@ -163,8 +232,10 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def anomaly_zscore(spark: SparkSession, sf_dir: str,
-                   threshold: float = 1.5) -> DataFrame:
+ZSCORE_THRESHOLD = 1.5
+
+
+def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user z-score outliers on ``events.value``.
 
     Mean and variance come from DECIMAL-exact power sums per user (the
@@ -174,8 +245,9 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str,
     second shuffle: ONE exchange on user_id total. The z expression is
     one identically-parenthesized double formula on exact inputs, so it
     is bit-reproducible; the final round(4) absorbs nothing but display
-    noise. Threshold 1.5 (not the folkloric 3.0) because the testdata's
-    value column is uniform — a bounded distribution caps |z| at √3.
+    noise. ``ZSCORE_THRESHOLD`` is 1.5 (not the folkloric 3.0) because
+    the testdata's value column is uniform — a bounded distribution
+    caps |z| at √3.
     Columns: event_id, user_id, value, z.
     """
     ev = load_table(spark, sf_dir, "events")
@@ -197,7 +269,7 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str,
     z = F.try_divide(F.col("value") - mean, sd)
     return (
         ev.select("event_id", "user_id", "value", z.alias("z"))
-        .filter(F.abs(F.col("z")) > threshold)
+        .filter(F.abs(F.col("z")) > ZSCORE_THRESHOLD)
         .select(
             "event_id", "user_id", "value",
             # floor-scale, not F.round: see resample_interpolate on why
@@ -208,11 +280,14 @@ def anomaly_zscore(spark: SparkSession, sf_dir: str,
     )
 
 
-def ewma(spark: SparkSession, sf_dir: str, alpha: float = 0.1,
-         lookback: int = 50) -> DataFrame:
+EWMA_ALPHA = 0.1
+EWMA_LOOKBACK = 50
+
+
+def ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing exponentially-weighted moving average of ``value`` per
-    user (recursive form s_j = α·x_j + (1-α)·s_{j-1}), over a bounded
-    ``lookback``-row frame.
+    user (recursive form s_j = α·x_j + (1-α)·s_{j-1}, α =
+    ``EWMA_ALPHA``), over a bounded ``EWMA_LOOKBACK``-row frame.
 
     Cross-engine float parity trick: both engines fold the SAME ordered
     array with the SAME left-fold expression — Spark ``collect_list``
@@ -223,18 +298,14 @@ def ewma(spark: SparkSession, sf_dir: str, alpha: float = 0.1,
     accumulate in engine-specific order and drift.
 
     Scale posture: ONE shuffle on user_id; the frame bounds per-row
-    state to ``lookback`` values regardless of corpus size (the same
+    state to ``EWMA_LOOKBACK`` values regardless of corpus size (the same
     bounded-trailing-state shape a streaming EWMA would keep), so
-    memory per task is O(rows_in_partition · lookback) worst case and
+    memory per task is O(rows_in_partition · EWMA_LOOKBACK) worst case and
     skew is bounded by events-per-user.
     Columns: event_id, user_id, ewma.
     """
     ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-(lookback - 1), Window.currentRow)
-    )
+    w = user_order().rowsBetween(-(EWMA_LOOKBACK - 1), Window.currentRow)
     # NULL values are SKIPPED from the series (collect_list drops them;
     # the oracle pins the same with list_filter) — an all-NULL frame
     # yields an empty array, which must short-circuit to NULL: slice
@@ -246,7 +317,9 @@ def ewma(spark: SparkSession, sf_dir: str, alpha: float = 0.1,
         F.aggregate(
             F.slice(arr, 2, F.greatest(F.size(arr) - 1, F.lit(0))),
             F.element_at(arr, 1),
-            lambda acc, v: F.lit(1.0 - alpha) * acc + F.lit(alpha) * v,
+            lambda acc, v: (
+                F.lit(1.0 - EWMA_ALPHA) * acc + F.lit(EWMA_ALPHA) * v
+            ),
         ),
     )
     return ev.select(
@@ -267,18 +340,25 @@ def ewma(spark: SparkSession, sf_dir: str, alpha: float = 0.1,
 MAX_FILL_HOURS = 336
 
 
-def _hourly_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly DECIMAL-exact mean of ``events.value`` per (user, hour),
-    with the LEAD of the next observed hour — the shared base of both
-    gap-fill operators. One events scan, one shuffle on (user, hour),
-    one window pass on user_id."""
+def _hourly_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hourly DECIMAL-exact mean of ``events.value`` per (user, hour) —
+    the hourly base of both gap fills and ``seasonal_naive``. One events
+    scan, one shuffle on (user, hour). Columns: user_id, h, v."""
     ev = load_table(spark, sf_dir, "events")
-    obs = ev.groupBy(
+    return ev.groupBy(
         "user_id", F.date_trunc("hour", "ts").alias("h")
     ).agg(
         (F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
          .cast("double") / F.count(F.lit(1))).alias("v")
     )
+
+
+def _hourly_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`_hourly_mean` with the LEAD of the next observed hour
+    (nh, nv) and the gap to it in hours (gap_h, 0 for the last hour) —
+    the shared base of both gap-fill operators; one window pass on
+    user_id."""
+    obs = _hourly_mean(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.asc("h"))
     # hour epochs are exact 3600-multiples, so the gap in hours is an
     # exact integer in double before the long cast
@@ -293,6 +373,26 @@ def _hourly_obs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gap_h",
             F.when(F.col("nh").isNull(), F.lit(0)).otherwise(gap_h),
         )
+    )
+
+
+def _fill(
+    obs: DataFrame, n_fill: Column, value: Column, flag: str
+) -> DataFrame:
+    """The gap-fill tail of both fills: each hourly observation explodes
+    offsets ``0..n_fill`` (offset 0 is the observation itself), renders
+    its hour string, pins ``value`` (an expression of the offset ``o``)
+    with snap6 and flags the filled rows 1 in ``flag``. The explode is
+    pipeline-local. Columns: user_id, hour, value, <flag>."""
+    o = F.col("o")
+    hour = F.timestamp_seconds(F.col("h").cast("long") + o * F.lit(3600))
+    return obs.select(
+        "*", F.explode(F.sequence(F.lit(0), n_fill)).alias("o")
+    ).select(
+        "user_id",
+        F.date_format(hour, "yyyy-MM-dd HH:00:00").alias("hour"),
+        snap6(value).alias("value"),
+        (o > 0).cast("long").alias(flag),
     )
 
 
@@ -317,15 +417,10 @@ def resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the explode is pipeline-local. Columns: user_id, hour, value,
     interpolated.
     """
-    base = _hourly_obs(spark, sf_dir)
     n_fill = F.when(
         (F.col("gap_h") >= 2) & (F.col("gap_h") <= MAX_FILL_HOURS),
         F.col("gap_h") - 1,
     ).otherwise(F.lit(0))
-    exploded = base.withColumn("n_fill", n_fill).select(
-        "user_id", "h", "v", "nv", "gap_h",
-        F.explode(F.sequence(F.lit(0), F.col("n_fill"))).alias("o"),
-    )
     interp = F.col("v") + (F.col("nv") - F.col("v")) * (
         (F.col("o") * F.lit(3600)).cast("double")
         / (F.col("gap_h") * F.lit(3600)).cast("double")
@@ -336,16 +431,7 @@ def resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the raw binary double (HALF_EVEN), so exact .5 ties diverge.
     # floor(x*1e6 + 0.5)/1e6 is pure double arithmetic — identical on
     # both engines.
-    hour = F.timestamp_seconds(
-        F.col("h").cast("long") + F.col("o") * F.lit(3600)
-    )
-    return exploded.select(
-        "user_id",
-        F.date_format(hour, "yyyy-MM-dd HH:00:00").alias("hour"),
-        snap6(filled).alias("value"),
-        F.when(F.col("o") > 0, F.lit(1)).otherwise(F.lit(0))
-        .cast("long").alias("interpolated"),
-    )
+    return _fill(_hourly_obs(spark, sf_dir), n_fill, filled, "interpolated")
 
 
 HW_ALPHA = 0.5  # level smoothing
@@ -543,82 +629,10 @@ def locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     two shuffles total, fill work bounded per observation.
     Columns: user_id, hour, value, filled.
     """
-    base = _hourly_obs(spark, sf_dir)
     n_fill = F.when(F.col("gap_h") >= 1, F.least(
         F.col("gap_h") - 1, F.lit(MAX_FILL_HOURS)
     )).otherwise(F.lit(0))
-    exploded = base.withColumn("n_fill", n_fill).select(
-        "user_id", "h", "v",
-        F.explode(F.sequence(F.lit(0), F.col("n_fill"))).alias("o"),
-    )
-    hour = F.timestamp_seconds(
-        F.col("h").cast("long") + F.col("o") * F.lit(3600)
-    )
-    return exploded.select(
-        "user_id",
-        F.date_format(hour, "yyyy-MM-dd HH:00:00").alias("hour"),
-        snap6(F.col("v")).alias("value"),
-        F.when(F.col("o") > 0, F.lit(1)).otherwise(F.lit(0))
-        .cast("long")
-        .alias("filled"),
-    )
-
-
-def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forward as-of: for each click, the EARLIEST purchase of the same
-    user at or after it — the other direction of ``asof_join`` (lead
-    attribution / next-event lookup), same union-merge scale shape.
-
-    Purchases are first collapsed per (user, ts) to MAX(value) — the
-    tie rule both directions share — then the merged per-user timeline
-    is traversed in DESCENDING time order, carrying the last purchase
-    seen, which at any click row is exactly the earliest purchase ≥ it.
-    Still ONE hash shuffle on user_id; no range self-join (the oracle's
-    quadratic LEFT JOIN stays oracle-side). Sentinels ''/-1.0 keep the
-    output NULL-free. Columns: event_id, user_id, click_ts,
-    purchase_ts, purchase_value.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("pvalue"))
-        .select(
-            "user_id", "ts", F.lit(0).alias("tag"),
-            F.lit(None).cast("long").alias("event_id"), "pvalue",
-        )
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.lit(1).alias("tag"), "event_id",
-        F.lit(None).cast("double").alias("pvalue"),
-    )
-    # ts DESC traversal: later rows first; at equal ts the purchase
-    # (tag 0) precedes the click, so "at or after" includes same-ts.
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.desc("ts"), F.asc("tag"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # same struct carry as asof_join: a NULL pvalue (per-(user,ts) MAX
-    # over all-NULL values) must ride WITH its timestamp, not be
-    # skipped by a separate ignorenulls carry
-    nstruct = F.last(
-        F.when(F.col("tag") == 0, F.struct("ts", "pvalue")),
-        ignorenulls=True,
-    ).over(w)
-    merged = purchases.unionByName(clicks).select(
-        "user_id", "ts", "tag", "event_id",
-        nstruct["ts"].alias("next_ts"),
-        nstruct["pvalue"].alias("next_value"),
-    )
-    return merged.filter(F.col("tag") == 1).select(
-        "event_id", "user_id",
-        F.date_format("ts", TS_FMT).alias("click_ts"),
-        F.coalesce(F.date_format("next_ts", TS_FMT), F.lit(""))
-        .alias("purchase_ts"),
-        F.coalesce(F.col("next_value"), F.lit(-1.0))
-        .alias("purchase_value"),
-    )
+    return _fill(_hourly_obs(spark, sf_dir), n_fill, F.col("v"), "filled")
 
 
 def seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -628,19 +642,13 @@ def seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     has to beat, and a two-line operator once hourly observations
     exist.
 
-    Hourly means reuse the decimal-exact form; the seasonal lookup is
+    Hourly means come from :func:`_hourly_mean`; the seasonal lookup is
     one equi-self-join on (user_id, hour − 168h) — exact timestamp
     arithmetic, so no window over sparse gaps is needed. Two shuffles
     total (hourly agg, self-join on the same key). Columns: user_id,
     hour, value, forecast, abs_err (1e-6 floor-rounded).
     """
-    ev = load_table(spark, sf_dir, "events")
-    obs = ev.groupBy(
-        "user_id", F.date_trunc("hour", "ts").alias("h")
-    ).agg(
-        (F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
-         .cast("double") / F.count(F.lit(1))).alias("v")
-    )
+    obs = _hourly_mean(spark, sf_dir)
     prev = obs.select(
         "user_id",
         (F.col("h") + F.expr("INTERVAL 168 HOURS")).alias("h"),
@@ -818,9 +826,7 @@ def tz_hour_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_value"),
+            exact_sum(F.col("value"), "total_value"),
         )
     )
 
@@ -849,23 +855,45 @@ def iso_week_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("revenue"),
+            exact_sum(F.col("l_extendedprice"), "revenue"),
         )
     )
 
 
-def bollinger_bands(
-    spark: SparkSession, sf_dir: str, window_days: int = 7, k: float = 2.0
-) -> DataFrame:
+def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The daily exact-cents table of the event-type monitors: per
+    (event_type, day) the count, Σx and Σx² of x = value·100 as exact
+    integers summed in DECIMAL (associative, so partial-agg order
+    cannot drift them). Rows with a NULL day or value are no
+    observation and are dropped; NULL event_type is a real series.
+    Window input built on it is calendar-scale (≤ types × days rows),
+    never raw events. Columns: event_type, day, n_obs, s, q."""
+    ev = load_table(spark, sf_dir, "events")
+    x = fixed_point(F.col("value"), 100).cast("decimal(19,0)")
+    return (
+        ev.select("event_type", day_num("ts").alias("day"), x.alias("x"))
+        .filter(F.col("day").isNotNull() & F.col("x").isNotNull())
+        .groupBy("event_type", "day")
+        .agg(
+            F.count(F.lit(1)).alias("n_obs"),
+            F.sum("x").alias("s"),
+            F.sum(F.col("x") * F.col("x")).alias("q"),
+        )
+    )
+
+
+BOLLINGER_DAYS = 7
+BOLLINGER_K = 2.0
+
+
+def bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger bands of daily event value per event type: trailing
-    ``window_days``-day moving average ± ``k`` population standard
-    deviations — the envelope monitor for "is today's level outside
+    ``BOLLINGER_DAYS``-day moving average ± ``BOLLINGER_K`` population
+    standard deviations — the envelope monitor for "is today's level outside
     its recent band?".
 
-    ONE scan → per-(type, day) exact sufficient statistics (count,
-    Σx, Σx² over value·100 in DECIMAL), then a RANGE frame over the
+    ONE scan → per-(type, day) exact sufficient statistics
+    (:func:`_daily_cents`), then a RANGE frame over the
     integer day index (value-based, so calendar gaps shrink the window
     rather than silently stretching it across missing days, and peer
     days are impossible — day is the sort key). Window sums add
@@ -881,24 +909,12 @@ def bollinger_bands(
     Columns: event_type, day, n_obs, n_window, ma, sd, upper_band,
     lower_band.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day = day_num("ts")
-    x = fixed_point(F.col("value"), 100)
-    base = ev.select(
-        "event_type", day.alias("day"), x.alias("x")
-    ).filter(F.col("day").isNotNull() & F.col("x").isNotNull())
-    xd = F.col("x").cast("decimal(19,0)")
-    daily = base.groupBy("event_type", "day").agg(
-        F.count(F.lit(1)).alias("n_obs"),
-        F.sum(xd).alias("s"),
-        F.sum(xd * xd).alias("q"),
-    )
     w = (
         Window.partitionBy("event_type")
         .orderBy("day")
-        .rangeBetween(-(window_days - 1), Window.currentRow)
+        .rangeBetween(-(BOLLINGER_DAYS - 1), Window.currentRow)
     )
-    win = daily.select(
+    win = _daily_cents(spark, sf_dir).select(
         "event_type",
         "day",
         "n_obs",
@@ -919,17 +935,18 @@ def bollinger_bands(
         F.col("wn").cast("long").alias("n_window"),
         snap6(ma).alias("ma"),
         snap6(sd).alias("sd"),
-        snap6(ma + F.lit(k) * sd).alias("upper_band"),
-        snap6(ma - F.lit(k) * sd).alias("lower_band"),
+        snap6(ma + F.lit(BOLLINGER_K) * sd).alias("upper_band"),
+        snap6(ma - F.lit(BOLLINGER_K) * sd).alias("lower_band"),
     )
 
 
-def rsi(
-    spark: SparkSession, sf_dir: str, periods: int = 14
-) -> DataFrame:
+RSI_PERIODS = 14
+
+
+def rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relative Strength Index of the daily event-value total per event
     type (Cutler's SMA form): RSI = 100·Σgains / (Σgains + Σlosses)
-    over the trailing ``periods`` day-over-day deltas — the classic
+    over the trailing ``RSI_PERIODS`` day-over-day deltas — the classic
     bounded momentum oscillator, here as the "is this metric's recent
     movement all one direction?" monitor.
 
@@ -944,18 +961,9 @@ def rsi(
     and emits no row. Window input is the calendar-scale daily table.
     Columns: event_type, day, delta_cents, n_deltas, rsi.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day = day_num("ts")
-    x = fixed_point(F.col("value"), 100)
-    daily = (
-        ev.select("event_type", day.alias("day"), x.alias("x"))
-        .filter(F.col("day").isNotNull() & F.col("x").isNotNull())
-        .groupBy("event_type", "day")
-        .agg(F.sum(F.col("x").cast("decimal(19,0)")).alias("s"))
-    )
     order = Window.partitionBy("event_type").orderBy("day")
     delta = (
-        daily.select(
+        _daily_cents(spark, sf_dir).select(
             "event_type",
             "day",
             (F.col("s") - F.lag("s", 1).over(order))
@@ -964,7 +972,7 @@ def rsi(
         )
         .filter(F.col("d").isNotNull())
     )
-    wf = order.rowsBetween(-(periods - 1), Window.currentRow)
+    wf = order.rowsBetween(-(RSI_PERIODS - 1), Window.currentRow)
     g = F.greatest(F.col("d"), F.lit(0)).cast("decimal(19,0)")
     l = F.greatest(-F.col("d"), F.lit(0)).cast("decimal(19,0)")
     win = delta.select(
@@ -1003,21 +1011,12 @@ def drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: event_type, day, cents, peak_cents, drawdown,
     max_drawdown.
     """
-    ev = load_table(spark, sf_dir, "events")
-    day = day_num("ts")
-    x = fixed_point(F.col("value"), 100)
-    daily = (
-        ev.select("event_type", day.alias("day"), x.alias("x"))
-        .filter(F.col("day").isNotNull() & F.col("x").isNotNull())
-        .groupBy("event_type", "day")
-        .agg(F.sum(F.col("x").cast("decimal(19,0)")).alias("s"))
-    )
     run = (
         Window.partitionBy("event_type")
         .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    peaked = daily.select(
+    peaked = _daily_cents(spark, sf_dir).select(
         "event_type",
         "day",
         F.col("s").cast("long").alias("cents"),

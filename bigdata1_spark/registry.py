@@ -2850,9 +2850,10 @@ register(
     """,
 )
 
-# Forward as-of (earliest purchase at-or-after each click): same
-# union-merge shape as asof_join, DESC traversal, purchases
-# pre-collapsed per (user, ts) to MAX(value).
+# Forward as-of (earliest purchase at-or-after each click): the same
+# body as asof_join (temporal._asof) with a DESC traversal; the oracle
+# collapses purchases per (user, ts) to MAX(value), which the Spark
+# side reproduces through its value tie-break.
 register(
     "asof_join_forward",
     temporal.asof_join_forward,

@@ -26,16 +26,16 @@ import os
 import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.operators.basket import TS_FMT, exact_sum
+from bigdata1_spark.operators.temporal import SESSION_GAP_US, session_windows
 from bigdata1_spark.session import scoped_conf
 from bigdata1_spark.sources.tables import has_data, load_table, scratch
 
 WINDOW = "1 hour"
 WATERMARK = "1 day"
-# Microsecond timestamp strings: both engines format UTC this way.
-TS_US = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 # ~64 MB of bounded-source bytes per state-store partition: each stateful
 # partition carries fixed per-batch overhead (store open/commit/snapshot
@@ -80,18 +80,17 @@ def _state_sized_partitions(
     return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
-def _windowed(events: DataFrame) -> DataFrame:
-    """Tumbling-window aggregation shared by batch and streaming:
-    per (hour, event_type): event count + exact value sum."""
+def _windowed(events: DataFrame, window: Column) -> DataFrame:
+    """Time-window aggregation shared by batch and streaming, tumbling
+    (``events_window``/``events_window_streamed``) and sliding
+    (``events_sliding``/``events_sliding_streamed``) alike: per
+    (``window`` start, event_type) the event count and exact value
+    sum. Columns: window_start, event_type, n_events, total_value."""
     return (
-        events.groupBy(
-            F.window(F.col("ts"), WINDOW).alias("w"),
-            F.col("event_type"),
-        )
+        events.groupBy(window.alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double").alias("total_value"),
+            exact_sum(F.col("value"), "total_value"),
         )
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss")
@@ -105,7 +104,9 @@ def _windowed(events: DataFrame) -> DataFrame:
 
 def events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch form — registry entry with a DuckDB time_bucket oracle."""
-    return _windowed(load_table(spark, sf_dir, "events"))
+    return _windowed(
+        load_table(spark, sf_dir, "events"), F.window("ts", WINDOW)
+    )
 
 
 def events_window_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -116,7 +117,7 @@ def events_window_stream(spark: SparkSession, source_dir: str) -> DataFrame:
         _read_events_stream(spark, source_dir)
         .withWatermark("ts", WATERMARK)
     )
-    return _windowed(stream)
+    return _windowed(stream, F.window("ts", WINDOW))
 
 
 def events_window_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,8 +319,8 @@ def _attribution_strings(joined: DataFrame) -> DataFrame:
     return joined.select(
         "user_id",
         "click_id",
-        F.date_format("click_ts", TS_US).alias("click_ts"),
-        F.date_format("purchase_ts", TS_US).alias("purchase_ts"),
+        F.date_format("click_ts", TS_FMT).alias("click_ts"),
+        F.date_format("purchase_ts", TS_FMT).alias("purchase_ts"),
         "purchase_value",
     )
 
@@ -437,7 +438,7 @@ def _event_strings(events: DataFrame) -> DataFrame:
         "event_id",
         "user_id",
         "event_type",
-        F.date_format("ts", TS_US).alias("ts_s"),
+        F.date_format("ts", TS_FMT).alias("ts_s"),
         "value",
     )
 
@@ -596,7 +597,6 @@ def _write_sentinels_arrow(
 def sessionize_stream(
     spark: SparkSession,
     source_dir: str,
-    gap_min: int = 30,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Custom stateful streaming operator: per-user sessionization via
@@ -616,7 +616,6 @@ def sessionize_stream(
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_us = gap_min * 60 * 1_000_000
     out_schema = (
         "user_id BIGINT, session_start TIMESTAMP, "
         "session_end TIMESTAMP, n_events BIGINT"
@@ -662,7 +661,7 @@ def sessionize_stream(
         for t in merged.tolist():
             if cur is None:
                 cur = (t, t, 1)
-            elif t - cur[1] > gap_us:
+            elif t - cur[1] > SESSION_GAP_US:
                 closed.append(cur)
                 cur = (t, t, 1)
             else:
@@ -676,7 +675,7 @@ def sessionize_stream(
             # comparison above keeps that event in-session). Bounded
             # sentinel drains never hit this (one data micro-batch);
             # latent only for genuine multi-batch streams.
-            state.setTimeoutTimestamp(-(-(cur[1] + gap_us) // 1000))
+            state.setTimeoutTimestamp(-(-(cur[1] + SESSION_GAP_US) // 1000))
         if closed:
             yield pd.DataFrame(
                 {
@@ -712,8 +711,8 @@ def _session_strings(sessions: DataFrame) -> DataFrame:
     Columns: user_id, session_start, session_end, n_events."""
     return sessions.select(
         "user_id",
-        F.date_format("session_start", TS_US).alias("session_start"),
-        F.date_format("session_end", TS_US).alias("session_end"),
+        F.date_format("session_start", TS_FMT).alias("session_start"),
+        F.date_format("session_end", TS_FMT).alias("session_end"),
         "n_events",
     )
 
@@ -721,7 +720,6 @@ def _session_strings(sessions: DataFrame) -> DataFrame:
 def sessionize_stream_tws(
     spark: SparkSession,
     source_dir: str,
-    gap_min: int = 30,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Per-user sessionization on the Spark-4 ``transformWithState``
@@ -746,7 +744,6 @@ def sessionize_stream_tws(
         StatefulProcessorHandle,
     )
 
-    gap_us = gap_min * 60 * 1_000_000
     out_schema = (
         "user_id BIGINT, session_start TIMESTAMP, "
         "session_end TIMESTAMP, n_events BIGINT"
@@ -797,7 +794,7 @@ def sessionize_stream_tws(
             for t in merged.tolist():
                 if cur is None:
                     cur = (t, t, 1)
-                elif t - cur[1] > gap_us:
+                elif t - cur[1] > SESSION_GAP_US:
                     closed.append(cur)
                     cur = (t, t, 1)
                 else:
@@ -811,7 +808,9 @@ def sessionize_stream_tws(
                     self._handle.deleteTimer(expiry)
                 # ceil to ms for the same reason as the GroupState
                 # twin: flooring could fire 1 ms before the boundary
-                self._handle.registerTimer(-(-(cur[1] + gap_us) // 1000))
+                self._handle.registerTimer(
+                    -(-(cur[1] + SESSION_GAP_US) // 1000)
+                )
             if closed:
                 yield _emit(key, closed)
 
@@ -824,7 +823,7 @@ def sessionize_stream_tws(
             # open session armed (same ceil-to-ms arithmetic as
             # handleInputRows). A stale expiry would otherwise close a
             # session that new events have since extended.
-            deadline_ms = -(-(cur[1] + gap_us) // 1000)
+            deadline_ms = -(-(cur[1] + SESSION_GAP_US) // 1000)
             if expiredTimerInfo.getExpiryTimeInMs() < deadline_ms:
                 return
             self._open.clear()
@@ -969,51 +968,32 @@ def events_dedup_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Sliding windows: each event lands in TWO overlapping 2-hour windows
+# (1-hour slide). Catalyst expands the window memberships map-side (an
+# Expand of duration/slide = 2 rows per event) before the single
+# aggregation shuffle — the membership fan-out never crosses the
+# network unaggregated.
 SLIDE_DURATION = "2 hours"
 SLIDE_STEP = "1 hour"
-
-
-def _sliding(events: DataFrame) -> DataFrame:
-    """Sliding-window aggregation shared by batch and streaming: each
-    event lands in TWO overlapping 2-hour windows (1-hour slide).
-    Catalyst expands the window memberships map-side (an Expand of
-    duration/slide = 2 rows per event) before the single aggregation
-    shuffle — the membership fan-out never crosses the network
-    unaggregated."""
-    return (
-        events.groupBy(
-            F.window(F.col("ts"), SLIDE_DURATION, SLIDE_STEP).alias("w"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
 
 
 def events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch form of the sliding-window agg — full oracle (each event
     contributes to the hour-aligned window it falls in AND the one
     starting an hour earlier)."""
-    return _sliding(load_table(spark, sf_dir, "events"))
+    return _windowed(
+        load_table(spark, sf_dir, "events"),
+        F.window("ts", SLIDE_DURATION, SLIDE_STEP),
+    )
 
 
 def sliding_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """Unstarted sliding-window stream (watermark + ``_sliding``) —
-    exposed for the source-plan gate in tests/test_plans.py."""
-    return _sliding(
-        _read_events_stream(spark, source_dir).withWatermark("ts", WATERMARK)
+    """Unstarted sliding-window stream (watermark + ``_windowed`` over
+    the sliding window) — exposed for the source-plan gate in
+    tests/test_plans.py."""
+    return _windowed(
+        _read_events_stream(spark, source_dir).withWatermark("ts", WATERMARK),
+        F.window("ts", SLIDE_DURATION, SLIDE_STEP),
     )
 
 
@@ -1021,7 +1001,7 @@ def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end streaming run of the sliding-window agg: watermark +
     overlapping windows → complete-mode foreachBatch overwrite sink →
     read back. Same oracle as the batch twin ``events_sliding``
-    (identical logical plan via ``_sliding``); proves overlapping
+    (identical logical plan via ``_windowed``); proves overlapping
     window-state handling, the one streaming shape the tumbling keys
     don't cover. State at scale: windows-per-event is duration/slide
     (2 here) — state size is bounded by watermark horizon × slide
@@ -1136,33 +1116,21 @@ def events_upsert_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scratch("bigdata1_upsert_stream_", run)
 
 
-def session_window_stream(
-    spark: SparkSession, source_dir: str, gap_min: int = 30
-) -> DataFrame:
+def session_window_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """Unstarted native ``session_window`` aggregation stream (append
     mode, watermark-bounded state) — the transform half of
-    ``events_session_streamed``. Exposed for the source-plan gate in
+    ``events_session_streamed``: ``temporal.session_windows``, the body
+    of the batch twin ``session_window_native`` too, over the
+    watermarked stream. Exposed for the source-plan gate in
     tests/test_plans.py."""
-    stream = _read_events_stream(
-        spark, source_dir, max_files_per_trigger=1
-    ).withWatermark("ts", WATERMARK)
-    return (
-        stream.groupBy(
-            F.session_window("ts", f"{gap_min} minutes"),
-            F.col("user_id"),
-        )
-        .agg(
-            F.date_format(F.min("ts"), TS_US).alias("session_start"),
-            F.date_format(F.max("ts"), TS_US).alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
+    return session_windows(
+        _read_events_stream(
+            spark, source_dir, max_files_per_trigger=1
+        ).withWatermark("ts", WATERMARK)
     )
 
 
-def events_session_streamed(
-    spark: SparkSession, sf_dir: str, gap_min: int = 30
-) -> DataFrame:
+def events_session_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``session_window_native``: native
     ``session_window`` aggregation over the event stream in APPEND mode
     — the first append-mode *aggregation* in this module (the windowed
@@ -1194,7 +1162,7 @@ def events_session_streamed(
     return _drain(
         spark,
         sf_dir,
-        lambda src: session_window_stream(spark, src, gap_min),
+        lambda src: session_window_stream(spark, src),
         flush=("flush",),
     )
 
@@ -1342,7 +1310,7 @@ def enrich_stream(
         "event_id",
         "user_id",
         "event_type",
-        F.date_format("ts", TS_US).alias("ts_s"),
+        F.date_format("ts", TS_FMT).alias("ts_s"),
         "cohort",
     )
 

@@ -265,7 +265,12 @@ def test_asof_join_null_value_purchase_stays_paired(spark, tmp_path):
     match (ts + sentinel -1.0), never be skipped in favor of an OLDER
     purchase's value: two separate last(ignorenulls) carries did
     exactly that until ts+value rode one struct (found by the
-    .nulldata sweep)."""
+    .nulldata sweep). Several purchases at ONE ts, some NULL-valued,
+    must attribute their max non-NULL value in both directions — the
+    oracle's per-(user, ts) MAX collapse, which the shared
+    (ts, tag, value NULLS FIRST) order reproduces with no
+    pre-aggregate. The tied rows are written max-first, so a traversal
+    that lost the value tie-break would carry a smaller or NULL value."""
     import datetime
 
     from bigdata1_spark.operators.temporal import (
@@ -288,18 +293,37 @@ def test_asof_join_null_value_purchase_stays_paired(spark, tmp_path):
         (4, 8, "click", h(0), None),
         (5, 8, "purchase", h(1), None),
         (6, 8, "purchase", h(2), 9.0),
+        # equal-ts ties, backward: four purchases at h(1), two NULL; a
+        # click at the tied ts and one after it
+        (10, 9, "purchase", h(0), 50.0),
+        (11, 9, "purchase", h(1), 7.0),
+        (12, 9, "purchase", h(1), None),
+        (13, 9, "purchase", h(1), 3.0),
+        (14, 9, "purchase", h(1), None),
+        (15, 9, "click", h(1), None),
+        (16, 9, "click", h(2), None),
+        # equal-ts ties, forward: a click before and one at the tied ts
+        (20, 10, "click", h(0), None),
+        (21, 10, "click", h(1), None),
+        (22, 10, "purchase", h(1), 7.0),
+        (23, 10, "purchase", h(1), None),
+        (24, 10, "purchase", h(1), 3.0),
+        (25, 10, "purchase", h(2), 50.0),
     ]
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string, "
               "ts timestamp, value double"
     )
     path = str(tmp_path)
-    df.write.mode("overwrite").parquet(path + "/events.parquet")
+    df.coalesce(1).write.mode("overwrite").parquet(path + "/events.parquet")
 
     back = {r["event_id"]: r for r in asof_join(spark, path).collect()}
     r = back[3]
     assert r["purchase_ts"].startswith("2024-01-01 01:")  # the newer one
     assert r["purchase_value"] == -1.0  # its (NULL) value, sentineled
+    for click in (15, 16):
+        assert back[click]["purchase_ts"].startswith("2024-01-01 01:")
+        assert back[click]["purchase_value"] == 7.0
 
     fwd = {
         r["event_id"]: r
@@ -308,6 +332,18 @@ def test_asof_join_null_value_purchase_stays_paired(spark, tmp_path):
     r = fwd[4]
     assert r["purchase_ts"].startswith("2024-01-01 01:")  # the earlier one
     assert r["purchase_value"] == -1.0
+    for click in (20, 21):
+        assert fwd[click]["purchase_ts"].startswith("2024-01-01 01:")
+        assert fwd[click]["purchase_value"] == 7.0
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{path}/events.parquet/*.parquet')"
+    )
+    for key, fn in (("asof_join", asof_join),
+                    ("asof_join_forward", asof_join_forward)):
+        assert_matches_oracle(fn(spark, path), con, ORACLES[key], key=key)
 
 
 def test_ewma_all_null_frame_yields_null_not_crash(spark, tmp_path):

@@ -66,12 +66,15 @@ def test_runtime_filter_injection(spark, sf_dir):
 
 
 def test_asof_join_single_shuffle(spark, sf_dir):
-    """The as-of join's union-merge formulation must shuffle exactly
-    once (on user_id) — a range self-join shape would blow up at scale."""
+    """Both as-of directions' merged-timeline formulation must shuffle
+    exactly once (on user_id) — a range self-join shape would blow up
+    at scale, and a per-(user, ts) pre-aggregate of the purchases costs
+    a second exchange the shared tie-break order makes unnecessary."""
     from bigdata1_spark.operators import temporal
 
-    df = temporal.asof_join(spark, sf_dir)
-    checks.assert_max_exchanges(df, 1, "asof_join")
+    for key in ("asof_join", "asof_join_forward"):
+        df = getattr(temporal, key)(spark, sf_dir)
+        checks.assert_max_exchanges(df, 1, key)
 
 
 def test_range_join_broadcasts_dim(spark, sf_dir):
@@ -904,8 +907,8 @@ SCAN_BUDGETS = {
     "approx_sketch": 2,
     "array_ops": 1,
     "arrow_map": 1,
-    "asof_join": 2,
-    "asof_join_forward": 2,
+    "asof_join": 1,  # one merged-timeline scan (temporal._asof)
+    "asof_join_forward": 1,
     "assoc_rules": 1,
     "benford_digits": 1,
     "billing_total_b": 2,

@@ -207,7 +207,7 @@ def test_foreachbatch_parquet_sink(spark, sf_dir, stream_dir, tmp_path):
 
 def test_sliding_stream_matches_batch(spark, sf_dir):
     """Overlapping-window state: the bounded sliding-window stream must
-    land exactly the batch answer (same logical plan via _sliding)."""
+    land exactly the batch answer (same logical plan via _windowed)."""
     batch = {
         tuple(r) for r in se.events_sliding(spark, sf_dir).collect()
     }

@@ -11,7 +11,10 @@ oracle_rows / err) so coverage claims are evidence-backed even for keys
 the driver rotation missed. Every row that ran also banks ``spark_hash``,
 the value hash of Spark's output (rows-only keys included), so two
 artifacts of the same data show whether a change left a key's output
-byte-identical.
+byte-identical. The bench-only keys (``bench.EXTRA_BENCH``: the
+pure-LSH dedup path and the LSH pretraining pipeline) have no SQL
+oracle and are not driver queries; they are swept as ``no_oracle`` rows
+so their ``spark_hash`` is banked too.
 
 Usage:
     python tools/local_correctness.py [OUT.json] [DIR ...]
@@ -85,6 +88,7 @@ def main() -> None:
     # Runnable from anywhere: the entry module lives at the repo root.
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
+    from bench import EXTRA_BENCH
     from bigdata1_spark.session import driver_memory
     from bigdata1_spark.sources.tables import TABLES
 
@@ -116,7 +120,7 @@ def main() -> None:
     if os.environ.get("CORR_DUCK_THREADS"):
         con.execute(f"PRAGMA threads={int(os.environ['CORR_DUCK_THREADS'])}")
 
-    qs, osql = entry.queries(), entry.oracle_sql()
+    qs, osql = {**entry.queries(), **EXTRA_BENCH}, entry.oracle_sql()
     only = os.environ.get("ONLY_KEYS")
     if only:
         wanted = {k.strip() for k in only.split(",") if k.strip()}
