@@ -51,6 +51,13 @@ def month_of(col: Column) -> Column:
     return F.date_format(col, "yyyy-MM")
 
 
+def dec4(col: Column | str) -> Column:
+    """The repo-wide money cast: a 2-decimal price, discount, tax or
+    quantity as DECIMAL(18,4), the oracles' ``CAST(x AS DECIMAL(18,4))``.
+    Every money sum or product an oracle must match runs on it."""
+    return (F.col(col) if isinstance(col, str) else col).cast("decimal(18,4)")
+
+
 def exact_sum(col: Column, alias: str) -> Column:
     """Sum doubles exactly via decimal, then cast back to double.
 
@@ -59,7 +66,28 @@ def exact_sum(col: Column, alias: str) -> Column:
     for the hash-based oracle diff, and a good idea at 100 TB where
     partial-aggregation order is nondeterministic.
     """
-    return F.sum(col.cast("decimal(18,4)")).cast("double").alias(alias)
+    return F.sum(dec4(col)).cast("double").alias(alias)
+
+
+def cents(col: Column | str) -> Column:
+    """The repo-wide cents pin: a decimal rounded to 2 places IN DECIMAL,
+    then cast to double — DuckDB's ``CAST(ROUND(x, 2) AS DOUBLE)``.
+
+    A wide decimal sum can carry more than 17 significant digits, and
+    the engines convert such a decimal to double differently: Spark
+    rounds the big decimal once, DuckDB divides the int128 by 10^scale
+    (two roundings), so the last ulp can differ. Rounded to cents, the
+    value has at most 15 significant digits at any realistic total and
+    the cast is exact on both. Rounding after a double cast would round
+    the already-diverged double instead.
+    """
+    return F.round(col, 2).cast("double")
+
+
+def disc_price() -> Column:
+    """The exact discounted revenue of a lineitem row,
+    ``l_extendedprice · (1 − l_discount)`` in DECIMAL(18,4)."""
+    return dec4("l_extendedprice") * (dec4(F.lit(1)) - dec4("l_discount"))
 
 
 def snap6(col: Column) -> Column:

@@ -14,7 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import exact_sum, month_of
+from bigdata1_spark.operators.basket import (
+    cents, dec4, disc_price, exact_sum, month_of,
+)
 from bigdata1_spark.sources.tables import load_table
 
 
@@ -116,14 +118,11 @@ def scalar_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds differently under HALF_UP on the decimal string vs the
     double), so both engines cast to DECIMAL first."""
     li = load_table(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(18,4)")
-    disc = F.col("l_discount").cast("decimal(18,4)")
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        F.round(price * (F.lit(1) - disc), 2).cast("double")
-        .alias("net_price"),
-        F.round(disc * 100, 2).cast("double").alias("discount_pct"),
+        cents(disc_price()).alias("net_price"),
+        cents(dec4("l_discount") * 100).alias("discount_pct"),
     )
 
 

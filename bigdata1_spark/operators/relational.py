@@ -12,7 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import exact_sum, month_of, snap6
+from bigdata1_spark.operators.basket import (
+    cents, dec4, exact_sum, month_of, snap6,
+)
 from bigdata1_spark.operators.temporal import (
     SESSION_GAP_US,
     island_id,
@@ -86,7 +88,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w)
+        F.sum(dec4("o_totalprice")).over(w)
         .cast("double").alias("running_spent"),
     )
 
@@ -352,7 +354,7 @@ def column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}__nulls"),
             F.min(c).alias(f"{c}__min"),
             F.max(c).alias(f"{c}__max"),
-            F.sum(F.col(c).cast("decimal(18,4)")).alias(f"{c}__sum"),
+            F.sum(dec4(c)).alias(f"{c}__sum"),
             F.count(c).alias(f"{c}__cnt"),
         ]
     distincts = [F.countDistinct(c).alias(f"{c}__distinct") for c in cols]
@@ -488,25 +490,17 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression is bit-reproducible on both. At scale the decimal sums
     partial-aggregate exactly like any other sum."""
     li = load_table(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(18,4)")
-    y = F.col("l_extendedprice").cast("decimal(18,4)")
-    # power sums exact in decimal, rounded to 2 dp before the double
-    # cast (>17-significant-digit decimal→double conversion differs
-    # across engines; see tpch.py note)
+    x, y = dec4("l_quantity"), dec4("l_extendedprice")
     agg = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(x), 2).alias("sx"),
-        F.round(F.sum(y), 2).alias("sy"),
-        F.round(F.sum((x * y).cast("decimal(38,8)")), 2).alias("sxy"),
-        F.round(F.sum((x * x).cast("decimal(38,8)")), 2).alias("sxx"),
-        F.round(F.sum((y * y).cast("decimal(38,8)")), 2).alias("syy"),
+        cents(F.sum(x)).alias("sx"),
+        cents(F.sum(y)).alias("sy"),
+        cents(F.sum((x * y).cast("decimal(38,8)"))).alias("sxy"),
+        cents(F.sum((x * x).cast("decimal(38,8)"))).alias("sxx"),
+        cents(F.sum((y * y).cast("decimal(38,8)"))).alias("syy"),
     )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    syy = F.col("syy").cast("double")
+    n, sx, sy = F.col("n").cast("double"), F.col("sx"), F.col("sy")
+    sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     var_x = (sxx - sx * sx / n) / (n - 1)
     var_y = (syy - sy * sy / n) / (n - 1)
     covar = (sxy - sx * sy / n) / (n - 1)
@@ -533,7 +527,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return li.select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity",
-        F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).over(w)
+        F.sum(dec4("l_extendedprice")).over(w)
         .cast("double").alias("nearby_revenue"),
     )
 
@@ -802,9 +796,7 @@ def ntile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("p").alias("min_price"),
             F.max("p").alias("max_price"),
             F.sum(
-                (F.col("p").cast("decimal(18,4)") * F.col("overlap")).cast(
-                    "decimal(28,4)"
-                )
+                (dec4("p") * F.col("overlap")).cast("decimal(28,4)")
             )
             .cast("double")
             .alias("sum_price"),
@@ -1091,7 +1083,7 @@ def ivm_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate",
-        F.col("o_totalprice").cast("decimal(18,4)").alias("price"),
+        dec4("o_totalprice").alias("price"),
     )
     cutoff = F.lit(IVM_CUTOFF).cast("date")
     # base = everything that is NOT in the delta window — including
@@ -1137,15 +1129,14 @@ def ivm_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_orders"),
         F.when(
             F.col("b_sum").isNull() & F.col("d_sum").isNull(),
-            F.lit(None).cast("decimal(18,4)"),
+            dec4(F.lit(None)),
         ).otherwise(
-            F.coalesce(F.col("b_sum"), F.lit(0).cast("decimal(18,4)"))
-            + F.coalesce(F.col("d_sum"), F.lit(0).cast("decimal(18,4)"))
+            F.coalesce(F.col("b_sum"), dec4(F.lit(0)))
+            + F.coalesce(F.col("d_sum"), dec4(F.lit(0)))
         ).alias("total_spent_dec"),
     )
     return merged.filter(F.col("n_orders") > 0).select(
         "o_custkey",
         "n_orders",
-        F.round(F.col("total_spent_dec"), 2).cast("double")
-        .alias("total_spent"),
+        cents("total_spent_dec").alias("total_spent"),
     )

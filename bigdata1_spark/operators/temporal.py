@@ -642,19 +642,30 @@ def seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     has to beat, and a two-line operator once hourly observations
     exist.
 
-    Hourly means come from :func:`_hourly_mean`; the seasonal lookup is
-    one equi-self-join on (user_id, hour − 168h) — exact timestamp
-    arithmetic, so no window over sparse gaps is needed. Two shuffles
-    total (hourly agg, self-join on the same key). Columns: user_id,
-    hour, value, forecast, abs_err (1e-6 floor-rounded).
+    One :func:`_hourly_mean`; the week-earlier hour is a RANGE frame
+    on the exact hour epoch (at most one row), not a self-join that
+    aggregates the events twice. The frame's row count decides the
+    pairing, so a NULL mean a week earlier stays paired as a NULL
+    forecast, as in the oracle's inner join, which pairs no NULL user
+    or hour. One events scan, two shuffles (hourly agg, window on
+    user). Columns: user_id, hour, value, forecast, abs_err (snap6).
     """
-    obs = _hourly_mean(spark, sf_dir)
-    prev = obs.select(
-        "user_id",
-        (F.col("h") + F.expr("INTERVAL 168 HOURS")).alias("h"),
-        F.col("v").alias("forecast"),
+    week = 168 * 3600
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(F.col("h").cast("long"))
+        .rangeBetween(-week, -week)
     )
-    j = obs.join(prev, ["user_id", "h"])
+    j = (
+        _hourly_mean(spark, sf_dir)
+        .filter(F.col("user_id").isNotNull() & F.col("h").isNotNull())
+        .select(
+            "*",
+            F.max("v").over(w).alias("forecast"),
+            F.count(F.lit(1)).over(w).alias("n_prev"),
+        )
+        .filter(F.col("n_prev") > 0)
+    )
     return j.select(
         "user_id",
         F.date_format("h", "yyyy-MM-dd HH:00:00").alias("hour"),

@@ -1,11 +1,12 @@
-"""Classic TPC-H-style analytics queries (Q1/Q3/Q5/Q6 shapes) over the
-driver testdata star schema.
+"""The 22 TPC-H query shapes (Q1–Q22) over the driver testdata star
+schema, each adapted at its function where the testdata lacks a column.
 
 The reference workload is market-basket only; a user switching a real
 analytics deployment expects the canonical scan-agg / join-topk /
 multi-join-rollup shapes too, so they are registered first-class. Dates
-are adapted to the testdata's 1995–2001 span; money math follows the
-registry's DECIMAL(18,4) exact-sum rule so oracle hashes match.
+are adapted to the testdata's 1995–2001 span (ranges via :func:`_span`);
+money math goes through ``basket``'s money core (``dec4``,
+``disc_price``, ``cents``) so oracle hashes match.
 
 Scale notes: Q1/Q6 are single-scan partial aggregations (no join);
 Q3/Q5 join through broadcast dims where Catalyst can prove smallness,
@@ -18,48 +19,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import exact_sum
+from bigdata1_spark.operators.basket import cents, dec4, disc_price, exact_sum
 from bigdata1_spark.sources.tables import load_table
 
 
-def _dec(c: str | F.Column) -> F.Column:
-    col = F.col(c) if isinstance(c, str) else c
-    return col.cast("decimal(18,4)")
+def _span(col: str, lo: str, hi: str) -> F.Column:
+    """``lo <= col < hi`` on DATE literals — the one half-open date range
+    of this module (both bounds reach the parquet reader)."""
+    return (F.col(col) >= F.lit(lo).cast("date")) & (
+        F.col(col) < F.lit(hi).cast("date")
+    )
 
 
 def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 pricing summary: per (returnflag, linestatus) quantity/price
     sums, discounted + taxed revenue, averages, row count."""
     li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2000-09-02")
+        F.col("l_shipdate") <= F.lit("2000-09-02").cast("date")
     )
-    disc_price = _dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - _dec("l_discount"))
     # price*(1-d)*(1+t) as price * (1 - d + t - d*t): the 2-factor form
     # keeps the product within decimal(38) so NEITHER engine loses scale
     # (a 3-factor chain overflows precision and rounds differently).
     d8 = F.col("l_discount").cast("decimal(8,4)")
     t8 = F.col("l_tax").cast("decimal(8,4)")
     mult = F.lit(1).cast("decimal(8,4)") - d8 + t8 - (d8 * t8)
-    charge = _dec("l_extendedprice") * mult
+    charge = dec4("l_extendedprice") * mult
     n = F.count(F.lit(1))
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
             exact_sum(F.col("l_quantity"), "sum_qty"),
             exact_sum(F.col("l_extendedprice"), "sum_base_price"),
-            # exact wide-decimal sums, rounded to cents IN DECIMAL before
-            # the double cast: a >17-significant-digit decimal converts
-            # to double differently across engines (Spark rounds the big
-            # decimal once; DuckDB divides int128 by 10^scale — two
-            # roundings). At ≤15 digits the cast is exact everywhere.
-            F.round(F.sum(disc_price), 2).cast("double")
-            .alias("sum_disc_price"),
-            F.round(F.sum(charge), 2).cast("double").alias("sum_charge"),
-            (F.sum(_dec("l_quantity")).cast("double") / n.cast("double"))
+            cents(F.sum(disc_price())).alias("sum_disc_price"),
+            cents(F.sum(charge)).alias("sum_charge"),
+            (F.sum(dec4("l_quantity")).cast("double") / n.cast("double"))
             .alias("avg_qty"),
-            (F.sum(_dec("l_extendedprice")).cast("double") / n.cast("double"))
+            (F.sum(dec4("l_extendedprice")).cast("double") / n.cast("double"))
             .alias("avg_price"),
-            (F.sum(_dec("l_discount")).cast("double") / n.cast("double"))
+            (F.sum(dec4("l_discount")).cast("double") / n.cast("double"))
             .alias("avg_disc"),
             n.alias("count_order"),
         )
@@ -77,9 +74,8 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") < F.lit(cutoff).cast("date")
     ).select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
     li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit(cutoff)
+        F.col("l_shipdate") > F.lit(cutoff).cast("date")
     ).select("l_orderkey", "l_extendedprice", "l_discount")
-    rev = _dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - _dec("l_discount"))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
@@ -88,7 +84,7 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
             "o_orderpriority",
         )
-        .agg(F.sum(rev).cast("double").alias("revenue"))
+        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         .limit(10)
     )
@@ -103,8 +99,7 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises: the semi-join never multiplies order rows no matter how
     many lines match."""
     orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("date"))
+        _span("o_orderdate", "1996-01-01", "1996-07-01")
     ).select("o_orderkey", "o_orderpriority")
     flagged = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
@@ -133,13 +128,11 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey", "s_nationkey"
     )
     orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("date"))
+        _span("o_orderdate", "1996-01-01", "1997-01-01")
     ).select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    rev = _dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - _dec("l_discount"))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
@@ -151,7 +144,7 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(F.sum(rev).cast("double").alias("revenue"))
+        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
     )
 
 
@@ -159,14 +152,13 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 forecast revenue change: single-scan filtered aggregate —
     every predicate must reach the parquet reader."""
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01"))
+        _span("l_shipdate", "1996-01-01", "1997-01-01")
         & (F.col("l_discount") >= 0.05)
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     )
     return li.agg(
-        F.sum(_dec("l_extendedprice") * _dec("l_discount"))
+        F.sum(dec4("l_extendedprice") * dec4("l_discount"))
         .cast("double").alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
@@ -184,8 +176,7 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.col("o_orderpriority"), "-").getItem(0).alias("prio"),
     )
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01"))
+        _span("l_shipdate", "1996-01-01", "1997-01-01")
     ).select("l_orderkey", "l_linestatus")
     # CASE-parity: a NULL priority must land in the ELSE bucket like the
     # SQL CASE, not vanish from F.sum (isin().cast() yields NULL for NULL).
@@ -240,7 +231,7 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         thresholds, F.col("l_partkey") == F.col("t_partkey")
     ).filter(F.col("l_quantity") < F.col("qty_threshold"))
     return small.agg(
-        (F.round(F.sum(_dec("l_extendedprice")), 2).cast("double") / F.lit(7.0))
+        (cents(F.sum(dec4("l_extendedprice"))) / F.lit(7.0))
         .alias("avg_yearly"),
         F.count(F.lit(1)).alias("n_small_lines"),
     )
@@ -252,32 +243,24 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     (numerator CASE inside the same single aggregation as the
     denominator; one join, one shuffle, no second pass).
 
-    The part side carries only (p_partkey, p_type) → broadcast. Sums
-    follow the q1 rule: exact decimal accumulation, round to cents in
-    decimal, THEN cast double, so the ratio divides two bit-identical
-    doubles in both engines."""
+    The part side carries only (p_partkey, p_type) → broadcast. Both
+    sums are exact decimal sums pinned by :func:`cents`, so the ratio
+    divides two bit-identical doubles in both engines."""
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-09-01"))
-        & (F.col("l_shipdate") < F.lit("1996-10-01"))
+        _span("l_shipdate", "1996-09-01", "1996-10-01")
     ).select("l_partkey", "l_extendedprice", "l_discount")
-    rev = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,4)") - _dec("l_discount")
+    promo_rev = F.when(F.col("p_type") == "PROMO", disc_price()).otherwise(
+        dec4(F.lit(0))
     )
-    promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(
-        F.lit(0).cast("decimal(18,4)")
-    )
+    promo, total = cents(F.sum(promo_rev)), cents(F.sum(disc_price()))
     joined = li.join(
         F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
     )
     return joined.agg(
-        F.round(F.sum(promo_rev), 2).cast("double").alias("promo_revenue"),
-        F.round(F.sum(rev), 2).cast("double").alias("total_revenue"),
-        (
-            F.lit(100.0)
-            * F.round(F.sum(promo_rev), 2).cast("double")
-            / F.round(F.sum(rev), 2).cast("double")
-        ).alias("promo_share"),
+        promo.alias("promo_revenue"),
+        total.alias("total_revenue"),
+        (F.lit(100.0) * promo / total).alias("promo_share"),
     )
 
 
@@ -287,14 +270,10 @@ def _q15_lazy(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     Split out so plan tests can assert the shape BEFORE the eager
     materialization in :func:`tpch_q15` hides it behind a checkpoint."""
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01"))
+        _span("l_shipdate", "1996-01-01", "1996-04-01")
     ).select("l_suppkey", "l_extendedprice", "l_discount")
-    rev = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,4)") - _dec("l_discount")
-    )
     per_supp = li.groupBy("l_suppkey").agg(
-        F.round(F.sum(rev), 2).cast("double").alias("total_revenue")
+        cents(F.sum(disc_price())).alias("total_revenue")
     ).persist()
     max_rev = per_supp.agg(F.max("total_revenue").alias("max_rev"))
     supp = load_table(spark, sf_dir, "supplier").select(
@@ -324,7 +303,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the naive double-reference recomputes the fact scan — Spark's
     exchange-reuse does not fire across the agg/filter asymmetry (the
     AQE final plan shows two lineitem ShuffleQueryStages). Revenue
-    doubles come from the same round-in-decimal path on both sides, so
+    doubles come from the same :func:`cents` pin on both sides, so
     equality with the max is bit-exact."""
     result, per_supp = _q15_lazy(spark, sf_dir)
     try:
@@ -391,9 +370,6 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_size") >= 1) & (F.col("p_size") <= smax)
         & (F.col("l_quantity") >= qlo) & (F.col("l_quantity") <= qhi)
     )
-    rev = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,4)") - _dec("l_discount")
-    )
     return (
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .filter(
@@ -402,7 +378,7 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
             | arm("Brand#3", 15, 20, 30)
         )
         .agg(
-            F.round(F.sum(rev), 2).cast("double").alias("revenue"),
+            cents(F.sum(disc_price())).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -422,21 +398,17 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", "n_name"
     )
     orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("date"))
+        _span("o_orderdate", "1996-01-01", "1996-04-01")
     ).select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     ).select("l_orderkey", "l_extendedprice", "l_discount")
-    rev = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,4)") - _dec("l_discount")
-    )
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
+        .agg(cents(F.sum(disc_price())).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(20)
     )
@@ -460,7 +432,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive = cust.filter(F.col("c_acctbal") > 0.0)
     threshold = positive.agg(
         (
-            F.sum(_dec("c_acctbal")).cast("double")
+            F.sum(dec4("c_acctbal")).cast("double")
             / F.count(F.lit(1)).cast("double")
         ).alias("avg_bal")
     )
@@ -474,8 +446,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum(_dec("c_acctbal")), 2)
-            .cast("double").alias("totacctbal"),
+            cents(F.sum(dec4("c_acctbal"))).alias("totacctbal"),
         )
         .orderBy("segment")
     )
@@ -537,13 +508,9 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey"
     )
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01"))
+        _span("l_shipdate", "1996-01-01", "1998-01-01")
     ).select("l_orderkey", "l_suppkey", "l_shipdate",
              "l_extendedprice", "l_discount")
-    rev = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,4)") - _dec("l_discount")
-    )
     supp_nation = nation.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -565,7 +532,7 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.date_format("l_shipdate", "yyyy").alias("l_year"),
         )
-        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
+        .agg(cents(F.sum(disc_price())).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -578,7 +545,7 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     the share test, customer nation → region for the market filter).
 
     Both sums ride one aggregation; the ratio divides the same
-    round-in-decimal doubles on both engines."""
+    :func:`cents`-pinned doubles on both engines."""
     target = "NATION_3"
     region = load_table(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
@@ -599,18 +566,15 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey", "s_nationkey"
     )
     orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("date"))
+        _span("o_orderdate", "1996-01-01", "1998-01-01")
     ).select("o_orderkey", "o_custkey", "o_orderdate")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    rev = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,4)") - _dec("l_discount")
-    )
-    national = F.when(F.col("supp_nation") == target, rev).otherwise(
-        F.lit(0).cast("decimal(18,4)")
-    )
+    national = F.when(
+        F.col("supp_nation") == target, disc_price()
+    ).otherwise(dec4(F.lit(0)))
+    nation_rev, total = cents(F.sum(national)), cents(F.sum(disc_price()))
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
@@ -620,12 +584,9 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(supp_nation), F.col("s_nationkey") == F.col("sn_key"))
         .groupBy(F.date_format("o_orderdate", "yyyy").alias("o_year"))
         .agg(
-            F.round(F.sum(national), 2).cast("double").alias("nation_revenue"),
-            F.round(F.sum(rev), 2).cast("double").alias("total_revenue"),
-            (
-                F.round(F.sum(national), 2).cast("double")
-                / F.round(F.sum(rev), 2).cast("double")
-            ).alias("mkt_share"),
+            nation_rev.alias("nation_revenue"),
+            total.alias("total_revenue"),
+            (nation_rev / total).alias("mkt_share"),
         )
         .orderBy("o_year")
     )
@@ -762,8 +723,7 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_name").startswith("red")
     ).select("p_partkey")
     li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1998-01-01"))
-        & (F.col("l_shipdate") < F.lit("1999-01-01"))
+        _span("l_shipdate", "1998-01-01", "1999-01-01")
     )
     shipped = (
         li.join(
@@ -806,15 +766,11 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: l_partkey, value.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    rev = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,4)") - _dec("l_discount")
-    )
     per_part = li.groupBy("l_partkey").agg(
-        F.round(F.sum(rev), 2).cast("double").alias("value")
+        cents(F.sum(disc_price())).alias("value")
     )
     totals = per_part.agg(
-        F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-        .cast("double").alias("total"),
+        cents(F.sum(dec4("value"))).alias("total"),
         F.count(F.lit(1)).alias("n_parts"),
     )
     threshold = (
@@ -907,10 +863,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey", "s_nationkey"
     )
     nation = load_table(spark, sf_dir, "nation")
-    rev = _dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,4)") - _dec("l_discount")
-    )
-    cost = _dec("p_retailprice") * _dec("l_quantity")
+    cost = dec4("p_retailprice") * dec4("l_quantity")
     agg = (
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -924,8 +877,8 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("o_orderdate", "yyyy").alias("o_year"),
         )
         .agg(
-            F.round(F.sum(rev), 2).cast("double").alias("sum_rev"),
-            F.round(F.sum(cost), 2).cast("double").alias("sum_cost"),
+            cents(F.sum(disc_price())).alias("sum_rev"),
+            cents(F.sum(cost)).alias("sum_cost"),
         )
     )
     return agg.select(

@@ -160,6 +160,7 @@ def skew_salted_agg(spark, sf_dir: str) -> DataFrame:
     through decimal at BOTH stages so re-association cannot drift the
     double. Columns: event_type, n_events, total_value.
     """
+    from bigdata1_spark.operators.basket import dec4
     from bigdata1_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
@@ -172,7 +173,7 @@ def skew_salted_agg(spark, sf_dir: str) -> DataFrame:
                 lambda c: F.sum(c).cast("long"),
             ),
             "total_value": (
-                F.sum(F.col("value").cast("decimal(18,4)")),
+                F.sum(dec4("value")),
                 lambda c: F.sum(c),
             ),
         },

@@ -8,7 +8,12 @@ and (order-insensitive) VALUES; the driver sorts columns by name and
 hashes values. Keep aliases synchronized on both sides.
 
 Determinism rules used throughout so hashes match bit-for-bit:
-* double sums go through DECIMAL(18,4) then cast back (order-independent);
+* double sums go through DECIMAL(18,4) (``basket.dec4``) then cast back
+  (order-independent);
+* a wide decimal money sum is rounded to cents IN DECIMAL before its
+  double cast (``basket.cents``, the oracles' ``CAST(ROUND(x, 2) AS
+  DOUBLE)``): past 17 significant digits the engines convert a decimal
+  to double differently;
 * ratios divide exact integer counts in double (one IEEE op, identical in
   both engines);
 * a float output that is not an exact sum or a single-op ratio is

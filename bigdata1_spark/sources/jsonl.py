@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.operators.basket import cents, dec4
 from bigdata1_spark.sources.tables import has_data, load_table, scratch
 
 # format → (writer options, reader options)
@@ -180,7 +181,7 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.col("o_totalprice").cast("decimal(18,4)").alias("price"),
+        dec4("o_totalprice").alias("price"),
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),
     )
     dim = spark.createDataFrame(
@@ -214,7 +215,7 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return joined.groupBy("month", "campaign").agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("price"), 2).cast("double").alias("total_price"),
+            cents(F.sum("price")).alias("total_price"),
         )
 
     return scratch("bigdata1_dpp_", build)

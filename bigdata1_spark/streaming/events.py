@@ -29,7 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import TS_FMT, exact_sum
+from bigdata1_spark.operators.basket import TS_FMT, dec4, exact_sum
 from bigdata1_spark.operators.temporal import SESSION_GAP_US, session_windows
 from bigdata1_spark.session import scoped_conf
 from bigdata1_spark.sources.tables import has_data, load_table, scratch
@@ -192,7 +192,7 @@ def salted_agg_stream(
         .groupBy("event_type", "__salt")
         .agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(F.col("value").cast("decimal(18,4)")).alias("pv"),
+            F.sum(dec4("value")).alias("pv"),
         )
     )
 

@@ -375,3 +375,54 @@ def test_ewma_all_null_frame_yields_null_not_crash(spark, tmp_path):
     assert out[3] == 10.0
     assert out[4] == 10.0  # NULL skipped, series unchanged
     assert abs(out[5] - (0.9 * 10.0 + 0.1 * 20.0)) < 1e-9
+
+
+def test_seasonal_naive_null_hour_stays_paired(spark, tmp_path):
+    """An hour whose mean is NULL (every value in it NULL) exactly 168 h
+    before a valued hour is still the forecast: the oracle's inner join
+    pairs on (user, hour), not on the value, so the row survives with a
+    NULL forecast and NULL error. The mirror case (a NULL hour 168 h
+    after a valued one) keeps its NULL value. NULL users and NULL
+    timestamps pair with nothing."""
+    import datetime
+
+    t0 = datetime.datetime(2024, 1, 1, 5, 10)
+    week = datetime.timedelta(hours=168)
+    rows = [
+        # user 1: NULL-valued hour, then a valued hour one week later
+        (1, 1, "click", t0, None),
+        (2, 1, "click", t0 + datetime.timedelta(minutes=20), None),
+        (3, 1, "click", t0 + week, 5.0),
+        (4, 1, "click", t0 + week + datetime.timedelta(minutes=5), 6.5),
+        # user 2: valued hour, then a NULL-valued hour one week later,
+        # and a valued hour 167 h later that must not pair
+        (5, 2, "click", t0, 2.25),
+        (6, 2, "click", t0 + week, None),
+        (7, 2, "click", t0 + week - datetime.timedelta(hours=1), 3.0),
+        # a NULL user and a NULL timestamp, each a week apart from a twin
+        (8, None, "click", t0, 1.0),
+        (9, None, "click", t0 + week, 1.0),
+        (10, 3, "click", None, 4.0),
+        (11, 3, "click", t0 + week, 4.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, event_type string, "
+              "ts timestamp, value double"
+    )
+    path = str(tmp_path)
+    df.coalesce(1).write.mode("overwrite").parquet(path + "/events.parquet")
+
+    got = temporal.seasonal_naive(spark, path)
+    paired = {r["user_id"]: r for r in got.collect()}
+    assert sorted(paired) == [1, 2]
+    assert paired[1]["forecast"] is None and paired[1]["value"] == 5.75
+    assert paired[2]["value"] is None and paired[2]["forecast"] == 2.25
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{path}/events.parquet/*.parquet')"
+    )
+    assert_matches_oracle(
+        got, con, ORACLES["seasonal_naive"], key="seasonal_naive"
+    )

@@ -1091,7 +1091,7 @@ SCAN_BUDGETS = {
     "scan_partitioned": 0,
     "scd2_intervals": 1,
     "schema_evolution": 0,
-    "seasonal_naive": 2,
+    "seasonal_naive": 1,  # one hourly mean; the week lag is a range frame
     "session_window_fn": 1,
     "sessionize": 1,
     "setop_except": 2,

@@ -296,3 +296,52 @@ def test_doubled_rank_is_twice_the_average_rank(spark, vals):
         ranks.setdefault(v, []).append(i)
     assert got == {v: 2 * sum(r) // len(r) for v, r in ranks.items()}
     assert all(2 * sum(r) % len(r) == 0 for r in ranks.values())
+
+
+# Money cells in units of 1e-4, as dec4 holds them. |cell| ≤ 2·10^17
+# keeps a group of four below 2^53 cents (the range where the cents pin
+# is exact on both engines) while its sum still reaches 18 significant
+# digits; the mapped strategy makes half-cent ties (x.xx50).
+MONEY_CELL = st.one_of(
+    st.integers(-2 * 10**17, 2 * 10**17),
+    st.integers(-2 * 10**15, 2 * 10**15).map(lambda m: m * 100 + 50),
+)
+
+
+def _money_str(units: int) -> str:
+    sign, units = ("-" if units < 0 else ""), abs(units)
+    return f"{sign}{units // 10**4}.{units % 10**4:04d}"
+
+
+@given(groups=st.lists(st.lists(MONEY_CELL, min_size=1, max_size=4),
+                       min_size=1, max_size=6))
+# 18-digit sums landing on a half cent: a double cast before the round
+# lands on a double just below the tie and rounds it down
+@example(groups=[[123456789012345600, 50], [-123456789012345600, -50],
+                 [50], [-50], [7]])
+@SETTINGS
+def test_cents_matches_duckdb(spark, groups):
+    """``cents`` over an exact DECIMAL(18,4) sum equals DuckDB's
+    ``CAST(ROUND(x, 2) AS DOUBLE)`` bit for bit — half-cent ties round
+    away from zero in decimal on both engines, and the rounded sum
+    casts to the same double."""
+    import duckdb
+
+    from bigdata1_spark.operators.basket import cents, dec4
+
+    rows = [(g, _money_str(u)) for g, cells in enumerate(groups)
+            for u in cells]
+    df = spark.createDataFrame(rows, "g int, x string")
+    got = {
+        r["g"]: r["c"]
+        for r in df.groupBy("g").agg(cents(F.sum(dec4("x"))).alias("c"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (g INTEGER, x VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = dict(con.execute(
+        "SELECT g, CAST(ROUND(SUM(CAST(x AS DECIMAL(18,4))), 2) AS DOUBLE) "
+        "FROM t GROUP BY g"
+    ).fetchall())
+    assert got == want

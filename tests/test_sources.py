@@ -404,6 +404,36 @@ def test_bench_ab_restore_undoes_loader(ab_loader):
     assert not any(m.startswith("bigdata1_spark_abref") for m in _sys.modules)
 
 
+def test_dump_plans_under_plan_pkg_ref(
+    ab_loader, spark, sf_dir, tmp_path, monkeypatch
+):
+    """``tools/dump_plans.py`` with ``PLAN_PKG_REF`` set dumps the ref's
+    plan of a key and then removes the ref's package tree, as BENCH_AB
+    does."""
+    import glob
+    import os
+    import sys as _sys
+    import tempfile
+
+    import bigdata1_spark.session as session
+    from tools import dump_plans
+
+    trees = os.path.join(tempfile.gettempdir(), "bench_ab_*")
+    before = set(glob.glob(trees))
+    monkeypatch.setenv("PLAN_PKG_REF", "HEAD")
+    monkeypatch.setattr(dump_plans, "SF_DIR", sf_dir)
+    # the shared session, untouched by get_spark's confs
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(
+        _sys, "argv", ["dump_plans.py", str(tmp_path), "ref", "groupby_sum"]
+    )
+    dump_plans.main()
+    plan = (tmp_path / "groupby_sum_ref.txt").read_text()
+    assert "HashAggregate" in plan
+    assert set(glob.glob(trees)) == before
+    assert not any(m.startswith("bigdata1_spark_abref") for m in _sys.modules)
+
+
 def test_bench_ab_detail_banks_ref_runs_and_extra_keys(
     monkeypatch, tmp_path, capsys
 ):

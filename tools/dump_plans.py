@@ -23,13 +23,21 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> None:
     out_dir, suffix, *keys = sys.argv[1:]
     ref = os.environ.get("PLAN_PKG_REF")
-    if ref:
-        import bench
-
-        registry = bench._load_ab_registry(ref)
-    else:
+    if not ref:
         from bigdata1_spark import registry
 
+        _dump(registry, out_dir, suffix, keys)
+        return
+    import bench
+
+    registry, restore = bench._load_ab_registry(ref)
+    try:
+        _dump(registry, out_dir, suffix, keys)
+    finally:
+        restore()
+
+
+def _dump(registry, out_dir: str, suffix: str, keys: list[str]) -> None:
     from bigdata1_spark.session import get_spark
 
     spark = get_spark(app_name="bigdata1-plans")

@@ -9,9 +9,10 @@ twins (`tools/gen_twin.py`), and writes ONE JSON artifact keyed by axis
 own row format (rows_match / schema_match / hash_match / spark_rows /
 oracle_rows / err) so coverage claims are evidence-backed even for keys
 the driver rotation missed. Every row that ran also banks ``spark_hash``,
-the value hash of Spark's output (rows-only keys included), so two
-artifacts of the same data show whether a change left a key's output
-byte-identical. The bench-only keys (``bench.EXTRA_BENCH``: the
+an exact hash of Spark's output (the ``repr`` of every raw cell, so a
+double that moves by one ulp changes it; rows-only keys included), so
+two artifacts of the same data show whether a change left a key's
+output byte-identical. The bench-only keys (``bench.EXTRA_BENCH``: the
 pure-LSH dedup path and the LSH pretraining pipeline) have no SQL
 oracle and are not driver queries; they are swept as ``no_oracle`` rows
 so their ``spark_hash`` is banked too.
@@ -57,9 +58,9 @@ def _norm_cell(v):
     return str(v)
 
 
-def _value_hash(df) -> str:
+def _hash_rows(df, cell) -> str:
     rows = sorted(
-        "\x01".join(_norm_cell(c) for c in row)
+        "\x01".join(cell(c) for c in row)
         for row in df.itertuples(index=False, name=None)
     )
     h = hashlib.sha256()
@@ -67,6 +68,18 @@ def _value_hash(df) -> str:
         h.update(r.encode("utf-8", "surrogatepass"))
         h.update(b"\x02")
     return h.hexdigest()
+
+
+def _value_hash(df) -> str:
+    """The driver-style hash: cells normalised by :func:`_norm_cell`, so
+    Spark's and DuckDB's renderings of one value hash equal."""
+    return _hash_rows(df, _norm_cell)
+
+
+def _exact_hash(df) -> str:
+    """The hash of the raw cells' ``repr`` — no float rounding, so it
+    tells a byte-identical output from one a refactor moved by an ulp."""
+    return _hash_rows(df, repr)
 
 
 def _error_row(err: str | None) -> dict:
@@ -159,7 +172,7 @@ def main() -> None:
         got = qs[key](spark, sf_dir).toPandas()
         got = got[sorted(got.columns)]
         row["spark_rows"] = len(got)
-        row["spark_hash"] = _value_hash(got)
+        row["spark_hash"] = _exact_hash(got)
         if key not in osql:
             row["err"] = "no_oracle"
         else:
@@ -168,7 +181,7 @@ def main() -> None:
             row["oracle_rows"] = len(want)
             row["rows_match"] = len(got) == len(want)
             row["schema_match"] = list(got.columns) == list(want.columns)
-            row["hash_match"] = row["spark_hash"] == _value_hash(want)
+            row["hash_match"] = _value_hash(got) == _value_hash(want)
         return row
 
     def _sweep_key(key, sf_dir):
