@@ -1,21 +1,40 @@
-"""Market-basket flagship queries (reference parity).
+"""Market-basket flagship queries (reference parity) and the shared
+basket core.
 
 The reference implements three queries twice (Hadoop MR + Spark 1.6 RDD);
 we re-express the *intended* semantics (SURVEY.md §8 quirks ledger) as
-DataFrame plans:
+kernels over ONE line-item frame, the FIXTURES.md §1 billings shape
+``(bill_id, item, cost)`` plus ``month`` where a kernel needs one.
 
-* :func:`top5_per_month`      — reference TopFive
+Two sources produce that frame:
+
+* TPC-H — :func:`tpch_lines` maps ``lineitem`` (basket = order, item =
+  ``l_partkey``, cost = ``l_extendedprice``); :func:`tpch_month_lines`
+  joins it to :func:`orders_month`, the one (o_orderkey, month)
+  projection the basket kernels use. Three keys keep their own month
+  of ``o_orderdate`` because their plan shape is the point:
+  ``relational._runtime_filter_plan`` (filtered orders side),
+  ``layout.bucketed_join`` (bucketed tables) and ``jsonl.dpp_join``
+  (partition pruning).
+* billing text — ``sources.billing.normalize(parse_billings_*(…))``
+  with ``month_of(bill_date)``.
+
+The kernels (pure ``DataFrame → DataFrame``, no session, no path):
+
+* :func:`month_item_counts` + :func:`top_items` — reference TopFive
   (``BD_hw1/src/spark/TopFive.java:53-118``,
   ``BD_hw1/src/mapreduce/TopFive.java:57-113``)
-* :func:`revenue_per_item_month` — reference TotalPerMonth
+* :func:`monthly_revenue` — reference TotalPerMonth
   (``BD_hw1/src/spark/TotalPerMonth.java:47-122``,
   ``BD_hw1/src/mapreduce/TotalPerMonth.java:60-124``)
-* :func:`assoc_rules`         — reference SupportAndConfidence
+* :func:`basket_items` + :func:`pair_combinations` + :func:`rules` —
+  reference SupportAndConfidence
   (``BD_hw1/src/spark/SupportAndConfidence.java:48-216``,
   ``BD_hw1/src/mapreduce/SupportAndConfidence.java:63-198``)
 
-Basket mapping (FIXTURES.md §1): basket = ``orders`` row, item =
-``lineitem.l_partkey``, cost = ``l_extendedprice``, date = ``o_orderdate``.
+The registry keys (``topk_window``, ``groupby_sum``, ``itemset_freq``,
+``assoc_rules``, ``join_self_pairs``), the micro/relational siblings,
+``billing_total_b`` and the co-supplier graph all call these.
 
 Scale notes (100 TB posture):
 * The orders⋈lineitem join shuffles on the order key — co-partitionable
@@ -150,43 +169,63 @@ def day_num(ts: Column | str) -> Column:
     )
 
 
-def baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (basket, item) pairs: one row per part per order.
+# --- the two sources of the billings frame (FIXTURES.md §1) --------------
 
-    The universal first step of every reference query (SURVEY.md §2.2 P5
-    'flatten billing → item rows'); distinct mirrors the reference's
-    per-basket dedup (quirk Q9: ``array_distinct`` before pairing).
-    """
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
+def tpch_lines(
+    spark: SparkSession, sf_dir: str, item: str = "l_partkey"
+) -> DataFrame:
+    """``lineitem`` as the billings frame: (bill_id, item, cost) with
+    basket = order, cost = ``l_extendedprice`` and ``item`` the item
+    column (the co-supplier graph passes ``l_suppkey``). A rename, not
+    a select: the other columns ride along until Catalyst prunes them,
+    and a lineitem without a price (the graph tests' two-column edge
+    tables) still maps."""
+    return load_table(spark, sf_dir, "lineitem").withColumnsRenamed(
+        {"l_orderkey": "bill_id", item: "item", "l_extendedprice": "cost"}
     )
 
 
 def orders_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(o_orderkey, month) projection of orders."""
+    """(o_orderkey, month) projection of orders — the one such
+    projection the basket kernels use (see the module docstring for
+    the three keys that keep their own)."""
     return load_table(spark, sf_dir, "orders").select(
         "o_orderkey", month_of(F.col("o_orderdate")).alias("month")
     )
 
 
+def tpch_month_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`tpch_lines` with each line's basket month: one inner join
+    to :func:`orders_month` on ``o_orderkey``."""
+    months = orders_month(spark, sf_dir).withColumnRenamed(
+        "o_orderkey", "bill_id"
+    )
+    return tpch_lines(spark, sf_dir).join(months, "bill_id")
+
+
+# --- the kernels: pure DataFrame → DataFrame over the billings frame --------
+
 TOP_ITEMS = 5  # items kept per month (the reference's "five")
 
 
-def top5_per_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-``TOP_ITEMS`` best-selling items per month (reference TopFive,
-    intended).
-
-    Columns: month, item, cnt, rn — deterministic tie-break on item id.
-    """
-    counts = (
-        baskets(spark, sf_dir)
-        .join(orders_month(spark, sf_dir),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("month", F.col("l_partkey").alias("item"))
+def month_item_counts(lines: DataFrame) -> DataFrame:
+    """(month, item, cnt): baskets per month holding the item. Distinct
+    (bill_id, item, month) first — a basket counts an item once (quirk
+    Q9). Month is a function of bill_id, so after a shuffle join on
+    bill_id the join's hash partitioning already satisfies the distinct
+    and it adds no exchange."""
+    return (
+        lines.select("bill_id", "item", "month")
+        .distinct()
+        .groupBy("month", "item")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+
+
+def top_items(counts: DataFrame) -> DataFrame:
+    """Top-``TOP_ITEMS`` rows per month of :func:`month_item_counts`
+    (reference TopFive, intended): columns month, item, cnt, rn, with a
+    deterministic tie-break on item."""
     w = Window.partitionBy("month").orderBy(F.desc("cnt"), F.asc("item"))
     return (
         counts.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -195,27 +234,35 @@ def top5_per_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def revenue_per_item_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Total revenue per item per month (reference TotalPerMonth, intended).
+def monthly_revenue(lines: DataFrame) -> DataFrame:
+    """(item, month, revenue): the exact cost sum per item per month
+    (reference TotalPerMonth, intended). Groups by the full 'yyyy-MM'
+    key (fixes quirks Q3/Q4: the reference aggregates and sorts by month
+    number only, collapsing years)."""
+    return lines.groupBy("item", "month").agg(
+        exact_sum(F.col("cost"), "revenue")
+    )
 
-    Groups by the full 'yyyy-MM' key (fixes quirks Q3/Q4: the reference
-    aggregates/sorts by month number only, collapsing years).
-    Columns: item, month, revenue.
+
+def basket_items(lines: DataFrame) -> DataFrame:
+    """(bill_id, items): the sorted distinct item array per basket.
+
+    The one shared upstream of every itemset computation: one grouping,
+    whose ``collect_set`` dedupes per basket (quirk Q9), so no separate
+    ``distinct`` shuffle is needed (a distinct on (basket, item) would
+    shuffle on both and then reshuffle on the basket — one full extra
+    exchange of the fact table). Callers that fan out cache it,
+    mirroring the reference's cache of the reduced itemset RDD
+    (``BD_hw1/src/spark/SupportAndConfidence.java:112``).
     """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", F.col("l_partkey").alias("item"), "l_extendedprice"
-    )
-    return (
-        li.join(orders_month(spark, sf_dir),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("item", "month")
-        .agg(exact_sum(F.col("l_extendedprice"), "revenue"))
-        .orderBy("item", "month")
+    return lines.groupBy("bill_id").agg(
+        F.array_sort(F.collect_set("item")).alias("items")
     )
 
 
-def _pair_combinations(items: Column) -> Column:
-    """All sorted 2-combinations of a (sorted, distinct) item array.
+def pair_combinations(items: Column) -> Column:
+    """All sorted 2-combinations of a (sorted, distinct) item array, as
+    struct(i1, i2) with i1 < i2.
 
     Array-local equivalent of ``Utils.findSortedCombinations``
     (``BD_hw1/src/spark/Utils.java:51-88``): for every i<j emit
@@ -234,98 +281,32 @@ def _pair_combinations(items: Column) -> Column:
     )
 
 
-def basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(l_orderkey, items) — sorted distinct item array per basket.
-
-    The single shared upstream of every itemset computation: one scan +
-    one grouping — ``collect_set`` dedupes per basket (quirk Q9), so no
-    separate ``distinct`` shuffle is needed (going through ``baskets``
-    would shuffle on (orderkey, partkey) and then reshuffle on orderkey
-    — one full extra exchange of the fact table). Callers that fan out
-    (assoc_rules, itemset_frequencies) cache it, mirroring the
-    reference's cache of the reduced itemset RDD
-    (``BD_hw1/src/spark/SupportAndConfidence.java:112``).
-    """
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-    )
-
-
-def itemset_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequencies of 1- and 2-itemsets over order baskets.
-
-    Reference: single reduceByKey over a union of singleton and pair
-    emissions (``BD_hw1/src/spark/SupportAndConfidence.java:62-112``).
-    Itemsets are canonical sorted arrays rendered as ','-joined strings so
-    downstream consumers (and the SQL oracle) share one key shape.
-    Columns: itemset, n_items, freq.
-
-    The per-basket table fans out to the singleton and the pair branch
-    of the union, so it is cached (same rationale and reference citation
-    as assoc_rules) — without it both branches re-run scan+distinct+group.
-    """
-    per_basket = basket_items(spark, sf_dir).cache()
-    singles = per_basket.select(
-        F.explode("items").alias("item")
-    ).select(
-        F.col("item").cast("string").alias("itemset"),
-        F.lit(1).cast("long").alias("n_items"),
-    )
-    pairs = per_basket.select(
-        F.explode(_pair_combinations(F.col("items"))).alias("p")
-    ).select(
-        F.concat_ws(",", F.col("p.i1"), F.col("p.i2")).alias("itemset"),
-        F.lit(2).cast("long").alias("n_items"),
-    )
-    return (
-        singles.unionAll(pairs)
-        .groupBy("itemset", "n_items")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-
-
-def pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-occurrence counts of sorted item pairs across baskets.
-
-    Columns: i1, i2, pair_cnt with i1 < i2 (canonical order — reference
-    sorts combinations, ``BD_hw1/src/spark/Utils.java:74-77``).
-    """
-    return _pair_counts_from(basket_items(spark, sf_dir))
-
-
 def _pair_counts_from(per_basket: DataFrame) -> DataFrame:
     return (
-        per_basket.select(F.explode(_pair_combinations(F.col("items"))).alias("p"))
+        per_basket.select(F.explode(pair_combinations(F.col("items"))).alias("p"))
         .groupBy(F.col("p.i1").alias("i1"), F.col("p.i2").alias("i2"))
         .agg(F.count(F.lit(1)).alias("pair_cnt"))
     )
 
 
-def assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise association rules with support and confidence.
-
-    Reference SupportAndConfidence, intended semantics: support and
-    confidence as plain fractions (quirk Q6), no self-rules (Q7), blank
-    baskets excluded from the denominator (Q8).
+def rules(per_basket: DataFrame) -> DataFrame:
+    """Pairwise association rules over :func:`basket_items` (reference
+    SupportAndConfidence, intended): support and confidence as plain
+    fractions (quirk Q6), no self-rules (Q7), blank baskets excluded
+    from the denominator (Q8).
 
     support(a→b)    = pair_cnt / total_baskets
     confidence(a→b) = pair_cnt / count(a)
 
     Columns: antecedent, consequent, pair_cnt, support, confidence.
 
-    Plan shape: the shared per-basket item table is built ONCE and
-    cached (it fans out to total/item-counts/pair-counts — mirroring the
-    reference's cache at ``BD_hw1/src/spark/SupportAndConfidence.java:
-    112``); total is a plain count of cached baskets (replaces the
-    reference's driver-side Accumulator round-trip, ``:54-57``); both
-    rule directions union; the antecedent join and the 1-row total are
-    broadcast. Net: 2 shuffles to build the cache + 2 aggregation
-    shuffles, vs 4 full recomputations without the reuse.
+    ``per_basket`` fans out to the total, the item counts and the pair
+    counts, so callers cache it (the reference's cache at
+    ``BD_hw1/src/spark/SupportAndConfidence.java:112``). The total is a
+    plain count (replaces the reference's driver-side Accumulator
+    round-trip, ``:54-57``); both rule directions union; the antecedent
+    join and the 1-row total are broadcast.
     """
-    per_basket = basket_items(spark, sf_dir).cache()
     item_counts = (
         per_basket.select(F.explode("items").alias("item"))
         .groupBy("item")
@@ -358,3 +339,64 @@ def assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
              / F.col("item_cnt").cast("double")).alias("confidence"),
         )
     )
+
+
+# --- the registry keys: the kernels over the TPC-H source -----------------
+
+def top5_per_month(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference TopFive over the TPC-H baskets: columns month, item,
+    cnt, rn."""
+    return top_items(month_item_counts(tpch_month_lines(spark, sf_dir)))
+
+
+def revenue_per_item_month(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference TotalPerMonth over the TPC-H baskets: columns item,
+    month, revenue. Unsorted — the oracle hash ignores row order, and a
+    global sort costs a range exchange and a sampling job."""
+    return monthly_revenue(tpch_month_lines(spark, sf_dir))
+
+
+def itemset_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequencies of 1- and 2-itemsets over order baskets.
+
+    Reference: single reduceByKey over a union of singleton and pair
+    emissions (``BD_hw1/src/spark/SupportAndConfidence.java:62-112``).
+    Itemsets are canonical sorted arrays rendered as ','-joined strings so
+    downstream consumers (and the SQL oracle) share one key shape.
+    Columns: itemset, n_items, freq. The per-basket table fans out to
+    both branches of the union, so it is cached.
+    """
+    per_basket = basket_items(tpch_lines(spark, sf_dir)).cache()
+    singles = per_basket.select(
+        F.explode("items").alias("item")
+    ).select(
+        F.col("item").cast("string").alias("itemset"),
+        F.lit(1).cast("long").alias("n_items"),
+    )
+    pairs = per_basket.select(
+        F.explode(pair_combinations(F.col("items"))).alias("p")
+    ).select(
+        F.concat_ws(",", F.col("p.i1"), F.col("p.i2")).alias("itemset"),
+        F.lit(2).cast("long").alias("n_items"),
+    )
+    return (
+        singles.unionAll(pairs)
+        .groupBy("itemset", "n_items")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+
+
+def pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Co-occurrence counts of sorted item pairs across baskets.
+
+    Columns: i1, i2, pair_cnt with i1 < i2 (canonical order — reference
+    sorts combinations, ``BD_hw1/src/spark/Utils.java:74-77``).
+    """
+    return _pair_counts_from(basket_items(tpch_lines(spark, sf_dir)))
+
+
+def assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference SupportAndConfidence over the TPC-H baskets (see
+    :func:`rules`); the cached per-basket table is built once, not once
+    per consumer."""
+    return rules(basket_items(tpch_lines(spark, sf_dir)).cache())

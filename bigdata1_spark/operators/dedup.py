@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bigdata1_spark.functions import hashing, textfns, vectors
-from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.operators.basket import pair_combinations, snap6
 from bigdata1_spark.operators.graph import (
     iterate,
     min_label_round,
@@ -273,20 +273,6 @@ def dedup_jaccard(
     return _jaccard_pairs(spark, sf_dir, cand, ordered, threshold)
 
 
-def _combinations(ids: Column) -> Column:
-    """All 2-combinations of a sorted array as ARRAY<STRUCT<id1,id2>>
-    (id1 < id2 by the array order)."""
-    return F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("id1"), y.alias("id2")),
-            ),
-        )
-    )
-
-
 def minhash_candidates(sh: DataFrame, max_bucket_chunk: int = 64) -> DataFrame:
     """MinHash+LSH candidate pairs (doc ids sharing ≥1 band bucket) of
     a (doc_id, hs) shingle-hash table.
@@ -297,9 +283,9 @@ def minhash_candidates(sh: DataFrame, max_bucket_chunk: int = 64) -> DataFrame:
 
     Skew guard: a bucket's sorted id array is sliced into chunks of at
     most ``max_bucket_chunk`` ids; pairs within a chunk are generated
-    array-locally (the same combination pattern as the basket
-    operators — no self-join shuffle), pairs across chunks through a
-    chunk-index self-join, so no single task ever materializes more
+    array-locally (:func:`basket.pair_combinations`, the basket
+    operators' builder — no self-join shuffle), pairs across chunks
+    through a chunk-index self-join, so no single task ever materializes more
     than ``max_bucket_chunk``² pairs even for a pathological hot bucket
     (e.g. a boilerplate-dominated corpus where thousands of docs share
     a band key). Buckets at or under the cap produce one chunk and the
@@ -338,8 +324,8 @@ def minhash_candidates(sh: DataFrame, max_bucket_chunk: int = 64) -> DataFrame:
     # would rebuild O(|bucket|·cap) structs in a single task.
     idx = chunked.select("bk", F.posexplode("chunks").alias("ci", "chunk"))
     within = idx.select(
-        F.explode(_combinations(F.col("chunk"))).alias("p")
-    )
+        F.explode(pair_combinations(F.col("chunk"))).alias("p")
+    ).select(F.col("p.i1").alias("id1"), F.col("p.i2").alias("id2"))
     # ids are globally sorted before chunking, so for ci < cj every id in
     # chunk ci is smaller than every id in chunk cj → id1 < id2 holds.
     across = (
@@ -364,7 +350,7 @@ def minhash_candidates(sh: DataFrame, max_bucket_chunk: int = 64) -> DataFrame:
             ).alias("p")
         )
     )
-    return within.union(across).select("p.id1", "p.id2").distinct()
+    return within.union(across.select("p.id1", "p.id2")).distinct()
 
 
 def dedup_near(

@@ -27,6 +27,7 @@ from bigdata1_spark.operators.basket import (
     day_num,
     exact_sum,
     fixed_point,
+    month_of,
 )
 from bigdata1_spark.operators.temporal import session_windows, user_order
 from bigdata1_spark.sources.tables import load_table
@@ -353,7 +354,7 @@ def sketch_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        F.date_format("ts", "yyyy-MM").alias("month"),
+        month_of(F.col("ts")).alias("month"),
         "user_id",
     )
     daily = ev.groupBy("month", "day").agg(

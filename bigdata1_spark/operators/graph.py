@@ -33,7 +33,9 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import snap6
+from bigdata1_spark.operators.basket import (
+    basket_items, pair_combinations, snap6, tpch_lines,
+)
 from bigdata1_spark.operators.stats import pearson_terms
 from bigdata1_spark.sources.tables import load_table, parquet_row_count
 
@@ -129,29 +131,10 @@ def _order_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-supplier pairs (a < b), one row per order that contains both,
     emitted array-locally from each order's sorted supplier set (bounded
     by the 7-line order cap) — no self-join shuffle."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    per_order = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_suppkey")).alias("ss")
-    )
+    per_order = basket_items(tpch_lines(spark, sf_dir, item="l_suppkey"))
     return per_order.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ss"),
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ss"), i + 2, F.size(F.col("ss"))
-                        ),
-                        lambda y: F.struct(
-                            x.alias("a"), y.alias("b")
-                        ),
-                    ),
-                )
-            )
-        ).alias("e")
-    ).select("e.a", "e.b")
+        F.explode(pair_combinations(F.col("items"))).alias("e")
+    ).select(F.col("e.i1").alias("a"), F.col("e.i2").alias("b"))
 
 
 def _co_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

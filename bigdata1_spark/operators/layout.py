@@ -114,7 +114,7 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     removed at interpreter exit instead.
     Columns: month, n_lines, revenue.
     """
-    from bigdata1_spark.operators.basket import exact_sum
+    from bigdata1_spark.operators.basket import exact_sum, month_of
 
     work = tempfile.mkdtemp(prefix="bigdata1_bucketed_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
@@ -152,7 +152,7 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        joined.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
+        joined.groupBy(month_of(F.col("o_orderdate")).alias("month"))
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             exact_sum(F.col("l_extendedprice"), "revenue"),

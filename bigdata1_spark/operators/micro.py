@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata1_spark.operators.basket import (
-    cents, dec4, disc_price, exact_sum, month_of,
+    basket_items, cents, dec4, disc_price, exact_sum, month_item_counts,
+    orders_month, tpch_lines, tpch_month_lines,
 )
 from bigdata1_spark.sources.tables import load_table
 
@@ -46,9 +47,7 @@ def project_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- P2: month truncation (BD_hw1/src/spark/TopFive.java:65-66) ----------
 
 def project_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", month_of(F.col("o_orderdate")).alias("month")
-    )
+    return orders_month(spark, sf_dir)
 
 
 # --- P3: sub-split + cast (BD_hw1/src/spark/TotalPerMonth.java:69-74) ----
@@ -80,13 +79,8 @@ def filter_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def explode_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trips baskets through collect_set + explode — the reference's
     universal flatMap step, equivalent to DISTINCT (orderkey, item)."""
-    per_basket = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.collect_set("l_partkey").alias("items"))
-    )
-    return per_basket.select(
-        "l_orderkey", F.explode("items").alias("item")
+    return basket_items(tpch_lines(spark, sf_dir)).select(
+        F.col("bill_id").alias("l_orderkey"), F.explode("items").alias("item")
     )
 
 
@@ -95,13 +89,8 @@ def explode_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted item array per order; drop-first mirrors removeOneItem
     (antecedent derivation)."""
-    per_basket = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-    )
-    return per_basket.select(
-        "l_orderkey",
+    return basket_items(tpch_lines(spark, sf_dir)).select(
+        F.col("bill_id").alias("l_orderkey"),
         F.size("items").cast("long").alias("n_items"),
         F.element_at("items", 1).alias("first_item"),
         F.array_join(
@@ -143,16 +132,7 @@ def scalar_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- A1: count per (month, item) (BD_hw1/src/spark/TopFive.java:76-79) ---
 
 def groupby_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", month_of(F.col("o_orderdate")).alias("month")
-    )
-    return (
-        li.distinct()
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("month", F.col("l_partkey").alias("item"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return month_item_counts(tpch_month_lines(spark, sf_dir))
 
 
 # --- A4: global count (BD_hw1/src/spark/SupportAndConfidence.java:54-57) -
@@ -170,22 +150,18 @@ def global_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def collect_list_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct items per month as a sorted CSV — the reference's
     groupByKey materialization, made deterministic via sort."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", month_of(F.col("o_orderdate")).alias("month")
-    )
     # distinct FIRST: collect_set + count_distinct in one agg would plan
     # a two-phase distinct aggregation (expand + double shuffle of raw
     # pairs); pre-distincting makes both a plain collect_list/count over
     # an already-unique stream (sf0.1: 4.4s -> ~2s)
     pairs = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select("month", "l_partkey")
+        tpch_month_lines(spark, sf_dir)
+        .select("month", "item")
         .distinct()
     )
     return pairs.groupBy("month").agg(
         F.array_join(
-            F.array_sort(F.collect_list("l_partkey")), ","
+            F.array_sort(F.collect_list("item")), ","
         ).alias("items_csv"),
         F.count(F.lit(1)).alias("n_items"),
     )
@@ -207,16 +183,10 @@ def sort_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sort_asc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue per month, ascending full 'yyyy-MM' key (fixes quirk Q4:
     reference sorts by month token only, ignoring year)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", month_of(F.col("o_orderdate")).alias("month")
-    )
     return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        tpch_month_lines(spark, sf_dir)
         .groupBy("month")
-        .agg(exact_sum(F.col("l_extendedprice"), "revenue"))
+        .agg(exact_sum(F.col("cost"), "revenue"))
         .orderBy("month")
     )
 
@@ -350,13 +320,8 @@ def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def posexplode_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional explode of the per-order sorted item array (ordinal
     UNNEST — the position column is what plain explode loses)."""
-    b = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-    )
-    return b.select(
-        "l_orderkey",
+    return basket_items(tpch_lines(spark, sf_dir)).select(
+        F.col("bill_id").alias("l_orderkey"),
         F.posexplode("items").alias("pos", "item"),
     ).select(
         "l_orderkey", (F.col("pos") + 1).cast("long").alias("pos"), "item"

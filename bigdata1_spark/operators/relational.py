@@ -13,7 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata1_spark.operators.basket import (
-    cents, dec4, exact_sum, month_of, snap6,
+    cents, dec4, exact_sum, month_of, monthly_revenue, snap6,
+    tpch_month_lines,
 )
 from bigdata1_spark.operators.temporal import (
     SESSION_GAP_US,
@@ -96,17 +97,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue delta per item (lag window) — the
     classic trend query over the TotalPerMonth output."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", F.col("l_partkey").alias("item"), "l_extendedprice"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", month_of(F.col("o_orderdate")).alias("month")
-    )
-    monthly = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("item", "month")
-        .agg(exact_sum(F.col("l_extendedprice"), "revenue"))
-    )
+    monthly = monthly_revenue(tpch_month_lines(spark, sf_dir))
     w = Window.partitionBy("item").orderBy(F.asc_nulls_first("month"))
     prev = F.lag("revenue").over(w)
     return monthly.select(
@@ -158,17 +149,11 @@ def pivot_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: revenue per month × return flag as columns (fixed pivot
     values keep the schema static — required at scale and for oracles;
     relationally equivalent to per-flag conditional aggregation)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_extendedprice"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", month_of(F.col("o_orderdate")).alias("month")
-    )
     return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        tpch_month_lines(spark, sf_dir)
         .groupBy("month")
         .pivot("l_returnflag", ["R", "A", "N"])
-        .agg(exact_sum(F.col("l_extendedprice"), "rev"))
+        .agg(exact_sum(F.col("cost"), "rev"))
         .select(
             "month",
             F.coalesce(F.col("R"), F.lit(0.0)).alias("rev_r"),
@@ -429,17 +414,7 @@ def _runtime_filter_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-function surface: rank / dense_rank / percent_rank /
     ntile over a deterministic total order (month is unique per item)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", F.col("l_partkey").alias("item"), "l_extendedprice"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", month_of(F.col("o_orderdate")).alias("month")
-    )
-    monthly = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("item", "month")
-        .agg(exact_sum(F.col("l_extendedprice"), "revenue"))
-    )
+    monthly = monthly_revenue(tpch_month_lines(spark, sf_dir))
     w = Window.partitionBy("item").orderBy(
         F.desc_nulls_last("revenue"), F.asc_nulls_first("month")
     )

@@ -22,13 +22,29 @@ runs inside whole-stage codegen at any scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from bigdata1_spark.operators.basket import (
+    month_of, monthly_revenue, tpch_lines,
+)
+from bigdata1_spark.sources.tables import load_table, spread_if_starved
 
 
-def read_billing_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Raw text scan → one 'value' column per line (reference S1)."""
-    return spark.read.text(path)
+def render_line(bill_date: Column, items: Column) -> Column:
+    """One billing text line, the inverse of the parsers below: the
+    unpadded 'y-M-d' date (quirk Q10), then the ARRAY<STRING> ``items``
+    (Format A names or Format B 'COST NAME' tokens), comma-joined."""
+    return F.concat_ws(
+        ",",
+        F.concat_ws(
+            "-", F.year(bill_date), F.month(bill_date), F.dayofmonth(bill_date)
+        ),
+        items,
+    )
 
 
 def _split_line(df: DataFrame) -> DataFrame:
@@ -102,44 +118,34 @@ def total_per_month_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     the costed text is constructed deterministically from the TPC-H
     tables (one line per order: unpadded date, then 'extendedprice
     pPARTKEY' per lineitem), round-tripped through ``parse_billings_b``
-    + ``normalize``, and aggregated. The oracle computes the same
-    aggregate directly from the source tables — equality holds because
-    double→string→double round-trips exactly and the sums are
-    decimal-exact. Columns: item, month, total.
+    + ``normalize``, and aggregated by ``basket.monthly_revenue``. The
+    oracle computes the same aggregate directly from the source tables —
+    equality holds because double→string→double round-trips exactly and
+    the sums are decimal-exact. Columns: item, month, total.
     """
-    from bigdata1_spark.operators.basket import exact_sum, month_of
-    from bigdata1_spark.sources.tables import load_table
-
     # Format B has no NULL representation: a null date would render as
-    # the unparseable 'null-null-null' (format_string stringifies NULL
-    # — ANSI to_date then raises; found by the .nulldata sweep) and a
-    # null cost would drop its field from concat_ws. Rows that cannot
-    # round-trip are excluded from the fixture — the oracle filters
-    # identically, so this is the key's contract, not a data loss.
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_extendedprice"
-    ).filter(F.col("l_extendedprice").isNotNull())
+    # an unparseable date field (ANSI to_date then raises; found by the
+    # .nulldata sweep) and a null cost would drop its field from
+    # concat_ws. Rows that cannot round-trip are excluded from the
+    # fixture — the oracle filters identically, so this is the key's
+    # contract, not a data loss.
+    li = tpch_lines(spark, sf_dir).filter(F.col("cost").isNotNull())
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     ).filter(F.col("o_orderdate").isNotNull())
-    items = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        "o_orderkey",
-        F.format_string(
-            "%d-%d-%d",
-            F.year("o_orderdate"),
-            F.month("o_orderdate"),
-            F.dayofmonth("o_orderdate"),
-        ).alias("d"),
+    items = li.join(orders, li.bill_id == orders.o_orderkey).select(
+        "bill_id",
+        "o_orderdate",
         F.concat_ws(
             " ",
-            F.col("l_extendedprice").cast("string"),
-            F.concat(F.lit("p"), F.col("l_partkey")),
+            F.col("cost").cast("string"),
+            F.concat(F.lit("p"), F.col("item")),
         ).alias("ci"),
     )
     lines = (
-        items.groupBy("o_orderkey", "d")
+        items.groupBy("bill_id", "o_orderdate")
         .agg(F.collect_list("ci").alias("cis"))
-        .select(F.concat_ws(",", F.col("d"), F.col("cis")).alias("value"))
+        .select(render_line(F.col("o_orderdate"), F.col("cis")).alias("value"))
     )
     # Spread the rendered lines before the parse leg (footer-gated, the
     # dedup-verify pattern): line rows are small strings so AQE's
@@ -149,35 +155,30 @@ def total_per_month_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition-invariant: bill_id (the one partition-sensitive column,
     # from monotonically_increasing_id in normalize) is aggregated away
     # by this key's (item, month) rollup.
-    from bigdata1_spark.sources.tables import spread_if_starved
-    import os
-
     lines = spread_if_starved(
         spark, lines, os.path.join(sf_dir, "lineitem.parquet")
     )
-    norm = normalize(parse_billings_b(lines), costed=True)
-    return (
-        norm.groupBy(
-            "item", month_of(F.col("bill_date")).alias("month")
-        )
-        .agg(exact_sum(F.col("cost"), "total"))
+    norm = normalize(parse_billings_b(lines)).withColumn(
+        "month", month_of(F.col("bill_date"))
     )
+    return monthly_revenue(norm).withColumnRenamed("revenue", "total")
 
 
-def normalize(parsed: DataFrame, costed: bool = False) -> DataFrame:
-    """Exploded line-item view (FIXTURES.md §1):
-    (bill_id, bill_date, item, cost) — one row per item per billing."""
-    with_id = parsed.withColumn("bill_id", F.monotonically_increasing_id())
-    if costed:
-        ex = with_id.select(
-            "bill_id", "bill_date", F.explode("items").alias("ci")
-        )
-        return ex.select(
-            "bill_id", "bill_date",
-            F.col("ci.name").alias("item"),
-            F.col("ci.cost").alias("cost"),
-        )
-    ex = with_id.select(
-        "bill_id", "bill_date", F.explode("items").alias("item")
+def normalize(parsed: DataFrame) -> DataFrame:
+    """Exploded line-item view (FIXTURES.md §1), the basket kernels'
+    input: (bill_id, bill_date, item, cost) — one row per item per
+    billing. Costed (Format B) items are structs; Format A items are
+    names with a NULL cost."""
+    costed = isinstance(parsed.schema["items"].dataType.elementType, StructType)
+    it = F.col("it")
+    return parsed.withColumn(
+        "bill_id", F.monotonically_increasing_id()
+    ).select(
+        "bill_id", "bill_date", F.explode("items").alias("it")
+    ).select(
+        "bill_id",
+        "bill_date",
+        (it.getField("name") if costed else it).alias("item"),
+        (it.getField("cost") if costed else F.lit(None).cast("double"))
+        .alias("cost"),
     )
-    return ex.withColumn("cost", F.lit(None).cast("double"))

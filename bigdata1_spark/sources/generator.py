@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.sources.billing import parse_billings_a, render_line
+
 # BD_hw1/food:1-8
 FOOD_VOCAB = (
     "uova", "latte", "pane", "vino", "pesce", "insalata", "formaggio",
@@ -37,22 +39,17 @@ def _h32(seed: int, salt: str, *cols: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
 
 
-def gen_billings(
-    spark: SparkSession,
-    n: int = 1000,
-    seed: int = 42,
-    vocab: tuple[str, ...] = FOOD_VOCAB,
-) -> DataFrame:
+def gen_billings(spark: SparkSession, n: int = 1000, seed: int = 42) -> DataFrame:
     """(bill_id, bill_date DATE, items ARRAY<STRING>) — n deterministic rows.
 
     Per-row item subset: vocabulary sorted by per-(row,word) md5 hex
     (lowercase hex sorts identically everywhere), then the first k
     taken — uniform without replacement, fully deterministic, no
-    Python. k ∈ [1, min(9, |vocab|)] mirrors the reference's
+    Python. k ∈ [1, min(9, |FOOD_VOCAB|)] mirrors the reference's
     ``rand.nextInt(max)`` with the 0→1 bump.
     """
-    k_max = min(9, len(vocab))
-    vocab_arr = F.array(*[F.lit(w) for w in vocab])
+    k_max = min(9, len(FOOD_VOCAB))
+    vocab_arr = F.array(*[F.lit(w) for w in FOOD_VOCAB])
     bid = F.col("bill_id")
 
     df = spark.range(n).select(
@@ -91,24 +88,13 @@ def billing_lines(df: DataFrame) -> DataFrame:
     """Render generated billings as reference Format A text lines
     (unpadded date, comma-joined — ``ItemBillingGenerator.java:25``)."""
     return df.select(
-        F.concat_ws(
-            ",",
-            F.concat_ws(
-                "-",
-                F.year("bill_date"),
-                F.month("bill_date"),
-                F.dayofmonth("bill_date"),
-            ),
-            F.array_join("items", ","),
-        ).alias("value")
+        render_line(F.col("bill_date"), F.col("items")).alias("value")
     )
 
 
 def gen_billings_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (rows-only check): generate → render → re-parse —
     round-trips the generator through the Format A parser."""
-    from bigdata1_spark.sources.billing import parse_billings_a
-
     lines = billing_lines(gen_billings(spark, n=1000, seed=42))
     parsed = parse_billings_a(lines)
     return parsed.select(

@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata1_spark.operators.basket import cents, dec4
+from bigdata1_spark.operators.basket import cents, dec4, month_of
 from bigdata1_spark.sources.tables import has_data, load_table, scratch
 
 # format → (writer options, reader options)
@@ -182,7 +182,7 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         dec4("o_totalprice").alias("price"),
-        F.date_format("o_orderdate", "yyyy-MM").alias("month"),
+        month_of(F.col("o_orderdate")).alias("month"),
     )
     dim = spark.createDataFrame(
         list(DPP_MONTHS), ["month", "campaign"]

@@ -13,7 +13,11 @@ from bigdata1_spark.plans import checks
 
 @pytest.fixture()
 def small_df(spark, sf_dir):
-    return basket.revenue_per_item_month(spark, sf_dir).limit(500)
+    return (
+        basket.revenue_per_item_month(spark, sf_dir)
+        .orderBy("item", "month")
+        .limit(500)
+    )
 
 
 def _collected(df):

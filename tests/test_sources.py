@@ -60,7 +60,7 @@ def test_format_b_parse_and_normalize(spark):
         ["value"],
     )
     parsed = billing.parse_billings_b(lines)
-    rows = billing.normalize(parsed, costed=True).collect()
+    rows = billing.normalize(parsed).collect()
     # blank line dropped (quirk Q8); space-less item dropped (the
     # reference tokenizer would throw on it); non-numeric cost dropped
     # (try_cast, not an ANSI crash)
@@ -84,63 +84,70 @@ def test_format_a_blank_and_dedup(spark):
 
 def test_reference_queries_over_billing_text(spark, tmp_path):
     """End-to-end parity on the reference's OWN input format: generate
-    Format A text lines, parse, run all three reference queries
-    (TopFive / TotalPerMonth-shape / SupportAndConfidence), check
-    against DuckDB over the exploded line-item table."""
+    Format A text lines, parse, run the engine's three reference kernels
+    (TopFive / TotalPerMonth / SupportAndConfidence) on the billings
+    frame, check against DuckDB over the exploded line-item table."""
     import duckdb
 
-    from pyspark.sql import Window
+    from bigdata1_spark.operators import basket
 
     lines = generator.billing_lines(generator.gen_billings(spark, n=400, seed=9))
     path = str(tmp_path / "billings.txt")
     lines.coalesce(1).write.mode("overwrite").text(path)
 
-    parsed = billing.parse_billings_a(billing.read_billing_lines(spark, path))
+    parsed = billing.parse_billings_a(spark.read.text(path))
+    # Format A carries no cost: the name length stands in for it
     norm = billing.normalize(parsed).select(
-        "bill_id", F.date_format("bill_date", "yyyy-MM").alias("month"), "item"
+        "bill_id", "item",
+        F.length("item").cast("double").alias("cost"),
+        basket.month_of(F.col("bill_date")).alias("month"),
     ).cache()
     con = duckdb.connect()
     con.register("norm", norm.toPandas())
 
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def duck(sql):
+        return sorted(con.execute(sql).fetchall())
+
     # TopFive (intended semantics, quirks Q1/Q2): top-5 items per month
-    cnt = norm.groupBy("month", "item").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("month").orderBy(F.desc("cnt"), F.asc("item"))
-    top5 = cnt.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
-    got = {tuple(r) for r in top5.select("month", "item", "cnt").collect()}
-    want = {tuple(r) for r in con.execute("""
-        SELECT month, item, cnt FROM (
+    top5 = basket.top_items(basket.month_item_counts(norm))
+    assert rows(top5) == duck("""
+        SELECT month, item, cnt, rn FROM (
           SELECT month, item, COUNT(*) cnt,
-                 ROW_NUMBER() OVER (PARTITION BY month
-                                    ORDER BY COUNT(*) DESC, item) rn
-          FROM norm GROUP BY month, item)
-        WHERE rn <= 5""").fetchall()}
-    assert got == want
+                 CAST(ROW_NUMBER() OVER (PARTITION BY month
+                      ORDER BY COUNT(*) DESC, item) AS BIGINT) rn
+          FROM (SELECT DISTINCT bill_id, item, month FROM norm)
+          GROUP BY month, item)
+        WHERE rn <= 5""")
 
-    # TotalPerMonth shape (count stands in for cost on Format A)
-    got = {tuple(r) for r in
-           norm.groupBy("item", "month").agg(F.count(F.lit(1)).alias("n"))
-           .collect()}
-    want = {tuple(r) for r in con.execute(
-        "SELECT item, month, COUNT(*) FROM norm GROUP BY 1, 2").fetchall()}
-    assert got == want
+    # TotalPerMonth: exact cost sum per (item, month)
+    assert rows(basket.monthly_revenue(norm)) == duck("""
+        SELECT item, month, CAST(SUM(cost) AS DOUBLE)
+        FROM norm GROUP BY 1, 2""")
 
-    # SupportAndConfidence invariants on the parsed corpus
-    total = norm.select("bill_id").distinct().count()
-    pairs = (
-        norm.alias("a").join(norm.alias("b"),
-            (F.col("a.bill_id") == F.col("b.bill_id"))
-            & (F.col("a.item") < F.col("b.item")))
-        .groupBy(F.col("a.item").alias("i1"), F.col("b.item").alias("i2"))
-        .agg(F.count(F.lit(1)).alias("pc")))
-    items = norm.groupBy("item").agg(F.count(F.lit(1)).alias("ic"))
-    rules = (pairs.join(F.broadcast(items), pairs.i1 == items.item)
-             .select("i1", "i2",
-                     (F.col("pc") / F.lit(total)).alias("support"),
-                     (F.col("pc") / F.col("ic")).alias("confidence")))
-    bad = rules.filter(~((F.col("support") > 0)
-                         & (F.col("support") <= F.col("confidence"))
-                         & (F.col("confidence") <= 1)))
-    assert bad.count() == 0
+    # SupportAndConfidence: the rules themselves
+    per_basket = basket.basket_items(norm).cache()
+    rules = basket.rules(per_basket)
+    got = rows(rules)
+    assert got and got == duck("""
+        WITH b AS (SELECT DISTINCT bill_id, item FROM norm),
+        total AS (SELECT COUNT(DISTINCT bill_id) AS n FROM b),
+        ic AS (SELECT item, COUNT(*) AS c FROM b GROUP BY item),
+        pairs AS (
+          SELECT x.item AS i1, y.item AS i2, COUNT(*) AS pc
+          FROM b x JOIN b y ON x.bill_id = y.bill_id AND x.item < y.item
+          GROUP BY 1, 2),
+        directed AS (
+          SELECT i1 AS a, i2 AS c, pc FROM pairs
+          UNION ALL SELECT i2, i1, pc FROM pairs)
+        SELECT d.a, d.c, d.pc,
+               CAST(d.pc AS DOUBLE) / CAST(t.n AS DOUBLE),
+               CAST(d.pc AS DOUBLE) / CAST(ic.c AS DOUBLE)
+        FROM directed d JOIN ic ON d.a = ic.item CROSS JOIN total t""")
+    assert all(0 < s <= c <= 1 for *_, s, c in got)
+    per_basket.unpersist()
     norm.unpersist()
 
 
