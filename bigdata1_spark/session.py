@@ -5,6 +5,19 @@ AQE on (runtime re-planning, skew-join splitting, partition coalescing),
 UTC session timezone (so timestamp results agree with external oracles),
 Arrow enabled (fast toPandas / pandas_udf), and a shuffle-partition count
 sized for the local test harness but overridable for a real cluster.
+
+For a local master, where this process launches the one JVM that is both
+driver and executors, two more things are sized here: the heap
+(``driver_memory``) and the JVM options (``LOCAL_JVM_OPTIONS``: one C1
+and one C2 compiler thread, and the parallel collector in place of G1),
+which cut the JIT and GC CPU of a cold session while keeping C2 for
+whole-stage codegen. Neither is set under spark-submit (``master=""``),
+where the driver JVM is already running. Override either through
+``extra_conf`` (``spark.driver.memory``, ``spark.driver.defaultJavaOptions``);
+``spark.driver.extraJavaOptions`` is appended after these options, so
+passing it (as the benchmark does for ``java.io.tmpdir``) keeps them. A
+different collector goes in ``defaultJavaOptions``: a second collector
+flag in ``extraJavaOptions`` stops the JVM from starting.
 """
 
 from __future__ import annotations
@@ -16,6 +29,16 @@ from collections.abc import Iterator
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Driver JVM options for local masters. At 4 cores HotSpot starts three
+# compiler threads; with two (one C1, one C2) its tiered policy drops
+# stale compile tasks instead of compiling them: on a cold sf0.01 basket
+# pass at local[4] (4-core host), C2 thread CPU fell from 18-20 s to
+# 11 s. The parallel collector has no concurrent marking threads or G1
+# write barriers. C1-only (-XX:TieredStopAtLevel=1) halves cold CPU but
+# doubles steady-state sf0.1 time (tpch_q1 3x): whole-stage codegen
+# needs C2.
+LOCAL_JVM_OPTIONS = "-XX:CICompilerCount=2 -XX:+UseParallelGC"
 
 # Conf that is correct at every scale; cluster-size-dependent knobs
 # (shuffle partitions, maxPartitionBytes) are parameters below.
@@ -92,6 +115,34 @@ def driver_memory() -> str:
     return "16g" if half_mb >= 16 * 1024 else f"{half_mb}m"
 
 
+def session_conf(
+    master: str,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """The conf ``get_spark`` builds its session with: the base conf,
+    the shuffle-partition count, the local-master heap and JVM options,
+    then ``extra_conf`` on top."""
+    conf = dict(_BASE_CONF)
+    conf["spark.sql.shuffle.partitions"] = str(
+        shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    )
+    if master.startswith("local"):
+        # Local mode packs driver + all executor threads into ONE JVM,
+        # and Spark's 1g default Xmx starves 32 threads (~31 MB each):
+        # measured at sf1, assoc_rules' hash aggregation OOMed the
+        # whole context. Size the heap for the host instead
+        # (``driver_memory``), and only for local masters (under
+        # spark-submit the driver JVM is already running and this conf
+        # would be silently ignored). The same holds for the JVM
+        # options; Spark puts a caller's extraJavaOptions after them.
+        conf.setdefault("spark.driver.memory", driver_memory())
+        conf.setdefault("spark.driver.defaultJavaOptions", LOCAL_JVM_OPTIONS)
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf
+
+
 def get_spark(
     app_name: str = "bigdata1-spark",
     master: str | None = None,
@@ -111,21 +162,6 @@ def get_spark(
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    conf = dict(_BASE_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(
-        shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    )
-    if master.startswith("local"):
-        # Local mode packs driver + all executor threads into ONE JVM,
-        # and Spark's 1g default Xmx starves 32 threads (~31 MB each):
-        # measured at sf1, assoc_rules' hash aggregation OOMed the
-        # whole context. Size the heap for the host instead
-        # (``driver_memory``), and only for local masters (under
-        # spark-submit the driver JVM is already running and this conf
-        # would be silently ignored).
-        conf.setdefault("spark.driver.memory", driver_memory())
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

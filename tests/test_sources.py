@@ -505,6 +505,35 @@ def test_driver_memory_follows_host(monkeypatch, phys_gib, want):
     assert session.driver_memory() == "3g"
 
 
+def test_local_jvm_runs_with_session_options(spark):
+    """The live local-master JVM was started with every
+    ``LOCAL_JVM_OPTIONS`` flag, and its collector is the parallel one."""
+    from bigdata1_spark import session
+
+    mgmt = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = set(mgmt.getRuntimeMXBean().getInputArguments())
+    assert set(session.LOCAL_JVM_OPTIONS.split()) <= args
+    gcs = {b.getName() for b in mgmt.getGarbageCollectorMXBeans()}
+    assert gcs == {"PS Scavenge", "PS MarkSweep"}
+
+
+def test_local_jvm_options_compose_with_extra_conf():
+    """A caller's ``extraJavaOptions`` (perfbench passes its tmpdir) keeps
+    the session's JVM options; ``defaultJavaOptions`` in ``extra_conf``
+    replaces them; spark-submit (``master=""``) gets neither them nor
+    the heap."""
+    from bigdata1_spark import session
+
+    key = "spark.driver.defaultJavaOptions"
+    tmpdir = {"spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/x"}
+    conf = session.session_conf("local[4]", extra_conf=tmpdir)
+    assert conf[key] == session.LOCAL_JVM_OPTIONS
+    assert conf["spark.driver.extraJavaOptions"] == "-Djava.io.tmpdir=/x"
+    assert session.session_conf("local[2]", extra_conf={key: "-Xss4m"})[key] == "-Xss4m"
+    submit = session.session_conf("")
+    assert key not in submit and "spark.driver.memory" not in submit
+
+
 @pytest.mark.parametrize("body_raises", [False, True])
 def test_scoped_conf_restores_prior_and_unset_keys(spark, body_raises):
     """``session.scoped_conf`` puts a set key back to its prior value

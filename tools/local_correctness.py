@@ -102,7 +102,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
     from bench import EXTRA_BENCH
-    from bigdata1_spark.session import driver_memory
+    from bigdata1_spark.session import LOCAL_JVM_OPTIONS, driver_memory
     from bigdata1_spark.sources.tables import TABLES
 
     # driver-gate defaults (local[8]/16) mirror the driver harness at
@@ -117,6 +117,7 @@ def main() -> None:
                 os.environ.get("CORR_SHUFFLE_PARTITIONS", "16"),
             )
             .config("spark.driver.memory", driver_memory())
+            .config("spark.driver.defaultJavaOptions", LOCAL_JVM_OPTIONS)
             .config("spark.sql.session.timeZone", "UTC")
             .config("spark.ui.showConsoleProgress", "false")
             .getOrCreate()
