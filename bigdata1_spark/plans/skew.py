@@ -25,12 +25,15 @@ from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
 
+# Salt count of both helpers: a hot key's rows spread over this many
+# tasks.
+N_SALTS = 16
+
 
 def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, tuple[Column, Column]],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-stage skew-safe aggregation.
 
@@ -45,8 +48,9 @@ def salted_agg(
     cannot reference any other way.
 
     The salt is a deterministic spread (xxhash64 of an arbitrary wide
-    column set modulo n_salts would also work; monotonically_increasing_id
-    keeps it cheap and uniform within partitions).
+    column set modulo ``N_SALTS`` would also work;
+    monotonically_increasing_id keeps it cheap and uniform within
+    partitions).
     """
     for name, (_p, m) in aggs.items():
         if not callable(m):
@@ -55,7 +59,7 @@ def salted_agg(
                 "taking the partial column (e.g. lambda c: F.sum(c))"
             )
     salted = df.withColumn(
-        SALT_COL, F.pmod(F.monotonically_increasing_id(), F.lit(n_salts))
+        SALT_COL, F.pmod(F.monotonically_increasing_id(), F.lit(N_SALTS))
     )
     partial = salted.groupBy(*keys, SALT_COL).agg(
         *[p.alias(f"__p_{name}") for name, (p, _m) in aggs.items()]
@@ -68,51 +72,28 @@ def salted_agg(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join by replication salting.
+def salted_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
+    """Skew-safe inner equi-join by replication salting.
 
     The big side gets a deterministic salt; the small side is
     replicated once per salt value; the join runs on (key, salt), so a
-    hot key's rows spread across ``n_salts`` tasks instead of piling on
-    one. Cost: the small side shuffles n_salts× — use only when it is
-    too big to broadcast (broadcast sidesteps join skew entirely) and
-    the big side's keys are power-law. AQE's skew-join handles most
+    hot key's rows spread across ``N_SALTS`` tasks instead of piling on
+    one. Cost: the small side shuffles ``N_SALTS``× — use only when it
+    is too big to broadcast (broadcast sidesteps join skew entirely)
+    and the big side's keys are power-law. AQE's skew-join handles most
     batch cases by splitting oversized partitions at runtime; explicit
     salting still matters for stream-stream/stateful joins and sorts
-    that AQE cannot replan. Join semantics: supported ``how`` values
-    keep every big-side row exactly as the unsalted join would
-    ('inner' and 'left' are safe; 'right'/'full' would multiply
-    unmatched small-side rows per salt and are rejected).
+    that AQE cannot replan. Each big-side row matches exactly the small
+    rows the unsalted inner join would give it, once each.
     """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports inner/left joins, got {how!r}: "
-            "an outer small side would surface once per salt replica"
-        )
     small_rep = small.select(
         "*",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias(SALT_COL),
+        F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1))).alias(SALT_COL),
     )
     big_salted = big.withColumn(
-        SALT_COL, F.pmod(F.monotonically_increasing_id(), F.lit(n_salts))
+        SALT_COL, F.pmod(F.monotonically_increasing_id(), F.lit(N_SALTS))
     )
-    return big_salted.join(small_rep, [key, SALT_COL], how).drop(SALT_COL)
-
-
-def salted_count(df: DataFrame, keys: Sequence[str], n_salts: int = 16) -> DataFrame:
-    """Skew-safe ``groupBy(keys).count()`` (column name ``n``)."""
-    return salted_agg(
-        df,
-        keys,
-        {"n": (F.count(F.lit(1)), lambda c: F.sum(c).cast("long"))},
-        n_salts=n_salts,
-    )
+    return big_salted.join(small_rep, [key, SALT_COL]).drop(SALT_COL)
 
 
 def skew_salted_join(spark, sf_dir: str) -> DataFrame:
@@ -123,7 +104,7 @@ def skew_salted_join(spark, sf_dir: str) -> DataFrame:
     (in the Zipf-skewed bench twin one supplier owns ~18% of all
     lineitem rows — a plain shuffle join funnels those onto one task).
     The salted plan joins on (key, salt) so the hot key's rows spread
-    across n_salts tasks; the small side is replicated once per salt.
+    across ``N_SALTS`` tasks; the small side is replicated once per salt.
     Join semantics equal the unsalted inner join, which is exactly what
     the plain-SQL oracle pins; revenue goes through decimal at the
     aggregate so re-association cannot drift the double. In production

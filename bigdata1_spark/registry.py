@@ -4240,15 +4240,6 @@ register(
     ORACLES["sessionize"],
 )
 
-# NOT registered: events_tws_sessions_streamed (the Spark-4
-# transformWithState twin of the key above). Its Python runner needs
-# google.protobuf, absent in this container — verified by attempting
-# the drain (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE:
-# "cannot import name 'descriptor' from 'google.protobuf'"). The
-# implementation + RocksDB-scoped drain live in streaming/events.py
-# and a parity test (tests/test_streaming.py) runs it wherever the
-# runtime supports it, skipping with the documented reason here.
-
 # Stream-STATIC enrichment join: no watermark, no join state, no
 # sentinel flush — the static dim re-resolves per micro-batch.
 register(

@@ -60,33 +60,6 @@ _BASE_CONF = {
 }
 
 
-def streaming_conf(rocksdb: bool = True) -> dict[str, str]:
-    """Conf for production stateful streaming, to pass as ``extra_conf``.
-
-    The default (HDFS-backed) state store keeps every key in executor
-    heap — fine for the test suite's tiny state, an OOM at 100 TB of
-    session/window state. RocksDB spills state to local disk with
-    bounded block-cache memory, and changelog checkpointing uploads
-    per-batch deltas instead of full snapshots, so checkpoint cost
-    follows update rate, not state size. Static conf — set before the
-    JVM starts (``get_spark(extra_conf=streaming_conf())``).
-
-    Trigger/rate policy (set per-query, not per-session; documented in
-    SCALE.md): ``trigger(processingTime=...)`` + per-source rate limits
-    (e.g. ``maxFilesPerTrigger``/``maxOffsetsPerTrigger``) for steady
-    state, ``trigger(availableNow=True)`` for bounded backfills.
-    """
-    if not rocksdb:
-        return {}
-    return {
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing"
-        ".enabled": "true",
-    }
-
-
 @contextlib.contextmanager
 def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
     """Set the runtime ``conf`` entries for the ``with`` body, then put

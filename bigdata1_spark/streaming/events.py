@@ -58,10 +58,10 @@ def _state_sized_partitions(
     its checkpoint pinned.
 
     ``python_state=True`` marks drains whose state operator runs in
-    PYTHON (``applyInPandasWithState`` / ``transformWithState``): their
-    per-batch cost is dominated by per-GROUP Python round-trips, not
-    state-store machinery, so the partition floor tracks available
-    compute (half the cluster's cores, capped) instead of the 2 that
+    PYTHON (``applyInPandasWithState``): their per-batch cost is
+    dominated by per-GROUP Python round-trips, not state-store
+    machinery, so the partition floor tracks available compute (half
+    the cluster's cores, capped) instead of the 2 that
     byte-sizing gives a small replay. Measured on the sf0.1 drain at
     local[32]: floor 2 → 13.6 s, 8 → 7.7 s, 16 → 7.5 s, 32 → 9.3 s
     (interleaved mins) — the byte term still dominates at volume
@@ -109,15 +109,17 @@ def events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_window_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """Streaming form: parquet file source → watermark → same windowed
-    agg. Returns the (unstarted) streaming DataFrame; callers attach a
-    sink (tests use the memory sink with outputMode=complete)."""
-    stream = (
-        _read_events_stream(spark, source_dir)
-        .withWatermark("ts", WATERMARK)
+def window_stream(
+    spark: SparkSession, source_dir: str, window: Column
+) -> DataFrame:
+    """Streaming form of ``_windowed``, tumbling and sliding alike:
+    parquet file source → watermark → the batch twin's windowed agg.
+    Returns the (unstarted) streaming DataFrame; callers attach a sink
+    (tests use the memory sink with outputMode=complete)."""
+    return _windowed(
+        _read_events_stream(spark, source_dir).withWatermark("ts", WATERMARK),
+        window,
     )
-    return _windowed(stream, F.window("ts", WINDOW))
 
 
 def events_window_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,7 +145,7 @@ def events_window_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(
         spark,
         sf_dir,
-        lambda src: events_window_stream(spark, src),
+        lambda src: window_stream(spark, src, F.window("ts", WINDOW)),
         complete=True,
     )
 
@@ -175,9 +177,12 @@ def events_user_counts_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def salted_agg_stream(
-    spark: SparkSession, source_dir: str, n_salts: int = 16
-) -> DataFrame:
+# Salt count of the streaming partial aggregation: a hot event_type's
+# update traffic and state spread over this many state partitions.
+SALT_AGG_N = 16
+
+
+def salted_agg_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """Unstarted salted partial-agg stream — the state-side half of
     ``events_salted_agg_streamed`` (which documents why streaming
     skew needs pre-checkpoint salting). Exposed separately so the
@@ -187,7 +192,7 @@ def salted_agg_stream(
         _read_events_stream(spark, source_dir)
         .withColumn(
             "__salt",
-            F.pmod(F.xxhash64("user_id", "ts"), F.lit(n_salts)),
+            F.pmod(F.xxhash64("user_id", "ts"), F.lit(SALT_AGG_N)),
         )
         .groupBy("event_type", "__salt")
         .agg(
@@ -197,9 +202,7 @@ def salted_agg_stream(
     )
 
 
-def events_salted_agg_streamed(
-    spark: SparkSession, sf_dir: str, n_salts: int = 16
-) -> DataFrame:
+def events_salted_agg_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``plans.skew.skew_salted_agg`` — the case the
     salting module exists for (``plans/skew.py`` module docstring): AQE
     can split a skewed BATCH shuffle partition at runtime, but a
@@ -208,12 +211,12 @@ def events_salted_agg_streamed(
     every update for a hot key lands on the SAME state partition
     forever, and no runtime replan can split it. Salting the streaming
     grouping key to (event_type, salt) spreads a hot key's update
-    traffic and state across ``n_salts`` partitions; the FINAL merge
+    traffic and state across ``SALT_AGG_N`` partitions; the FINAL merge
     down to event_type runs batch-side on the drained result, where
-    the input is the pre-aggregated (|keys| × n_salts)-row state
+    the input is the pre-aggregated (|keys| × ``SALT_AGG_N``)-row state
     table, never raw events.
 
-    The salt is ``xxhash64(user_id, ts) % n_salts`` — a pure function
+    The salt is ``xxhash64(user_id, ts) % SALT_AGG_N`` — a pure function
     of the row, so a replayed micro-batch lands every event on the
     same salt (replay-idempotent) instead of re-rolling a
     nondeterministic spread. Counts and decimal value sums merge
@@ -227,7 +230,7 @@ def events_salted_agg_streamed(
     partial = _drain(
         spark,
         sf_dir,
-        lambda src: salted_agg_stream(spark, src, n_salts),
+        lambda src: salted_agg_stream(spark, src),
         complete=True,
     )
     return partial.groupBy("event_type").agg(
@@ -266,48 +269,90 @@ def _read_events_stream(
     return normalize_event_ts(reader.parquet(source_dir))
 
 
+# Attribution horizon of the click→purchase interval join: a purchase
+# up to this long AFTER a click is attributed to it, and each side's
+# watermark trails its event time by the same span.
+JOIN_HORIZON = "1 hour"
+
+# Salt count of the skewed join drain (``events_salted_join_streamed``).
+SALT_JOIN_N = 4
+
+
 def click_purchase_join_stream(
-    spark: SparkSession, source_dir: str, horizon: str = "1 hour"
+    spark: SparkSession,
+    source_dir: str,
+    *,
+    how: str = "inner",
+    n_salts: int = 1,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Stream-stream inner join — clicks matched to the same user's
-    purchases within ``horizon`` AFTER the click.
+    """Stream-stream interval join — clicks matched to the same user's
+    purchases within ``JOIN_HORIZON`` AFTER the click; the one body of
+    the inner (``events_attribution_streamed``), salted
+    (``events_salted_join_streamed``) and left-outer
+    (``events_leftjoin_streamed``) drains.
 
     The event-time range condition plus watermarks on BOTH sides is
     what bounds the join state: a click can be dropped from state once
     the purchase watermark passes click_ts + horizon, and a purchase
     once the click watermark passes p_ts. Without the range condition
     the state grows forever — this is the canonical shape for
-    attribution joins at scale. Columns: user_id, click_id, click_ts,
-    purchase_ts, purchase_value.
+    attribution joins at scale. ``how="left_outer"`` also emits every
+    unmatched click, with NULL purchase columns, once the watermark
+    evicts it from state.
+
+    Salting (``n_salts > 1``) applies the replication recipe of
+    ``plans.skew.salted_join`` to checkpoint-pinned join state. On the
+    Zipf-skew twin the unsalted join PASSES but grinds ~35 minutes,
+    because every click-state row for the hot user (17.9 % of all
+    events) hashes to ONE state-store partition, and neither AQE nor
+    the state store can split a key at runtime. The state key is
+    (user_id, salt) with ``salt = xxhash64(click_id) % n_salts`` — a
+    pure function of the row, so replays land identically — and the
+    purchase side is replicated once per salt, so each (click,
+    purchase) pair matches EXACTLY once: the click carries one salt
+    value and exactly one purchase replica carries the same one. Join
+    semantics — and therefore the oracle — do not depend on
+    ``n_salts``; at 1 every salt is 0 and the purchase side is a single
+    replica. Columns: user_id, click_id, click_ts, purchase_ts,
+    purchase_value.
     """
     clicks = (
-        _read_events_stream(spark, source_dir)
+        _read_events_stream(spark, source_dir, max_files_per_trigger)
         .filter(F.col("event_type") == "click")
         .select(
             "user_id",
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
+            F.pmod(F.xxhash64("event_id"), F.lit(n_salts)).alias("c_salt"),
         )
-        .withWatermark("click_ts", horizon)
+        .withWatermark("click_ts", JOIN_HORIZON)
     )
     purchases = (
-        _read_events_stream(spark, source_dir)
+        _read_events_stream(spark, source_dir, max_files_per_trigger)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
             F.col("ts").alias("purchase_ts"),
             F.col("value").alias("purchase_value"),
+            F.explode(
+                F.sequence(F.lit(0), F.lit(n_salts - 1)).cast(
+                    "array<bigint>"
+                )
+            ).alias("p_salt"),
         )
-        .withWatermark("purchase_ts", horizon)
+        .withWatermark("purchase_ts", JOIN_HORIZON)
     )
     return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))
+        & (F.col("c_salt") == F.col("p_salt"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
+            <= F.col("click_ts") + F.expr(f"INTERVAL {JOIN_HORIZON}")
         ),
+        how,
     ).select(
         "user_id", "click_id", "click_ts", "purchase_ts", "purchase_value"
     )
@@ -325,80 +370,12 @@ def _attribution_strings(joined: DataFrame) -> DataFrame:
     )
 
 
-SALT_JOIN_N = 4
-
-
-def click_purchase_join_stream_salted(
-    spark: SparkSession,
-    source_dir: str,
-    horizon: str = "1 hour",
-    n_salts: int = SALT_JOIN_N,
-) -> DataFrame:
-    """Salted variant of :func:`click_purchase_join_stream` — the
-    replication recipe of ``plans.skew.salted_join`` applied to
-    checkpoint-pinned stream-stream JOIN state.
-
-    Why it exists (measured, not hypothetical): on the Zipf-skew twin
-    the unsalted join PASSES but grinds ~35 minutes, because every
-    click-state row for the hot user (17.9 % of all events) hashes to
-    ONE state-store partition, and neither AQE nor the state store can
-    split a key at runtime. Salting the state key to (user_id, salt)
-    with ``salt = xxhash64(click_id) % n_salts`` — a pure function of
-    the row, so replays land identically — spreads the hot user's
-    click state and probe work across ``n_salts`` partitions. The
-    purchase side is replicated once per salt (the small-side
-    replication cost ``salted_join`` documents), so each (click,
-    purchase) pair matches EXACTLY once: the click carries one salt
-    value and exactly one purchase replica carries the same one.
-    Join semantics — and therefore the oracle — are identical to the
-    unsalted join. Columns: user_id, click_id, click_ts, purchase_ts,
-    purchase_value.
-    """
-    clicks = (
-        _read_events_stream(spark, source_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-            F.pmod(F.xxhash64("event_id"), F.lit(n_salts)).alias("c_salt"),
-        )
-        .withWatermark("click_ts", horizon)
-    )
-    purchases = (
-        _read_events_stream(spark, source_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-            F.explode(
-                F.sequence(F.lit(0), F.lit(n_salts - 1)).cast(
-                    "array<bigint>"
-                )
-            ).alias("p_salt"),
-        )
-        .withWatermark("purchase_ts", horizon)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("c_salt") == F.col("p_salt"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
-        ),
-    ).select(
-        "user_id", "click_id", "click_ts", "purchase_ts", "purchase_value"
-    )
-
-
 def events_salted_join_streamed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Registry-facing drain of the SALTED stream-stream interval join
-    (:func:`click_purchase_join_stream_salted`) — the join-side twin of
+    (:func:`click_purchase_join_stream` over ``SALT_JOIN_N`` salts) —
+    the join-side twin of
     ``events_salted_agg_streamed``, pinned against the SAME batch
     self-join oracle as the unsalted ``events_attribution_streamed``
     (salting must not change the result multiset). Columns: user_id,
@@ -408,7 +385,7 @@ def events_salted_join_streamed(
         spark,
         sf_dir,
         lambda src: _attribution_strings(
-            click_purchase_join_stream_salted(spark, src)
+            click_purchase_join_stream(spark, src, n_salts=SALT_JOIN_N)
         ),
     )
 
@@ -717,146 +694,6 @@ def _session_strings(sessions: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_stream_tws(
-    spark: SparkSession,
-    source_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Per-user sessionization on the Spark-4 ``transformWithState``
-    arbitrary-stateful API — the modern twin of
-    :func:`sessionize_stream` (``applyInPandasWithState``), kept
-    semantically bit-identical so both drain against the SAME
-    gaps-and-islands oracle.
-
-    The StatefulProcessor surface replaces the single opaque state
-    tuple + GroupStateTimeout with named state variables
-    (``getValueState``) and explicit event-time timers
-    (``registerTimer`` / ``handleExpiredTimer``), which is what a
-    production pipeline migrates to on Spark 4: typed state that can
-    evolve schema, multiple variables per key, and timers decoupled
-    from state updates. Session gap uses ``>`` (an event at exactly
-    last_ts + gap stays in-session) and state holds microsecond
-    BIGINTs, matching the batch ``sessionize`` key exactly.
-    Columns: user_id, session_start, session_end, n_events.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = (
-        "user_id BIGINT, session_start TIMESTAMP, "
-        "session_end TIMESTAMP, n_events BIGINT"
-    )
-
-    def _emit(key, sessions):
-        import pandas as pd
-
-        return pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(sessions),
-                "session_start": [
-                    pd.Timestamp(s[0], unit="us") for s in sessions
-                ],
-                "session_end": [
-                    pd.Timestamp(s[1], unit="us") for s in sessions
-                ],
-                "n_events": [s[2] for s in sessions],
-            }
-        )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._open = handle.getValueState(
-                "open", "start BIGINT, end BIGINT, n BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            # vectorized ns→µs conversion + tz-guard, same as
-            # sessionize_stream
-            def _us(pdf):
-                ser = pdf["ts"]
-                if getattr(ser.dt, "tz", None) is not None:
-                    ser = ser.dt.tz_convert("UTC").dt.tz_localize(None)
-                return ser.to_numpy("datetime64[ns]").astype("int64") // 1_000
-
-            ts_all = [_us(pdf) for pdf in rows]
-            merged = (
-                np.sort(np.concatenate(ts_all))
-                if ts_all
-                else np.empty(0, "int64")
-            )
-            cur = self._open.get() if self._open.exists() else None
-            closed = []
-            for t in merged.tolist():
-                if cur is None:
-                    cur = (t, t, 1)
-                elif t - cur[1] > SESSION_GAP_US:
-                    closed.append(cur)
-                    cur = (t, t, 1)
-                else:
-                    cur = (cur[0], t, cur[2] + 1)
-            if cur is not None:
-                self._open.update(cur)
-                # one live timer per key: drop the stale gap deadline
-                # before arming the new one (timers are not replaced
-                # implicitly, unlike GroupState's single timeout)
-                for expiry in list(self._handle.listTimers()):
-                    self._handle.deleteTimer(expiry)
-                # ceil to ms for the same reason as the GroupState
-                # twin: flooring could fire 1 ms before the boundary
-                self._handle.registerTimer(
-                    -(-(cur[1] + SESSION_GAP_US) // 1000)
-                )
-            if closed:
-                yield _emit(key, closed)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if not self._open.exists():
-                return
-            cur = self._open.get()
-            # Guard against a stale timer racing a state update: only
-            # finalize if the expired deadline is the one the CURRENT
-            # open session armed (same ceil-to-ms arithmetic as
-            # handleInputRows). A stale expiry would otherwise close a
-            # session that new events have since extended.
-            deadline_ms = -(-(cur[1] + SESSION_GAP_US) // 1000)
-            if expiredTimerInfo.getExpiryTimeInMs() < deadline_ms:
-                return
-            self._open.clear()
-            yield _emit(key, [cur])
-
-        def close(self) -> None:
-            pass
-
-    stream = (
-        _read_events_stream(
-            spark, source_dir, max_files_per_trigger=max_files_per_trigger
-        )
-        .withWatermark("ts", "1 hour")
-        .select("user_id", "ts")
-    )
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
-# ``transformWithState`` requires the RocksDB state-store provider (its
-# column-family layout backs named state variables + timers); scoped to
-# the drain so the HDFS-backed keys keep their checkpoint contracts.
-_ROCKSDB_STATE = {
-    "spark.sql.streaming.stateStore.providerClass":
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-}
-
-
 def _drain(
     spark: SparkSession,
     sf_dir: str,
@@ -943,7 +780,9 @@ def events_attribution_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(
         spark,
         sf_dir,
-        lambda src: _attribution_strings(click_purchase_join_stream(spark, src)),
+        lambda src: _attribution_strings(
+            click_purchase_join_stream(spark, src, n_salts=1)
+        ),
     )
 
 
@@ -987,16 +826,6 @@ def events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sliding_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """Unstarted sliding-window stream (watermark + ``_windowed`` over
-    the sliding window) — exposed for the source-plan gate in
-    tests/test_plans.py."""
-    return _windowed(
-        _read_events_stream(spark, source_dir).withWatermark("ts", WATERMARK),
-        F.window("ts", SLIDE_DURATION, SLIDE_STEP),
-    )
-
-
 def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end streaming run of the sliding-window agg: watermark +
     overlapping windows → complete-mode foreachBatch overwrite sink →
@@ -1009,7 +838,9 @@ def events_sliding_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(
         spark,
         sf_dir,
-        lambda src: sliding_stream(spark, src),
+        lambda src: window_stream(
+            spark, src, F.window("ts", SLIDE_DURATION, SLIDE_STEP)
+        ),
         complete=True,
     )
 
@@ -1195,80 +1026,6 @@ def events_stateful_sessions_streamed(
     )
 
 
-def events_tws_sessions_streamed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Drain of the Spark-4 ``transformWithState`` sessionizer
-    (:func:`sessionize_stream_tws`) — the modern arbitrary-stateful API
-    (named state variables + explicit event-time timers), drained
-    against the SAME gaps-and-islands oracle as the batch ``sessionize``
-    key and its ``applyInPandasWithState`` twin, so the two stateful
-    surfaces are proven bit-identical on the same data.
-
-    NOT a registry key in this container: the TWS Python runner
-    requires ``google.protobuf`` (state-server protocol), which is
-    absent here — the drain fails with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE. The parity test in
-    tests/test_streaming.py runs it wherever the runtime supports it
-    and skips with that reason otherwise.
-
-    ``transformWithState`` requires the RocksDB state-store provider
-    (column families back the named state + timer registers), so the
-    drain runs with ``_ROCKSDB_STATE`` scoped to it.
-    Columns: user_id, session_start, session_end, n_events.
-    """
-    with scoped_conf(spark, _ROCKSDB_STATE):
-        return _drain(
-            spark,
-            sf_dir,
-            lambda src: _session_strings(
-                sessionize_stream_tws(spark, src, max_files_per_trigger=1)
-            ),
-            flush=("flush",),
-            python_state=True,
-        )
-
-
-def click_purchase_leftjoin_stream(
-    spark: SparkSession, source_dir: str, horizon: str = "1 hour"
-) -> DataFrame:
-    """Unstarted stream-stream LEFT OUTER interval join (dual
-    watermarks, eviction-driven NULL emission) — the transform half of
-    ``events_leftjoin_streamed``. Exposed for the source-plan gate in
-    tests/test_plans.py."""
-    clicks = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-        .filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", horizon)
-    )
-    purchases = (
-        _read_events_stream(spark, source_dir, max_files_per_trigger=1)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", horizon)
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
-        ),
-        "left_outer",
-    )
-    return _attribution_strings(joined)
-
-
 def events_leftjoin_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every click, attributed
     to a same-user purchase within 1 hour where one exists, emitted
@@ -1288,7 +1045,15 @@ def events_leftjoin_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(
         spark,
         sf_dir,
-        lambda src: click_purchase_leftjoin_stream(spark, src),
+        lambda src: _attribution_strings(
+            click_purchase_join_stream(
+                spark,
+                src,
+                how="left_outer",
+                n_salts=1,
+                max_files_per_trigger=1,
+            )
+        ),
         flush=("click", "purchase"),
     )
 

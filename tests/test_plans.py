@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from bigdata1_spark.operators import basket, micro
 from bigdata1_spark.plans import checks
+from bigdata1_spark.streaming import events as se
 
 
 def test_topk_window_plan(spark, sf_dir):
@@ -84,33 +85,9 @@ def test_range_join_broadcasts_dim(spark, sf_dir):
     checks.assert_broadcast_join(df, "join_range")
 
 
-def test_salted_count_matches_plain(spark, sf_dir):
-    """Skew-safe two-stage aggregation must agree with the direct
-    groupBy; the partial stage bounds any single task's share of a hot
-    key to ~1/n_salts of its rows."""
-    from bigdata1_spark.plans.skew import salted_count
-    from bigdata1_spark.sources.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    plain = {
-        (r["l_returnflag"], r["n"])
-        for r in li.groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    salted = {
-        (r["l_returnflag"], r["n"])
-        for r in salted_count(li, ["l_returnflag"]).collect()
-    }
-    assert salted == plain
-
-
 def test_salted_join_matches_plain(spark, sf_dir):
     """Replication-salted join must produce exactly the plain join's
-    result multiset (checked via per-brand counts) for inner and left
-    joins, and reject outer shapes that would duplicate the small
-    side."""
-    import pytest
-
+    result multiset (checked via per-brand counts)."""
     from bigdata1_spark.plans.skew import salted_join
     from bigdata1_spark.sources.tables import load_table
 
@@ -131,8 +108,6 @@ def test_salted_join_matches_plain(spark, sf_dir):
         .groupBy("p_brand").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert salted == plain
-    with pytest.raises(ValueError):
-        salted_join(li, parts, "l_partkey", how="full")
 
 
 def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
@@ -1264,75 +1239,61 @@ def test_every_query_has_a_scan_budget():
 #         n_watermarks, n_batch_relations, required_plan_node or None)
 _STREAM_PLAN_BUDGETS = {
     "events_window_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).events_window_stream(s, src),
+        lambda s, src, sf: se.window_stream(
+            s, src, F.window("ts", se.WINDOW)
+        ),
         1, 1, 0, None,
     ),
     "events_user_counts_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).user_running_counts_stream(s, src),
+        lambda s, src, sf: se.user_running_counts_stream(s, src),
         1, 0, 0, None,  # update-mode running agg: unbounded-key state by design
     ),
     "events_salted_agg_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).salted_agg_stream(s, src),
+        lambda s, src, sf: se.salted_agg_stream(s, src),
         1, 0, 0, None,  # complete-mode partial agg; state = |keys| x n_salts
     ),
     "events_salted_join_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).click_purchase_join_stream_salted(s, src),
+        lambda s, src, sf: se.click_purchase_join_stream(
+            s, src, n_salts=se.SALT_JOIN_N
+        ),
         2, 2, 0, "Join Inner",
     ),
     "events_attribution_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).click_purchase_join_stream(s, src),
+        lambda s, src, sf: se.click_purchase_join_stream(
+            s, src, n_salts=1
+        ),
         2, 2, 0, "Join Inner",
     ),
     "events_leftjoin_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).click_purchase_leftjoin_stream(s, src),
+        lambda s, src, sf: se.click_purchase_join_stream(
+            s, src, how="left_outer", n_salts=1, max_files_per_trigger=1
+        ),
         2, 2, 0, "Join LeftOuter",
     ),
     "events_dedup_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).dedup_stream(s, src),
+        lambda s, src, sf: se.dedup_stream(s, src),
         1, 1, 0, "DeduplicateWithinWatermark",
     ),
     "events_sliding_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).sliding_stream(s, src),
+        lambda s, src, sf: se.window_stream(
+            s, src, F.window("ts", se.SLIDE_DURATION, se.SLIDE_STEP)
+        ),
         1, 1, 0, None,
     ),
     "events_upsert_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).upsert_source_stream(s, src),
+        lambda s, src, sf: se.upsert_source_stream(s, src),
         1, 0, 0, None,  # stateless source; merge state lives in the sink versions
     ),
     "events_session_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).session_window_stream(s, src),
+        lambda s, src, sf: se.session_window_stream(s, src),
         1, 1, 0, "session_window",
     ),
     "events_stateful_sessions_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).sessionize_stream(s, src),
+        lambda s, src, sf: se.sessionize_stream(s, src),
         1, 1, 0, "FlatMapGroupsInPandasWithState",
     ),
     "events_enrich_streamed": (
-        lambda s, src, sf: __import__(
-            "bigdata1_spark.streaming.events", fromlist=["x"]
-        ).enrich_stream(s, src, sf),
+        lambda s, src, sf: se.enrich_stream(s, src, sf),
         1, 0, 1, "Join Inner",  # the static dim is the audited batch relation
     ),
     "python_stream_source": (

@@ -34,11 +34,16 @@ def _run_stream(df, name: str):
 
 
 def test_stream_matches_batch(spark, sf_dir, stream_dir):
+    from pyspark.sql import functions as F
+
     batch = {
         tuple(r)
         for r in se.events_window(spark, sf_dir).collect()
     }
-    q = _run_stream(se.events_window_stream(spark, stream_dir), "win_stream")
+    q = _run_stream(
+        se.window_stream(spark, stream_dir, F.window("ts", se.WINDOW)),
+        "win_stream",
+    )
     try:
         got = {tuple(r) for r in spark.sql("SELECT * FROM win_stream").collect()}
     finally:
@@ -596,40 +601,6 @@ def test_session_streamed_killed_mid_drain_resumes_to_parity(
     )
 
 
-def _tws_runtime_supported() -> bool:
-    """transformWithState's Python state-server protocol is
-    protobuf-encoded; without google.protobuf the streaming runner
-    dies at init (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE:
-    "cannot import name 'descriptor' from 'google.protobuf'" —
-    verified in this container)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-@pytest.mark.skipif(
-    not _tws_runtime_supported(),
-    reason="transformWithState needs google.protobuf in the Python env; "
-    "absent in this container (runner init failure verified)",
-)
-def test_tws_sessionizer_full_parity_with_batch(spark, sf_dir):
-    """The Spark-4 transformWithState sessionizer (named state +
-    explicit event-time timers, RocksDB provider) must be bit-identical
-    to the batch gaps-and-islands `sessionize` — the same oracle its
-    applyInPandasWithState twin (`events_stateful_sessions_streamed`)
-    is held to, proving the two arbitrary-stateful surfaces agree."""
-    from bigdata1_spark.operators.relational import sessionize
-
-    got = {
-        tuple(r)
-        for r in se.events_tws_sessions_streamed(spark, sf_dir).collect()
-    }
-    batch = {tuple(r) for r in sessionize(spark, sf_dir).collect()}
-    assert got == batch
-
-
 def test_salted_agg_streamed_matches_batch(spark, sf_dir):
     """The salted streaming aggregation (partial state on
     (event_type, salt), final merge in the foreachBatch sink) must
@@ -659,9 +630,12 @@ def test_salted_agg_streamed_matches_batch(spark, sf_dir):
 
 
 def test_salted_join_stream_matches_unsalted(spark, sf_dir, stream_dir):
-    """Salting the stream-stream join's state key must not change the
-    result multiset: every (click, purchase) pair matches exactly once
-    because one purchase replica carries the click's salt."""
+    """The inner, salted and left-outer drains share one interval-join
+    body and must agree: salting the state key must not change the
+    result multiset (every (click, purchase) pair matches exactly once
+    because one purchase replica carries the click's salt), and the
+    left-outer stream's matched rows (non-NULL purchase_ts) are exactly
+    the inner stream's rows."""
 
     def drain(df, name):
         q = (
@@ -672,13 +646,28 @@ def test_salted_join_stream_matches_unsalted(spark, sf_dir, stream_dir):
         return {tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()}
 
     plain = drain(
-        se.click_purchase_join_stream(spark, stream_dir), "plain_join"
+        se.click_purchase_join_stream(spark, stream_dir, n_salts=1),
+        "plain_join",
     )
     salted = drain(
-        se.click_purchase_join_stream_salted(spark, stream_dir),
+        se.click_purchase_join_stream(
+            spark, stream_dir, n_salts=se.SALT_JOIN_N
+        ),
         "salted_join",
     )
+    left = drain(
+        se.click_purchase_join_stream(
+            spark,
+            stream_dir,
+            how="left_outer",
+            n_salts=1,
+            max_files_per_trigger=1,
+        ),
+        "left_join",
+    )
+    matched = {r for r in left if r[3] is not None}
     assert salted == plain and len(plain) > 0
+    assert matched == plain
 
 
 def test_watermark_drops_pre_epoch_event_times(spark, tmp_path):
