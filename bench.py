@@ -76,6 +76,13 @@ def _load_ab_registry(gitref: str):
     guarantee; observed 1.5-5x swings on identical code). Additive
     only: without BENCH_AB the bench path is byte-identical.
 
+    Both variants run in HEAD's session, built by HEAD's
+    ``get_spark``, so BENCH_AB cannot compare a change to the session
+    conf or the JVM options (``session.py``): the ref's operators would
+    run under HEAD's conf. A/B such a change with separate processes
+    instead: ``BENCH_ONLY`` in a checkout of each tree, alternating
+    which runs first.
+
     Returns ``(registry, restore)``; ``restore()`` undoes the
     ``sys.path``/``PYTHONPATH`` additions, drops the renamed package
     from ``sys.modules`` and deletes the temp tree."""

@@ -304,8 +304,10 @@ def rules(per_basket: DataFrame) -> DataFrame:
     counts, so callers cache it (the reference's cache at
     ``BD_hw1/src/spark/SupportAndConfidence.java:112``). The total is a
     plain count (replaces the reference's driver-side Accumulator
-    round-trip, ``:54-57``); both rule directions union; the antecedent
-    join and the 1-row total are broadcast.
+    round-trip, ``:54-57``). Both rule directions come from the one
+    pair-count aggregate (each pair row inlines into a→b and b→a), so
+    the basket pairs are exploded and counted once, not once per
+    direction. The antecedent join and the 1-row total are broadcast.
     """
     item_counts = (
         per_basket.select(F.explode("items").alias("item"))
@@ -313,17 +315,13 @@ def rules(per_basket: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("item_cnt"))
     )
     total = per_basket.agg(F.count(F.lit(1)).alias("total_baskets"))
-    pc = _pair_counts_from(per_basket)
-    directed = pc.select(
-        F.col("i1").alias("antecedent"),
-        F.col("i2").alias("consequent"),
-        "pair_cnt",
-    ).unionAll(
-        pc.select(
-            F.col("i2").alias("antecedent"),
-            F.col("i1").alias("consequent"),
-            "pair_cnt",
-        )
+    directed = _pair_counts_from(per_basket).select(
+        F.inline(F.array(
+            F.struct(F.col("i1").alias("antecedent"),
+                     F.col("i2").alias("consequent"), "pair_cnt"),
+            F.struct(F.col("i2").alias("antecedent"),
+                     F.col("i1").alias("consequent"), "pair_cnt"),
+        ))
     )
     return (
         directed.join(F.broadcast(item_counts),
@@ -364,7 +362,9 @@ def itemset_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     Itemsets are canonical sorted arrays rendered as ','-joined strings so
     downstream consumers (and the SQL oracle) share one key shape.
     Columns: itemset, n_items, freq. The per-basket table fans out to
-    both branches of the union, so it is cached.
+    both branches of the union, so it is cached; AQE coalesces the
+    cached plan (see ``session``), so both branches read it as a few
+    partitions rather than ``spark.sql.shuffle.partitions``.
     """
     per_basket = basket_items(tpch_lines(spark, sf_dir)).cache()
     singles = per_basket.select(
@@ -398,5 +398,8 @@ def pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference SupportAndConfidence over the TPC-H baskets (see
     :func:`rules`); the cached per-basket table is built once, not once
-    per consumer."""
+    per consumer. The session lets AQE coalesce the cached plan, so the
+    cache is built as a few partitions (one at sf0.001), not
+    ``spark.sql.shuffle.partitions``, and each consumer reads it with
+    that few tasks."""
     return rules(basket_items(tpch_lines(spark, sf_dir)).cache())

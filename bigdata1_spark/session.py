@@ -1,7 +1,9 @@
 """SparkSession factory.
 
 One place to configure the engine the way the 100 TB posture demands:
-AQE on (runtime re-planning, skew-join splitting, partition coalescing),
+AQE on (runtime re-planning, skew-join splitting, partition coalescing,
+inside cached plans too: Spark otherwise builds a ``.cache()`` frame and
+every scan of it at the full shuffle-partition count),
 UTC session timezone (so timestamp results agree with external oracles),
 Arrow enabled (fast toPandas / pandas_udf), and a shuffle-partition count
 sized for the local test harness but overridable for a real cluster.
@@ -46,6 +48,12 @@ _BASE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce a cached plan's shuffle output like any other
+    # plan. Under Spark's default (false) a cached subtree runs
+    # uncoalesced at the full shuffle-partition count, and so does every
+    # consumer's scan of it: a cached sf0.001 basket_items is 32
+    # partitions without this entry and 1 with it.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # dims (part/nation/region/supplier) stay broadcast-able well past sf1

@@ -534,6 +534,26 @@ def test_local_jvm_options_compose_with_extra_conf():
     assert key not in submit and "spark.driver.memory" not in submit
 
 
+def test_cached_plans_coalesce(spark, sf_dir):
+    """Every session, local or spark-submit, lets AQE coalesce a cached
+    plan: a cached ``basket_items`` is built below the shuffle-partition
+    count, not at it (Spark's default keeps a cached subtree at the full
+    count)."""
+    from bigdata1_spark import session
+    from bigdata1_spark.operators.basket import basket_items, tpch_lines
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert session.session_conf("local[4]")[key] == "true"
+    assert session.session_conf("")[key] == "true"
+    df = basket_items(tpch_lines(spark, sf_dir)).cache()
+    try:
+        df.count()
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert df.rdd.getNumPartitions() < parts
+    finally:
+        df.unpersist()
+
+
 @pytest.mark.parametrize("body_raises", [False, True])
 def test_scoped_conf_restores_prior_and_unset_keys(spark, body_raises):
     """``session.scoped_conf`` puts a set key back to its prior value
