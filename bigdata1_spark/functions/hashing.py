@@ -28,10 +28,14 @@ def let(value: Column, body: Callable[[Column], Column]) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def minhash_from_hashes(hs: Column, k: int = 32, seed: int = 0) -> Column:
-    """ARRAY<BIGINT> of k min-hashes over pre-hashed shingle values.
+MINHASH_K = 32  # min-hashes per signature
 
-    The k hash families re-hash the 8-byte base value with the family
+
+def minhash_from_hashes(hs: Column) -> Column:
+    """ARRAY<BIGINT> of ``MINHASH_K`` min-hashes over pre-hashed shingle
+    values (hash each shingle string once, e.g. with ``xxhash64``).
+
+    The hash families re-hash the 8-byte base value with the family
     index; signature[i] = min over the set. Standard MinHash estimator:
     P[sig_a[i] == sig_b[i]] = J(a, b).
     """
@@ -41,23 +45,12 @@ def minhash_from_hashes(hs: Column, k: int = 32, seed: int = 0) -> Column:
             *[
                 F.array_min(
                     F.transform(
-                        h, lambda x: F.xxhash64(x, F.lit(seed), F.lit(i))
+                        h, lambda x: F.xxhash64(x, F.lit(0), F.lit(i))
                     )
                 )
-                for i in range(k)
+                for i in range(MINHASH_K)
             ]
         ),
-    )
-
-
-def minhash_signature(shingles: Column, k: int = 32, seed: int = 0) -> Column:
-    """ARRAY<BIGINT> of k min-hashes over the shingle set.
-
-    Base-hash each shingle string once, then derive the k hash families
-    from the 8-byte base values (strings are hashed once, not k times).
-    """
-    return minhash_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), k=k, seed=seed
     )
 
 
@@ -195,12 +188,16 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_block_keys(fp: Column, blocks: int = 4) -> Column:
-    """Split a 64-bit fingerprint into ``blocks`` equal bit-blocks and key
-    each (block_idx, block_value). Two fingerprints within Hamming
-    distance < blocks share at least one identical block (pigeonhole) —
-    the classic Charikar/Manku near-dup blocking scheme."""
-    width = 64 // blocks
+SIMHASH_BLOCKS = 4
+
+
+def simhash_block_keys(fp: Column) -> Column:
+    """Split a 64-bit fingerprint into ``SIMHASH_BLOCKS`` equal bit-blocks
+    and key each (block_idx, block_value). Two fingerprints within
+    Hamming distance < ``SIMHASH_BLOCKS`` share at least one identical
+    block (pigeonhole) — the classic Charikar/Manku near-dup blocking
+    scheme."""
+    width = 64 // SIMHASH_BLOCKS
     mask = (1 << width) - 1
     return F.array(
         *[
@@ -208,6 +205,6 @@ def simhash_block_keys(fp: Column, blocks: int = 4) -> Column:
                 F.lit(i),
                 F.shiftright(fp, i * width).bitwiseAND(F.lit(mask)),
             )
-            for i in range(blocks)
+            for i in range(SIMHASH_BLOCKS)
         ]
     )

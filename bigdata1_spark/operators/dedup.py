@@ -33,10 +33,11 @@ from bigdata1_spark.operators.similarity import (
 )
 from bigdata1_spark.sources.tables import load_table, spread_if_starved
 
-# Production MinHash banding: 32 hashes in 8 bands of 4 rows, so a pair
-# of Jaccard J becomes a candidate with probability 1 − (1 − J^4)^8.
-MINHASH_K = 32
+# Production MinHash banding: hashing.MINHASH_K = 32 hashes in 8 bands
+# of 4 rows, so a pair of Jaccard J becomes a candidate with probability
+# 1 − (1 − J^4)^8.
 MINHASH_BANDS = 8
+SHINGLE_N = 3  # words per shingle
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,15 +58,16 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
+def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     return docs.select(
         "doc_id",
-        textfns.word_shingles(textfns.tokens(F.col("text")), n).alias("shingles"),
+        textfns.word_shingles(textfns.tokens(F.col("text")), SHINGLE_N)
+        .alias("shingles"),
     )
 
 
-def shingle_hashes_of(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingle_hashes_of(docs: DataFrame) -> DataFrame:
     """Shingle-hash table for an ARBITRARY (doc_id, text) frame —
     pipeline stages near-dedup a gated/deduped corpus, not the raw
     table, so the shingle base is a parameter (same semantics as
@@ -78,7 +80,7 @@ def shingle_hashes_of(docs: DataFrame, n: int = 3) -> DataFrame:
     # degenerate-doc convention — only absent text is excluded.
     sh = docs.filter(F.col("text").isNotNull()).select(
         "doc_id",
-        textfns.word_shingles(textfns.tokens(F.col("text")), n)
+        textfns.word_shingles(textfns.tokens(F.col("text")), SHINGLE_N)
         .alias("shingles"),
     )
     return sh.select(
@@ -91,7 +93,7 @@ def shingle_hashes_of(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def _doc_shingle_hashes(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
+def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle sets as sorted ARRAY<BIGINT> of xxhash64 values.
 
     Set operations (prefix slicing, equality joins, intersections) on
@@ -101,7 +103,7 @@ def _doc_shingle_hashes(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFra
     a ~2^-64-per-pair collision (the DuckDB oracle cross-checks at test
     scale)."""
     return shingle_hashes_of(
-        load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text"), n
+        load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
     )
 
 
@@ -277,7 +279,8 @@ def minhash_candidates(sh: DataFrame, max_bucket_chunk: int = 64) -> DataFrame:
     """MinHash+LSH candidate pairs (doc ids sharing ≥1 band bucket) of
     a (doc_id, hs) shingle-hash table.
 
-    shingle hashes → ``MINHASH_K``-minhash signature → ``MINHASH_BANDS``
+    shingle hashes → ``hashing.MINHASH_K``-minhash signature →
+    ``MINHASH_BANDS``
     band keys → explode → bucket groupBy → pair generation. Candidates
     are distinct (id1 < id2). Columns: id1, id2.
 
@@ -299,9 +302,9 @@ def minhash_candidates(sh: DataFrame, max_bucket_chunk: int = 64) -> DataFrame:
     sig = sh.select(
         "doc_id",
         hashing.band_keys(
-            hashing.minhash_from_hashes(F.col("hs"), k=MINHASH_K),
+            hashing.minhash_from_hashes(F.col("hs")),
             MINHASH_BANDS,
-            MINHASH_K // MINHASH_BANDS,
+            hashing.MINHASH_K // MINHASH_BANDS,
         ).alias("bks"),
     )
     cap = F.lit(max_bucket_chunk)
@@ -787,13 +790,13 @@ def semdedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.join(drop, "vec_id", "left_anti").select("vec_id", "label")
 
 
-def dedup_containment(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.75,
-) -> DataFrame:
+CONTAINMENT_T = 0.75  # dyadic on purpose, see dedup_containment
+
+
+def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle-CONTAINMENT near-dup pairs: ordered (id1, id2)
-    where C(A→B) = |A∩B| / |A| ≥ 0.75 — the quote/subset detector
+    where C(A→B) = |A∩B| / |A| ≥ ``CONTAINMENT_T`` — the quote/subset
+    detector
     Jaccard structurally misses (a 100-word doc pasted into a 10,000-
     word doc has J ≈ 0.01 but containment 1.0; CC-style pipelines
     dedup exactly this case).
@@ -818,7 +821,7 @@ def dedup_containment(
     Columns: id1 (contained doc), id2 (container), n1, n_common,
     containment.
     """
-    t = float(threshold)
+    t = CONTAINMENT_T
     ordered = _doc_shingle_hashes(spark, sf_dir).cache()
     # probe AND index need per-doc ranks in the SAME global (df, h)
     # order (the positional filter below): the cached ranking feeds
@@ -888,7 +891,7 @@ def lsh_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band S-curve audit of MinHash-LSH against the exact near-dup
     ground truth: for every exact Jaccard ≥ 0.5 pair, the analytic
     catch probability p = 1 − (1 − J^r)^b of the production banding
-    (b = ``MINHASH_BANDS``, r = ``MINHASH_K`` / b), alongside whether
+    (b = ``MINHASH_BANDS``, r = ``hashing.MINHASH_K`` / b), alongside whether
     LSH actually produced the pair as a candidate — the dedup twin of
     ``ann_recall`` (an approximate pipeline without a measured catch
     rate is a silent-quality bug).
@@ -908,7 +911,7 @@ def lsh_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Columns: id1, id2, jaccard, p_catch, catch_ok.
     """
     b = float(MINHASH_BANDS)
-    r = float(MINHASH_K // MINHASH_BANDS)
+    r = float(hashing.MINHASH_K // MINHASH_BANDS)
     j = F.col("jaccard")
     p = F.lit(1.0) - F.pow(F.lit(1.0) - F.pow(j, F.lit(r)), F.lit(b))
     return _exact_vs_lsh(spark, sf_dir).select(

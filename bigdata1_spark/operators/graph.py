@@ -177,14 +177,11 @@ def graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_count_dense(
-    spark: SparkSession,
-    sf_dir: str,
-    n_nodes_bound: int,
-    edges: DataFrame | None = None,
-    tile_nodes: int | None = None,
+    e: DataFrame, n_nodes_bound: int, tile_nodes: int | None = None
 ) -> DataFrame:
     """Packed-bitmap triangle counting for dense derived graphs, TILED
-    over the neighbor-index range.
+    over the neighbor-index range, on a localCheckpoint-ed (a < b) edge
+    frame ``e`` with at most ``n_nodes_bound`` nodes.
 
     The co-supplier graph at small SF is near-complete (density ~0.9 at
     sf0.1), so any per-triangle enumeration pays Θ(n³) row traffic —
@@ -215,8 +212,8 @@ def _triangle_count_dense(
 
     Everything is JVM built-ins (sequence/transform/aggregate/zip_with/
     bit_count); per-tile bitset tables are broadcast-joined to the
-    indexed edge list, which is localCheckpoint-ed once and reused by
-    every tile pass. The dense-index assignment is a row_number over
+    indexed edge list, which every tile pass reuses. The dense-index
+    assignment is a row_number over
     the |V|-row node table — single partition by construction, but
     dense mode PRESUPPOSES |V| is broadcast-small, so that window
     never grows past the cutoff.
@@ -227,11 +224,6 @@ def _triangle_count_dense(
         tile_nodes = 1 << max(10, min(14, budget.bit_length() - 1))
     tile_nodes = max(tile_nodes, 64)
     ntiles = max((n_bound + tile_nodes - 1) // tile_nodes, 1)
-    e = (
-        edges
-        if edges is not None
-        else _co_supplier_edges(spark, sf_dir).localCheckpoint()
-    )
     nodes = (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
@@ -314,25 +306,6 @@ def _triangle_count_dense(
     )
 
 
-def _triangle_count_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wedge-join triangle counting for sparse graphs (the general path).
-
-    Degree-ordered orientation: each undirected edge points from its
-    lower-(degree, id) endpoint, so every triangle is enumerated exactly
-    once and wedge generation is bounded by the arboricity (sum of
-    min-degree per edge), not sum(degree²) — what keeps the join alive
-    on power-law graphs at 100 TB. The tiny edge list (2 longs/row) is
-    localCheckpoint-ed once so the degree pass and the orientation pass
-    share one materialization instead of re-running the whole
-    generation chain; both triangle joins are broadcast (the oriented
-    edge list is |E| rows of 16 bytes). Per-node attribution avoids the
-    3-per-triangle array explode via GROUPING SETS (u),(v),(w): Expand
-    replicates rows inside codegen with no allocation.
-    """
-    e = _co_supplier_edges(spark, sf_dir).localCheckpoint()
-    return _per_node_triangles(_node_degrees(e), e)
-
-
 def _node_degrees(e: DataFrame) -> DataFrame:
     """(node, degree) from an undirected (a < b) edge frame. Both
     endpoints explode in ONE scan — union(e.a, e.b) would run a lazy
@@ -391,12 +364,12 @@ def _oriented_triangles(deg: DataFrame, e: DataFrame) -> DataFrame:
 
 def _per_node_triangles(deg: DataFrame, e: DataFrame) -> DataFrame:
     """Per-node triangle counts from a materialized (a < b) edge frame
-    and its degree table — the shared wedge-join kernel of
-    :func:`_triangle_count_sparse` and :func:`clustering_coefficient`
-    (pass the SAME localCheckpoint-ed ``e`` to both consumers so the
-    edge generation runs once). Per-node attribution avoids the
-    3-per-triangle array explode via GROUPING SETS (u),(v),(w): Expand
-    replicates rows inside codegen with no allocation."""
+    and its degree table — the wedge-join kernel for sparse graphs (the
+    general path). Every triangle is enumerated once
+    (:func:`_oriented_triangles`, arboricity-bounded); per-node
+    attribution avoids the 3-per-triangle array explode via GROUPING
+    SETS (u),(v),(w): Expand replicates rows inside codegen with no
+    allocation."""
     tris = _oriented_triangles(deg, e)
     return (
         tris.groupingSets([["u"], ["v"], ["w"]], "u", "v", "w")
@@ -407,28 +380,35 @@ def _per_node_triangles(deg: DataFrame, e: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(
-    spark: SparkSession,
-    sf_dir: str,
-    dense_max_nodes: int = _DENSE_MAX_NODES,
-) -> DataFrame:
-    """Per-node triangle participation counts in the co-supplier graph.
+def _triangles(sf_dir: str, e: DataFrame, deg: DataFrame) -> DataFrame:
+    """(node, n_triangles) of the localCheckpoint-ed co-supplier edge
+    frame ``e`` with degree table ``deg``: the one dense/sparse dispatch
+    of :func:`triangle_count` and :func:`clustering_coefficient`.
 
     Hybrid physical strategy, chosen from catalog stats the way a
     cost-based planner would: the supplier row count (a parquet
-    metadata read, no scan) bounds |V|; under ``dense_max_nodes`` the
+    metadata read, no scan) bounds |V|; under ``_DENSE_MAX_NODES`` the
     packed-bitmap dense plan runs (|V|²/8 bytes of total adjacency is
     broadcast-small, and near-complete derived graphs make per-triangle
-    enumeration Θ(n³)); above it the degree-ordered wedge-join sparse
-    plan runs (arboricity-bounded, never materializes a bitset).
-    The count itself is orientation- and plan-invariant, so the oracle
-    uses plain id-ordering. Columns: node, n_triangles (bigint; nodes
-    in ≥1 triangle).
-    """
+    enumeration Θ(n³) — wedge enumeration took 15.7 s at sf0.1 vs 2.5 s
+    dense, measured r14); above it the degree-ordered wedge-join sparse
+    plan runs (arboricity-bounded, never materializes a bitset). The
+    count itself is orientation- and plan-invariant."""
     n_sup = parquet_row_count(sf_dir, "supplier")
-    if n_sup <= dense_max_nodes:
-        return _triangle_count_dense(spark, sf_dir, n_sup)
-    return _triangle_count_sparse(spark, sf_dir)
+    if n_sup <= _DENSE_MAX_NODES:
+        return _triangle_count_dense(e, n_sup)
+    return _per_node_triangles(deg, e)
+
+
+def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-node triangle participation counts in the co-supplier graph,
+    through the dense/sparse dispatch of :func:`_triangles` on the edge
+    list, generated once and localCheckpoint-ed. The oracle uses plain
+    id-ordering. Columns: node, n_triangles (bigint; nodes in ≥1
+    triangle).
+    """
+    e = _co_supplier_edges(spark, sf_dir).localCheckpoint()
+    return _triangles(sf_dir, e, _node_degrees(e))
 
 
 def pagerank_iter1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,11 +428,16 @@ def pagerank_iter1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank(spark, sf_dir, iters=1)
 
 
-def pagerank(
-    spark: SparkSession, sf_dir: str, iters: int = 3, damping: float = 0.85
-) -> DataFrame:
-    """Fixed-iteration PageRank on the customer–supplier bipartite
-    graph (edges both directions, so no dangling nodes).
+# Damping and its base 1 − damping, both literals: the float 1.0 - 0.85
+# is one ulp above the oracle's literal 0.15.
+PAGERANK_DAMPING = 0.85
+PAGERANK_BASE = 0.15
+
+
+def pagerank(spark: SparkSession, sf_dir: str, iters: int = 3) -> DataFrame:
+    """Fixed-iteration PageRank (damping ``PAGERANK_DAMPING``) on the
+    customer–supplier bipartite graph (edges both directions, so no
+    dangling nodes).
 
     FULL value-hash oracle since round 7: the iteration count is fixed,
     so the registry UNROLLS all three rounds into chained SQL CTEs
@@ -491,14 +476,6 @@ def pagerank(
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     nodes = outdeg.select(F.col("src").alias("node"), "outdeg")
     ranks = nodes.select("node", "outdeg", F.lit(1.0).alias("rank"))
-    # Bit-identical to the oracle's literal ``0.15``: the Python float
-    # expression ``1.0 - 0.85`` lands one ulp ABOVE the 0.15 double
-    # (0.15000000000000002), which would skew every rank ~1 ulp per
-    # iteration vs DuckDB's literal and could flip a 1e-6 floor-rounding
-    # boundary. Subtract in Decimal so base IS the 0.15 double literal.
-    from decimal import Decimal
-
-    base = float(Decimal(1) - Decimal(str(damping)))
 
     def step(ranks: DataFrame, _r: int) -> DataFrame:
         contribs = (
@@ -516,8 +493,8 @@ def pagerank(
             "node",
             "outdeg",
             (
-                F.lit(base)
-                + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
+                F.lit(PAGERANK_BASE)
+                + F.lit(PAGERANK_DAMPING) * F.coalesce("in_sum", F.lit(0.0))
             ).alias("rank"),
         )
 
@@ -700,26 +677,14 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts are exact integers; the coefficient is ONE double chain per
     node. Degree-1 nodes have no defined coefficient (denominator 0)
     and emit NULL; triangle-free nodes emit 0.0. Reference parity: none
-    (the reference has no graph surface); triangle semantics cited at
-    ``_triangle_count_sparse``. Columns: node, degree, n_triangles,
+    (the reference has no graph surface). Per-node triangles come from
+    the dense/sparse dispatch of :func:`_triangles`, shared with
+    :func:`triangle_count`. Columns: node, degree, n_triangles,
     clustering_coeff.
-
-    Physical dispatch mirrors :func:`triangle_count`'s hybrid: under
-    ``_DENSE_MAX_NODES`` the packed-bitmap dense kernel counts per-node
-    triangles (the derived co-supplier graph is near-complete at small
-    |V|, where wedge enumeration pays Θ(Σ min-deg) ≈ 10⁸ rows — 15.7 s
-    at sf0.1 vs 2.5 s dense, measured r14); past the cutoff the
-    degree-ordered sparse kernel runs. Counts are plan-invariant, so
-    the oracle is unchanged.
     """
     e = _co_supplier_edges(spark, sf_dir).localCheckpoint()
     deg = _node_degrees(e)
-    n_sup = parquet_row_count(sf_dir, "supplier")
-    if n_sup <= _DENSE_MAX_NODES:
-        tris = _triangle_count_dense(spark, sf_dir, max(n_sup, 1), edges=e)
-    else:
-        tris = _per_node_triangles(deg, e)
-    tris = tris.withColumnRenamed("node", "tnode")
+    tris = _triangles(sf_dir, e, deg).withColumnRenamed("node", "tnode")
     j = deg.join(
         F.broadcast(tris), F.col("node") == F.col("tnode"), "left"
     )
@@ -749,18 +714,17 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 LINKPRED_K = 16
 
 
-def _bounded_co_supplier_edges(
-    spark: SparkSession, sf_dir: str, k: int = LINKPRED_K
-) -> DataFrame:
-    """Mutual top-``k`` co-supplier edges (a < b), one row each.
+def _bounded_co_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mutual top-``LINKPRED_K`` co-supplier edges (a < b), one row each.
 
     Edge weight = number of orders the pair co-occurs in (each order
     contributes an unordered pair at most once — per-order pairs come
     from ``collect_set``). Each node ranks neighbors by (weight DESC,
     id ASC) — a total order, so the cap is deterministic and the
     DuckDB oracle mirrors it with the same ROW_NUMBER — and an edge
-    survives iff BOTH endpoints rank it within k, bounding max degree
-    by k. One count shuffle + one window shuffle on node + one (a, b)
+    survives iff BOTH endpoints rank it within ``LINKPRED_K``, bounding
+    max degree by ``LINKPRED_K``. One count shuffle + one window
+    shuffle on node + one (a, b)
     join; every step is a keyed shuffle that scales out.
     """
     pairs = _order_pairs(spark, sf_dir)
@@ -785,7 +749,7 @@ def _bounded_co_supplier_edges(
         Window.partitionBy("node").orderBy(F.desc("w"), F.asc("nbr"))
     )
     topk = sym.select("node", "nbr", rn.alias("rn")).filter(
-        F.col("rn") <= F.lit(k)
+        F.col("rn") <= F.lit(LINKPRED_K)
     )
     fwd = topk.filter(F.col("node") < F.col("nbr")).select(
         F.col("node").alias("a"), F.col("nbr").alias("b")

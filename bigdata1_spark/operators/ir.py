@@ -53,10 +53,14 @@ BM25_K1 = 1.2
 BM25_K1_PLUS_1 = 2.2
 BM25_B = 0.75
 BM25_QUERY = ("spark", "hash", "merge", "window")
+BM25_TOP_K = 10
+TFIDF_TOP_K = 5  # terms kept per document
+PMI_TOP_N = 50
+PMI_MIN_PAIRS = 5  # a bigram seen fewer times is not ranked
 
 
-def tfidf_topterms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document (smoothed idf:
+def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``TFIDF_TOP_K`` TF-IDF terms per document (smoothed idf:
     ln((N+1)/(df+1)) + 1, sklearn's convention).
 
     Plan: one explode → (doc, term) count [shuffle 1]; term df reduces
@@ -94,14 +98,14 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TFIDF_TOP_K)
         .select("doc_id", "term", "tf", snap6(F.col("score")).alias("score"))
     )
 
 
-def bm25_search(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval for the fixed query ``BM25_QUERY``
-    (k1=1.2, b=0.75) — top-``k`` documents.
+    (k1=1.2, b=0.75) — top-``BM25_TOP_K`` documents.
 
     Per-term partial scores pivot into per-term COLUMNS and sum in the
     query's declared order — a groupBy SUM over doubles would
@@ -158,7 +162,7 @@ def bm25_search(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     top = (
         pivoted.select("doc_id", total.alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .limit(BM25_TOP_K)
     )
     wr = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return top.select(
@@ -168,10 +172,10 @@ def bm25_search(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     )
 
 
-def cooccur_pmi(spark: SparkSession, sf_dir: str, top_n: int = 50,
-                min_pairs: int = 5) -> DataFrame:
-    """Top-``top_n`` adjacent word pairs by pointwise mutual
-    information, PMI = ln(p(w1,w2) / (p(w1)·p(w2))).
+def cooccur_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``PMI_TOP_N`` adjacent word pairs seen at least
+    ``PMI_MIN_PAIRS`` times, by pointwise mutual information,
+    PMI = ln(p(w1,w2) / (p(w1)·p(w2))).
 
     Pairs come from zipping each token array with its own tail (array-
     local, no shuffle); pair counts and unigram counts are exact
@@ -216,7 +220,7 @@ def cooccur_pmi(spark: SparkSession, sf_dir: str, top_n: int = 50,
     r2 = F.col("u2").cast("double") / F.col("t").cast("double")
     ratio = rb / (r1 * r2)
     scored = (
-        bigrams.filter(F.col("b") >= min_pairs)
+        bigrams.filter(F.col("b") >= PMI_MIN_PAIRS)
         .join(uni.select(F.col("word").alias("w1"),
                          F.col("cnt").alias("u1")), "w1")
         .join(uni.select(F.col("word").alias("w2"),
@@ -226,7 +230,7 @@ def cooccur_pmi(spark: SparkSession, sf_dir: str, top_n: int = 50,
     )
     return (
         scored.orderBy(F.desc("ratio"), F.asc("w1"), F.asc("w2"))
-        .limit(top_n)
+        .limit(PMI_TOP_N)
         .select(
             "w1", "w2", F.col("b").alias("pairs"),
             snap6(F.log("ratio")).alias("pmi"),

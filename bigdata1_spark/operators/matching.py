@@ -52,14 +52,13 @@ from bigdata1_spark.sources.tables import load_table
 # the FUZZY_MAX_REPS lowest part keys of the group, a total order both
 # engines sort identically.
 FUZZY_MAX_REPS = 20
+FUZZY_MAX_DIST = 2  # Levenshtein threshold
 
 
-def fuzzy_join(
-    spark: SparkSession, sf_dir: str, max_dist: int = 2
-) -> DataFrame:
+def fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-brand fuzzy self-match on part names: part pairs
     (a_key < b_key) whose names are within Levenshtein distance
-    ``max_dist``, over at most ``FUZZY_MAX_REPS`` representative keys
+    ``FUZZY_MAX_DIST``, over at most ``FUZZY_MAX_REPS`` representative keys
     per (brand, name) group (lowest ids; pre-cap group sizes are
     carried per side so match mass is recoverable — the bounded-
     contract move production ER makes once surface-form repetition
@@ -95,7 +94,7 @@ def fuzzy_join(
     names = p.select("p_name").distinct()
     # Bounded-distance kernel over distinct name pairs only: returns -1
     # past the threshold (banded DP, early exit), so the filter keeps
-    # 0..max_dist.
+    # 0..FUZZY_MAX_DIST.
     npairs = (
         names.alias("x")
         .join(
@@ -106,7 +105,7 @@ def fuzzy_join(
             F.col("x.p_name").alias("name_a"),
             F.col("y.p_name").alias("name_b"),
             F.levenshtein(
-                F.col("x.p_name"), F.col("y.p_name"), max_dist
+                F.col("x.p_name"), F.col("y.p_name"), FUZZY_MAX_DIST
             ).cast("long").alias("dist"),
         )
         .filter(F.col("dist") >= 0)

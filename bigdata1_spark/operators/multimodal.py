@@ -46,11 +46,16 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def synth_media(spark: SparkSession, n: int = 256, seed: int = 42) -> DataFrame:
+MEDIA_SEED = 42
+THUMB_PX = 64  # thumbnail clamp
+
+
+def synth_media(spark: SparkSession, n: int = 256) -> DataFrame:
     """Deterministic fake media rows: payload = seeded pseudo-random
     bytes (stands in for real encoded frames).
 
-    Every column is a pure md5/sha256 function of (seed, media_id) —
+    Every column is a pure md5/sha256 function of (``MEDIA_SEED``,
+    media_id) —
     the ``gen_billings``/``python_datasource`` recipe — so a SQL oracle
     regenerates the table row-for-row and even the binary-payload
     pipeline downstream is full value-hash checked (round 7; previously
@@ -60,14 +65,14 @@ def synth_media(spark: SparkSession, n: int = 256, seed: int = 42) -> DataFrame:
     from bigdata1_spark.functions.hashing import md5hash60
 
     h = lambda salt: md5hash60(  # noqa: E731
-        F.concat_ws("|", F.lit(str(seed)), F.lit(salt),
+        F.concat_ws("|", F.lit(str(MEDIA_SEED)), F.lit(salt),
                     F.col("id").cast("string"))
     )
     kinds = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
         (h("kind") % 3 + 1).cast("int"),
     )
-    payload = F.sha2(F.concat_ws(":", F.col("id"), F.lit(seed)), 256).cast("binary")
+    payload = F.sha2(F.concat_ws(":", F.col("id"), F.lit(MEDIA_SEED)), 256).cast("binary")
     # numPartitions sized to the demo row count: mapInPandas forks a
     # Python worker per partition, so 32 near-empty partitions would pay
     # 32 interpreter startups for 256 rows. At scale, partition count
@@ -88,7 +93,7 @@ def _fake_decode(payload: bytes) -> bytes:
     return payload
 
 
-def decode_and_featurize(media: DataFrame, thumb: int = 64) -> DataFrame:
+def decode_and_featurize(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Real plumbing: Arrow batches stream through Python once, output is a
@@ -107,12 +112,12 @@ def decode_and_featurize(media: DataFrame, thumb: int = 64) -> DataFrame:
                     "feat_mean": decoded.map(
                         lambda b: int(sum(b) // max(len(b), 1))
                     ).astype("int64"),
-                    # thumbnail dims: clamp aspect-preserving to thumb px
+                    # thumbnail dims: clamp aspect-preserving to THUMB_PX
                     "thumb_w": pdf[["meta_w", "meta_h"]]
-                    .apply(lambda r: min(int(r.meta_w), thumb), axis=1)
+                    .apply(lambda r: min(int(r.meta_w), THUMB_PX), axis=1)
                     .astype("int64"),
                     "thumb_h": pdf[["meta_w", "meta_h"]]
-                    .apply(lambda r: min(int(r.meta_h), thumb), axis=1)
+                    .apply(lambda r: min(int(r.meta_h), THUMB_PX), axis=1)
                     .astype("int64"),
                 }
             )

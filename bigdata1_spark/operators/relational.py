@@ -630,6 +630,9 @@ def histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+RUNNING_RANGES = 32  # range partitions of _range_partitioned_running
+
+
 def _range_partitioned_running(
     df: DataFrame,
     key: str,
@@ -637,7 +640,6 @@ def _range_partitioned_running(
     out: str,
     agg: str = "sum",
     inclusive: bool = True,
-    num_ranges: int = 32,
 ) -> DataFrame:
     """Distributed running aggregate over a value-ordered table.
 
@@ -648,7 +650,7 @@ def _range_partitioned_running(
     prefix-sum instead: range-shuffle on ``key`` (co-locating each key
     range), compute the running aggregate WITHIN each range, aggregate
     one total per range, and broadcast the cross-range offsets back.
-    The only unpartitioned window left runs over ``num_ranges`` rows —
+    The only unpartitioned window left runs over ``RUNNING_RANGES`` rows —
     a constant chosen by the planner, independent of data volume.
 
     ``agg`` is "sum" (offsets add) or "max" (offsets fold via greatest,
@@ -663,7 +665,7 @@ def _range_partitioned_running(
     """
     aggf = {"sum": F.sum, "max": F.max}[agg]
     rp = (
-        df.repartitionByRange(num_ranges, key)
+        df.repartitionByRange(RUNNING_RANGES, key)
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint()
     )

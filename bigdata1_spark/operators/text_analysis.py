@@ -28,8 +28,8 @@ from bigdata1_spark.operators.basket import fold_sum, or_null_class, snap6
 from bigdata1_spark.sources.tables import load_table
 
 
-def _toks(col: str = "text") -> Column:
-    return tokens(F.col(col))
+def _toks() -> Column:
+    return tokens(F.col("text"))
 
 
 def token_counts(
@@ -436,8 +436,11 @@ def pipeline_pretraining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _split_stats(survivors, sh, gated)
 
 
-def ngram_freq(spark: SparkSession, sf_dir: str, top_n: int = 50) -> DataFrame:
-    """Corpus-level bigram frequencies, top-N with deterministic
+NGRAM_TOP_N = 50
+
+
+def ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-level bigram frequencies, top-``NGRAM_TOP_N`` with deterministic
     tie-break — vocabulary/phrase statistics over the documents table
     (explode → count → ordered limit; the count shuffle carries one row
     per distinct bigram thanks to map-side partial aggregation)."""
@@ -447,7 +450,7 @@ def ngram_freq(spark: SparkSession, sf_dir: str, top_n: int = 50) -> DataFrame:
     return (
         token_counts(docs, toks=shingles_or_null(F.col("text"), 2))
         .orderBy(F.desc("cnt"), F.asc_nulls_last("word"))
-        .limit(top_n)
+        .limit(NGRAM_TOP_N)
         .select(F.col("word").alias("bigram"), F.col("cnt").alias("freq"))
     )
 
@@ -545,18 +548,19 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def heavy_hitters(
-    spark: SparkSession, sf_dir: str, k: int = 1000
-) -> DataFrame:
+HEAVY_HITTER_K = 1000  # φ = 1/HEAVY_HITTER_K
+
+
+def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact corpus-level heavy hitters: every token whose frequency is
-    ≥ 1/k of all token occurrences (the φ-frequent-items problem with
-    φ = 1/k, solved exactly).
+    ≥ 1/``HEAVY_HITTER_K`` of all token occurrences (the φ-frequent-items
+    problem with φ = 1/``HEAVY_HITTER_K``, solved exactly).
 
     Scale shape: explode → count is ONE shuffle carrying one row per
     DISTINCT token (map-side partial aggregation collapses the raw
     occurrences), and the grand total is a 1-row broadcast — the same
     aggregate-vs-global-scalar pattern as tpch_q15. The threshold test
-    is pure integer arithmetic (``cnt * k >= total``), so no float
+    is pure integer arithmetic (``cnt * HEAVY_HITTER_K >= total``), so no float
     boundary can disagree between engines; ``frac`` is one IEEE
     division of exact integers. At 100 TB the candidate set after the
     count shuffle is vocabulary-sized, not corpus-sized — the sketch
@@ -568,7 +572,7 @@ def heavy_hitters(
     total = counts.agg(F.sum("cnt").alias("total"))
     return (
         counts.crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") * k >= F.col("total"))
+        .filter(F.col("cnt") * HEAVY_HITTER_K >= F.col("total"))
         .select(
             F.col("word").alias("token"),
             "cnt",
@@ -578,9 +582,11 @@ def heavy_hitters(
     )
 
 
-def bpe_pair_counts(
-    spark: SparkSession, sf_dir: str, top_n: int = 50
-) -> DataFrame:
+BPE_PAIR_TOP_N = 50
+BPE_MERGE_TOP_N = 30
+
+
+def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inner loop of BPE tokenizer training: frequency of every
     adjacent symbol pair, weighted by word frequency — the statistic a
     merge step argmaxes over (here at the character level, i.e. the
@@ -604,7 +610,7 @@ def bpe_pair_counts(
         ).alias("pair"),
         "cnt",
     )
-    return _top_pairs(pairs, top_n)
+    return _top_pairs(pairs, BPE_PAIR_TOP_N)
 
 
 def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -773,9 +779,7 @@ def _apply_merge(w, pair):
     )
 
 
-def bpe_merge_round(
-    spark: SparkSession, sf_dir: str, top_n: int = 30
-) -> DataFrame:
+def bpe_merge_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE exactly-unrolled BPE training round — argmax the pair
     statistic, APPLY the merge to every word, recount (the
     ``pagerank_iter1`` pattern for pinning an iterative kernel
@@ -805,14 +809,12 @@ def bpe_merge_round(
         ).alias("w"),
         "cnt",
     )
-    return _sym_pair_freq(merged, top_n, "mpair").select(
+    return _sym_pair_freq(merged, BPE_MERGE_TOP_N, "mpair").select(
         F.col("mpair").alias("merged_pair"), "pair", "freq"
     )
 
 
-def bpe_merge_round2(
-    spark: SparkSession, sf_dir: str, top_n: int = 30
-) -> DataFrame:
+def bpe_merge_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO exactly-unrolled BPE training rounds chained — merge-then-
     merge composition pinned bit-for-bit (VERDICT r07 item 8; the
     ``pagerank`` unrolling pattern applied one level deeper than
@@ -849,7 +851,7 @@ def bpe_merge_round2(
         _apply_merge(F.col("w"), F.col("mpair2")).alias("w"),
         "cnt",
     )
-    return _sym_pair_freq(merged2, top_n, "mpair1", "mpair2").select(
+    return _sym_pair_freq(merged2, BPE_MERGE_TOP_N, "mpair1", "mpair2").select(
         F.col("mpair1").alias("merged_pair1"),
         F.col("mpair2").alias("merged_pair2"),
         "pair",
@@ -1224,9 +1226,10 @@ def token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def log_odds_words(
-    spark: SparkSession, sf_dir: str, top_k: int = 10
-) -> DataFrame:
+LOG_ODDS_TOP_K = 10
+
+
+def log_odds_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinctive vocabulary per source slice: Monroe-style log-odds
     ratio of each word in the slice vs the REST of the corpus, with the
     Haldane–Anscombe +0.5 smoothing and its delta-method z-score — the
@@ -1239,7 +1242,7 @@ def log_odds_words(
     inputs is an exact-integer-ratio double, each ln is snapped to the
     1e-6 grid
     (the z RANKS rows — the ir.py ranking rule), and delta/var/z is
-    one mirrored chain. Per source the top ``top_k`` by (z DESC, word
+    one mirrored chain. Per source the top ``LOG_ODDS_TOP_K`` by (z DESC, word
     ASC — total order) are kept. NULL source is a real slice; words
     seen only outside the slice never rank (their z is negative).
     Columns: source, word, n_sw, z_score, rnk.
@@ -1272,7 +1275,7 @@ def log_odds_words(
     )
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= top_k)
+        .filter(F.col("rnk") <= LOG_ODDS_TOP_K)
     )
 
 

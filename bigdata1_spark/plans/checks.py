@@ -20,14 +20,28 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def count_exchanges(df: DataFrame) -> int:
-    """Shuffle exchanges (unique plan nodes, broadcast excluded).
+def plan_node_ids(plan: str, node: str) -> set[str]:
+    """Ids of the ``node`` operators (``"Exchange"``, ``"Scan parquet"``)
+    in the node tree of a formatted plan, skipping every ``== Initial
+    Plan ==`` subtree: before AQE has run that is the whole plan, after
+    an action the final plans (the top one and each cached subplan's).
+    ``BroadcastExchange`` and ``ReusedExchange`` are not ``"Exchange"``."""
+    pat = re.compile(rf"(?<!\w){re.escape(node)}\b[^()\n]*\((\d+)\)")
+    ids, skip_from = set(), None  # skip_from: an Initial Plan's column
+    for line in plan.split("\n\n", 1)[0].splitlines():
+        col = len(line) - len(line.lstrip(" :+-"))
+        if skip_from is not None and col >= skip_from:
+            continue
+        skip_from = col if "== Initial Plan ==" in line else None
+        if skip_from is None:
+            ids.update(pat.findall(line))
+    return ids
 
-    Counts the '(N) Exchange' node-detail headers so each node is seen
-    once even though formatted output prints tree + details."""
-    plan = formatted_plan(df)
-    final = plan.split("== Initial Plan ==")[0]
-    return len(set(re.findall(r"^\((\d+)\) Exchange\s*$", final, re.M)))
+
+def count_exchanges(df: DataFrame) -> int:
+    """Shuffle exchanges (unique plan nodes, broadcast excluded), the same
+    before and after an action on ``df`` unless AQE drops a shuffle."""
+    return len(plan_node_ids(formatted_plan(df), "Exchange"))
 
 
 def _require(cond: bool, msg: str) -> None:

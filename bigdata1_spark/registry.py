@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from bigdata1_spark.operators import basket, micro
 from bigdata1_spark.sources import generator
 
+# Every harness calls a key as fn(spark, sf_dir), so an operator takes
+# nothing else; its fixed settings are module constants.
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -4111,7 +4113,7 @@ register(
     """,
 )
 
-def _pagerank_unrolled_sql(iters: int = 3) -> str:
+def _pagerank_unrolled_sql(iters: int) -> str:
     """Generate the pagerank oracle by unrolling the fixed iteration
     count into chained CTEs (round 7 — the LAST rows-only key gains a
     full value-hash oracle). Each unrolled round mirrors the Spark
@@ -5261,7 +5263,7 @@ register(
 )
 
 
-def _kcore_unrolled_sql(rounds: int = 3, k: int = 3) -> str:
+def _kcore_unrolled_sql(rounds: int, k: int) -> str:
     """Chained-CTE unroll of the fixed-round k-core peel (the
     _pagerank_unrolled_sql pattern: a loop the engine can't recurse
     with an aggregate per round is unrolled bit-for-bit).
@@ -5307,10 +5309,10 @@ def _kcore_unrolled_sql(rounds: int = 3, k: int = 3) -> str:
     )
 
 
-register("kcore", graph.kcore, _kcore_unrolled_sql())
+register("kcore", graph.kcore, _kcore_unrolled_sql(graph.KCORE_ROUNDS, graph.KCORE_K))
 
 
-def _bfs_unrolled_sql(rounds: int = 3, source: int = 1) -> str:
+def _bfs_unrolled_sql(rounds: int, source: int) -> str:
     """Chained-CTE unroll of the fixed-round frontier BFS (the
     _kcore_unrolled_sql pattern). Each round joins ONLY the frontier
     (nodes whose hop equals the previous round number) to the
@@ -5352,10 +5354,10 @@ def _bfs_unrolled_sql(rounds: int = 3, source: int = 1) -> str:
 
 # Fixed-round Pregel BFS over the co-supplier graph; literal source so
 # the oracle is a pure unroll and the empty twin still emits the seed.
-register("bfs_hops", graph.bfs_hops, _bfs_unrolled_sql())
+register("bfs_hops", graph.bfs_hops, _bfs_unrolled_sql(graph.BFS_ROUNDS, graph.BFS_SOURCE))
 
 
-def _label_prop_unrolled_sql(rounds: int = 3) -> str:
+def _label_prop_unrolled_sql(rounds: int) -> str:
     """Chained-CTE unroll of synchronous min-label propagation (the
     _bfs_unrolled_sql pattern: join labels to the bidirectional edges,
     min-merge with the previous labels, per fixed round)."""
@@ -5394,7 +5396,7 @@ def _label_prop_unrolled_sql(rounds: int = 3) -> str:
 # Deterministic (min-label) label propagation — the community-seed
 # primitive next to components (dedup_clusters), cores (kcore), and
 # ranks (pagerank); random-tie LPA is not oracle-pinnable, min-label is.
-register("label_prop", graph.label_prop, _label_prop_unrolled_sql())
+register("label_prop", graph.label_prop, _label_prop_unrolled_sql(graph.LABEL_PROP_ROUNDS))
 
 
 # Span-level exact-substring dedup (Lee et al. 2022): duplicated word

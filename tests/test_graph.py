@@ -34,9 +34,13 @@ def test_triangle_total_divisible_by_three(spark, sf_dir):
 def test_triangle_dense_sparse_agree(spark, sf_dir):
     """The packed-bitmap dense plan and the wedge-join sparse plan are
     physical strategies for the same logical result — they must agree
-    row-for-row (dense_max_nodes=0 forces the sparse path)."""
-    dense = graph.triangle_count(spark, sf_dir)
-    sparse = graph.triangle_count(spark, sf_dir, dense_max_nodes=0)
+    row-for-row on one checkpointed edge frame."""
+    from bigdata1_spark.sources.tables import parquet_row_count
+
+    e = graph._co_supplier_edges(spark, sf_dir).localCheckpoint()
+    n_sup = parquet_row_count(sf_dir, "supplier")
+    dense = graph._triangle_count_dense(e, n_sup)
+    sparse = graph._per_node_triangles(graph._node_degrees(e), e)
     assert dense.exceptAll(sparse).count() == 0
     assert sparse.exceptAll(dense).count() == 0
 
@@ -49,8 +53,9 @@ def test_triangle_dense_tiled_agrees(spark, sf_dir):
     from bigdata1_spark.sources.tables import load_table
 
     n_sup = load_table(spark, sf_dir, "supplier").count()
-    tiled = graph._triangle_count_dense(spark, sf_dir, n_sup, tile_nodes=64)
-    flat = graph._triangle_count_dense(spark, sf_dir, n_sup)
+    e = graph._co_supplier_edges(spark, sf_dir).localCheckpoint()
+    tiled = graph._triangle_count_dense(e, n_sup, tile_nodes=64)
+    flat = graph._triangle_count_dense(e, n_sup)
     assert tiled.exceptAll(flat).count() == 0
     assert flat.exceptAll(tiled).count() == 0
 

@@ -95,7 +95,8 @@ def test_bpe_merge_round_consumes_the_merged_pair(spark, sf_dir):
     pre-merge argmax, or the merge did nothing."""
     from bigdata1_spark.operators.text_analysis import bpe_pair_counts
 
-    pre = bpe_pair_counts(spark, sf_dir, top_n=1).first()
+    # ordered by (freq DESC, pair ASC): the first row is the argmax
+    pre = bpe_pair_counts(spark, sf_dir).first()
     post = bpe_merge_round(spark, sf_dir).cache()
     merged_pair = post.select("merged_pair").first()[0]
     a, b = merged_pair.split(" ")

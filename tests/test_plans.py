@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata1_spark.operators import basket, micro
@@ -837,13 +838,11 @@ def test_aqe_skew_join_engages_on_hot_key(spark):
 
 
 def _unique_scan_count(df) -> int:
-    """Unique '(N) Scan parquet' node-detail headers in the FINAL plan
-    (Initial Plan section excluded; cached subtrees plan as
-    InMemoryTableScan and don't count)."""
-    from bigdata1_spark.plans.checks import formatted_plan
+    """Unique 'Scan parquet' nodes of the plan (the final plan once AQE
+    has run; a cache's fill plan prints once)."""
+    from bigdata1_spark.plans.checks import formatted_plan, plan_node_ids
 
-    final = formatted_plan(df).split("== Initial Plan ==")[0]
-    return len(set(re.findall(r"^\((\d+)\) Scan parquet", final, re.M)))
+    return len(plan_node_ids(formatted_plan(df), "Scan parquet"))
 
 
 def test_dsir_sample_single_corpus_scan(spark, sf_dir):
@@ -1221,6 +1220,57 @@ def test_every_query_has_a_scan_budget():
     assert not missing, "\n".join(
         f"{key}: no scan budget — audit and add one" for key in missing
     )
+
+
+# The registry parameters beyond (spark, sf_dir) that a caller sets,
+# each with the caller that needs it. Every harness calls a key as
+# fn(spark, sf_dir), so any other parameter is a knob nothing can set.
+_SET_BY_A_CALLER = {
+    "pagerank.iters",  # pagerank_iter1 passes 1
+    "dedup_jaccard.threshold",  # test_properties' threshold sweep
+    # dedup_near, dedup_clusters and the pipelines pass a shared cache
+    "dedup_jaccard.hashed_shingles",
+}
+
+
+def test_every_query_is_a_plain_query_fn():
+    """Every registry operator takes exactly (spark, sf_dir); keywords
+    bound by functools.partial (the scan_* keys) count as bound."""
+    import functools
+    import inspect
+
+    from bigdata1_spark import registry
+
+    extra, bad = set(), []
+    for key, scoped in registry.QUERIES.items():
+        fn = scoped.__wrapped__
+        bound = fn.keywords if isinstance(fn, functools.partial) else {}
+        names = [
+            p for p in inspect.signature(fn).parameters if p not in bound
+        ]
+        if names[:2] != ["spark", "sf_dir"]:
+            bad.append(f"{key}: {names}")
+        extra.update(f"{key}.{p}" for p in names[2:])
+    bad += sorted(extra - _SET_BY_A_CALLER)
+    bad += [f"{p}: allowlisted but gone" for p in _SET_BY_A_CALLER - extra]
+    assert not bad, "\n".join(bad)
+
+
+@pytest.mark.parametrize("key", ["tpch_q1", "assoc_rules", "topk_window"])
+def test_exchange_count_survives_an_action(spark, sf_dir, key):
+    """count_exchanges reads the final plan once AQE has run, so a pin
+    placed after an action still counts: one Exchange per shuffle stage
+    that ran. AQE may drop a planned shuffle at run time (assoc_rules'
+    single-partition cached input needs none); it adds none here."""
+    from bigdata1_spark import registry
+
+    df = registry.QUERIES[key].__wrapped__(spark, sf_dir)
+    before = checks.count_exchanges(df)
+    df.collect()
+    after = checks.count_exchanges(df)
+    plan = checks.formatted_plan(df)
+    stages = len(checks.plan_node_ids(plan, "ShuffleQueryStage"))
+    assert 1 <= after == stages <= before, (before, after, stages)
 
 
 # --------------------------------------------------------------------------
