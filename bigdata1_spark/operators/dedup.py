@@ -280,9 +280,8 @@ def minhash_candidates(sh: DataFrame, max_bucket_chunk: int = 64) -> DataFrame:
     a (doc_id, hs) shingle-hash table.
 
     shingle hashes → ``hashing.MINHASH_K``-minhash signature →
-    ``MINHASH_BANDS``
-    band keys → explode → bucket groupBy → pair generation. Candidates
-    are distinct (id1 < id2). Columns: id1, id2.
+    ``MINHASH_BANDS`` band keys → explode → bucket groupBy → pair
+    generation. Candidates are distinct (id1 < id2). Columns: id1, id2.
 
     Skew guard: a bucket's sorted id array is sliced into chunks of at
     most ``max_bucket_chunk`` ids; pairs within a chunk are generated
@@ -796,10 +795,9 @@ CONTAINMENT_T = 0.75  # dyadic on purpose, see dedup_containment
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle-CONTAINMENT near-dup pairs: ordered (id1, id2)
     where C(A→B) = |A∩B| / |A| ≥ ``CONTAINMENT_T`` — the quote/subset
-    detector
-    Jaccard structurally misses (a 100-word doc pasted into a 10,000-
-    word doc has J ≈ 0.01 but containment 1.0; CC-style pipelines
-    dedup exactly this case).
+    detector Jaccard structurally misses (a 100-word doc pasted into a
+    10,000-word doc has J ≈ 0.01 but containment 1.0; CC-style
+    pipelines dedup exactly this case).
 
     Candidate generation is the asymmetric PPJoin prefix variant,
     exact and bounded: if C(A→B) ≥ t then A misses at most
@@ -891,8 +889,8 @@ def lsh_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band S-curve audit of MinHash-LSH against the exact near-dup
     ground truth: for every exact Jaccard ≥ 0.5 pair, the analytic
     catch probability p = 1 − (1 − J^r)^b of the production banding
-    (b = ``MINHASH_BANDS``, r = ``hashing.MINHASH_K`` / b), alongside whether
-    LSH actually produced the pair as a candidate — the dedup twin of
+    (b = ``MINHASH_BANDS``, r = ``hashing.MINHASH_K`` / b), alongside
+    whether LSH actually produced the pair as a candidate — the dedup twin of
     ``ann_recall`` (an approximate pipeline without a measured catch
     rate is a silent-quality bug).
 

@@ -213,10 +213,9 @@ def _triangle_count_dense(
     Everything is JVM built-ins (sequence/transform/aggregate/zip_with/
     bit_count); per-tile bitset tables are broadcast-joined to the
     indexed edge list, which every tile pass reuses. The dense-index
-    assignment is a row_number over
-    the |V|-row node table — single partition by construction, but
-    dense mode PRESUPPOSES |V| is broadcast-small, so that window
-    never grows past the cutoff.
+    assignment is a row_number over the |V|-row node table — single
+    partition by construction, but dense mode PRESUPPOSES |V| is
+    broadcast-small, so that window never grows past the cutoff.
     """
     n_bound = max(n_nodes_bound, 1)
     if tile_nodes is None:
@@ -724,8 +723,8 @@ def _bounded_co_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle mirrors it with the same ROW_NUMBER — and an edge
     survives iff BOTH endpoints rank it within ``LINKPRED_K``, bounding
     max degree by ``LINKPRED_K``. One count shuffle + one window
-    shuffle on node + one (a, b)
-    join; every step is a keyed shuffle that scales out.
+    shuffle on node + one (a, b) join; every step is a keyed shuffle
+    that scales out.
     """
     pairs = _order_pairs(spark, sf_dir)
     w = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("w"))

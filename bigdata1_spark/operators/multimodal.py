@@ -55,9 +55,8 @@ def synth_media(spark: SparkSession, n: int = 256) -> DataFrame:
     bytes (stands in for real encoded frames).
 
     Every column is a pure md5/sha256 function of (``MEDIA_SEED``,
-    media_id) —
-    the ``gen_billings``/``python_datasource`` recipe — so a SQL oracle
-    regenerates the table row-for-row and even the binary-payload
+    media_id) — the ``gen_billings``/``python_datasource`` recipe — so a
+    SQL oracle regenerates the table row-for-row and even the binary-payload
     pipeline downstream is full value-hash checked (round 7; previously
     xxhash64-seeded and rows-only). The payload is the 64 ASCII-hex
     bytes of sha256(id:seed): opaque to the pipeline, reproducible as
@@ -72,7 +71,9 @@ def synth_media(spark: SparkSession, n: int = 256) -> DataFrame:
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
         (h("kind") % 3 + 1).cast("int"),
     )
-    payload = F.sha2(F.concat_ws(":", F.col("id"), F.lit(MEDIA_SEED)), 256).cast("binary")
+    payload = F.sha2(
+        F.concat_ws(":", F.col("id"), F.lit(MEDIA_SEED)), 256
+    ).cast("binary")
     # numPartitions sized to the demo row count: mapInPandas forks a
     # Python worker per partition, so 32 near-empty partitions would pay
     # 32 interpreter startups for 256 rows. At scale, partition count

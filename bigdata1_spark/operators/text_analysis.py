@@ -440,10 +440,11 @@ NGRAM_TOP_N = 50
 
 
 def ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level bigram frequencies, top-``NGRAM_TOP_N`` with deterministic
-    tie-break — vocabulary/phrase statistics over the documents table
-    (explode → count → ordered limit; the count shuffle carries one row
-    per distinct bigram thanks to map-side partial aggregation)."""
+    """Corpus-level bigram frequencies, top-``NGRAM_TOP_N`` with
+    deterministic tie-break — vocabulary/phrase statistics over the
+    documents table (explode → count → ordered limit; the count shuffle
+    carries one row per distinct bigram thanks to map-side partial
+    aggregation)."""
     docs = load_table(spark, sf_dir, "documents")
     # NULL text → ONE NULL bigram (shingles_or_null); NULLS LAST pinned
     # on the tie-break for the same reason as user_paths.
@@ -560,8 +561,8 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT token (map-side partial aggregation collapses the raw
     occurrences), and the grand total is a 1-row broadcast — the same
     aggregate-vs-global-scalar pattern as tpch_q15. The threshold test
-    is pure integer arithmetic (``cnt * HEAVY_HITTER_K >= total``), so no float
-    boundary can disagree between engines; ``frac`` is one IEEE
+    is pure integer arithmetic (``cnt * HEAVY_HITTER_K >= total``), so
+    no float boundary can disagree between engines; ``frac`` is one IEEE
     division of exact integers. At 100 TB the candidate set after the
     count shuffle is vocabulary-sized, not corpus-sized — the sketch
     alternative (count-min / SpaceSaving) only matters when even the
@@ -1242,8 +1243,8 @@ def log_odds_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs is an exact-integer-ratio double, each ln is snapped to the
     1e-6 grid
     (the z RANKS rows — the ir.py ranking rule), and delta/var/z is
-    one mirrored chain. Per source the top ``LOG_ODDS_TOP_K`` by (z DESC, word
-    ASC — total order) are kept. NULL source is a real slice; words
+    one mirrored chain. Per source the top ``LOG_ODDS_TOP_K`` by (z DESC,
+    word ASC — total order) are kept. NULL source is a real slice; words
     seen only outside the slice never rank (their z is negative).
     Columns: source, word, n_sw, z_score, rnk.
     """

@@ -34,8 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from bigdata1_spark.operators import basket, micro
 from bigdata1_spark.sources import generator
 
-# Every harness calls a key as fn(spark, sf_dir), so an operator takes
-# nothing else; its fixed settings are module constants.
+# Every harness calls a key as fn(spark, sf_dir), so an operator's fixed
+# settings are module constants; a further parameter needs a caller that
+# sets it (tests/test_plans.py lists the few that have one).
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
