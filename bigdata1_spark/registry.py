@@ -22,6 +22,22 @@ Determinism rules used throughout so hashes match bit-for-bit:
   decimal string and so breaks .5 ties differently from DuckDB;
 * every ranking has a total-order tie-break;
 * timestamps are projected to strings/dates (engines agree under UTC).
+
+Oracles are composed from shared SQL fragments, each spelled once in
+the "Shared oracle fragments" section beside the engine helper it
+mirrors: ``_duck_tokens``/``_DUCK_TOKENS`` and ``_DUCK_WORDS``
+(``textfns.tokens``), ``_duck_ngram`` (``textfns.ngrams``, any n, over
+any list), ``_DUCK_SHINGLE_SETS`` and ``_duck_shingle_overlap`` (the
+shingle-set chain and ``dedup._verify``'s overlap counts), with
+``_DUCK_JACCARD``/``_DUCK_JACCARD_PAIRS``; ``_DUCK_BASKETS``
+(``basket.basket_items``); ``_duck_vectors``
+(``similarity.load_vectors``); ``_DUCK_ORDER_PAIR``,
+``_DUCK_CO_SUPPLIER_EDGES`` and ``_DUCK_BIDIR`` (``graph._order_pairs``,
+``graph._co_supplier_edges``, ``graph.symmetrize``); and
+``_DUCK_PAGERANK_EDGES`` (``graph.pagerank``'s customer–supplier
+graph). An oracle builds on them and never writes one out again.
+Single-expression numeric pins (the 1e-6 floor, the DECIMAL(18,4) sum,
+the cents ROUND) stay inline under the rules above.
 """
 
 from __future__ import annotations
@@ -79,16 +95,108 @@ def register(key: str, fn: QueryFn, oracle: str | None = None) -> None:
 
 
 # ---------------------------------------------------------------------------
+# Shared oracle fragments. Each SQL relation or text kernel that more than
+# one oracle uses is spelled once here, beside the name of the engine
+# helper it mirrors, and the oracles are composed from it.
+# ---------------------------------------------------------------------------
+
+
+def _duck_tokens(text: str) -> str:
+    """``textfns.tokens``: whitespace tokens of ``text``, empties dropped."""
+    return rf"list_filter(string_split_regex({text}, '\s+'), x -> len(x) > 0)"
+
+
+_DUCK_TOKENS = _duck_tokens("text")
+# The (doc_id, w) token lists every document-text oracle starts from.
+_DUCK_WORDS = f"words AS (SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents)"
+
+
+def _duck_ngram(n: int, w: str = "w", i: str = "i") -> str:
+    """``textfns.ngrams``: the space-joined n-gram of list ``w`` starting
+    at 1-based index ``i``, cut short at the list's end; NULL for a NULL
+    list."""
+    tail = "".join(
+        f", CASE WHEN len({w}) >= {i} + {k} THEN ' ' || {w}[{i}+{k}] ELSE '' END"
+        for k in range(1, n)
+    )
+    return f"CASE WHEN {w} IS NULL THEN NULL ELSE concat(coalesce({w}[{i}], ''){tail}) END"
+
+
+# ``textfns.word_shingles`` over a ``words`` CTE: sh holds every word
+# 3-gram, d each doc's distinct shingle set (doc_id, s).
+_DUCK_SHINGLE_SETS = f"""sh AS (
+      SELECT doc_id, {_duck_ngram(3)} AS s
+      FROM words,
+           (SELECT unnest(generate_series(1, greatest(len(w) - 2, 1))) AS i)
+    ), d AS (
+      SELECT DISTINCT doc_id, s FROM sh
+    )"""
+
+
+def _duck_shingle_overlap(id1: str = "id1", id2: str = "id2") -> str:
+    """``dedup._verify``: each doc's shingle-set size (sizes: doc_id, n)
+    and the shared-shingle count c of every pair of docs, lower id first,
+    that share a shingle (common: id1, id2, c)."""
+    return f"""{_DUCK_WORDS}, {_DUCK_SHINGLE_SETS}, sizes AS (
+      SELECT doc_id, COUNT(*) AS n FROM d GROUP BY 1
+    ), common AS (
+      SELECT a.doc_id AS {id1}, b.doc_id AS {id2}, COUNT(*) AS c
+      FROM d a JOIN d b ON a.s = b.s AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
+
+
+# ``dedup_jaccard``'s ratio over common and sizes, and its >= 0.5 pairs.
+_DUCK_JACCARD = "CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE)"
+_DUCK_JACCARD_PAIRS = f"""FROM common
+      JOIN sizes s1 ON id1 = s1.doc_id
+      JOIN sizes s2 ON id2 = s2.doc_id
+      WHERE {_DUCK_JACCARD} >= 0.5"""
+
+# ``basket.basket_items``: the distinct (basket, item) pairs.
+_DUCK_BASKETS = "baskets AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)"
+
+
+def _duck_vectors(label: bool = False) -> str:
+    """``similarity.load_vectors``: (vec_id, [label,] v), ``v`` the
+    embedding as DOUBLE[]."""
+    cols = "vec_id, label" if label else "vec_id"
+    return f"SELECT {cols}, CAST(embedding AS DOUBLE[]) AS v FROM embeddings"
+
+
+# ``graph._order_pairs``: suppliers x and y of one order, x the lower.
+_DUCK_ORDER_PAIR = "x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey"
+# ``graph._co_supplier_edges``: the distinct undirected edges (a, b), a < b.
+_DUCK_CO_SUPPLIER_EDGES = f"""SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
+      FROM lineitem x JOIN lineitem y ON {_DUCK_ORDER_PAIR}"""
+# ``graph.symmetrize`` of the edge CTE e0: both orientations (src, dst).
+_DUCK_BIDIR = """bidir AS MATERIALIZED (
+      SELECT a AS src, b AS dst FROM e0
+      UNION ALL SELECT b AS src, a AS dst FROM e0
+    )"""
+# ``graph.pagerank``'s customer–supplier graph: customer c and supplier
+# -s (disjoint ids), edges both ways, out-degree per source node.
+_DUCK_PAGERANK_EDGES = """cs AS (
+      SELECT DISTINCT o_custkey AS c, -l_suppkey AS s
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    ),
+    edges AS (
+      SELECT c AS src, s AS dst FROM cs
+      UNION ALL
+      SELECT s AS src, c AS dst FROM cs
+    ),
+    outdeg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)"""
+
+
+# ---------------------------------------------------------------------------
 # Flagship basket queries (reference parity — SURVEY.md §2.3/2.4/2.6)
 # ---------------------------------------------------------------------------
 
 register(
     "topk_window",
     basket.top5_per_month,
-    """
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), counts AS (
+    f"""
+    WITH {_DUCK_BASKETS}, counts AS (
       SELECT strftime(o.o_orderdate, '%Y-%m') AS month,
              b.l_partkey AS item, COUNT(*) AS cnt
       FROM baskets b JOIN orders o ON b.l_orderkey = o.o_orderkey
@@ -119,10 +227,8 @@ register(
 register(
     "itemset_freq",
     basket.itemset_frequencies,
-    """
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), members AS (
+    f"""
+    WITH {_DUCK_BASKETS}, members AS (
       SELECT CAST(l_partkey AS VARCHAR) AS itemset,
              CAST(1 AS BIGINT) AS n_items
       FROM baskets
@@ -141,10 +247,8 @@ register(
 register(
     "assoc_rules",
     basket.assoc_rules,
-    """
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), total AS (
+    f"""
+    WITH {_DUCK_BASKETS}, total AS (
       SELECT COUNT(DISTINCT l_orderkey) AS total_baskets FROM baskets
     ), item_counts AS (
       SELECT l_partkey AS item, COUNT(*) AS item_cnt FROM baskets GROUP BY 1
@@ -172,10 +276,8 @@ register(
 register(
     "join_self_pairs",
     basket.pair_counts,
-    """
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    )
+    f"""
+    WITH {_DUCK_BASKETS}
     SELECT a.l_partkey AS i1, b.l_partkey AS i2, COUNT(*) AS pair_cnt
     FROM baskets a JOIN baskets b
       ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
@@ -289,10 +391,8 @@ register(
 register(
     "groupby_count",
     micro.groupby_count,
-    """
-    WITH baskets AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    )
+    f"""
+    WITH {_DUCK_BASKETS}
     SELECT strftime(o.o_orderdate, '%Y-%m') AS month,
            b.l_partkey AS item, COUNT(*) AS cnt
     FROM baskets b JOIN orders o ON b.l_orderkey = o.o_orderkey
@@ -569,9 +669,8 @@ from bigdata1_spark.operators import (  # noqa: E402
     text_analysis,
 )
 
-# DuckDB fragments kept in sync with functions/textfns.py by generating
-# them from the same Python constants.
-_DUCK_TOKENS = r"list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0)"
+# The stoplist and the language markers are generated from the Python
+# constants of functions/textfns.py, so the oracles use the same lists.
 _DUCK_STOPLIST = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
 _DUCK_MARKERS = ", ".join(
     f"('{lang}', '{w}')" for lang, ws in sorted(LANG_MARKERS.items()) for w in ws
@@ -621,27 +720,10 @@ register(
     "dedup_jaccard",
     dedup.dedup_jaccard,
     f"""
-    WITH words AS (
-      SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents
-    ), sh AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END, CASE WHEN len(w) >= i + 2 THEN ' ' || w[i+2] ELSE '' END) END AS s
-      FROM words,
-           (SELECT unnest(generate_series(1, greatest(len(w) - 2, 1))) AS i)
-    ), d AS (
-      SELECT DISTINCT doc_id, s FROM sh
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM d GROUP BY 1
-    ), common AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS c
-      FROM d a JOIN d b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    WITH {_duck_shingle_overlap()}
     SELECT id1, id2,
-           CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) AS jaccard
-    FROM common
-    JOIN sizes s1 ON id1 = s1.doc_id
-    JOIN sizes s2 ON id2 = s2.doc_id
-    WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5
+           {_DUCK_JACCARD} AS jaccard
+    {_DUCK_JACCARD_PAIRS}
     """,
 )
 
@@ -658,34 +740,12 @@ register(
 register(
     "dedup_near",
     dedup.dedup_near_checked,
-    """
-    WITH words AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         x -> len(x) > 0) AS w
-      FROM documents
-    ), sh AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END, CASE WHEN len(w) >= i + 2 THEN ' ' || w[i+2] ELSE '' END) END AS s
-      FROM words,
-           (SELECT unnest(generate_series(1, greatest(len(w) - 2, 1)))
-              AS i)
-    ), d AS (
-      SELECT DISTINCT doc_id, s FROM sh
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM d GROUP BY 1
-    ), common AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS c
-      FROM d a JOIN d b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    f"""
+    WITH {_duck_shingle_overlap()}
     SELECT id1, id2,
-           CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE)
-             AS jaccard,
+           {_DUCK_JACCARD} AS jaccard,
            true AS lsh_ok
-    FROM common
-    JOIN sizes s1 ON id1 = s1.doc_id
-    JOIN sizes s2 ON id2 = s2.doc_id
-    WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5
+    {_DUCK_JACCARD_PAIRS}
     """,
 )
 
@@ -694,26 +754,14 @@ register(
 # EXACTLY — per-bit majority (ties→1) over the same hashes, same
 # bottom-255 cap — then mirrors the 4-block pigeonhole (exact for
 # Hamming ≤ 3) and the Hamming verify. Full value-hash, no bounds
-# needed: the entire operator output is deterministic SQL.
+# needed: the entire operator output is deterministic SQL. The majority
+# votes run over the DISTINCT shingle set d, as word_shingles is
+# array_distinct'ed.
 register(
     "dedup_simhash",
     dedup.dedup_simhash,
-    """
-    WITH words AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         x -> len(x) > 0) AS w
-      FROM documents
-    ), sh AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END, CASE WHEN len(w) >= i + 2 THEN ' ' || w[i+2] ELSE '' END) END AS s
-      FROM words,
-           (SELECT unnest(generate_series(1, greatest(len(w) - 2, 1)))
-              AS i)
-    ), d AS (
-      -- word_shingles is array_distinct'ed: majority votes run over
-      -- the DISTINCT shingle set, mirror that here
-      SELECT DISTINCT doc_id, s FROM sh
-    ), h AS (
+    f"""
+    WITH {_DUCK_WORDS}, {_DUCK_SHINGLE_SETS}, h AS (
       SELECT doc_id,
              CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS hv
       FROM d
@@ -759,9 +807,7 @@ register(
     "dedup_embedding",
     dedup.dedup_embedding,
     f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), withnorm AS (
+    WITH e AS ({_duck_vectors()}), withnorm AS (
       SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
              {_duck_hyperplane_bucket('v')} AS bucket
       FROM e
@@ -780,9 +826,7 @@ register(
     "sim_topk",
     similarity.sim_topk,
     f"""
-    WITH e AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), q AS (
+    WITH e AS ({_duck_vectors(label=True)}), q AS (
       SELECT v AS qv FROM e WHERE vec_id = 0
     )
     SELECT e.vec_id, e.label,
@@ -799,9 +843,7 @@ register(
     "sim_topk_lsh",
     similarity.sim_topk_lsh,
     f"""
-    WITH e AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), b AS (
+    WITH e AS ({_duck_vectors(label=True)}), b AS (
       SELECT vec_id, label, v,
              {_duck_hyperplane_bucket('v', seed=7)} AS bucket
       FROM e
@@ -820,9 +862,7 @@ register(
     "sim_topk_ivf",
     similarity.sim_topk_ivf,
     f"""
-    WITH e AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cents AS (
+    WITH e AS ({_duck_vectors(label=True)}), cents AS (
       SELECT vec_id AS cid, v AS cv FROM e
       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
       LIMIT {similarity.IVF_CELLS}
@@ -855,9 +895,7 @@ register(
     "sim_topk_ivf_pq",
     similarity.sim_topk_ivf_pq,
     f"""
-    WITH e AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), ivf_cents AS (
+    WITH e AS ({_duck_vectors(label=True)}), ivf_cents AS (
       SELECT vec_id AS cid, v AS cv FROM e
       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
       LIMIT {similarity.IVF_CELLS}
@@ -923,9 +961,7 @@ register(
     "sim_topk_ivf_multiprobe",
     similarity.sim_topk_ivf_multiprobe,
     f"""
-    WITH e AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), cents AS (
+    WITH e AS ({_duck_vectors(label=True)}), cents AS (
       SELECT vec_id AS cid, v AS cv FROM e
       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
       LIMIT {similarity.IVF_CELLS}
@@ -1133,7 +1169,7 @@ register(
                   ELSE 0.0 END AS digit_ratio
       FROM t
     ), bg AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END) END AS b
+      SELECT doc_id, {_duck_ngram(2)} AS b
       FROM t,
            (SELECT unnest(generate_series(1, greatest(len(w) - 1, 1))) AS i)
     ), counts AS (
@@ -2072,10 +2108,9 @@ register(
 register(
     "udtf_analyze",
     api_surface.udtf_analyze,
-    """
+    f"""
     WITH words AS (
-      SELECT doc_id, list_filter(string_split_regex(coalesce(text, ''), '\\s+'),
-                                 x -> len(x) > 0) AS w
+      SELECT doc_id, {_duck_tokens("coalesce(text, '')")} AS w
       FROM documents
     )
     SELECT doc_id,
@@ -2195,28 +2230,9 @@ register(
 # Shared recursive-CTE prefix computing near-dup cluster labels
 # (doc_id → component-min cluster_id) — used by dedup_clusters and
 # dedup_near_apply so both oracles stay in lockstep.
-_DUCK_CLUSTER_LABELS = """
-    WITH RECURSIVE words AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 x -> len(x) > 0) AS w
-      FROM documents
-    ), sh AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END, CASE WHEN len(w) >= i + 2 THEN ' ' || w[i+2] ELSE '' END) END AS s
-      FROM words,
-           (SELECT unnest(generate_series(1, greatest(len(w) - 2, 1))) AS i)
-    ), d AS (
-      SELECT DISTINCT doc_id, s FROM sh
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM d GROUP BY 1
-    ), common AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS c
-      FROM d a JOIN d b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
-      SELECT id1, id2 FROM common
-      JOIN sizes s1 ON id1 = s1.doc_id
-      JOIN sizes s2 ON id2 = s2.doc_id
-      WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5
+_DUCK_CLUSTER_LABELS = f"""
+    WITH RECURSIVE {_duck_shingle_overlap()}, pairs AS (
+      SELECT id1, id2 {_DUCK_JACCARD_PAIRS}
     ), edges AS (
       SELECT id1 AS src, id2 AS dst FROM pairs
       UNION ALL
@@ -2267,9 +2283,7 @@ register(
     "dedup_embedding_multiprobe",
     dedup.dedup_embedding_multiprobe,
     f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), withnorm AS (
+    WITH e AS ({_duck_vectors()}), withnorm AS (
       SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
              {_duck_hyperplane_bucket('v', seed=11)} AS bk11,
              {_duck_hyperplane_bucket('v', seed=13)} AS bk13,
@@ -2312,13 +2326,9 @@ register(
 register(
     "ngram_freq",
     text_analysis.ngram_freq,
-    """
-    WITH words AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 x -> len(x) > 0) AS w
-      FROM documents
-    ), sh AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END) END AS bigram
+    f"""
+    WITH {_DUCK_WORDS}, sh AS (
+      SELECT doc_id, {_duck_ngram(2)} AS bigram
       FROM words,
            (SELECT unnest(generate_series(1, greatest(len(w) - 1, 1))) AS i)
     ), d AS (
@@ -2334,10 +2344,9 @@ register(
 register(
     "heavy_hitters",
     text_analysis.heavy_hitters,
-    """
+    f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                                x -> len(x) > 0)) AS token
+      SELECT unnest({_DUCK_TOKENS}) AS token
       FROM documents
     ), counts AS (
       SELECT token, COUNT(*) AS cnt FROM toks GROUP BY 1
@@ -2354,10 +2363,9 @@ register(
 register(
     "bpe_pair_counts",
     text_analysis.bpe_pair_counts,
-    """
+    f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                                x -> len(x) > 0)) AS word
+      SELECT unnest({_DUCK_TOKENS}) AS word
       FROM documents
     ), words AS (
       SELECT word, COUNT(*) AS wcnt FROM toks
@@ -2433,12 +2441,8 @@ from bigdata1_spark.operators import corpus  # noqa: E402
 register(
     "repetition_metrics",
     corpus.repetition_metrics,
-    """
-    WITH words AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 x -> len(x) > 0) AS w
-      FROM documents
-    ), wc AS (
+    f"""
+    WITH {_DUCK_WORDS}, wc AS (
       SELECT doc_id, word, COUNT(*) AS cnt
       FROM (SELECT doc_id, unnest(w) AS word FROM words)
       GROUP BY 1, 2
@@ -2449,7 +2453,7 @@ register(
              MAX(cnt) AS top_cnt
       FROM wc GROUP BY 1
     ), bg AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END) END AS bigram
+      SELECT doc_id, {_duck_ngram(2)} AS bigram
       FROM words,
            (SELECT unnest(generate_series(1, greatest(len(w) - 1, 1))) AS i)
     ), bs AS (
@@ -2486,14 +2490,13 @@ register(
 register(
     "contamination_ngrams",
     corpus.contamination_ngrams,
-    """
+    f"""
     WITH words AS (
       SELECT doc_id, source,
-             list_filter(string_split_regex(text, '\\s+'),
-                         x -> len(x) > 0) AS w
+             {_DUCK_TOKENS} AS w
       FROM documents
     ), grams AS (
-      SELECT DISTINCT doc_id, source, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END, CASE WHEN len(w) >= i + 2 THEN ' ' || w[i+2] ELSE '' END, CASE WHEN len(w) >= i + 3 THEN ' ' || w[i+3] ELSE '' END, CASE WHEN len(w) >= i + 4 THEN ' ' || w[i+4] ELSE '' END) END AS gram
+      SELECT DISTINCT doc_id, source, {_duck_ngram(5)} AS gram
       FROM words,
            (SELECT unnest(generate_series(1, greatest(len(w) - 4, 1))) AS i)
     ), bench AS (
@@ -2532,13 +2535,8 @@ register(
 register(
     "doc_chunking",
     corpus.doc_chunking,
-    """
-    WITH words AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         x -> len(x) > 0) AS w
-      FROM documents
-    ), starts AS (
+    f"""
+    WITH {_DUCK_WORDS}, starts AS (
       SELECT doc_id, w,
              unnest(generate_series(1, greatest(len(w), 1), 48)) AS s
       FROM words
@@ -2592,9 +2590,7 @@ register(
     "knn_join",
     similarity.knn_join,
     f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), q AS (
+    WITH e AS ({_duck_vectors()}), q AS (
       SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8
     ), scored AS (
       SELECT q.q_id, e.vec_id,
@@ -2656,8 +2652,7 @@ register(
                   + (strpos('0123456789abcdef',
                             substr(md5(text), 2, 1)) - 1) AS BIGINT)
                % {corpus.N_PACK_GROUPS} AS pack_group,
-             CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS BIGINT) AS n_tokens
+             CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens
       FROM documents
     ), packed AS (
       SELECT doc_id, lang, pack_group, n_tokens,
@@ -3256,11 +3251,10 @@ from bigdata1_spark.operators import ir  # noqa: E402
 register(
     "tfidf_topterms",
     ir.tfidf_topterms,
-    """
+    f"""
     WITH words AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(text, '\\s+'),
-                                x -> len(x) > 0)) AS term
+             unnest({_DUCK_TOKENS}) AS term
       FROM documents
     ), tf AS (
       SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -3287,10 +3281,9 @@ register(
 register(
     "bm25_search",
     ir.bm25_search,
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 x -> len(x) > 0) AS w
+      SELECT doc_id, {_DUCK_TOKENS} AS w
       FROM documents
     ), dl AS (SELECT doc_id, len(w) AS dl FROM toks),
     tf AS (
@@ -3330,10 +3323,9 @@ register(
 register(
     "cooccur_pmi",
     ir.cooccur_pmi,
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 x -> len(x) > 0) AS w
+      SELECT doc_id, {_DUCK_TOKENS} AS w
       FROM documents
     ), pairs AS (
       SELECT w[i] AS w1, w[i + 1] AS w2
@@ -3666,13 +3658,12 @@ register(
 register(
     "doc_entropy",
     text_analysis.doc_entropy,
-    """
+    f"""
     WITH wc AS (
       SELECT doc_id, word, COUNT(*) AS cnt
       FROM (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS word
+               unnest({_DUCK_TOKENS}) AS word
         FROM documents
       ) GROUP BY 1, 2
     ), per_doc AS (
@@ -3719,10 +3710,8 @@ register(
 register(
     "pq_encode",
     similarity.pq_encode,
-    """
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
+    f"""
+    WITH e AS ({_duck_vectors()}),
     cents AS (
       SELECT vec_id AS cid, v AS cv
       FROM (SELECT vec_id, v, md5(CAST(vec_id AS VARCHAR)) AS h FROM e
@@ -3765,10 +3754,7 @@ register(
     "embedding_norms",
     similarity.embedding_norms,
     f"""
-    WITH e AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-      FROM embeddings
-    )
+    WITH e AS ({_duck_vectors(label=True)})
     SELECT vec_id, label,
            FLOOR(sqrt(list_dot_product(v, v)) * 1e6 + 0.5) / 1e6 AS norm
     FROM e
@@ -3795,9 +3781,7 @@ register(
     "knn_classify",
     similarity.knn_classify,
     f"""
-    WITH e AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), q AS (
+    WITH e AS ({_duck_vectors(label=True)}), q AS (
       SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8
     ), scored AS (
       SELECT q.q_id, e.vec_id, e.label,
@@ -4079,12 +4063,8 @@ from bigdata1_spark.operators import graph  # noqa: E402
 register(
     "graph_degree",
     graph.graph_degree,
-    """
-    WITH e AS (
-      SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
-      FROM lineitem x JOIN lineitem y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-    )
+    f"""
+    WITH e AS ({_DUCK_CO_SUPPLIER_EDGES})
     SELECT node, COUNT(*) AS degree
     FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e)
     GROUP BY node
@@ -4094,12 +4074,8 @@ register(
 register(
     "triangle_count",
     graph.triangle_count,
-    """
-    WITH e AS (
-      SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
-      FROM lineitem x JOIN lineitem y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-    ),
+    f"""
+    WITH e AS ({_DUCK_CO_SUPPLIER_EDGES}),
     tri AS (
       SELECT e1.a AS u, e1.b AS v, e2.b AS w
       FROM e e1
@@ -4130,17 +4106,8 @@ def _pagerank_unrolled_sql(iters: int) -> str:
     over a power-of-two outdeg ≥ 2^16) — outside this graph's degree
     range and vanishing after iteration 1's non-dyadic ranks."""
     parts = [
-        """
-    WITH cs AS (
-      SELECT DISTINCT o_custkey AS c, -l_suppkey AS s
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (
-      SELECT c AS src, s AS dst FROM cs
-      UNION ALL
-      SELECT s AS src, c AS dst FROM cs
-    ),
-    outdeg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
+        f"""
+    WITH {_DUCK_PAGERANK_EDGES},
     nodes AS (SELECT src AS node, outdeg FROM outdeg),
     r0 AS (SELECT node, outdeg, CAST(1.0 AS DOUBLE) AS rank FROM nodes)"""
     ]
@@ -4175,17 +4142,8 @@ register("pagerank", graph.pagerank, _pagerank_unrolled_sql(iters=3))
 register(
     "pagerank_iter1",
     graph.pagerank_iter1,
-    """
-    WITH cs AS (
-      SELECT DISTINCT o_custkey AS c, -l_suppkey AS s
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (
-      SELECT c AS src, s AS dst FROM cs
-      UNION ALL
-      SELECT s AS src, c AS dst FROM cs
-    ),
-    outdeg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
+    f"""
+    WITH {_DUCK_PAGERANK_EDGES},
     contrib AS (
       SELECT e.dst AS node,
              CAST(CAST(SUM(CAST(CAST(1.0 AS DOUBLE) / o.outdeg
@@ -4782,10 +4740,9 @@ register(
 register(
     "bpe_merge_round",
     text_analysis.bpe_merge_round,
-    """
+    f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                    x -> len(x) > 0)) AS w
+      SELECT unnest({_DUCK_TOKENS}) AS w
       FROM documents
     ), words AS (
       SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS wcnt
@@ -4797,7 +4754,7 @@ register(
              wcnt
       FROM words
     ), pair1 AS (
-      SELECT CASE WHEN syms IS NULL THEN NULL ELSE concat(coalesce(syms[i], ''), CASE WHEN len(syms) >= i + 1 THEN ' ' || syms[i+1] ELSE '' END) END AS pair, wcnt
+      SELECT {_duck_ngram(2, "syms")} AS pair, wcnt
       FROM (SELECT string_split(w, ' ') AS syms, wcnt FROM spaced),
            (SELECT unnest(generate_series(1, len(syms) - 1)) AS i)
     ), best AS (
@@ -4808,7 +4765,7 @@ register(
       SELECT replace(s.w, b.mpair, b.mtok) AS w, s.wcnt, b.mpair
       FROM spaced s CROSS JOIN best b
     ), pair2 AS (
-      SELECT mpair, CASE WHEN syms IS NULL THEN NULL ELSE concat(coalesce(syms[i], ''), CASE WHEN len(syms) >= i + 1 THEN ' ' || syms[i+1] ELSE '' END) END AS pair, wcnt
+      SELECT mpair, {_duck_ngram(2, "syms")} AS pair, wcnt
       FROM (SELECT string_split(w, ' ') AS syms, wcnt, mpair
             FROM merged),
            (SELECT unnest(generate_series(1, len(syms) - 1)) AS i)
@@ -4897,10 +4854,9 @@ register(
 register(
     "bpe_merge_round2",
     text_analysis.bpe_merge_round2,
-    """
+    f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                    x -> len(x) > 0)) AS w
+      SELECT unnest({_DUCK_TOKENS}) AS w
       FROM documents
     ), words AS (
       SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS wcnt
@@ -4912,7 +4868,7 @@ register(
              wcnt
       FROM words
     ), pair1 AS (
-      SELECT CASE WHEN syms IS NULL THEN NULL ELSE concat(coalesce(syms[i], ''), CASE WHEN len(syms) >= i + 1 THEN ' ' || syms[i+1] ELSE '' END) END AS pair, wcnt
+      SELECT {_duck_ngram(2, "syms")} AS pair, wcnt
       FROM (SELECT string_split(w, ' ') AS syms, wcnt FROM spaced),
            (SELECT unnest(generate_series(1, len(syms) - 1)) AS i)
     ), best1 AS (
@@ -4932,7 +4888,7 @@ register(
              wcnt, mpair1
       FROM merged1pre
     ), pair2 AS (
-      SELECT CASE WHEN syms IS NULL THEN NULL ELSE concat(coalesce(syms[i], ''), CASE WHEN len(syms) >= i + 1 THEN ' ' || syms[i+1] ELSE '' END) END AS pair, wcnt
+      SELECT {_duck_ngram(2, "syms")} AS pair, wcnt
       FROM (SELECT string_split(w, ' ') AS syms, wcnt FROM merged1),
            (SELECT unnest(generate_series(1, len(syms) - 1)) AS i)
     ), best2 AS (
@@ -4953,7 +4909,7 @@ register(
       FROM merged2pre
     ), pair3 AS (
       SELECT mpair1, mpair2,
-             CASE WHEN syms IS NULL THEN NULL ELSE concat(coalesce(syms[i], ''), CASE WHEN len(syms) >= i + 1 THEN ' ' || syms[i+1] ELSE '' END) END AS pair, wcnt
+             {_duck_ngram(2, "syms")} AS pair, wcnt
       FROM (SELECT string_split(w, ' ') AS syms, wcnt, mpair1, mpair2
             FROM merged2),
            (SELECT unnest(generate_series(1, len(syms) - 1)) AS i)
@@ -5007,9 +4963,7 @@ def _semdedup_sql(select_tail: str) -> str:
     )"""
 
     parts = [
-        f"""WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), q AS (
+        f"""WITH e AS ({_duck_vectors()}), q AS (
       SELECT vec_id, v,
              list_transform(v, x -> floor(x * {grid} + 0.5)) AS vq
       FROM e
@@ -5082,13 +5036,12 @@ register(
 register(
     "unigram_logprob",
     text_analysis.unigram_logprob,
-    """
+    f"""
     WITH wc AS (
       SELECT doc_id, word, COUNT(*) AS cnt
       FROM (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS word
+               unnest({_DUCK_TOKENS}) AS word
         FROM documents
       ) GROUP BY 1, 2
     ), corpus_model AS (
@@ -5123,15 +5076,14 @@ register(
 register(
     "naive_bayes_lang",
     text_analysis.naive_bayes_lang,
-    """
+    f"""
     WITH base AS MATERIALIZED (
       SELECT doc_id, COALESCE(lang, '<null>') AS actual_cls FROM documents
     ), dwc AS MATERIALIZED (
       SELECT doc_id, cls, word, CAST(COUNT(*) AS BIGINT) AS cnt
       FROM (
         SELECT doc_id, COALESCE(lang, '<null>') AS cls,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS word
+               unnest({_DUCK_TOKENS}) AS word
         FROM documents
       ) GROUP BY 1, 2, 3
     ), cw AS (
@@ -5188,19 +5140,18 @@ register(
 register(
     "dsir_sample",
     corpus.dsir_sample,
-    """
+    f"""
     WITH words AS (
       SELECT doc_id, lang,
-             list_filter(string_split_regex(text, '\\s+'),
-                         x -> len(x) > 0) AS w
+             {_DUCK_TOKENS} AS w
       FROM documents WHERE text IS NOT NULL
     ), bg AS (
       SELECT doc_id, lang,
              CAST((16 * (strpos('0123456789abcdef',
-                          substr(md5(CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END) END), 1, 1))
+                          substr(md5({_duck_ngram(2)}), 1, 1))
                          - 1)
                    + (strpos('0123456789abcdef',
-                          substr(md5(CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END) END), 2, 1))
+                          substr(md5({_duck_ngram(2)}), 2, 1))
                       - 1)) % 64 AS BIGINT) AS bucket
       FROM words,
            (SELECT unnest(generate_series(1, greatest(len(w) - 1, 1))) AS i)
@@ -5237,12 +5188,8 @@ register(
 register(
     "vocab_encode",
     text_analysis.vocab_encode,
-    """
-    WITH words AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 x -> len(x) > 0) AS w
-      FROM documents
-    ), tok AS (
+    f"""
+    WITH {_DUCK_WORDS}, tok AS (
       SELECT doc_id, i - 1 AS pos, w[i] AS word
       FROM words,
            (SELECT unnest(generate_series(1, len(w))) AS i)
@@ -5273,13 +5220,7 @@ def _kcore_unrolled_sql(rounds: int, k: int) -> str:
     referenced twice, so inlining re-evaluates the whole upstream
     chain per reference — 2^rounds copies of the 31M-row (sf1) edge
     self-join, which spilled DuckDB to a full disk at sf1."""
-    parts = [
-        """e0 AS MATERIALIZED (
-      SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
-      FROM lineitem x JOIN lineitem y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-    )"""
-    ]
+    parts = [f"e0 AS MATERIALIZED ({_DUCK_CO_SUPPLIER_EDGES})"]
     for r in range(rounds):
         parts.append(
             f"""d{r + 1} AS MATERIALIZED (
@@ -5319,15 +5260,8 @@ def _bfs_unrolled_sql(rounds: int, source: int) -> str:
     (nodes whose hop equals the previous round number) to the
     bidirectional edge list, then min-merges — the exact Spark body."""
     parts = [
-        """e0 AS MATERIALIZED (
-      SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
-      FROM lineitem x JOIN lineitem y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-    )""",
-        """bidir AS MATERIALIZED (
-      SELECT a AS src, b AS dst FROM e0
-      UNION ALL SELECT b AS src, a AS dst FROM e0
-    )""",
+        f"e0 AS MATERIALIZED ({_DUCK_CO_SUPPLIER_EDGES})",
+        _DUCK_BIDIR,
         f"""d0 AS (SELECT CAST({source} AS BIGINT) AS node,
                       CAST(0 AS BIGINT) AS hop)""",
     ]
@@ -5363,15 +5297,8 @@ def _label_prop_unrolled_sql(rounds: int) -> str:
     _bfs_unrolled_sql pattern: join labels to the bidirectional edges,
     min-merge with the previous labels, per fixed round)."""
     parts = [
-        """e0 AS MATERIALIZED (
-      SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
-      FROM lineitem x JOIN lineitem y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-    )""",
-        """bidir AS MATERIALIZED (
-      SELECT a AS src, b AS dst FROM e0
-      UNION ALL SELECT b AS src, a AS dst FROM e0
-    )""",
+        f"e0 AS MATERIALIZED ({_DUCK_CO_SUPPLIER_EDGES})",
+        _DUCK_BIDIR,
         """l0 AS MATERIALIZED (
       SELECT DISTINCT src AS node, src AS label FROM bidir
     )""",
@@ -5407,13 +5334,8 @@ register("label_prop", graph.label_prop, _label_prop_unrolled_sql(graph.LABEL_PR
 register(
     "substring_dedup",
     corpus.substring_dedup,
-    r"""
-    WITH words AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\s+'),
-                         x -> len(x) > 0) AS w
-      FROM documents
-    ), base AS (
+    fr"""
+    WITH {_DUCK_WORDS}, base AS (
       SELECT doc_id, w, len(w) AS n_toks FROM words
     ), starts AS (
       SELECT doc_id, n_toks, w,
@@ -5421,7 +5343,7 @@ register(
       FROM base
     ), grams AS (
       SELECT doc_id, n_toks, start,
-             md5(CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[start], ''), CASE WHEN len(w) >= start + 1 THEN ' ' || w[start+1] ELSE '' END, CASE WHEN len(w) >= start + 2 THEN ' ' || w[start+2] ELSE '' END, CASE WHEN len(w) >= start + 3 THEN ' ' || w[start+3] ELSE '' END, CASE WHEN len(w) >= start + 4 THEN ' ' || w[start+4] ELSE '' END, CASE WHEN len(w) >= start + 5 THEN ' ' || w[start+5] ELSE '' END, CASE WHEN len(w) >= start + 6 THEN ' ' || w[start+6] ELSE '' END, CASE WHEN len(w) >= start + 7 THEN ' ' || w[start+7] ELSE '' END, CASE WHEN len(w) >= start + 8 THEN ' ' || w[start+8] ELSE '' END, CASE WHEN len(w) >= start + 9 THEN ' ' || w[start+9] ELSE '' END) END) AS digest
+             md5({_duck_ngram(10, "w", "start")}) AS digest
       FROM starts
     ), dup AS (
       SELECT digest FROM grams GROUP BY digest HAVING COUNT(*) >= 2
@@ -5466,11 +5388,10 @@ register(
 register(
     "winnow_fingerprint",
     corpus.winnow_fingerprint,
-    r"""
+    fr"""
     WITH words AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '\s+'),
-                         x -> len(x) > 0) AS w
+             {_DUCK_TOKENS} AS w
       FROM documents WHERE text IS NOT NULL
     ), starts AS (
       SELECT doc_id, w,
@@ -5479,7 +5400,7 @@ register(
     ), hashed AS (
       SELECT doc_id, pos,
              CAST('0x' || substr(
-               md5(CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[pos], ''), CASE WHEN len(w) >= pos + 1 THEN ' ' || w[pos+1] ELSE '' END, CASE WHEN len(w) >= pos + 2 THEN ' ' || w[pos+2] ELSE '' END, CASE WHEN len(w) >= pos + 3 THEN ' ' || w[pos+3] ELSE '' END) END), 1, 8) AS BIGINT)
+               md5({_duck_ngram(4, "w", "pos")}), 1, 8) AS BIGINT)
                AS h
       FROM starts
     ), v AS (
@@ -6074,21 +5995,7 @@ register(
     "dedup_containment",
     dedup.dedup_containment,
     f"""
-    WITH words AS (
-      SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents
-    ), sh AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END, CASE WHEN len(w) >= i + 2 THEN ' ' || w[i+2] ELSE '' END) END AS s
-      FROM words,
-           (SELECT unnest(generate_series(1, greatest(len(w) - 2, 1))) AS i)
-    ), d AS (
-      SELECT DISTINCT doc_id, s FROM sh
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM d GROUP BY 1
-    ), common AS (
-      SELECT a.doc_id AS ida, b.doc_id AS idb, COUNT(*) AS c
-      FROM d a JOIN d b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), both_dir AS (
+    WITH {_duck_shingle_overlap("ida", "idb")}, both_dir AS (
       SELECT ida AS id1, idb AS id2, c FROM common
       UNION ALL
       SELECT idb AS id1, ida AS id2, c FROM common
@@ -6111,13 +6018,7 @@ register(
     WITH words AS (
       SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents
       WHERE text IS NOT NULL
-    ), sh AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END, CASE WHEN len(w) >= i + 2 THEN ' ' || w[i+2] ELSE '' END) END AS s
-      FROM words,
-           (SELECT unnest(generate_series(1, greatest(len(w) - 2, 1))) AS i)
-    ), d AS (
-      SELECT DISTINCT doc_id, s FROM sh
-    ), fs AS (
+    ), {_DUCK_SHINGLE_SETS}, fs AS (
       SELECT s, MIN(doc_id) AS first_doc FROM d GROUP BY 1
     )
     SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
@@ -6537,12 +6438,8 @@ register(
 register(
     "clustering_coefficient",
     graph.clustering_coefficient,
-    """
-    WITH e AS (
-      SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
-      FROM lineitem x JOIN lineitem y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-    ), deg AS (
+    f"""
+    WITH e AS ({_DUCK_CO_SUPPLIER_EDGES}), deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
       FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
       GROUP BY 1
@@ -6574,12 +6471,11 @@ register(
 register(
     "token_divergence",
     text_analysis.token_divergence,
-    """
+    f"""
     WITH sw AS MATERIALIZED (
       SELECT src, word, CAST(COUNT(*) AS BIGINT) AS c FROM (
         SELECT COALESCE(source, '<null>') AS src,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS word
+               unnest({_DUCK_TOKENS}) AS word
         FROM documents
       ) GROUP BY 1, 2
     ), tot_s AS (SELECT src, SUM(c) AS ts FROM sw GROUP BY 1),
@@ -6756,9 +6652,7 @@ register(
     "mutual_knn",
     similarity.mutual_knn,
     f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), withnorm AS (
+    WITH e AS ({_duck_vectors()}), withnorm AS (
       SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm,
              {_duck_hyperplane_bucket('v', seed=19, n_planes=3, dim=64)}
                AS b_coarse,
@@ -6886,7 +6780,7 @@ register(
       SELECT x.l_suppkey AS a, y.l_suppkey AS b,
              CAST(COUNT(*) AS BIGINT) AS w
       FROM po x JOIN po y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
+        ON {_DUCK_ORDER_PAIR}
       GROUP BY 1, 2
     ), sym AS (
       SELECT a AS node, b AS nbr, w FROM pw
@@ -6943,12 +6837,11 @@ register(
 register(
     "log_odds_words",
     text_analysis.log_odds_words,
-    """
+    f"""
     WITH sw AS MATERIALIZED (
       SELECT src, word, CAST(COUNT(*) AS BIGINT) AS c FROM (
         SELECT COALESCE(source, '<null>') AS src,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS word
+               unnest({_DUCK_TOKENS}) AS word
         FROM documents
       ) GROUP BY 1, 2
     ), tot_s AS (SELECT src, SUM(c) AS ns FROM sw GROUP BY 1),
@@ -6991,11 +6884,10 @@ register(
 register(
     "bigram_logprob",
     text_analysis.bigram_logprob,
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         x -> len(x) > 0) AS l
+             {_DUCK_TOKENS} AS l
       FROM documents
     ), bg0 AS (
       SELECT doc_id,
@@ -7012,8 +6904,7 @@ register(
       FROM model GROUP BY 1
     ), vocab AS (
       SELECT COUNT(DISTINCT w) AS v FROM (
-        SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS w
+        SELECT unnest({_DUCK_TOKENS}) AS w
         FROM documents
       )
     ), lp AS (
@@ -7178,12 +7069,8 @@ register(
 register(
     "graph_assortativity",
     graph.graph_assortativity,
-    """
-    WITH e AS MATERIALIZED (
-      SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
-      FROM lineitem x JOIN lineitem y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-    ), deg AS MATERIALIZED (
+    f"""
+    WITH e AS MATERIALIZED ({_DUCK_CO_SUPPLIER_EDGES}), deg AS MATERIALIZED (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
       FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)
       GROUP BY 1
@@ -7221,8 +7108,7 @@ register(
     f"""
     WITH wc AS (
       SELECT word, CAST(COUNT(*) AS BIGINT) AS c FROM (
-        SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS word
+        SELECT unnest({_DUCK_TOKENS}) AS word
         FROM documents
       ) GROUP BY 1
     ), top AS (
@@ -7281,12 +7167,11 @@ register(
 register(
     "source_jaccard",
     corpus.source_jaccard,
-    """
+    f"""
     WITH st AS MATERIALIZED (
       SELECT DISTINCT src, word FROM (
         SELECT COALESCE(source, '<null>') AS src,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  x -> len(x) > 0)) AS word
+               unnest({_DUCK_TOKENS}) AS word
         FROM documents
       )
     ), sizes AS (
@@ -7444,11 +7329,7 @@ def _cc_unrolled_sql(rounds: int) -> str:
         )
         prev = f"l{i}"
     return f"""
-    WITH e AS MATERIALIZED (
-      SELECT DISTINCT x.l_suppkey AS a, y.l_suppkey AS b
-      FROM lineitem x JOIN lineitem y
-        ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-    ), sym AS MATERIALIZED (
+    WITH e AS MATERIALIZED ({_DUCK_CO_SUPPLIER_EDGES}), sym AS MATERIALIZED (
       SELECT a AS node, b AS nb FROM e
       UNION ALL SELECT b, a FROM e
     ), l0 AS MATERIALIZED (
@@ -7473,9 +7354,7 @@ register(
     "ann_recall",
     similarity.ann_recall,
     f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ), b AS (
+    WITH e AS ({_duck_vectors()}), b AS (
       SELECT vec_id, v,
              {_duck_hyperplane_bucket('v', seed=7)} AS bucket
       FROM e
@@ -7531,33 +7410,12 @@ register(
 register(
     "lsh_probability",
     dedup.lsh_probability,
-    """
-    WITH words AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         x -> len(x) > 0) AS w
-      FROM documents
-    ), sh AS (
-      SELECT doc_id, CASE WHEN w IS NULL THEN NULL ELSE concat(coalesce(w[i], ''), CASE WHEN len(w) >= i + 1 THEN ' ' || w[i+1] ELSE '' END, CASE WHEN len(w) >= i + 2 THEN ' ' || w[i+2] ELSE '' END) END AS s
-      FROM words,
-           (SELECT unnest(generate_series(1, greatest(len(w) - 2, 1)))
-              AS i)
-    ), d AS (
-      SELECT DISTINCT doc_id, s FROM sh
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM d GROUP BY 1
-    ), common AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS c
-      FROM d a JOIN d b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
+    f"""
+    WITH {_duck_shingle_overlap()}, pairs AS (
       SELECT id1, id2,
-             CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE)
+             {_DUCK_JACCARD}
                AS jaccard
-      FROM common
-      JOIN sizes s1 ON id1 = s1.doc_id
-      JOIN sizes s2 ON id2 = s2.doc_id
-      WHERE CAST(c AS DOUBLE) / CAST(s1.n + s2.n - c AS DOUBLE) >= 0.5
+      {_DUCK_JACCARD_PAIRS}
     )
     SELECT id1, id2, jaccard,
            FLOOR((1.0 - POWER(1.0 - POWER(jaccard, 4.0), 8.0))

@@ -42,8 +42,8 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # needs C2.
 LOCAL_JVM_OPTIONS = "-XX:CICompilerCount=2 -XX:+UseParallelGC"
 
-# Conf that is correct at every scale; cluster-size-dependent knobs
-# (shuffle partitions, maxPartitionBytes) are parameters below.
+# Conf that is correct at every scale; a caller overrides any entry, and
+# the shuffle-partition default set below, through ``extra_conf``.
 _BASE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -98,16 +98,14 @@ def driver_memory() -> str:
 
 def session_conf(
     master: str,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> dict[str, str]:
     """The conf ``get_spark`` builds its session with: the base conf,
-    the shuffle-partition count, the local-master heap and JVM options,
-    then ``extra_conf`` on top."""
+    the default shuffle-partition count, the local-master heap and JVM
+    options, then ``extra_conf`` on top (where a caller sets its own
+    ``spark.sql.shuffle.partitions``)."""
     conf = dict(_BASE_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(
-        shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    )
+    conf["spark.sql.shuffle.partitions"] = str(DEFAULT_SHUFFLE_PARTITIONS)
     if master.startswith("local"):
         # Local mode packs driver + all executor threads into ONE JVM,
         # and Spark's 1g default Xmx starves 32 threads (~31 MB each):
@@ -127,7 +125,6 @@ def session_conf(
 def get_spark(
     app_name: str = "bigdata1-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the configured SparkSession.
@@ -143,6 +140,6 @@ def get_spark(
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    for k, v in session_conf(master, shuffle_partitions, extra_conf).items():
+    for k, v in session_conf(master, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -29,8 +29,8 @@ def sf_dir() -> str:
 def spark(tmp_path_factory):
     spark = get_spark(
         app_name="bigdata1-tests",
-        shuffle_partitions=8,
         extra_conf={
+            "spark.sql.shuffle.partitions": "8",
             # static conf — must be set before the JVM starts (the
             # bucketing tests create managed tables)
             "spark.sql.warehouse.dir": str(

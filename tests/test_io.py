@@ -93,7 +93,8 @@ def test_bucketed_join_dir_removed_at_exit(sf_dir, tmp_path):
 import glob, tempfile
 from bigdata1_spark.operators import layout
 from bigdata1_spark.session import get_spark
-spark = get_spark(app_name="bucketed-exit", shuffle_partitions=4)
+spark = get_spark(app_name="bucketed-exit",
+                  extra_conf={{"spark.sql.shuffle.partitions": "4"}})
 assert layout.bucketed_join(spark, {sf_dir!r}).count() > 0
 print(glob.glob(tempfile.gettempdir() + "/bigdata1_bucketed_*"))
 """

@@ -441,6 +441,29 @@ def test_dump_plans_under_plan_pkg_ref(
     assert not any(m.startswith("bigdata1_spark_abref") for m in _sys.modules)
 
 
+def test_dump_plans_twice_is_byte_identical(spark, sf_dir, tmp_path, monkeypatch):
+    """Two dumps of the same code in one session write the same bytes:
+    expression, exchange and RDD ids are renumbered per plan and
+    ``bucketed_join``'s temp table path is masked."""
+    import sys as _sys
+
+    import bigdata1_spark.session as session
+    from tools import dump_plans
+
+    keys = ["groupby_sum", "connected_components", "bucketed_join"]
+    monkeypatch.setattr(dump_plans, "SF_DIR", sf_dir)
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    for run in ("a", "b"):
+        monkeypatch.setattr(
+            _sys, "argv", ["dump_plans.py", str(tmp_path), run, *keys]
+        )
+        dump_plans.main()
+    for key in keys:
+        first = (tmp_path / f"{key}_a.txt").read_bytes()
+        assert first == (tmp_path / f"{key}_b.txt").read_bytes(), key
+    assert b"plan_id=1]" in (tmp_path / "bucketed_join_a.txt").read_bytes()
+
+
 def test_bench_ab_detail_banks_ref_runs_and_extra_keys(
     monkeypatch, tmp_path, capsys
 ):

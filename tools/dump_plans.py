@@ -8,16 +8,41 @@ a git ref to dump the plans of THAT ref's code instead of the working
 tree (same renamed-package mechanism as bench.py's BENCH_AB) — how the
 round's ``plans/rNN/<key>_before.txt`` evidence is generated honestly
 after the working tree has moved on.
+
+Two dumps of the same code are byte-identical: the session-global
+counters in a plan (expression ids ``#N``, exchange ``[plan_id=N]``,
+RDD ids ``…RDD[N]``) are renumbered in order of first appearance, so a
+reference from one node to another still resolves, and
+``bucketed_join``'s random temp table path is masked.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_COUNTERS = (
+    re.compile(r"(?<=#)\d+"),
+    re.compile(r"(?<=\[plan_id=)\d+(?=\])"),
+    re.compile(r"(?<=RDD\[)\d+(?=\])"),
+)
+_BUCKETED_TMP = re.compile(r"[^\s\[]*/bigdata1_bucketed_[^/\s\]]+")
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with each counter renumbered 1, 2, … in order of first
+    appearance and the bucketed temp dir masked."""
+    for counter in _COUNTERS:
+        ids: dict[str, str] = {}
+        plan = counter.sub(
+            lambda m: ids.setdefault(m.group(), str(len(ids) + 1)), plan
+        )
+    return _BUCKETED_TMP.sub("<tmp>/bigdata1_bucketed", plan)
 
 
 def main() -> None:
@@ -47,9 +72,9 @@ def _dump(registry, out_dir: str, suffix: str, keys: list[str]) -> None:
         fn = getattr(registry.QUERIES[key], "__wrapped__", registry.QUERIES[key])
         spark.catalog.clearCache()
         df = fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
+        plan = normalize(df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
-        )
+        ))
         path = os.path.join(out_dir, f"{key}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -12,7 +12,9 @@ the driver rotation missed. Every row that ran also banks ``spark_hash``,
 an exact hash of Spark's output (the ``repr`` of every raw cell, so a
 double that moves by one ulp changes it; rows-only keys included), so
 two artifacts of the same data show whether a change left a key's
-output byte-identical. The bench-only keys (``bench.EXTRA_BENCH``: the
+output byte-identical; every oracle row banks ``oracle_hash``, the same
+exact hash of DuckDB's output, so two artifacts also show whether an
+oracle's output moved. The bench-only keys (``bench.EXTRA_BENCH``: the
 pure-LSH dedup path and the LSH pretraining pipeline) have no SQL
 oracle and are not driver queries; they are swept as ``no_oracle`` rows
 so their ``spark_hash`` is banked too.
@@ -84,7 +86,8 @@ def _exact_hash(df) -> str:
 
 def _error_row(err: str | None) -> dict:
     return {"rows_match": None, "schema_match": None, "hash_match": None,
-            "spark_hash": None, "spark_rows": None, "oracle_rows": None,
+            "spark_hash": None, "oracle_hash": None, "spark_rows": None,
+            "oracle_rows": None,
             "err": err[:300] if err else None}
 
 
@@ -152,7 +155,9 @@ def main() -> None:
         if row.get("spark_hash") is None:
             return False  # errored, or banked before spark_hash existed
         if row.get("hash_match") is not None:
-            return True  # adjudicated pass OR fail — both are verdicts
+            # adjudicated pass OR fail — both are verdicts, once the
+            # oracle's own hash is banked too
+            return row.get("oracle_hash") is not None
         return row.get("err") == "no_oracle" and row.get("spark_rows") is not None
 
     # A dead JVM (OOM-killed executor thread taking the gateway down)
@@ -180,6 +185,7 @@ def main() -> None:
             want = con.execute(osql[key]).df()
             want = want[sorted(want.columns)]
             row["oracle_rows"] = len(want)
+            row["oracle_hash"] = _exact_hash(want)
             row["rows_match"] = len(got) == len(want)
             row["schema_match"] = list(got.columns) == list(want.columns)
             row["hash_match"] = _value_hash(got) == _value_hash(want)
