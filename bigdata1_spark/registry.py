@@ -721,8 +721,7 @@ register(
     dedup.dedup_jaccard,
     f"""
     WITH {_duck_shingle_overlap()}
-    SELECT id1, id2,
-           {_DUCK_JACCARD} AS jaccard
+    SELECT id1, id2, {_DUCK_JACCARD} AS jaccard
     {_DUCK_JACCARD_PAIRS}
     """,
 )
@@ -5334,7 +5333,7 @@ register("label_prop", graph.label_prop, _label_prop_unrolled_sql(graph.LABEL_PR
 register(
     "substring_dedup",
     corpus.substring_dedup,
-    fr"""
+    f"""
     WITH {_DUCK_WORDS}, base AS (
       SELECT doc_id, w, len(w) AS n_toks FROM words
     ), starts AS (
@@ -5388,7 +5387,7 @@ register(
 register(
     "winnow_fingerprint",
     corpus.winnow_fingerprint,
-    fr"""
+    f"""
     WITH words AS (
       SELECT doc_id,
              {_DUCK_TOKENS} AS w
@@ -7412,9 +7411,7 @@ register(
     dedup.lsh_probability,
     f"""
     WITH {_duck_shingle_overlap()}, pairs AS (
-      SELECT id1, id2,
-             {_DUCK_JACCARD}
-               AS jaccard
+      SELECT id1, id2, {_DUCK_JACCARD} AS jaccard
       {_DUCK_JACCARD_PAIRS}
     )
     SELECT id1, id2, jaccard,
