@@ -1,9 +1,15 @@
-"""Hash-sketch column expressions: MinHash signatures, LSH band keys,
-SimHash fingerprints.
+"""Hash column expressions: the content-hash core, MinHash signatures,
+LSH band keys, SimHash fingerprints.
 
-Everything rides on ``xxhash64`` (JVM-side, codegen) with integer salts,
-so sketches are deterministic functions of the input strings — no Python,
-no RNG state, reproducible across runs and cluster layouts.
+Two hashes, both JVM-side deterministic functions of the input — no
+Python, no RNG state, reproducible across runs and cluster layouts:
+
+* :func:`md5_int`, the content-hash core: every choice an oracle must
+  regenerate (generated rows, splits, samples, buckets, fingerprints,
+  CDC/IVM ops, PSI halves) reads the first ``n`` md5 hex digits as an
+  integer, mirrored by ``registry._duck_md5_int``;
+* ``xxhash64`` with integer salts, for sketches no oracle rebuilds
+  (MinHash, LSH band keys, the default SimHash base hash).
 """
 
 from __future__ import annotations
@@ -80,18 +86,17 @@ def band_keys(sig: Column, bands: int, rows: int) -> Column:
 SIMHASH_MAX_SHINGLES = 255  # 8-bit lane capacity — see simhash64
 
 
-def md5hash60(s: Column) -> Column:
-    """First 15 md5 hex chars of a string as a positive 60-bit BIGINT.
+def md5_int(s: Column | str, n: int) -> Column:
+    """First ``n`` (1–15) md5 hex digits of string ``s`` as a BIGINT —
+    the content-hash core (DuckDB mirror: ``registry._duck_md5_int``).
 
-    An engine-portable base hash: md5 over the same UTF-8 bytes is
-    identical everywhere, so sketches built on it can be regenerated
-    exactly by a SQL oracle (DuckDB mirror:
-    ``CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)``). 15 hex chars
-    (not 16) keeps the value under 2^60 — always positive, so signed
-    and unsigned orderings agree across engines and no BIGINT overflow
-    check can fire on either side.
+    md5 over the same UTF-8 bytes is identical everywhere, so a value
+    built on it is regenerated exactly by a SQL oracle. At most 15
+    digits keeps the value under 2^60 — always positive, so signed and
+    unsigned orderings agree across engines and no BIGINT overflow
+    check can fire on either side. NULL in, NULL out.
     """
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+    return F.conv(F.substring(F.md5(s), 1, n), 16, 10).cast("long")
 
 
 def simhash64(shingles: Column, base_hash=None) -> Column:
@@ -99,7 +104,7 @@ def simhash64(shingles: Column, base_hash=None) -> Column:
 
     bit b of the fingerprint = majority vote of bit b across
     hashed shingle values (``base_hash`` per shingle — default
-    ``xxhash64``; pass :func:`md5hash60` for an oracle-reproducible
+    ``xxhash64``; pass ``md5_int`` at n = 15 for an oracle-reproducible
     60-bit variant whose fingerprint stays positive with bits 60-63
     zero). Near-identical documents differ in few bits (small Hamming
     distance).

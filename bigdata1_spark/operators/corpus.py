@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdata1_spark.functions.hashing import let
+from bigdata1_spark.functions.hashing import let, md5_int
 from bigdata1_spark.functions.textfns import (
     ngrams,
     shingles_or_null,
@@ -297,9 +297,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     at every scale factor — the property training-data ablations rely
     on. Columns: doc_id, lang, bucket.
     """
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
-    ).cast("long")
+    bucket = md5_int(F.col("doc_id").cast("string"), 2)
     threshold = F.when(F.lit(False), F.lit(0))
     for lang, t in STRATA_THRESHOLDS.items():
         threshold = threshold.when(F.col("lang") == lang, F.lit(t))
@@ -466,14 +464,13 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back; the scan is touched once. Columns: lang, n_docs,
     n_kept, kept_chars.
     """
-    from bigdata1_spark.functions.hashing import md5hash60
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
     wmax = docs.agg(F.max("n_chars").alias("w_max"))
-    h = md5hash60(
-        F.concat_ws("|", F.lit("wsamp"), F.col("doc_id").cast("string"))
+    h = md5_int(
+        F.concat_ws("|", F.lit("wsamp"), F.col("doc_id").cast("string")),
+        15,
     )
     keep = (
         h.cast("decimal(38,0)") * F.col("w_max")
@@ -571,10 +568,7 @@ def dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "lang",
-        (
-            F.conv(F.substring(F.md5("gram"), 1, 2), 16, 10).cast("long")
-            % DSIR_BUCKETS
-        ).alias("bucket"),
+        (md5_int("gram", 2) % DSIR_BUCKETS).alias("bucket"),
     )
     # per-doc bucket counts: the one doc-keyed shuffle (≤64 rows/doc).
     # lang rides along (functionally dependent on doc_id, so the group
@@ -814,9 +808,7 @@ def winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         (F.col("p0") + 1).alias("pos"),
-        F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_int("gram", 8).alias("h"),
     )
     g = g.withColumn("v", _pack_pos(F.col("h"), F.col("pos")))
     by_doc = Window.partitionBy("doc_id")

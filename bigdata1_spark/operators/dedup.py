@@ -428,11 +428,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Charikar fingerprint per doc; candidate generation via 4-block
     pigeonhole keys (any pair within distance 3 shares a block —
     EXACT, no recall loss), then exact Hamming verify. The base hash is
-    :func:`hashing.md5hash60` (round 7), which makes the fingerprints a
-    pure md5 function of the shingle multiset — so the DuckDB oracle
-    recomputes every fingerprint bit-for-bit in SQL (per-bit majority
-    over the same 60-bit hashes, same bottom-255 cap, same ties→1
-    rule) and the key is FULL value-hash checked, not rows-only. The
+    ``hashing.md5_int`` at 15 digits (round 7), which makes the
+    fingerprints a pure md5 function of the shingle multiset — so the
+    DuckDB oracle recomputes every fingerprint bit-for-bit in SQL
+    (per-bit majority over the same 60-bit hashes, same bottom-255 cap,
+    same ties→1 rule) and the key is FULL value-hash checked, not
+    rows-only. The
     xxhash64-based variant stays available through
     ``hashing.simhash64``'s default for throughput-sensitive callers.
     Columns: id1, id2, hamming.
@@ -443,7 +444,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = sh.select(
         "doc_id",
         hashing.simhash64(
-            F.col("shingles"), base_hash=hashing.md5hash60
+            F.col("shingles"), base_hash=lambda s: hashing.md5_int(s, 15)
         ).alias("fp"),
     ).cache()
     keyed = fp.select(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.functions.hashing import md5_int
 from bigdata1_spark.operators.basket import snap6
 from bigdata1_spark.sources.tables import load_table
 
@@ -122,14 +123,7 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Content-hash half: first md5 hex digit mod 2 (the mixture_sample
     # bucket convention — reproducible under any partitioning).
-    half = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 1),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(2),
-    )
+    half = F.pmod(md5_int(F.col("l_orderkey").cast("string"), 1), F.lit(2))
     counts = (
         li.select(bucket.alias("bucket"), half.alias("half"))
         .groupBy("bucket")

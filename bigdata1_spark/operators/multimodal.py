@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from bigdata1_spark.functions.hashing import md5_int
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -61,11 +63,10 @@ def synth_media(spark: SparkSession, n: int = 256) -> DataFrame:
     xxhash64-seeded and rows-only). The payload is the 64 ASCII-hex
     bytes of sha256(id:seed): opaque to the pipeline, reproducible as
     ``encode(sha256(...))`` everywhere."""
-    from bigdata1_spark.functions.hashing import md5hash60
-
-    h = lambda salt: md5hash60(  # noqa: E731
+    h = lambda salt: md5_int(  # noqa: E731
         F.concat_ws("|", F.lit(str(MEDIA_SEED)), F.lit(salt),
-                    F.col("id").cast("string"))
+                    F.col("id").cast("string")),
+        15,
     )
     kinds = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdata1_spark.functions.hashing import md5_int
 from bigdata1_spark.operators.basket import (
     cents, dec4, exact_sum, month_of, monthly_revenue, snap6,
     tpch_month_lines,
@@ -1004,15 +1005,14 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key per map task, not the log. Columns: user_id, event_type,
     n_ops, last_op, value.
     """
-    from bigdata1_spark.functions.hashing import md5hash60
-
     ev = load_table(spark, sf_dir, "events")
     op = F.element_at(
         F.array(F.lit("D"), F.lit("I"), F.lit("I"), *[F.lit("U")] * 7),
         (
-            md5hash60(
+            md5_int(
                 F.concat_ws("|", F.lit("cdc"),
-                            F.col("event_id").cast("string"))
+                            F.col("event_id").cast("string")),
+                15,
             ) % 10 + 1
         ).cast("int"),
     )
@@ -1056,8 +1056,6 @@ def ivm_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     all (float sums would drift from the recompute the oracle does).
     Columns: o_custkey, n_orders, total_spent.
     """
-    from bigdata1_spark.functions.hashing import md5hash60
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate",
         dec4("o_totalprice").alias("price"),
@@ -1079,9 +1077,10 @@ def ivm_delta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sign = F.when(
-        md5hash60(
+        md5_int(
             F.concat_ws("|", F.lit("ivm"),
-                        F.col("o_orderkey").cast("string"))
+                        F.col("o_orderkey").cast("string")),
+            15,
         ) % 10 == 0,
         F.lit(-1),
     ).otherwise(F.lit(1))

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from bigdata1_spark.functions.hashing import let
+from bigdata1_spark.functions.hashing import let, md5_int
 from bigdata1_spark.functions.textfns import (
     LANG_MARKERS,
     STOPWORDS,
@@ -310,7 +310,7 @@ SPLIT_VAL_LIM = 230
 def split_bucket(text: Column) -> Column:
     """256 uniform buckets from the first two hex digits of md5(text) —
     stable across runs, engines, and re-partitioning (never random())."""
-    return F.conv(F.substring(F.md5(text), 1, 2), 16, 10).cast("long")
+    return md5_int(text, 2)
 
 
 def split_of(bucket: Column) -> Column:

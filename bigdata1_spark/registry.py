@@ -33,9 +33,11 @@ shingle-set chain and ``dedup._verify``'s overlap counts), with
 (``basket.basket_items``); ``_duck_vectors``
 (``similarity.load_vectors``); ``_DUCK_ORDER_PAIR``,
 ``_DUCK_CO_SUPPLIER_EDGES`` and ``_DUCK_BIDIR`` (``graph._order_pairs``,
-``graph._co_supplier_edges``, ``graph.symmetrize``); and
+``graph._co_supplier_edges``, ``graph.symmetrize``);
 ``_DUCK_PAGERANK_EDGES`` (``graph.pagerank``'s customer–supplier
-graph). An oracle builds on them and never writes one out again.
+graph); and ``_duck_md5_int`` (``hashing.md5_int``, the content-hash
+core every generated row, split, sample, bucket and fingerprint reads).
+An oracle builds on them and never writes one out again.
 Single-expression numeric pins (the 1e-6 floor, the DECIMAL(18,4) sum,
 the cents ROUND) stay inline under the rules above.
 """
@@ -120,6 +122,12 @@ def _duck_ngram(n: int, w: str = "w", i: str = "i") -> str:
         for k in range(1, n)
     )
     return f"CASE WHEN {w} IS NULL THEN NULL ELSE concat(coalesce({w}[{i}], ''){tail}) END"
+
+
+def _duck_md5_int(s: str, n: int) -> str:
+    """``hashing.md5_int``: the first ``n`` md5 hex digits of string
+    expression ``s`` as a BIGINT; NULL for NULL."""
+    return f"CAST('0x' || substr(md5({s}), 1, {n}) AS BIGINT)"
 
 
 # ``textfns.word_shingles`` over a ``words`` CTE: sh holds every word
@@ -504,17 +512,16 @@ register(
 register(
     "gen_billings",
     generator.gen_billings_query,
-    """
+    f"""
     WITH seq AS (
       SELECT unnest(generate_series(0, 999)) AS bill_id
     ), base AS (
       SELECT bill_id,
-             DATE '2015-01-01' + CAST(CAST('0x' ||
-               substr(md5('42|date|' || bill_id), 1, 8) AS BIGINT)
-               % 365 AS INT) AS bill_date,
-             CAST(CAST('0x' ||
-               substr(md5('42|k|' || bill_id), 1, 8) AS BIGINT)
-               % 8 + 1 AS INT) AS k
+             DATE '2015-01-01' + CAST(
+               {_duck_md5_int("'42|date|' || bill_id", 8)} % 365 AS INT)
+               AS bill_date,
+             CAST({_duck_md5_int("'42|k|' || bill_id", 8)} % 8 + 1 AS INT)
+               AS k
       FROM seq
     ), words AS (
       SELECT unnest(['uova', 'latte', 'pane', 'vino', 'pesce',
@@ -580,27 +587,27 @@ register("scan_xml", partial(jsonl.scan_format, fmt="xml"), _TEXT_SOURCE_ORACLE)
 from bigdata1_spark.sources import pydatasource  # noqa: E402
 
 
-def _hex4(expr: str) -> str:
-    """SQL for int(substr-4-hex, 16) of a 4-char hex expression."""
-    return " + ".join(
-        f"(strpos('0123456789abcdef', substr({expr}, {i + 1}, 1)) - 1)"
-        f" * {16 ** (3 - i)}"
-        for i in range(4)
-    )
+def _duck_bill_rows(n_rows: int) -> str:
+    """``pydatasource._bill_row`` over row ids 0 … n_rows - 1: rows_
+    (j, day, month, cost) from md5 hex digits 1-4, 5-8 and 9-12."""
+    return f"""seq AS (
+      SELECT unnest(generate_series(0, {n_rows - 1})) AS j
+    ), h AS (
+      SELECT j, {_duck_md5_int("CAST(j AS VARCHAR)", 12)} AS hv FROM seq
+    ), rows_ AS (
+      SELECT j,
+             (hv >> 32) % 28 + 1 AS day,
+             ((hv >> 16) & 65535) % 12 + 1 AS month,
+             (hv & 65535) % 500 AS cost
+      FROM h
+    )"""
 
 
 register(
     "python_stream_source",
     pydatasource.python_stream_source,
     f"""
-    WITH seq AS (
-      SELECT unnest(generate_series(0, {pydatasource.STREAM_ROWS - 1}))
-        AS j
-    ), h AS (
-      SELECT j, md5(CAST(j AS VARCHAR)) AS hx FROM seq
-    ), rows_ AS (
-      SELECT j, ({_hex4("substr(hx, 5, 4)")}) % 12 + 1 AS month FROM h
-    )
+    WITH {_duck_bill_rows(pydatasource.STREAM_ROWS)}
     SELECT CAST(month AS INT) AS month,
            COUNT(*) AS n,
            CAST(SUM(j) AS BIGINT) AS bid_sum
@@ -612,17 +619,7 @@ register(
     "python_datasource",
     pydatasource.python_datasource,
     f"""
-    WITH seq AS (
-      SELECT unnest(generate_series(0, {pydatasource.PYDS_ROWS - 1})) AS j
-    ), h AS (
-      SELECT j, md5(CAST(j AS VARCHAR)) AS hx FROM seq
-    ), rows_ AS (
-      SELECT j,
-             ({_hex4("substr(hx, 1, 4)")}) % 28 + 1 AS day,
-             ({_hex4("substr(hx, 5, 4)")}) % 12 + 1 AS month,
-             ({_hex4("substr(hx, 9, 4)")}) % 500 AS cost
-      FROM h
-    )
+    WITH {_duck_bill_rows(pydatasource.PYDS_ROWS)}
     SELECT CAST(month AS INT) AS month,
            COUNT(*) AS n,
            CAST(SUM(day) AS BIGINT) AS day_sum,
@@ -748,7 +745,7 @@ register(
     """,
 )
 
-# dedup_simhash: the base hash moved to md5hash60 (15 md5 hex chars →
+# dedup_simhash: the base hash moved to md5_int at 15 digits (a
 # positive 60-bit BIGINT), so the oracle recomputes every fingerprint
 # EXACTLY — per-bit majority (ties→1) over the same hashes, same
 # bottom-255 cap — then mirrors the 4-block pigeonhole (exact for
@@ -762,7 +759,7 @@ register(
     f"""
     WITH {_DUCK_WORDS}, {_DUCK_SHINGLE_SETS}, h AS (
       SELECT doc_id,
-             CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS hv
+             {_duck_md5_int("s", 15)} AS hv
       FROM d
     ), capped AS (
       -- bottom-255 by hash value when a doc exceeds the lane cap
@@ -1006,17 +1003,14 @@ register(
 register(
     "multimodal_pipeline",
     multimodal.multimodal_pipeline,
-    """
+    f"""
     WITH seq AS (
       SELECT unnest(generate_series(0, 255)) AS media_id
     ), h AS (
       SELECT media_id,
-             CAST('0x' || substr(md5('42|kind|' || media_id), 1, 15)
-                  AS BIGINT) % 3 AS kx,
-             CAST('0x' || substr(md5('42|w|' || media_id), 1, 15)
-                  AS BIGINT) % 1920 + 1 AS meta_w,
-             CAST('0x' || substr(md5('42|h|' || media_id), 1, 15)
-                  AS BIGINT) % 1080 + 1 AS meta_h,
+             {_duck_md5_int("'42|kind|' || media_id", 15)} % 3 AS kx,
+             {_duck_md5_int("'42|w|' || media_id", 15)} % 1920 + 1 AS meta_w,
+             {_duck_md5_int("'42|h|' || media_id", 15)} % 1080 + 1 AS meta_h,
              sha256(media_id || ':42') AS hx
       FROM seq
     ), feats AS (
@@ -1212,11 +1206,7 @@ register(
                   ELSE 'test' END AS split,
              len({_DUCK_TOKENS}) AS nt
       FROM (
-        SELECT text,
-               16 * (strpos('0123456789abcdef',
-                            substr(md5(text), 1, 1)) - 1)
-               + (strpos('0123456789abcdef',
-                         substr(md5(text), 2, 1)) - 1) AS bucket
+        SELECT text, {_duck_md5_int("text", 2)} AS bucket
         FROM deduped
       ) b
     )
@@ -2307,11 +2297,7 @@ register(
     f"""
     WITH b AS (
       SELECT doc_id,
-             CAST(16 * (strpos('0123456789abcdef',
-                               substr(md5(text), 1, 1)) - 1)
-                  + (strpos('0123456789abcdef',
-                            substr(md5(text), 2, 1)) - 1) AS BIGINT)
-               AS bucket
+             {_duck_md5_int("text", 2)} AS bucket
       FROM documents
     )
     SELECT doc_id, bucket,
@@ -2551,14 +2537,10 @@ register(
 register(
     "mixture_sample",
     corpus.mixture_sample,
-    """
+    f"""
     WITH b AS (
       SELECT doc_id, lang,
-             CAST(16 * (strpos('0123456789abcdef',
-                               substr(md5(text), 1, 1)) - 1)
-                  + (strpos('0123456789abcdef',
-                            substr(md5(text), 2, 1)) - 1) AS BIGINT)
-               AS bucket
+             {_duck_md5_int("text", 2)} AS bucket
       FROM documents
     )
     SELECT doc_id, lang, bucket
@@ -2646,11 +2628,8 @@ register(
     f"""
     WITH d AS (
       SELECT doc_id, lang,
-             CAST(16 * (strpos('0123456789abcdef',
-                               substr(md5(text), 1, 1)) - 1)
-                  + (strpos('0123456789abcdef',
-                            substr(md5(text), 2, 1)) - 1) AS BIGINT)
-               % {corpus.N_PACK_GROUPS} AS pack_group,
+             {_duck_md5_int("text", 2)} % {corpus.N_PACK_GROUPS}
+               AS pack_group,
              CAST(len({_DUCK_TOKENS}) AS BIGINT) AS n_tokens
       FROM documents
     ), packed AS (
@@ -3683,14 +3662,10 @@ register(
 register(
     "sample_stratified",
     corpus.sample_stratified,
-    """
+    f"""
     SELECT doc_id, lang, bucket FROM (
       SELECT doc_id, lang,
-             CAST(16 * (strpos('0123456789abcdef',
-                        substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1)
-                  + (strpos('0123456789abcdef',
-                        substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)
-                  AS BIGINT) AS bucket
+             {_duck_md5_int("CAST(doc_id AS VARCHAR)", 2)} AS bucket
       FROM documents
     )
     WHERE bucket < CASE lang
@@ -4341,13 +4316,11 @@ register(
 register(
     "psi_drift",
     dq.psi_drift,
-    """
+    f"""
     WITH tagged AS (
       SELECT least(greatest(CAST(FLOOR((l_extendedprice - 0.0) / 20000.0)
                                  AS BIGINT), 0), 9) AS bucket,
-             (strpos('0123456789abcdef',
-                     substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 1)) - 1)
-               % 2 AS half
+             {_duck_md5_int("CAST(l_orderkey AS VARCHAR)", 1)} % 2 AS half
       FROM lineitem
     ), counts AS (
       SELECT bucket,
@@ -4635,12 +4608,12 @@ register(
 register(
     "cdc_apply",
     relational.cdc_apply,
-    """
+    f"""
     WITH log AS (
       SELECT user_id, event_type, epoch_us(ts) AS us, event_id,
              (['D', 'I', 'I', 'U', 'U', 'U', 'U', 'U', 'U', 'U'])[
-               CAST(CAST('0x' || substr(md5('cdc|' || event_id), 1, 15)
-                         AS BIGINT) % 10 AS INT) + 1] AS op,
+               CAST({_duck_md5_int("'cdc|' || event_id", 15)} % 10 AS INT)
+               + 1] AS op,
              value
       FROM events
     ), ranked AS (
@@ -4664,12 +4637,11 @@ register(
 register(
     "ivm_delta_agg",
     relational.ivm_delta_agg,
-    """
+    f"""
     WITH signed AS (
       SELECT o_custkey,
              CASE WHEN o_orderdate >= DATE '1997-01-01'
-                   AND CAST('0x' || substr(md5('ivm|' || o_orderkey),
-                                           1, 15) AS BIGINT) % 10 = 0
+                   AND {_duck_md5_int("'ivm|' || o_orderkey", 15)} % 10 = 0
                   THEN -1 ELSE 1 END AS s,
              CAST(o_totalprice AS DECIMAL(18,4)) AS price
       FROM orders
@@ -4821,12 +4793,12 @@ register(
 register(
     "sample_weighted",
     corpus.sample_weighted,
-    """
+    f"""
     WITH wm AS (SELECT MAX(n_chars) AS w_max FROM documents),
     dec AS (
       SELECT d.lang, d.n_chars,
-             CAST(CAST('0x' || substr(md5('wsamp|' || d.doc_id), 1, 15)
-                       AS BIGINT) AS HUGEINT) * w.w_max
+             CAST({_duck_md5_int("'wsamp|' || d.doc_id", 15)} AS HUGEINT)
+               * w.w_max
                < CAST(d.n_chars AS HUGEINT) * 1152921504606846976
                AS keep
       FROM documents d CROSS JOIN wm w
@@ -5146,12 +5118,7 @@ register(
       FROM documents WHERE text IS NOT NULL
     ), bg AS (
       SELECT doc_id, lang,
-             CAST((16 * (strpos('0123456789abcdef',
-                          substr(md5({_duck_ngram(2)}), 1, 1))
-                         - 1)
-                   + (strpos('0123456789abcdef',
-                          substr(md5({_duck_ngram(2)}), 2, 1))
-                      - 1)) % 64 AS BIGINT) AS bucket
+             {_duck_md5_int(_duck_ngram(2), 2)} % 64 AS bucket
       FROM words,
            (SELECT unnest(generate_series(1, greatest(len(w) - 1, 1))) AS i)
     ), dwc AS (
@@ -5398,9 +5365,7 @@ register(
       FROM words
     ), hashed AS (
       SELECT doc_id, pos,
-             CAST('0x' || substr(
-               md5({_duck_ngram(4, "w", "pos")}), 1, 8) AS BIGINT)
-               AS h
+             {_duck_md5_int(_duck_ngram(4, "w", "pos"), 8)} AS h
       FROM starts
     ), v AS (
       SELECT doc_id, pos,

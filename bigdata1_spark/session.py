@@ -61,10 +61,6 @@ _BASE_CONF = {
     "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
     # silence the noisy progress bar in test output
     "spark.ui.showConsoleProgress": "false",
-    # testdata events.parquet stores TIMESTAMP(NANOS); Spark's reader
-    # rejects it unless nanos surface as long (converted to a real
-    # timestamp in sources.tables.load_table)
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata1_spark.functions.hashing import md5_int
 from bigdata1_spark.sources.billing import parse_billings_a, render_line
 
 # BD_hw1/food:1-8
@@ -31,12 +32,11 @@ FOOD_VOCAB = (
 
 
 def _h32(seed: int, salt: str, *cols: Column) -> Column:
-    """First 8 md5 hex chars of ``seed|salt|col...`` as a bigint —
-    32 uniform bits, reproducible byte-for-byte in any engine with md5
-    (DuckDB mirror: ``CAST('0x' || substr(md5(s), 1, 8) AS BIGINT)``)."""
+    """``md5_int`` of ``seed|salt|col...`` at 8 digits — 32 uniform
+    bits, mirrored by the oracle's ``_duck_md5_int``."""
     s = F.concat_ws("|", F.lit(str(seed)), F.lit(salt),
                     *[c.cast("string") for c in cols])
-    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
+    return md5_int(s, 8)
 
 
 def gen_billings(spark: SparkSession, n: int = 1000, seed: int = 42) -> DataFrame:

@@ -15,6 +15,7 @@ checked.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
@@ -33,6 +34,20 @@ PYDS_ROWS = 5000
 PYDS_PARTITIONS = 8
 
 
+def _bill_row(j: int) -> tuple[int, int, int, int]:
+    """(bid, day, month, cost) of row id ``j``: hex digits 1-4, 5-8 and
+    9-12 of md5(str(j)), each read as an integer and reduced — the one
+    digest both readers serve and the oracles regenerate with
+    ``registry._duck_md5_int``."""
+    h = hashlib.md5(str(j).encode()).hexdigest()
+    return (
+        j,
+        int(h[:4], 16) % 28 + 1,
+        int(h[4:8], 16) % 12 + 1,
+        int(h[8:12], 16) % 500,
+    )
+
+
 class BillingReader(DataSourceReader):
     def __init__(self, options):
         self.n = int(options.get("rows", str(PYDS_ROWS)))
@@ -42,20 +57,12 @@ class BillingReader(DataSourceReader):
         return [InputPartition(i) for i in range(self.parts)]
 
     def read(self, partition):
-        import hashlib
-
         i = partition.value
         per = self.n // self.parts
         lo = i * per
         hi = self.n if i == self.parts - 1 else lo + per
         for j in range(lo, hi):
-            h = hashlib.md5(str(j).encode()).hexdigest()
-            yield (
-                j,
-                int(h[:4], 16) % 28 + 1,
-                int(h[4:8], 16) % 12 + 1,
-                int(h[8:12], 16) % 500,
-            )
+            yield _bill_row(j)
 
 
 class BillingSource(DataSource):
@@ -113,16 +120,10 @@ class BillingStreamReader(SimpleDataSourceStreamReader):
         return {"pos": 0}
 
     def _rows(self, lo: int, hi: int):
-        import hashlib
-
         # Materialized list, not a generator: the engine's prefetch
         # cache copy.copy()s the returned iterator, and generators
         # aren't picklable (measured failure in planPartitions).
-        return [
-            (j, int(hashlib.md5(str(j).encode()).hexdigest()[4:8], 16)
-             % 12 + 1)
-            for j in range(lo, hi)
-        ]
+        return [_bill_row(j)[::2] for j in range(lo, hi)]  # (bid, month)
 
     def read(self, start):
         lo = start["pos"]

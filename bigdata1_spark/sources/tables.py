@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,21 +72,27 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def data_files(path: str) -> Iterator[str]:
+    """Every data file under directory ``path``, at any depth: the one
+    listing rule, which skips bookkeeping names that start with ``_``
+    or ``.`` (``_SUCCESS``, ``.crc``)."""
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
+
+
 def _footers(path: str) -> list:
     """Parquet footer metadata of ``path``: the file itself, or every
-    ``*.parquet`` file under the directory at any depth, skipping
-    bookkeeping names that start with ``_`` or ``.``. No Spark job. A
-    footer that cannot be read raises — an input size is never
+    ``*.parquet`` file of the directory's :func:`data_files`. No Spark
+    job. A footer that cannot be read raises — an input size is never
     guessed."""
     import pyarrow.parquet as pq
 
     if not os.path.isdir(path):
         return [pq.read_metadata(path)]
     return [
-        pq.read_metadata(os.path.join(root, f))
-        for root, _dirs, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
+        pq.read_metadata(f) for f in data_files(path) if f.endswith(".parquet")
     ]
 
 
@@ -107,6 +113,20 @@ def _parquet_row_groups(path: str) -> int:
     footer metadata only — the scan's effective max parallelism, since
     a row group is unsplittable (one scan task decodes it end to end)."""
     return sum(m.num_row_groups for m in _footers(path))
+
+
+def read_events(spark: SparkSession, path: str) -> DataFrame:
+    """Batch read of the events parquet at ``path``, ``ts`` as stored —
+    the one events-reader step of the batch (:func:`load_table`) and
+    stream (``streaming.events._read_events_stream``) readers.
+
+    Older testdata stores TIMESTAMP(NANOS), which Spark rejects unless
+    nanos surface as long. The conf is set here at runtime (it is a
+    dynamic SQL conf), so the engine also works under a plain session
+    the driver harness creates, not just our own ``get_spark()``;
+    harmless for micros-encoded files."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
 
 
 def spread_if_starved(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -141,17 +161,11 @@ def load_table(
     sensitive plans (exchange budgets, id assignment) are unchanged."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; one of {TABLES}")
-    if name == "events":
-        # Older testdata stores TIMESTAMP(NANOS), which Spark rejects
-        # unless nanos surface as long. Set at runtime (it is a dynamic
-        # SQL conf) so the engine also works under a vanilla session the
-        # driver harness creates, not just our own get_spark(). Harmless
-        # for micros-encoded files.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
     if name == "events":
-        df = normalize_event_ts(df)
+        df = normalize_event_ts(read_events(spark, path))
+    else:
+        df = spark.read.parquet(path)
     if spread:
         df = spread_if_starved(spark, df, path)
     return df
@@ -172,13 +186,8 @@ def scratch(prefix: str, build: Callable[[str], DataFrame]) -> DataFrame:
 
 
 def has_data(path: str) -> bool:
-    """The one empty-sink rule: ``path`` holds at least one file whose
-    name does not start with ``_`` or ``.`` (bookkeeping such as
-    ``_SUCCESS`` and ``.crc``), at any depth. A sink that got no rows
-    fails it and reads back as an empty frame; a sink that passes is
-    read normally, so a real read error raises."""
-    return any(
-        not f.startswith(("_", "."))
-        for _root, _dirs, files in os.walk(path)
-        for f in files
-    )
+    """The one empty-sink rule: ``path`` holds at least one of its
+    :func:`data_files`. A sink that got no rows fails it and reads back
+    as an empty frame; a sink that passes is read normally, so a real
+    read error raises."""
+    return next(data_files(path), None) is not None

@@ -32,7 +32,14 @@ from pyspark.sql import functions as F
 from bigdata1_spark.operators.basket import TS_FMT, dec4, exact_sum
 from bigdata1_spark.operators.temporal import SESSION_GAP_US, session_windows
 from bigdata1_spark.session import scoped_conf
-from bigdata1_spark.sources.tables import has_data, load_table, scratch
+from bigdata1_spark.sources.tables import (
+    data_files,
+    has_data,
+    load_table,
+    normalize_event_ts,
+    read_events,
+    scratch,
+)
 
 WINDOW = "1 hour"
 WATERMARK = "1 day"
@@ -66,11 +73,7 @@ def _state_sized_partitions(
     local[32]: floor 2 → 13.6 s, 8 → 7.7 s, 16 → 7.5 s, 32 → 9.3 s
     (interleaved mins) — the byte term still dominates at volume
     (a 100 TB replay sizes to ~1.6 M partitions either way)."""
-    size = sum(
-        os.path.getsize(os.path.join(source_dir, f))
-        for f in os.listdir(source_dir)
-        if not f.startswith(("_", "."))
-    )
+    size = sum(os.path.getsize(f) for f in data_files(source_dir))
     floor = 2
     if python_state:
         floor = min(
@@ -255,12 +258,7 @@ def _read_events_stream(
     two ingestion paths cannot diverge. At scale the footer probe reads
     one object's metadata, irrespective of corpus size.
     """
-    from bigdata1_spark.sources.tables import normalize_event_ts
-
-    # Same dynamic conf as load_table: lets nanos-encoded files surface
-    # as long instead of failing the read; no-op for micros encodings.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_dir).schema
+    schema = read_events(spark, source_dir).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         # Source option (not a sink one): caps each micro-batch at N

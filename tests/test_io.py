@@ -138,55 +138,6 @@ def test_small_files_compaction(spark, sf_dir, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_write_compacted_sizes_files(spark, sf_dir, tmp_path):
-    """Compaction must merge a fragmented input into ~target-sized
-    files (the small-files fix) and preserve the exact row multiset."""
-    import glob
-
-    from bigdata1_spark.plans.compaction import write_compacted
-    from bigdata1_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders").repartition(64)
-    path = str(tmp_path / "compacted")
-    n_rows = orders.count()
-    target = max(1, n_rows // 3)
-    n_tasks = write_compacted(orders, path, target_rows_per_file=target)
-    files = glob.glob(f"{path}/*.parquet")
-    assert n_tasks <= 4
-    # fragmented 64-partition input merged into a handful of files
-    assert len(files) <= 8, files
-    back = spark.read.parquet(path)
-    assert back.count() == n_rows
-    assert sorted(back.columns) == sorted(orders.columns)
-
-
-def test_write_compacted_partitioned(spark, sf_dir, tmp_path):
-    """partition_by path: rows land under partition directories, file
-    sizing survives the hive layout, and the row multiset round-trips
-    (maxRecordsPerFile backstops skewed partition values)."""
-    import glob
-
-    from bigdata1_spark.plans.compaction import write_compacted
-    from bigdata1_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders").withColumn(
-        "status", F.col("o_orderstatus")
-    )
-    path = str(tmp_path / "by_status")
-    n_rows = orders.count()
-    write_compacted(
-        orders, path, target_rows_per_file=n_rows, partition_by=["status"]
-    )
-    part_dirs = glob.glob(f"{path}/status=*")
-    assert len(part_dirs) >= 2, part_dirs
-    back = spark.read.parquet(path)
-    assert back.count() == n_rows
-    # no partition directory exceeds the per-file cap by fragmentation:
-    # one partition value -> small handful of files
-    for d in part_dirs:
-        assert len(glob.glob(f"{d}/*.parquet")) <= 4, d
-
-
 def test_python_datasink_two_phase_commit(spark, sf_dir, tmp_path):
     """The custom sink's transactional contract: write() STAGES files
     (invisible to a committed-files read), commit() publishes them and

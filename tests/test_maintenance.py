@@ -38,7 +38,7 @@ def test_cdc_apply_accounts_for_every_log_row(spark, sf_dir):
 def test_ivm_merge_equals_recompute(spark, sf_dir):
     """The incremental merge must equal recomputing the view over the
     signed multiset — same Spark-side arithmetic, independent plan."""
-    from bigdata1_spark.functions.hashing import md5hash60
+    from bigdata1_spark.functions.hashing import md5_int
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate",
@@ -47,9 +47,10 @@ def test_ivm_merge_equals_recompute(spark, sf_dir):
     sign = F.when(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("date"))
         & (
-            md5hash60(
+            md5_int(
                 F.concat_ws("|", F.lit("ivm"),
-                            F.col("o_orderkey").cast("string"))
+                            F.col("o_orderkey").cast("string")),
+                15,
             ) % 10 == 0
         ),
         F.lit(-1),

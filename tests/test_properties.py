@@ -349,3 +349,39 @@ def test_cents_matches_duckdb(spark, groups):
         "FROM t GROUP BY g"
     ).fetchall())
     assert got == want
+
+
+MD5_NS = (1, 2, 8, 15)
+
+
+@given(texts=st.lists(st.none() | st.text(max_size=12), min_size=1,
+                      max_size=8))
+# empty, NULL, ASCII and 2-, 3- and 4-byte UTF-8 characters
+@example(texts=["", None, "a", "é", "中文", "😀x"])
+@SETTINGS
+def test_md5_int_matches_duckdb(spark, texts):
+    """``hashing.md5_int`` equals the oracles' ``_duck_md5_int`` for
+    every digit count in use, over unicode, empty and NULL strings —
+    the generated rows, samples and fingerprints the oracles regenerate
+    rest on this one equality."""
+    import duckdb
+
+    from bigdata1_spark.registry import _duck_md5_int
+
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "i int, s string")
+    got = {
+        r[0]: tuple(r[1:])
+        for r in df.select(
+            "i", *[hashing.md5_int("s", n) for n in MD5_NS]
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    sql = ", ".join(_duck_md5_int("s", n) for n in MD5_NS)
+    want = {
+        r[0]: tuple(r[1:])
+        for r in con.execute(f"SELECT i, {sql} FROM t").fetchall()
+    }
+    assert got == want
